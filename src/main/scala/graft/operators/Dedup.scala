@@ -1312,7 +1312,7 @@ object Dedup {
           // equal-string fast path: byte-identical pairs (the DOMINANT
           // case in a high-dup corpus) resolve with an O(n) compare
           // instead of the O(n²) DP — measured 546 s -> 97 s on the
-          // 10x replicated corpus (ScaleProbeR7), values unchanged
+          // 10x replicated corpus, values unchanged
           .withColumn("edit_dist",
             when($"_na" === $"_nb", lit(0L))
               .otherwise(levenshtein($"_na", $"_nb").cast("long")))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 
 /** Graph-analytics operators over interaction data (SURVEY.md §2.3).
@@ -43,9 +42,9 @@ object Graph {
     * graphs that trip it, pre-scale weights (divide by their gcd or
     * bucket them) or drop Scale. Non-positive weights also raise.
     *
-    * Scale shape (the d06/d08 iterative-plan discipline): `edges` and
-    * the out-weight frame are computed once, checkpointed and reused
-    * across iterations; each iteration is ONE join keyed on src
+    * Scale shape: `edges` and the out-weight frame are computed once,
+    * checkpointed and reused across iterations ([[Fixpoint]] cuts every
+    * iteration); each iteration is ONE join keyed on src
     * (ranks are node-keyed, co-partitioned with the out-weights) and
     * ONE dst-keyed aggregation — the canonical Spark PageRank shuffle
     * pattern. Graphs that actually have dangling or no-in-edge nodes
@@ -54,10 +53,6 @@ object Graph {
     * neither are detected once at build time and skip both (g01's
     * bidirectional projection takes that fast path). Rank state is
     * 16 bytes/node.
-    *
-    * Plans grow linearly with `iters` (5 here); for big graphs
-    * checkpoint every few iterations like Ops.connectedComponents —
-    * at iters=5 the plan is small enough that lineage is cheaper.
     */
   def pageRankWeighted(
       edges: DataFrame, // src, dst, w (directed; pass both directions for undirected)
@@ -96,7 +91,7 @@ object Graph {
     // that second build x 5 iterations).
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("w_out"))
-    val ew = e.join(outW, "src").graftCheckpointLazy
+    val ew = Fixpoint.invariant(e.join(outW, "src"))
     // node universe + has-out/has-in flags in ONE shuffle over the
     // CHECKPOINTED edge frame (scanning `e` here would re-execute the
     // caller's upstream plan a second time; the probe action below
@@ -136,26 +131,33 @@ object Graph {
     // every iteration (one extra job + broadcast each)
     val nTotal = if (simple) 0L else nodes.count()
 
-    var ranks = nodes.select(col("node"), lit(Scale).as("r"))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
+    val init = nodes.select(col("node"), lit(Scale).as("r"))
+    // max-|Δ| on the two cut rank frames; the same node universe on
+    // both sides, so an inner join is exact
+    val probe = epsilonFp.fold[Fixpoint.Probe](Fixpoint.NoProbe) { eps =>
+      Fixpoint.Settled { (prev, next) =>
+        next.join(prev.select(col("node"), col("r").as("_rp")), Seq("node"))
+          .agg(coalesce(max(abs(col("r") - col("_rp"))), lit(0L)))
+          .head().getLong(0) <= eps
+      }
+    }
+    // every round is cut: the non-simple round reads its ranks twice
+    Fixpoint.iterate(init, maxIters, Fixpoint.Bounded, probe) { (ranks, _) =>
       val contrib = ranks
         .join(ew, col("node") === col("src"))
         .select(col("dst"), guardedContrib.as("_c"))
-      val next = (if (simple) {
+      if (simple) {
         contrib.groupBy(col("dst").as("node"))
           .agg(sum(col("_c")).as("_s"))
           .select(col("node"), damped("_s").as("r"))
       } else {
         val recv = contrib.groupBy(col("dst").as("node")).agg(sum(col("_c")).as("_s"))
         // the dangling mass is ONE scalar per iteration: take it on
-        // the driver (the CC-loop convergence-count discipline) and
-        // fold the per-node share in as a literal — this replaces TWO
-        // per-iteration broadcast-build jobs (dang, nCnt) with one
-        // scalar action that doubles as the previous checkpoint's
-        // materializer. div semantics unchanged: both operands are
-        // non-negative int64, so Scala / == floor div == `div`.
+        // the driver and fold the per-node share in as a literal —
+        // this replaces TWO per-iteration broadcast-build jobs (dang,
+        // nCnt) with one scalar action. div semantics unchanged: both
+        // operands are non-negative int64, so Scala / == floor div ==
+        // `div`.
         val dangMass = ranks
           .join(dangling, Seq("node"), "left_semi")
           .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
@@ -163,24 +165,8 @@ object Graph {
         nodes
           .join(recv, Seq("node"), "left")
           .select(col("node"), damped(s"coalesce(_s, 0L) + ${share}L").as("r"))
-      })
-        // lazy checkpoint per iteration (the d06/d08 discipline): the
-        // broadcast build of iteration k+1 otherwise RE-EXECUTES
-        // iterations 1..k — O(iters^2) work and most of the wall cost
-        .graftCheckpointLazy
-      epsilonFp.foreach { eps =>
-        // one max-|Δ| job on the two checkpointed rank frames; the
-        // same node universe on both sides, so an inner join is exact
-        val delta = next
-          .join(ranks.select(col("node"), col("r").as("_rp")), Seq("node"))
-          .agg(coalesce(max(abs(col("r") - col("_rp"))), lit(0L)))
-          .head().getLong(0)
-        converged = delta <= eps
       }
-      ranks = next
-      it += 1
-    }
-    ranks
+    }._1
   }
 
   /** 0.15*Scale + (17 * mass) div 20, with a loud int64 guard on the
@@ -221,28 +207,14 @@ object Graph {
     * (node, label) count + ONE node-keyed argmax — all keyed
     * shuffles, linear in edges. The argmax is max(struct(c, -label)):
     * a map-side-combinable aggregation, NOT a per-node window sort.
-    * Per-round lazy checkpoints keep the plan linear in rounds
-    * (the d06/g01 discipline). Label state is 16 bytes/node.
+    * Label state is 16 bytes/node.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val (sym, init) = lpaInit(edges)
-    var lbl = init
-    // no per-round checkpoint for the FIXED-round form: each round
-    // references `lbl` exactly once, so the plan grows LINEARLY in
-    // rounds (sym is checkpointed once in lpaInit) and the whole
-    // chain executes as one query — the checkpoints bought nothing
-    // but per-round block-manager writes here. The convergence-stop
-    // variant keeps them: its per-round isEmpty probe would otherwise
-    // re-execute the full chain every round. `rounds` is a public
-    // knob, and linear-in-rounds still means an UNBOUNDED static plan
-    // for a large budget (Catalyst analysis time, driver stack), so a
-    // lineage cut every 10 rounds bounds the plan depth while the
-    // default 3-round form keeps its single-query shape.
-    for (r <- 1 to rounds) {
-      lbl = lpaRound(sym, lbl)
-      if (r % 10 == 0 && r < rounds) lbl = lbl.graftCheckpointLazy
-    }
-    lbl
+    // each round reads `lbl` once, so the rounds chain into one query
+    Fixpoint.iterate(init, rounds, Fixpoint.Bounded, cutEvery = Fixpoint.ChainCut) {
+      (lbl, _) => lpaRound(sym, lbl)
+    }._1
   }
 
   /** [[labelPropagation]] run to FIXPOINT — the convergence-stop
@@ -263,29 +235,22 @@ object Graph {
     */
   def labelPropagationConverged(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
     val (sym, init) = lpaInit(edges)
-    var lbl = init
-    var rounds = 0
-    var converged = false
-    while (rounds < maxRounds && !converged) {
-      val next = lpaRound(sym, lbl).graftCheckpointLazy
-      converged = next
-        .join(lbl.select(col("node"), col("l").as("_prev")), Seq("node"))
+    val unchanged = Fixpoint.Settled { (prev, next) =>
+      next.join(prev.select(col("node"), col("l").as("_prev")), Seq("node"))
         .where(col("l") =!= col("_prev")).isEmpty
-      lbl = next
-      rounds += 1
     }
-    require(converged,
-      s"labelPropagationConverged: labels still changing after $maxRounds rounds — " +
-        "raise maxRounds, or the graph oscillates (synchronous LPA 2-cycles on " +
-        "bipartite structure); use labelPropagation(rounds = n) for a fixed budget")
-    lbl
+    Fixpoint.iterate(init, maxRounds,
+      Fixpoint.MustConverge("labelPropagationConverged",
+        "labels still changing: raise maxRounds, or the graph oscillates (synchronous " +
+          "LPA 2-cycles on bipartite structure); use labelPropagation(rounds = n) for a " +
+          "fixed budget"),
+      unchanged) { (lbl, _) => lpaRound(sym, lbl) }._1
   }
 
   /** Shared LPA setup: symmetric edge frame + self-label init. */
   private def lpaInit(edges: DataFrame): (DataFrame, DataFrame) = {
-    val sym = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-      .graftCheckpointLazy
+    val sym = Fixpoint.invariant(edges.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
     val init = sym.select(col("src").as("node")).distinct()
       .withColumn("l", col("node"))
       .graftCheckpointLazy
@@ -357,67 +322,39 @@ object Graph {
     * work is O(frontier-out-edges), total O(E + V) over the run.
     * Plan per round: one src-keyed semi-join driving the expansion,
     * one distinct on the new candidates, one anti-join against
-    * visited (both node-keyed, co-partitioned by AQE), per-round
-    * checkpoints (the d06/g01 lineage discipline). The frontier
-    * empty-probe is one isEmpty (limit-1) job on the checkpointed
-    * delta — rounds after exhaustion are never launched. At 100 TB:
+    * visited (both node-keyed, co-partitioned by AQE); the loop is
+    * [[Fixpoint.semiNaive]], so rounds after exhaustion are never
+    * launched. At 100 TB:
     * every shuffle is node- or src-keyed; visited grows to the
     * reachable set but is only ever anti-join probe side; no
     * driver-side state beyond the loop counter.
     */
-  def bfsDistances(
-      edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int,
-      checkpointEdges: Boolean = true
-  ): DataFrame = {
+  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"bfsDistances: maxHops must be >= 0, got $maxHops")
     bfsLoop(edges,
       seeds.select(col("node")).distinct().withColumn("dist", lit(0)),
-      labelCols = Seq.empty, maxHops, checkpointEdges)
+      labelCols = Seq.empty, maxHops)
   }
 
-  /** The ONE semi-naive BFS loop behind [[bfsDistances]] (labelCols
-    * empty) and [[bfsDistancesPerSeed]] (labelCols = seed) — the
-    * checkpoint / empty-probe / frontier mechanics live here once, so
-    * a fix to the loop discipline cannot drift between the variants.
-    * `init` must carry labelCols ++ (node, dist=0).
+  /** The semi-naive BFS round behind [[bfsDistances]] (labelCols
+    * empty) and [[bfsDistancesPerSeed]] (labelCols = seed). `init`
+    * must carry labelCols ++ (node, dist=0).
     */
   private def bfsLoop(
       edges: DataFrame,
       init: DataFrame,
       labelCols: Seq[String],
-      maxHops: Int,
-      checkpointEdges: Boolean
+      maxHops: Int
   ): DataFrame = {
-    // every round re-reads the edge frame, so it is checkpointed once
-    // here — callers that ALREADY checkpoint it (e.g. to share it
-    // with seed derivation) pass checkpointEdges=false, or the
-    // largest frame in the computation is materialized twice
-    val proj = edges.select(col("src"), col("dst"))
-    val e = if (checkpointEdges) proj.graftCheckpointLazy else proj
+    val e = Fixpoint.invariant(edges.select(col("src"), col("dst")))
     val keyCols = labelCols :+ "node"
-    var visited = init.graftCheckpointLazy
-    var frontier = visited.select(keyCols.map(col): _*)
-    var hop = 0
-    var exhausted = frontier.isEmpty
-    while (hop < maxHops && !exhausted) {
-      hop += 1
-      val delta = e
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"),
-          if (labelCols.isEmpty) "left_semi" else "inner")
+    Fixpoint.semiNaive(init, maxHops) { (frontier, visited, hop) =>
+      e.join(frontier.select(keyCols.map(col): _*).withColumnRenamed("node", "src"),
+          Seq("src"), if (labelCols.isEmpty) "left_semi" else "inner")
         .select((labelCols.map(col) :+ col("dst").as("node")): _*).distinct()
         .join(visited.select(keyCols.map(col): _*), keyCols, "left_anti")
         .withColumn("dist", lit(hop))
-        .graftCheckpointLazy
-      exhausted = delta.isEmpty
-      if (!exhausted) {
-        visited = visited.unionAll(delta.select(visited.columns.map(col): _*))
-          .graftCheckpointLazy
-        frontier = delta.select(keyCols.map(col): _*)
-      }
-    }
-    visited
+    } { (visited, delta) => visited.unionAll(delta.select(visited.columns.map(col): _*)) }
   }
 
   /** [[bfsDistances]] PER SEED: (seed, node, dist) for every seed in
@@ -428,22 +365,15 @@ object Graph {
     * expansion is one src-keyed join per round regardless of seed
     * count, and visited is keyed (seed, node) — total work
     * O(Σ per-seed reachable edges), which is why callers bound
-    * maxHops and sparsify seeds rather than running all-pairs. Same
-    * semi-naive/checkpoint/empty-probe discipline as
-    * [[bfsDistances]].
+    * maxHops and sparsify seeds rather than running all-pairs.
     */
-  def bfsDistancesPerSeed(
-      edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int,
-      checkpointEdges: Boolean = true
-  ): DataFrame = {
+  def bfsDistancesPerSeed(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"bfsDistancesPerSeed: maxHops must be >= 0, got $maxHops")
     bfsLoop(edges,
       seeds.select(col("node").as("seed")).distinct()
         .withColumn("node", col("seed"))
         .withColumn("dist", lit(0)),
-      labelCols = Seq("seed"), maxHops, checkpointEdges)
+      labelCols = Seq("seed"), maxHops)
   }
 
   /** Bounded-hop single-source shortest paths over a weighted edge
@@ -464,47 +394,26 @@ object Graph {
     * discipline). Per round: one src-keyed join frontier⋈edges, one
     * dst-keyed pre-min, one node-keyed left join to detect strict
     * improvement, one node-keyed min-merge into the running dist
-    * frame, per-round checkpoints + one limit-1 empty probe — all
-    * keyed shuffles, no driver state beyond the loop counter. Rounds
+    * frame — all keyed shuffles, on [[Fixpoint.semiNaive]]. Rounds
     * after the last improvement are never launched (negative-free
     * weights make dist monotone, so an empty delta is a true
     * fixpoint, not a pause).
     */
-  def ssspBounded(
-      edges: DataFrame,
-      seeds: DataFrame,
-      rounds: Int,
-      checkpointEdges: Boolean = true
-  ): DataFrame = {
+  def ssspBounded(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"ssspBounded: rounds must be >= 0, got $rounds")
-    // see [[bfsDistances]] on checkpointEdges — same contract
-    val proj = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    val e = if (checkpointEdges) proj.graftCheckpointLazy else proj
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).graftCheckpointLazy
-    var frontier = dist
-    var r = 0
-    var done = frontier.isEmpty
-    while (r < rounds && !done) {
-      r += 1
-      val relax = e
-        .join(frontier.select(col("node").as("src"), col("dist").as("_d")), Seq("src"))
+    val e = Fixpoint.invariant(
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    Fixpoint.semiNaive(seeds.select(col("node")).distinct().withColumn("dist", lit(0L)),
+        rounds) { (frontier, dist, _) =>
+      e.join(frontier.select(col("node").as("src"), col("dist").as("_d")), Seq("src"))
         .select(col("dst").as("node"), (col("_d") + col("w")).as("dist"))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val improved = relax
         .join(dist.select(col("node"), col("dist").as("_old")), Seq("node"), "left")
         .where(col("_old").isNull || col("dist") < col("_old"))
         .select(col("node"), col("dist"))
-        .graftCheckpointLazy
-      done = improved.isEmpty
-      if (!done) {
-        dist = dist.unionAll(improved)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .graftCheckpointLazy
-        frontier = improved
-      }
+    } { (dist, improved) =>
+      dist.unionAll(improved).groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }
-    dist
   }
 
   val all: Seq[Q] = Seq(
@@ -664,59 +573,18 @@ object Graph {
         // peel rounds (fixed count, like g01's iterations, so the
         // oracle is a literal 5-stage CTE unroll — a data-dependent
         // fixpoint would leave the oracle unable to know when to
-        // stop). Each round is ONE degree agg + two semi-joins
-        // restricting the edge list; per-round lazy checkpoints keep
-        // the plan linear in rounds (the g01/d06 discipline). At
-        // 100 TB: degree aggs shuffle on node, semi-joins broadcast
-        // the shrinking keep-list once it fits, all linear in edges.
+        // stop). Each round is [[Ops.peelRound]]; the 5 rounds run
+        // as one query.
         val ip = Tables.load(spark, dir, "lineitem")
           .filter($"l_quantity" >= 30)
           .select($"l_orderkey".as("ok"), $"l_partkey".as("p")).distinct()
         val und = ip.as("a").join(ip.as("b"), "ok")
           .where($"a.p" < $"b.p")
           .select($"a.p".as("u"), $"b.p".as("v")).distinct()
-        var e = und.select($"u".as("src"), $"v".as("dst"))
+        val sym = und.select($"u".as("src"), $"v".as("dst"))
           .unionAll(und.select($"v".as("src"), $"u".as("dst")))
-        // Round-17 restructure (§2.4: remove shuffled passes / fuse
-        // work per round). The former shape — per round, a degree
-        // groupBy plus TWO left-semi joins against the keep-list,
-        // with a lazy checkpoint because e was referenced three times
-        // per round (plan growth 3^rounds) — ran as ~27 AQE stage-jobs
-        // of mostly scheduling latency. The edge list is SYMMETRIC
-        // (both directions present), so deg(src) = COUNT() OVER
-        // (PARTITION BY src) and deg(dst) = COUNT() OVER (PARTITION BY
-        // dst) on the SAME rows: one round = two window counts + a
-        // filter, referencing e exactly ONCE — the plan grows linearly
-        // and the whole 5-round peel runs as a single query with no
-        // checkpoints (the g05 fixed-round LPA discipline). Value-
-        // identical: an edge survives iff both endpoint degrees are
-        // >= 3, exactly the keep-list semi-join condition, and the
-        // symmetric filter preserves symmetry round over round. At
-        // 100 TB both forms shuffle the edge list twice per round once
-        // the keep-list outgrows broadcast; the window form just stops
-        // paying the keep-list aggregation and its broadcast builds.
-        // Window ORDER alternates per round so adjacent rounds share
-        // one exchange: round r ends partitioned by its second window
-        // key, and round r+1 starts with a window on that SAME key
-        // (filter/project preserve hash partitioning, so the exchange
-        // is elided) — 11 exchanges fall to 7 across the 5 rounds +
-        // final degree agg, which ends on a src-window round so the
-        // groupBy(src) reuses the last partitioning too. The two
-        // window columns are computed on the same input rows before
-        // the filter, so their order within a round cannot change a
-        // value.
-        val wS = Window.partitionBy($"src")
-        val wD = Window.partitionBy($"dst")
-        for (r <- 1 to 5) {
-          val withDegs =
-            if (r % 2 == 1)
-              e.withColumn("_dd", count(lit(1)).over(wD))
-                .withColumn("_ds", count(lit(1)).over(wS))
-            else
-              e.withColumn("_ds", count(lit(1)).over(wS))
-                .withColumn("_dd", count(lit(1)).over(wD))
-          e = withDegs.where($"_ds" >= 3 && $"_dd" >= 3)
-            .select($"src", $"dst")
+        val (e, _) = Fixpoint.iterate(sym, 5, Fixpoint.Bounded, cutEvery = Fixpoint.ChainCut) {
+          (e, r) => Ops.peelRound(e, 3, r)
         }
         e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
           .orderBy($"node")
@@ -814,7 +682,7 @@ object Graph {
           .unionAll(und.select($"v".as("src"), $"u".as("dst")))
           .graftCheckpointLazy
         val seeds = sym.select($"src".as("node")).where($"node" % 97 === 0).distinct()
-        bfsDistances(sym, seeds, maxHops = 3, checkpointEdges = false)
+        bfsDistances(sym, seeds, maxHops = 3)
           .select($"node", $"dist".cast("int").as("dist"))
           .orderBy($"node")
       },
@@ -862,7 +730,7 @@ object Graph {
           .unionAll(wp.select($"v".as("src"), $"u".as("dst"), wcol))
           .graftCheckpointLazy
         val seeds = e.select($"src".as("node")).where($"node" % 97 === 0).distinct()
-        ssspBounded(e, seeds, rounds = 3, checkpointEdges = false)
+        ssspBounded(e, seeds, rounds = 3)
           .select($"node", $"dist")
           .orderBy($"node")
       },
@@ -917,7 +785,7 @@ object Graph {
           .unionAll(und.select($"v".as("src"), $"u".as("dst")))
           .graftCheckpointLazy
         val seeds = sym.select($"src".as("node")).where($"node" % 499 === 0).distinct()
-        val agg = bfsDistancesPerSeed(sym, seeds, maxHops = 2, checkpointEdges = false)
+        val agg = bfsDistancesPerSeed(sym, seeds, maxHops = 2)
           .where($"dist" > 0)
           .groupBy($"seed")
           .agg(count(lit(1)).cast("long").as("n_reached"),

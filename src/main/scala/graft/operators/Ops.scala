@@ -617,7 +617,10 @@ object Ops {
     *    ~log-many rounds where min-label would need ~10k).
     *
     * Convergence is detected by cheap scalar actions per round (label
-    * sums only decrease), never a driver-side diff of the frames.
+    * sums only decrease), never a driver-side diff of the frames. Both
+    * algorithms raise when `maxIterations` runs out before the
+    * fixpoint ([[Fixpoint]]'s budget rule) instead of returning a
+    * partial labeling.
     */
   def connectedComponents(
       edgePairs: DataFrame,
@@ -631,44 +634,33 @@ object Ops {
     if (algo == "star")
       return connectedComponentsStar(edgePairs, aCol, bCol,
         math.max(maxIterations, 50), idOut, labelOut)._1
-    // ONE materialization of the caller's pair plan (the star-CC
-    // round-16 fix applied to the min-label path): the symmetric edge
-    // view below references `pairs` TWICE, and a bare cache() above
-    // the union executed the caller's full pair-generation plan (for
-    // d06/d12 the posting/verify join chain) once per union branch
-    // when the cache first filled. Checkpointing the directed pairs
-    // first pins that plan to a single execution; the union over the
-    // checkpointed RDD is narrow.
-    val pairs = edgePairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .graftCheckpointLazy
+    // ONE materialization of the caller's pair plan: the symmetric
+    // edge view below references `pairs` TWICE, so an uncut pair plan
+    // (for d06/d12 the posting/verify join chain) would execute once
+    // per union branch.
+    val pairs = Fixpoint.invariant(edgePairs.select(col(aCol).as("src"), col(bCol).as("dst")))
     val edges = pairs.union(pairs.select(col("dst"), col("src"))).toDF("src", "dst").cache()
-    var labels = edges.groupBy(col("src"))
+    val init = edges.groupBy(col("src"))
       .agg(least(first(col("src")), min(col("dst"))).as("lbl"))
       .select(col("src").as("id"), col("lbl")).graftCheckpointLazy
-    var prevSum = Long.MaxValue
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
+    // labels only decrease, so their sum is the potential; sum over an
+    // empty frame is null — read through Option so a zero-edge graph
+    // converges to an empty result, not an NPE
+    val labelSum = Fixpoint.Potential(l =>
+      Option(l.agg(sum(col("lbl"))).head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
+    // the probe has materialized the last cut, so `edges` can go —
+    // also when the budget runs out
+    val (labels, _) = try Fixpoint.iterate(init, maxIterations,
+      Fixpoint.MustConverge("connectedComponents",
+        "raise maxIterations (min-label needs the largest component's diameter), " +
+          "or use algo = \"star\""),
+      labelSum) { (labels, _) =>
       val nmin = edges.join(labels.select(col("id").as("src"), col("lbl")), "src")
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-      // localCheckpoint, not cache: iterative rounds compound the
-      // logical plan, and cached frames still carry full lineage —
-      // past ~30 rounds the plan strings alone exhaust the driver.
-      // Lazy: the convergence sum below materializes it, one job/round
-      val next = labels
+      labels
         .join(nmin.select(col("dst").as("id"), col("nlbl")), Seq("id"), "left")
         .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .graftCheckpointLazy
-      // sum over an empty labels frame is null — read through Option
-      // so a zero-edge graph converges to an empty result, not an NPE
-      val s = Option(next.agg(sum(col("lbl"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
-    }
-    edges.unpersist()
+    } finally edges.unpersist()
     labels.select(col("id").as(idOut), col("lbl").as(labelOut))
   }
 
@@ -676,42 +668,49 @@ object Ops {
     * variant of the canned g03 query (g03 keeps 5 fixed rounds so its
     * DuckDB oracle is a literal CTE unroll; THIS is what a user calls).
     * `edges` holds both directions of each undirected edge (the g03
-    * convention). Each round drops nodes with residual degree < k;
-    * stops when a round removes nothing (the edge count is a strictly
-    * decreasing potential, so ONE cheap count action per round detects
-    * the fixpoint — the connectedComponents discipline) or at
-    * `maxRounds`. Returns (node, deg) over the surviving subgraph —
+    * convention). Each round is [[peelRound]]; the edge count is a
+    * strictly decreasing potential, so one count per round detects
+    * the fixpoint. Returns (node, deg) over the surviving subgraph —
     * the true k-core, matching the fixed-round output whenever the
     * fixed rounds already converged (Round8GraphSpec pins both ways).
-    * Scale shape per round: one degree agg + two semi-joins, all keyed
-    * on node; per-round lazy checkpoints keep the plan linear in
-    * rounds. Worst case is O(n) rounds on a chain — maxRounds bounds
-    * pathological inputs, and hitting it raises rather than returning
-    * a non-core silently.
+    * Worst case is O(n) rounds on a chain — maxRounds bounds
+    * pathological inputs, and hitting it raises.
     */
   def kCore(
       edges: DataFrame,
       k: Int,
       maxRounds: Int = 1000
   ): DataFrame = {
-    var e = edges.select(col("src"), col("dst")).graftCheckpointLazy
-    var prev = -1L
-    var n = e.count()
-    var rounds = 0
-    while (n != prev && rounds < maxRounds) {
-      prev = n
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-        .where(col("_d") >= k).select(col("src").as("_k"))
-      e = e.join(keep.select(col("_k").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("_k").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .graftCheckpointLazy
-      n = e.count() // materializes the round's checkpoint + tests the fixpoint
-      rounds += 1
-    }
-    require(n == prev,
-      s"kCore: no fixpoint within $maxRounds rounds ($n edges left) — raise maxRounds")
+    val (e, _) = Fixpoint.iterate(edges.select(col("src"), col("dst")), maxRounds,
+      Fixpoint.MustConverge("kCore", "raise maxRounds"),
+      Fixpoint.Potential(_.count())) { (e, r) => peelRound(e, k, r) }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+  }
+
+  /** One synchronous k-core peel round over a SYMMETRIC edge list
+    * (`src`, `dst`, both directions present): an edge survives iff
+    * both endpoint degrees are >= k. Symmetry makes deg(src) =
+    * COUNT() OVER (PARTITION BY src) and deg(dst) = COUNT() OVER
+    * (PARTITION BY dst) on the same rows, so a round is two window
+    * counts + a filter that reads `e` once — no degree aggregation
+    * and no keep-list joins — and the filter preserves symmetry.
+    * Window ORDER alternates with the round's parity so adjacent
+    * rounds share an exchange: round r ends partitioned by its second
+    * window key and round r + 1 starts with a window on that same key
+    * (filter/project preserve hash partitioning). An odd round ends
+    * on src, so a following groupBy(src) reuses its partitioning too.
+    * Both counts see the same input rows, so their order cannot
+    * change a value.
+    */
+  private[operators] def peelRound(e: DataFrame, k: Int, round: Int): DataFrame = {
+    val wS = Window.partitionBy(col("src"))
+    val wD = Window.partitionBy(col("dst"))
+    val withDegs =
+      if (round % 2 == 1)
+        e.withColumn("_dd", count(lit(1)).over(wD)).withColumn("_ds", count(lit(1)).over(wS))
+      else
+        e.withColumn("_ds", count(lit(1)).over(wS)).withColumn("_dd", count(lit(1)).over(wD))
+    withDegs.where(col("_ds") >= k && col("_dd") >= k).select(col("src"), col("dst"))
   }
 
   /** Large-star/small-star contraction CC (Kiveris et al. SoCC'14),
@@ -736,14 +735,9 @@ object Ops {
       idOut: String = "id",
       labelOut: String = "label"
   ): (DataFrame, Int) = {
-    // ONE materialization of the caller's pair plan: the distinct
-    // directed pair set is lazily checkpointed and both the node
-    // universe and the loop's initial edge set derive from it. (The
-    // former `nodes = pairs...distinct().cache()` re-executed the
-    // caller's FULL pair-generation plan — for d08/d22/d23 the
-    // posting/verify join chain — a second time when the final labels
-    // join first touched the cache; measured ~1.2 s per re-run at
-    // sf0.1.)
+    // ONE materialization of the caller's pair plan (for d08/d22/d23
+    // the posting/verify join chain): the node universe and the loop's
+    // initial edge set both derive from the cut distinct pair set
     val base = edgePairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .distinct().graftCheckpointLazy
@@ -781,31 +775,15 @@ object Ops {
         .distinct()
     }
 
-    // localCheckpoint (not cache) per round: star iterations compound
-    // the logical plan geometrically, so lineage MUST be truncated or
-    // the driver chokes on plan strings long before the data is big —
-    // the standard iterative-graph pattern (a real cluster job may
-    // prefer reliable checkpoints to survive executor loss).
-    // LAZY checkpoints: the convergence aggregate right below is the
-    // materializing action, so each round runs ONE Spark job, not two
-    // (an eager checkpoint ran its own job and the agg a second one —
-    // at ~25 rounds on a near-clique graph the per-job overhead, not
-    // the data, dominated round 4's driver-env d08 time).
-    var edges = base.where(col("src") =!= col("dst"))
-    var prev = (-1L, -1L, -1L)
-    var rounds = 0
-    var converged = edges.isEmpty
-    while (!converged && rounds < maxIterations) {
-      val next = smallStar(largeStar(edges)).graftCheckpointLazy
-      val stat = next.agg(count(lit(1)), sum(col("src")), sum(col("dst"))).head()
-      val cur = (stat.getLong(0),
-        Option(stat.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L),
-        Option(stat.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L))
-      edges = next
-      converged = cur == prev
-      prev = cur
-      rounds += 1
+    // (edge-count, sum(src), sum(dst)) is the potential
+    def sumOr0(v: Any): Long = Option(v).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val stat = Fixpoint.Potential { e =>
+      val r = e.agg(count(lit(1)), sum(col("src")), sum(col("dst"))).head()
+      (r.getLong(0), sumOr0(r.get(1)), sumOr0(r.get(2)))
     }
+    val (edges, rounds) = Fixpoint.iterate(base.where(col("src") =!= col("dst")),
+      maxIterations, Fixpoint.MustConverge("connectedComponentsStar", "raise maxIterations"),
+      stat) { (e, _) => smallStar(largeStar(e)) }
     // converged edge set is a star forest (member -> root); nodes with
     // no surviving edge (self-loop-only inputs) label themselves
     val labels = nodes
@@ -1788,6 +1766,12 @@ object Ops {
     */
   private[operators] val ProbeAllowBroadcastMax = 4L << 20
 
+  /** Most probes [[probeSignIndex]] collects to the driver with
+    * `routeOnDriver = true` (the probe batch, vectors included, becomes
+    * a local relation).
+    */
+  private[operators] val ProbeRouteOnDriverMax = 1 << 16
+
   def probeAnnIndex(
       probes: DataFrame,
       probeIdCol: String,
@@ -2013,16 +1997,18 @@ object Ops {
       if (!routeOnDriver) (p0, probeCellsOf(p0), None)
       else {
         import scala.jdk.CollectionConverters._
-        val pLocal = spark.createDataFrame(
-          p0.collect().toSeq.asJava, p0.schema)
+        // loud bound on the driver-side probe batch: one row past the
+        // bound is enough to refuse, never the whole batch
+        val probeRows = p0.limit(ProbeRouteOnDriverMax + 1).collect()
+        require(probeRows.length <= ProbeRouteOnDriverMax,
+          s"probeSignIndex(routeOnDriver = true) collects the probe batch to the driver: " +
+            s"more than $ProbeRouteOnDriverMax probes — split the batch or pass " +
+            "routeOnDriver = false")
+        val pLocal = spark.createDataFrame(probeRows.toSeq.asJava, p0.schema)
         val cellRows = probeCellsOf(pLocal).collect()
         val cellsLocal = spark.createDataFrame(cellRows.toSeq.asJava,
           probeCellsOf(pLocal).schema)
-        val ids = cellRows.map(r =>
-          r.get(1) match {
-            case i: Int => i.toLong
-            case l: Long => l
-          }).distinct.toSeq
+        val ids = cellRows.map(_.getAs[Number](1).longValue).distinct.toSeq
         val lits: Seq[Any] =
           if (cellType == org.apache.spark.sql.types.IntegerType) ids.map(_.toInt)
           else ids

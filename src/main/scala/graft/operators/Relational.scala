@@ -1946,8 +1946,7 @@ object Relational {
         // VERDICT: each approx value must lie inside the exact-value
         // window at p ± 2/accuracy — 2x the single-summary eps
         // because (a) merging per-task partial summaries can exceed
-        // the one-pass bound (measured via graft.tools.GkErrProbe:
-        // 1.02x eps·n at sf0.001) and (b) percentile_disc's
+        // the one-pass bound (measured: 1.02x eps·n at sf0.001) and (b) percentile_disc's
         // ceil-rank convention shaves up to one rank off each edge.
         // Still scale-invariant, so the same query gates at every
         // sf; DuckDB emits literal TRUE. Round10OpsSpec additionally

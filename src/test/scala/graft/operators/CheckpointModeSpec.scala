@@ -25,8 +25,12 @@ class CheckpointModeSpec extends SparkTestBase {
     val sym = edges.select($"id_a".as("src"), $"id_b".as("dst"))
       .unionAll(edges.select($"id_b".as("src"), $"id_a".as("dst")))
 
-    val localCc = Ops.connectedComponents(edges, "id_a", "id_b").collect()
+    // min-label needs ~40 rounds on the 41-node chain
+    def cc() = Ops.connectedComponents(edges, "id_a", "id_b", maxIterations = 50).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val localCc = cc()
+    val truth = (1L to 41L).map(_ -> 1L).toMap ++ Seq(100L, 101L, 102L).map(_ -> 100L)
+    assert(localCc == truth)
     val localCore = Ops.kCore(sym, k = 2).collect()
       .map(r => r.getLong(0)).toSet
 
@@ -34,8 +38,7 @@ class CheckpointModeSpec extends SparkTestBase {
     spark.sparkContext.setCheckpointDir(ckDir)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {
-      val relCc = Ops.connectedComponents(edges, "id_a", "id_b").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val relCc = cc()
       val relCore = Ops.kCore(sym, k = 2).collect()
         .map(r => r.getLong(0)).toSet
       assert(relCc == localCc)

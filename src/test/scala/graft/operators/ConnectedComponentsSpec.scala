@@ -37,6 +37,27 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(labels.count() == n)
   }
 
+  test("min-label raises when its budget runs out before the fixpoint") {
+    import spark.implicits._
+    // the 41-node chain needs ~40 min-label rounds; the default 20
+    // used to return a partial labeling with 20 labels for one component
+    val chain = (1L to 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val ex = intercept[IllegalArgumentException] {
+      Ops.connectedComponents(chain, "a", "b").collect()
+    }
+    assert(ex.getMessage.contains("no fixpoint within 20 rounds"), ex.getMessage)
+    val labels = labelsOf(Ops.connectedComponents(chain, "a", "b", maxIterations = 50))
+    assert(labels.size == 41 && labels.values.toSet == Set(1L))
+  }
+
+  test("star raises when maxIterations is too small") {
+    val chain = spark.range(999).select(col("id").as("a"), (col("id") + 1).as("b"))
+    val ex = intercept[IllegalArgumentException] {
+      Ops.connectedComponentsStar(chain, "a", "b", maxIterations = 2)
+    }
+    assert(ex.getMessage.contains("no fixpoint within 2 rounds"), ex.getMessage)
+  }
+
   test("both algorithms return empty on an empty edge list (no NPE)") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")

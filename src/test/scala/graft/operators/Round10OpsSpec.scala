@@ -109,8 +109,8 @@ class Round10OpsSpec extends SparkTestBase {
       val xs = byFlag(flag)
       val n = xs.length.toDouble
       // tolerance 2·n/acc (+1 for the discrete-rank edge): partial-
-      // summary merges can exceed the one-pass eps·n bound (GkErrProbe
-      // measured 1.02x at this sf) — same window the query itself gates
+      // summary merges can exceed the one-pass eps·n bound (measured
+      // 1.02x at this sf) — same window the query itself gates
       val rank = xs.count(_ <= v)
       assert(math.abs(rank - p * n) <= 2.0 * n / acc + 1,
         s"$flag p=$p: rank $rank vs target ${p * n} exceeds ${2.0 * n / acc}")

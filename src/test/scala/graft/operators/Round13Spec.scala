@@ -52,6 +52,20 @@ class Round13Spec extends SparkTestBase {
     assert(!guarded.exists(_._3 == 999999L))
   }
 
+  test("probeSignIndex(routeOnDriver = true) refuses a probe batch past its bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-probebound").toString
+    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+      k = 8, m = 4, kSub = 8, storeSigs = true)
+    val idx = Ops.readAnnIndex(spark, dir)
+    val probes = spark.range(Ops.ProbeRouteOnDriverMax + 1L)
+      .select($"id".as("vec_id"), array(lit(0.5f)).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      Ops.probeSignIndex(probes, "vec_id", "embedding", idx)
+    }
+    assert(e.getMessage.contains(s"more than ${Ops.ProbeRouteOnDriverMax} probes"),
+      e.getMessage)
+  }
+
   test("t28 contains t27: every duplicated full window lies inside a repeated-interval") {
     // A t27-duplicated FULL (n_real=64) window's 57 constituent
     // 8-grams all repeat corpus-wide, so its token span

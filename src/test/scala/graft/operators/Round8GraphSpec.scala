@@ -57,6 +57,10 @@ class Round8GraphSpec extends SparkTestBase {
     }
     val after5 = e5.select($"src").distinct().count()
     assert(after5 == 5, s"5 fixed rounds should leave 5 chain nodes, got $after5")
+    // the shared window peel round (g03's and kCore's) equals the
+    // degree-agg + semi-join round, five rounds deep
+    val peeled = (1 to 5).foldLeft(e)((cur, r) => Ops.peelRound(cur, 2, r))
+    assert(peeled.collect().toSet == e5.collect().toSet)
     assert(Ops.kCore(e, k = 2).count() == 0,
       "a chain has no 2-core: the fixpoint must be empty")
   }
