@@ -20,20 +20,7 @@ object Materializers {
         case ds: Dataset[_] =>
           cell.materializePolicy match {
             case Some("cache") => ds.cache()
-            case Some("checkpoint") =>
-              // the Ops.checkpointFrame knob, type-preservingly (this
-              // is the one Dataset[T]-generic site). Reliable mode
-              // persists first: rdd.checkpoint reruns the lineage in
-              // a separate write job unless cached — same sequence as
-              // checkpointFrame, kept in sync by MaterializersSpec.
-              if (ds.sparkSession.conf
-                  .getOption("spark.graft.checkpoint.reliable").exists(_.toBoolean)) {
-                val cached =
-                  ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                val out = cached.checkpoint(eager = true)
-                cached.unpersist()
-                out
-              } else ds.localCheckpoint()
+            case Some("checkpoint") => graft.operators.Ops.checkpointFrame(ds, eager = true)
             case _ => ds
           }
         case other => other

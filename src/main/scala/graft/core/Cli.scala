@@ -154,7 +154,7 @@ object Cli {
       //   index takedown  -p PATH --docs PARQUET --takedown-id N  (gram)
       // KIND ∈ band | ann | lex | gram | perceptual | frame
       case "index" =>
-        import graft.operators.{Dedup, GramIndex, IndexLayout, LexIndex, Multimodal, Ops}
+        import graft.operators.{Dedup, GramIndex, IndexLayout, LexIndex, Multimodal, VectorIndex}
         val sub = targets.headOption.getOrElse("")
         def p: String = idxPath.getOrElse {
           out("Error: index commands need -p <path>")
@@ -193,7 +193,7 @@ object Cli {
           case "compact" =>
             kind match {
               case "band" => Dedup.compactBandIndex(spark, p, keep)
-              case "ann" => Ops.compactAnnIndex(spark, p, keep)
+              case "ann" => VectorIndex.compactAnnIndex(spark, p, keep)
               case "lex" => LexIndex.compactLexIndex(spark, p)
               case "gram" => GramIndex.compactGramIndex(spark, p)
               case "perceptual" => Multimodal.compactPerceptualIndex(spark, p, keep)
@@ -206,7 +206,7 @@ object Cli {
           case "tombstone" =>
             kind match {
               case "band" => Dedup.tombstoneBandIndex(idsDf, "id", p)
-              case "ann" => Ops.tombstoneAnnIndex(idsDf, "id", p)
+              case "ann" => VectorIndex.tombstoneAnnIndex(idsDf, "id", p)
               case "lex" => LexIndex.tombstoneLexIndex(idsDf, "id", p)
               case "perceptual" => Multimodal.tombstonePerceptualIndex(idsDf, "id", p)
               case "frame" => Multimodal.tombstoneFrameIndex(idsDf, "id", p)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Workflow
 import graft.functions.PortableHash
-import graft.operators.{Dedup, Ops}
+import graft.operators.{Clustering, Dedup, Ops, ShardLayout}
 import graft.tables.Tables
 
 /** The library's end-to-end story: a training-data curation pipeline
@@ -71,7 +71,7 @@ object DataPipeline {
         val in = ctx.as[DataFrame]("in")
         val pairs = Dedup.ngramJaccardAtScale(in, 0.4, 1000)
           .select(col("id_a"), col("id_b"))
-        val labels = Ops.connectedComponents(pairs, "id_a", "id_b",
+        val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
           idOut = "doc_id", labelOut = "cluster_id")
         val keep = labels
           .join(in.select(col("doc_id"), col("n_chars")), "doc_id")
@@ -177,7 +177,7 @@ object DataPipeline {
     // topic-balanced subset an annotation or eval pass draws from,
     // instead of over-representing dense clusters
     wkf.provide("vecs.sample") { _ =>
-      Ops.clusterSample(Tables.load(spark, dir, "embeddings"),
+      Clustering.clusterSample(Tables.load(spark, dir, "embeddings"),
         "vec_id", "embedding")
     }
 
@@ -231,7 +231,7 @@ object DataPipeline {
     wkf
       .provide("docs.shards.{out:path}") { ctx =>
         val out = ctx.str("out") + "/shards"
-        Ops.writeShuffledShards(
+        ShardLayout.writeShuffledShards(
           ctx.as[DataFrame]("in").drop("n_grp", "cum_before"), "doc_id", out,
           nShards = 8, seed = "epoch0")
         out
@@ -248,7 +248,7 @@ object DataPipeline {
     wkf
       .provide("docs.tokenshards.{out:path}") { ctx =>
         val out = ctx.str("out") + "/tokenshards"
-        Ops.packTokenShards(
+        ShardLayout.packTokenShards(
           ctx.as[DataFrame]("in").drop("n_grp", "cum_before"), out,
           window = 64, nShards = 8, seed = "epoch0")
         out
@@ -341,11 +341,11 @@ object DataPipeline {
       .depend("in" -> "docs.capped")
     wkf
       .provide("docs.serve.read.{out:path}") { ctx =>
-        Ops.readMerged(spark, ctx.str("out") + "/served")
+        ShardLayout.readMerged(spark, ctx.str("out") + "/served")
       }
     wkf
       .provide("docs.serve.pinned.{ver}.{out:path}") { ctx =>
-        Ops.readMergedAt(spark, ctx.str("out") + "/served", ctx.str("ver"))
+        ShardLayout.readMergedAt(spark, ctx.str("out") + "/served", ctx.str("ver"))
       }
 
     // ---- retrieval terminal (round 13): the same curated corpus
@@ -504,7 +504,7 @@ object DataPipeline {
     // epoch stays readable (O47)
     val servedOut = java.nio.file.Files.createTempDirectory("graft_served").toString
     val servedPath = wkf.run(s"docs.serve.repair.$servedOut").asInstanceOf[String]
-    val epochs = graft.operators.Ops.shardVersions(spark, servedPath)
+    val epochs = graft.operators.ShardLayout.shardVersions(spark, servedPath)
     val cur = wkf.run(s"docs.serve.read.$servedOut").asInstanceOf[DataFrame].count()
     val seeded = wkf.run(s"docs.serve.pinned.${epochs.head}.$servedOut")
       .asInstanceOf[DataFrame].count()

@@ -37,10 +37,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.resolveUrlFn)
     ext.injectFunction(GraftExtensions.sniffMimeFn)
     // whole-operator path: plans graft.plans.AsOfJoin logical nodes
-    // (Ops.asofJoinNative also self-registers per-session)
+    // (Joins.asofJoinNative also self-registers per-session)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinLimitPushdown)
-    // (Ops.intervalJoinNative also self-registers per-session)
+    // (Joins.intervalJoinNative also self-registers per-session)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
     // X10: SQL syntax for the native join tier — asof_join(...) /
     // interval_join(...) table-valued functions over named tables

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
 /** Sql-side twin of SparkCoreBridge: `Dataset.ofRows` is
-  * `private[sql]`, and the native-operator API (Ops.asofJoinNative)
+  * `private[sql]`, and the native-operator API (Joins.asofJoinNative)
   * needs it to wrap a custom LogicalPlan node back into a public
   * DataFrame. One line, no behavior — just visibility.
   */

@@ -60,7 +60,7 @@ object Dedup {
     * flag decided in exact integers (2·n_hit >= n_spans, i.e. >= 50%
     * overlap). The corpus-sized work is one explode + one semi-join +
     * one keyed agg; the eval universe is benchmark-sized and
-    * broadcasts — past broadcast capacity, [[Ops.bloomSemiJoin]]
+    * broadcasts — past broadcast capacity, [[Joins.bloomSemiJoin]]
     * slots in on the same shingle key. Docs under 3 words have no
     * shingles and are dropped (nothing to measure).
     */
@@ -116,7 +116,7 @@ object Dedup {
     * published, deduplicated, is low-GB of distinct shingles: near the
     * default 8 GB broadcast ceiling, and over it with margin on
     * smaller executors). The membership probe routes through
-    * [[Ops.bloomSemiJoin]]: the eval shingle universe aggregates into
+    * [[Joins.bloomSemiJoin]]: the eval shingle universe aggregates into
     * a distributed Bloom filter whose codegen'd might_contain
     * prefilters the corpus-sized exploded-shingle stream BEFORE the
     * shuffle — only the ~fpp false-positive sliver plus the true hits
@@ -157,7 +157,7 @@ object Dedup {
     val trainSh = shingleArrays(train).cache()
     val evalU = shingleArrays(evalDocs).select(explode(col("sh")).as("s"))
       .distinct().cache()
-    val hits = Ops.bloomSemiJoin(
+    val hits = Joins.bloomSemiJoin(
         trainSh.select(col("doc_id"), explode(col("sh")).as("s")),
         "s", evalU, "s", expectedItems, fpp)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
@@ -1714,7 +1714,7 @@ object Dedup {
     // scaladoc and docs/SCALING.md round 13); value-identical,
     // spec-pinned in DedupScaleSpec.
     val pairs = minhashLshAtScale(docs).select(col("id_a"), col("id_b"))
-    val labels = Ops.connectedComponents(pairs, "id_a", "id_b",
+    val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
       idOut = "doc_id", labelOut = "cluster_id", algo = "star")
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -1769,7 +1769,7 @@ object Dedup {
       .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
       .where($"c".cast("double") / ($"na" + $"nb" - $"c") >= 0.4)
       .select($"id_a", $"id_b")
-    val labels = Ops.connectedComponents(pairs, "id_a", "id_b",
+    val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
       idOut = "doc_id", labelOut = "cluster_id", algo = algo)
     val win = org.apache.spark.sql.expressions.Window.partitionBy($"cluster_id")
     labels

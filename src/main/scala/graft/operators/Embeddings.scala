@@ -444,7 +444,7 @@ object Embeddings {
         // entirely (t08's hash-rate shape); the quota form here is the
         // one whose output size is exact, which is what the oracle
         // pins.
-        Ops.clusterSample(Tables.load(spark, dir, "embeddings"),
+        Clustering.clusterSample(Tables.load(spark, dir, "embeddings"),
             "vec_id", "embedding", k = 8, iters = 2, dim = 64, perCell = 4)
           .orderBy($"cell", $"rn")
       },

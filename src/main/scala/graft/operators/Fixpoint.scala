@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one round loop behind every iterative operator: PageRank and
   * label propagation (fixed and converged), BFS and SSSP, the k-core
-  * peel (g03 and [[Ops.kCore]]) and both connected-components
-  * algorithms.
+  * peel (g03 and [[Clustering.kCore]]), both connected-components
+  * algorithms and the Lloyd quantizer trainer ([[Clustering.lloyd]]).
   *
   * '''The cut.''' A round's output is cut with a lazy
   * [[Ops.checkpointFrame]], so `spark.graft.checkpoint.reliable`

@@ -103,19 +103,17 @@ object GramIndex {
     // the manifest records the DERIVED bucket count (nb), never the
     // caller arg — under auto-sizing the arg is 0, and a 0 in the
     // authoritative manifest would poison every probe's pmod routing
-    IL.writeMeta(spark, s"$root/$v", MetaName,
-      s"""{"gram":$gram,"nBuckets":$nb}""")
+    IL.writeManifest(spark, s"$root/$v", MetaName, "gram" -> gram, "nBuckets" -> nb)
     IL.publish(spark, root, v)
     IL.gcVersions(spark, root, keep = 1)
   }
 
   def readGramIndex(spark: SparkSession, path: String): GramIndexHandle = {
     val dir = IL.resolveDir(spark, s"$path/grams")
-    val meta = IL.readMeta(spark, dir, MetaName).getOrElse(
+    val meta = IL.readManifest(spark, dir, MetaName).getOrElse(
       sys.error(s"readGramIndex: $dir has no $MetaName manifest"))
     def intOf(k: String): Int =
-      ("\"" + k + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(meta).map(_.group(1).toInt)
-        .getOrElse(sys.error(s"readGramIndex: malformed $MetaName: $meta"))
+      meta.get(k).map(_.toInt).getOrElse(sys.error(s"readGramIndex: malformed $MetaName: $meta"))
     GramIndexHandle(spark.read.parquet(dir), intOf("gram"), intOf("nBuckets"))
   }
 
@@ -382,8 +380,8 @@ object GramIndex {
         graft.sinks.RoutedSink.standard().write(s"parquet:$root/$ver:by:bucket", merged)
         ver
       } finally net.unpersist()
-    IL.writeMeta(spark, s"$root/$v", MetaName,
-      s"""{"gram":${idx.gram},"nBuckets":${idx.nBuckets}}""")
+    IL.writeManifest(spark, s"$root/$v", MetaName,
+      "gram" -> idx.gram, "nBuckets" -> idx.nBuckets)
     IL.copyAppendLedger(spark, oldDir, s"$root/$v")
     IL.publish(spark, root, v)
     IL.gcVersions(spark, root, keep = 1)

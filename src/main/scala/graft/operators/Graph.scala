@@ -573,7 +573,7 @@ object Graph {
         // peel rounds (fixed count, like g01's iterations, so the
         // oracle is a literal 5-stage CTE unroll — a data-dependent
         // fixpoint would leave the oracle unable to know when to
-        // stop). Each round is [[Ops.peelRound]]; the 5 rounds run
+        // stop). Each round is [[Clustering.peelRound]]; the 5 rounds run
         // as one query.
         val ip = Tables.load(spark, dir, "lineitem")
           .filter($"l_quantity" >= 30)
@@ -584,7 +584,7 @@ object Graph {
         val sym = und.select($"u".as("src"), $"v".as("dst"))
           .unionAll(und.select($"v".as("src"), $"u".as("dst")))
         val (e, _) = Fixpoint.iterate(sym, 5, Fixpoint.Bounded, cutEvery = Fixpoint.ChainCut) {
-          (e, r) => Ops.peelRound(e, 3, r)
+          (e, r) => Clustering.peelRound(e, 3, r)
         }
         e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
           .orderBy($"node")

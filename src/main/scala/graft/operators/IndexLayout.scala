@@ -251,6 +251,38 @@ object IndexLayout {
     }
   }
 
+  /** The one manifest codec: a flat JSON object whose values are
+    * integers or strings. Strings carry one escape rule — a backslash
+    * makes the next character literal, and the encoder escapes
+    * exactly `\` and `"` — so any column name round-trips.
+    */
+  def encodeManifest(fields: (String, Any)*): String =
+    fields.map {
+      case (k, v @ (_: Int | _: Long)) => s""""$k":$v"""
+      case (k, v) => s""""$k":"${v.toString.replace("\\", "\\\\").replace("\"", "\\\"")}""""
+    }.mkString("{", ",", "}")
+
+  private val ManifestField =
+    """"((?:[^"\\]|\\.)*)"\s*:\s*(?:"((?:[^"\\]|\\.)*)"|(-?\d+))""".r
+
+  /** Fields of a manifest written by [[encodeManifest]]; integers
+    * come back as their digits.
+    */
+  def decodeManifest(s: String): Map[String, String] = {
+    def unescape(v: String) = v.replaceAll("""\\(.)""", "$1")
+    ManifestField.findAllMatchIn(s).map { m =>
+      unescape(m.group(1)) -> Option(m.group(2)).map(unescape).getOrElse(m.group(3))
+    }.toMap
+  }
+
+  /** [[writeMeta]] of an [[encodeManifest]] object. */
+  def writeManifest(spark: SparkSession, dir: String, name: String, fields: (String, Any)*): Unit =
+    writeMeta(spark, dir, name, encodeManifest(fields: _*))
+
+  /** [[readMeta]] decoded by [[decodeManifest]]; None if absent. */
+  def readManifest(spark: SparkSession, dir: String, name: String): Option[Map[String, String]] =
+    readMeta(spark, dir, name).map(decodeManifest)
+
   // ---------------------------------------------------------------
   // Batch-keyed idempotent appends (day-2 ingestion under an
   // at-least-once driver: Structured Streaming's foreachBatch replays

@@ -142,24 +142,21 @@ object LexIndex {
     val sink = graft.sinks.RoutedSink.standard()
     sink.write(s"parquet:$root/$v/postings:by:bucket", post)
     sink.write(s"parquet:$root/$v/terms:by:bucket", terms)
-    IL.writeMeta(spark, s"$root/$v", MetaName,
-      s"""{"ndocs":$ndocs,"ntok":$ntok,"nBuckets":$nb,""" +
-        s""""idCol":"${Ops.jsonEscape(idCol)}"}""")
+    IL.writeManifest(spark, s"$root/$v", MetaName,
+      "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> nb, "idCol" -> idCol)
     IL.publish(spark, root, v)
     IL.gcVersions(spark, root, keep = 1)
     post0.unpersist()
   }
 
-  private def metaLong(meta: String, k: String, where: String): Long =
-    ("\"" + k + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(meta).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"readLexIndex: malformed $where: $meta"))
+  private def metaLong(meta: Map[String, String], k: String, where: String): Long =
+    meta.get(k).map(_.toLong).getOrElse(sys.error(s"readLexIndex: malformed $where: $meta"))
 
   /** The manifest's recorded id column (append/compact re-tokenize
     * under the ORIGINAL id contract, never the caller's).
     */
-  private def metaIdCol(meta: String): String =
-    "\"idCol\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(meta)
-      .map(_.group(1)).getOrElse("doc_id")
+  private def metaIdCol(meta: Map[String, String]): String =
+    meta.getOrElse("idCol", "doc_id")
 
   /** Resolve the CURRENT epoch (one atomic flip covers postings,
     * terms AND the stats manifests). ndocs/ntok = the base manifest
@@ -168,7 +165,7 @@ object LexIndex {
     */
   def readLexIndex(spark: SparkSession, path: String): LexIndexHandle = {
     val dir = IL.resolveDir(spark, s"$path/store")
-    val meta = IL.readMeta(spark, dir, MetaName).getOrElse(
+    val meta = IL.readManifest(spark, dir, MetaName).getOrElse(
       sys.error(s"readLexIndex: $dir has no $MetaName manifest"))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
@@ -182,11 +179,9 @@ object LexIndex {
       }
       .sortBy(_.getPath.getName)
       .map { st =>
-        val in = fs.open(st.getPath)
-        val s = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        (metaLong(s, "ndocs", st.getPath.getName),
-          metaLong(s, "ntok", st.getPath.getName))
+        val name = st.getPath.getName
+        val s = IL.readManifest(spark, dir, name).get
+        (metaLong(s, "ndocs", name), metaLong(s, "ntok", name))
       }
     LexIndexHandle(
       postings = spark.read.parquet(s"$dir/postings"),
@@ -231,7 +226,7 @@ object LexIndex {
     val spark = docs.sparkSession
     val root = s"$path/store"
     val dir = IL.resolveDir(spark, root)
-    val meta = IL.readMeta(spark, dir, MetaName).getOrElse(
+    val meta = IL.readManifest(spark, dir, MetaName).getOrElse(
       sys.error(s"appendLexIndex: $dir has no $MetaName manifest"))
     if (IL.appendCommitted(spark, dir, batchId)) return
     val nb = metaLong(meta, "nBuckets", MetaName).toInt
@@ -267,8 +262,8 @@ object LexIndex {
     // idempotent under the batchId key, so a crash anywhere replays
     // to the identical end state.
     IL.stageMoveAppend(terms, s"$dir/terms", "bucket", batchId)
-    IL.writeMeta(spark, dir, f"$AppendMetaPrefix$batchId%020d",
-      s"""{"ndocs":$dNdocs,"ntok":$dNtok}""")
+    IL.writeManifest(spark, dir, f"$AppendMetaPrefix$batchId%020d",
+      "ndocs" -> dNdocs, "ntok" -> dNtok)
     IL.stageMoveAppend(post, s"$dir/postings", "bucket", batchId)
     post0.unpersist()
     IL.commitAppend(spark, dir, batchId)
@@ -293,7 +288,7 @@ object LexIndex {
     val root = s"$path/store"
     val oldDir = IL.resolveDir(spark, root)
     val idx = readLexIndex(spark, path)
-    val meta = IL.readMeta(spark, oldDir, MetaName).get
+    val meta = IL.readManifest(spark, oldDir, MetaName).get
     val idCol = metaIdCol(meta)
     val tombFiles = IL.tombstoneFiles(spark, root)
     val retained =
@@ -323,9 +318,8 @@ object LexIndex {
     val sink = graft.sinks.RoutedSink.standard()
     sink.write(s"parquet:$root/$v/postings:by:bucket", retained)
     sink.write(s"parquet:$root/$v/terms:by:bucket", mergedTerms)
-    IL.writeMeta(spark, s"$root/$v", MetaName,
-      s"""{"ndocs":$ndocs,"ntok":$ntok,"nBuckets":${idx.nBuckets},""" +
-        s""""idCol":"${Ops.jsonEscape(idCol)}"}""")
+    IL.writeManifest(spark, s"$root/$v", MetaName,
+      "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> idx.nBuckets, "idCol" -> idCol)
     IL.copyAppendLedger(spark, oldDir, s"$root/$v")
     IL.publish(spark, root, v)
     IL.deleteTombstoneFiles(spark, root, tombFiles)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,8 +12,9 @@ import org.apache.spark.sql.expressions.Window
 object Ops {
 
   /** Iteration/lineage checkpoint used by every iterative operator
-    * (CC, star contraction, PageRank, k-core, LPA, k-means) and the
-    * bounded-artifact materializations. Default: localCheckpoint —
+    * (CC, star contraction, PageRank, k-core, LPA, k-means), the
+    * bounded-artifact materializations and `.checkpointed()` workflow
+    * cells ([[graft.Materializers]]). Default: localCheckpoint —
     * executor-local blocks, no I/O round-trip, the right call on a
     * healthy cluster. At 1000-executor scale an executor loss DROPS a
     * local checkpoint's blocks and fails the job, so long-running
@@ -24,7 +25,7 @@ object Ops {
     * loop (CheckpointModeSpec pins value-equality of both modes and
     * that reliable mode actually writes checkpoint files).
     */
-  def checkpointFrame(df: DataFrame, eager: Boolean = false): DataFrame =
+  def checkpointFrame[T](df: Dataset[T], eager: Boolean = false): Dataset[T] =
     if (df.sparkSession.conf
         .getOption("spark.graft.checkpoint.reliable").exists(_.toBoolean)) {
       // rdd.checkpoint reruns the frame's lineage in a SEPARATE write
@@ -54,218 +55,54 @@ object Ops {
     * (deterministic under Spark's sort-before-repartition) and unlocks
     * full-width parallelism for the expression work above it.
     *
-    * The split-count estimate comes from the LOGICAL file relation
-    * (Σ file bytes / maxPartitionBytes) — no physical planning, so a
-    * 100 TB scan never pays a second planning pass here (round-17,
-    * was `df.rdd.getNumPartitions`, which finalizes a physical plan
-    * and can eagerly execute upstream stages if handed a shuffled
-    * plan). Non-file plans (in-memory test frames, post-shuffle
+    * The split count is [[inputEstimate]]'s plan-time estimate — no
+    * physical planning, so a 100 TB scan never pays a second planning
+    * pass here. Non-file plans (in-memory test frames, post-shuffle
     * inputs) keep the rdd-based count; intended inputs are scan-only
     * projections, where that path is never reached.
     */
   def fanOutSmallScan(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val fileLeaves = df.queryExecution.optimizedPlan.collectLeaves().map {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          val maxSplit = math.max(1L,
-            spark.sessionState.conf.filesMaxPartitionBytes)
-          Some(math.max(1L, (fs.location.sizeInBytes + maxSplit - 1) / maxSplit))
-        case _ => None
-      }
-      case _ => None
-    }
-    val parts: Long = fileLeaves match {
-      case Seq(Some(n)) => n // single file-scan leaf: split estimate
-      case _ =>
-        try df.rdd.getNumPartitions.toLong
-        catch { case scala.util.control.NonFatal(_) => cores.toLong }
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val parts: Long = inputEstimate(df).splits.getOrElse {
+      try df.rdd.getNumPartitions.toLong
+      catch { case scala.util.control.NonFatal(_) => cores.toLong }
     }
     if (parts >= cores) df else df.repartition(cores)
   }
 
-  /** As-of join: for each left row, the greatest `rightTs` value at or
-    * before its `ts`, per key — via union + running last() window:
-    * ONE shuffle on (key), no custom physical node, no per-key loops.
-    * The classic distributed as-of formulation.
+  /** Plan-time size of `df`'s input — no job runs, no physical plan is
+    * built. `bytes` is the optimizer's size estimate of the plan (what
+    * size-conditional plans such as bm25's single-pass form compare
+    * against); `splits`, for a plan over ONE file scan, is how many
+    * input splits that scan opens. Splits are counted the way
+    * `FilePartition` packs them: every file costs its bytes plus
+    * `spark.sql.files.openCostInBytes`, and a split holds up to
+    * `maxPartitionBytes` — so many small files open many splits even
+    * when their bytes are few. The per-core shrink of the split size is
+    * left out: it cuts one file into byte ranges that a
+    * single-row-group parquet file cannot fill.
     */
-  def asofJoin(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      outCol: String = "asof_ts"
-  ): DataFrame = {
-    val l = left.select(
-      col(keyCol).as("_k"), col(leftTsCol).as("_ts"), lit(1).as("_kind"),
-      lit(null).cast("timestamp").as("_rts"), struct(left.columns.toIndexedSeq.map(col): _*).as("_row")
-    )
-    val r = right.select(
-      col(keyCol).as("_k"), col(rightTsCol).as("_ts"), lit(0).as("_kind"),
-      col(rightTsCol).as("_rts"), lit(null).cast(l.schema("_row").dataType).as("_row")
-    )
-    val w = Window.partitionBy(col("_k")).orderBy(col("_ts"), col("_kind"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    r.unionByName(l)
-      .withColumn(outCol, last(col("_rts"), ignoreNulls = true).over(w))
-      .filter(col("_kind") === 1)
-      .select(col("_row.*"), col(outCol))
-  }
+  private[operators] final case class InputEstimate(bytes: BigInt, splits: Option[Long])
 
-  /** The native-operator form of [[asofJoin]]: same semantics
-    * (latest right ts at-or-before each left row's ts per key, null
-    * when none), executed by the custom sort-merge
-    * [[graft.plans.AsOfJoinExec]] instead of the union+window
-    * encoding — each side shuffles ONCE on its own key and the match
-    * is a single-pass merge with O(1) per-partition state, so
-    * pre-partitioned (bucketed) inputs skip their exchange entirely,
-    * which the union form structurally cannot. Registers the planner
-    * strategy on the session idempotently. OpsSpec pins value
-    * equality with [[asofJoin]]; q58 carries the DuckDB ASOF oracle.
-    */
-  def asofJoinNative(
-      left: DataFrame,
-      right: DataFrame,
-      keyCol: String,
-      leftTsCol: String,
-      rightTsCol: String,
-      outCol: String = "asof_ts",
-      direction: String = "backward"
-  ): DataFrame = {
-    require(direction == "backward" || direction == "forward",
-      s"direction must be backward or forward, got $direction")
-    // the output column is APPENDED to left's columns — a pre-existing
-    // column of the same name would make every downstream select(outCol)
-    // fail with an ambiguity error far from the cause, so fail HERE
-    require(!left.columns.contains(outCol),
-      s"left frame already has a column named '$outCol'; pass a distinct outCol")
-    val spark = left.sparkSession
-    graft.plans.AsOfJoinStrategy.synchronized {
-      val cur = spark.experimental.extraStrategies
-      if (!cur.contains(graft.plans.AsOfJoinStrategy))
-        spark.experimental.extraStrategies = cur :+ graft.plans.AsOfJoinStrategy
-      val opt = spark.experimental.extraOptimizations
-      if (!opt.contains(graft.plans.AsOfJoinLimitPushdown))
-        spark.experimental.extraOptimizations = opt :+ graft.plans.AsOfJoinLimitPushdown
-    }
-    // fresh aliases force fresh exprIds on the right: both sides often
-    // derive from the same scan (self-as-of), and duplicate ids across
-    // children would make attribute binding ambiguous
-    val r2 = right.select(right.col(keyCol).as("_asof_rk"),
-      right.col(rightTsCol).as("_asof_rts"))
-    val lp = left.queryExecution.analyzed
-    val rp = r2.queryExecution.analyzed
-    // resolve through Dataset.col: honors spark.sql.caseSensitive
-    // (plain string equality against output names would not) and
-    // raises the standard ambiguous/missing-column errors
-    def attrOf(name: String): org.apache.spark.sql.catalyst.expressions.AttributeReference =
-      org.apache.spark.sql.graftbridge.Bridge.expression(left.col(name)) match {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference => a
-        case other => throw new IllegalArgumentException(
-          s"left column $name must be a plain attribute, resolved to $other")
+  private[operators] def inputEstimate(df: DataFrame): InputEstimate = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val conf = df.sparkSession.sessionState.conf
+    val plan = df.queryExecution.optimizedPlan
+    val fileSplits = plan.collectLeaves().map {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation =>
+          val files = fs.location.inputFiles.length.toLong
+          val bytes = fs.location.sizeInBytes + files * conf.filesOpenCostInBytes
+          val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
+          Some(math.max(1L, (bytes + maxSplit - 1) / maxSplit))
+        case _ => None
       }
-    val lk = attrOf(keyCol)
-    val lts = attrOf(leftTsCol)
-    // cross-side type agreement, checked at PLAN time: each side's
-    // getter would individually accept e.g. leftTs=timestamp (micros)
-    // against rightTs=date (days) and the merge would silently compare
-    // micros to days — exactly the mis-read the exec's per-side checks
-    // exist to prevent. Same for keys: long-vs-int only surfaces as a
-    // runtime ClassCastException from the interpreted ordering.
-    require(lts.dataType == rp.output(1).dataType,
-      s"as-of ordering columns must have the SAME type on both sides, " +
-        s"got left $leftTsCol: ${lts.dataType} vs right $rightTsCol: ${rp.output(1).dataType}")
-    require(lk.dataType == rp.output(0).dataType,
-      s"as-of key columns must have the SAME type on both sides, " +
-        s"got left $keyCol: ${lk.dataType} vs right $keyCol: ${rp.output(0).dataType}")
-    val out = org.apache.spark.sql.catalyst.expressions
-      .AttributeReference(outCol, rp.output(1).dataType, nullable = true)()
-    org.apache.spark.sql.graftbridge.SparkSqlBridge.ofRows(spark,
-      graft.plans.AsOfJoin(lp, rp, lk, rp.output(0), lts, rp.output(1), out,
-        forward = direction == "forward"))
-  }
-
-  /** Native keyed INTERVAL join (the second whole-operator Catalyst
-    * tier after [[asofJoinNative]], see [[graft.plans.IntervalJoinExec]]):
-    * emits (left ++ right) for every pair with matching keys and
-    * right `rightTsCol` inside the left row's (`loCol`, `hiCol`]
-    * interval — strict lower / inclusive upper by default (q24's
-    * bounds), both flags independently settable. `joinType` "inner"
-    * or "left" (matchless left rows null-padded). Each side shuffles
-    * ONCE on its own key and sorts by (key, bound); per partition a
-    * sliding buffer finds each left's contiguous match run in
-    * O(n + m + output) — vs Spark's sort-merge-with-residual plan
-    * that tests every same-key pair. Both sides must use DISJOINT
-    * column names (the output carries both untouched).
-    *
-    * When to use which (measured, docs/SCALING.md round 9): on
-    * uniformly FINE-grained keys (a few rows per key) the plain
-    * composed join is ~1.4× faster — SMJ's residual costs little
-    * there and its whole-stage codegen fuses with neighbors, which a
-    * custom exec breaks. On DENSE/skewed keys the composed plan's
-    * per-key pair testing is quadratic and this operator's cost stays
-    * flat at the output size (6.5× faster at 8e9 pairs and
-    * diverging) — hot keys are exactly where a 100 TB interval join
-    * concentrates into straggler tasks, so route skewed workloads
-    * here.
-    */
-  def intervalJoinNative(
-      left: DataFrame,
-      right: DataFrame,
-      leftKeyCol: String,
-      rightKeyCol: String,
-      loCol: String,
-      hiCol: String,
-      rightTsCol: String,
-      joinType: String = "inner",
-      lowerInclusive: Boolean = false,
-      upperInclusive: Boolean = true
-  ): DataFrame = {
-    require(joinType == "inner" || joinType == "left",
-      s"joinType must be inner or left, got $joinType")
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    require(overlap.isEmpty,
-      s"interval join carries BOTH sides' columns unrenamed; these collide: " +
-        s"${overlap.mkString(", ")} — rename one side first")
-    val spark = left.sparkSession
-    graft.plans.IntervalJoinStrategy.synchronized {
-      val cur = spark.experimental.extraStrategies
-      if (!cur.contains(graft.plans.IntervalJoinStrategy))
-        spark.experimental.extraStrategies = cur :+ graft.plans.IntervalJoinStrategy
+      case _ => None
     }
-    // fresh aliases force fresh exprIds on the right (self-join safety
-    // — the asofJoinNative discipline), keeping every payload column
-    val r2 = right.select(right.columns.toIndexedSeq.map(c => right.col(c).as(c)): _*)
-    val lp = left.queryExecution.analyzed
-    val rp = r2.queryExecution.analyzed
-    def attrOf(df: DataFrame, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String, side: String): org.apache.spark.sql.catalyst.expressions.AttributeReference =
-      org.apache.spark.sql.graftbridge.Bridge.expression(df.col(name)) match {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if plan.outputSet.contains(a) => a
-        case other => throw new IllegalArgumentException(
-          s"$side column $name must be a plain attribute of the $side frame, resolved to $other")
-      }
-    val lk = attrOf(left, lp, leftKeyCol, "left")
-    val lo = attrOf(left, lp, loCol, "left")
-    val hi = attrOf(left, lp, hiCol, "left")
-    val rk = attrOf(r2, rp, rightKeyCol, "right")
-    val rts = attrOf(r2, rp, rightTsCol, "right")
-    // cross-side/cross-column agreement at PLAN time (the AsOfJoin
-    // lesson: per-side getter checks alone let micros-vs-days slip
-    // through to a silent garbage merge)
-    require(lo.dataType == hi.dataType && lo.dataType == rts.dataType,
-      s"interval-join ordered columns must share ONE type, got $loCol: ${lo.dataType}, " +
-        s"$hiCol: ${hi.dataType}, $rightTsCol: ${rts.dataType}")
-    require(lk.dataType == rk.dataType,
-      s"interval-join key columns must have the SAME type on both sides, " +
-        s"got $leftKeyCol: ${lk.dataType} vs $rightKeyCol: ${rk.dataType}")
-    org.apache.spark.sql.graftbridge.SparkSqlBridge.ofRows(spark,
-      graft.plans.IntervalJoin(lp, rp, lk, rk, lo, hi, rts,
-        leftOuter = joinType == "left", lowerInclusive, upperInclusive))
+    InputEstimate(plan.stats.sizeInBytes, fileSplits match {
+      case Seq(Some(n)) => Some(n)
+      case _ => None
+    })
   }
 
   /** Gap-based sessionization: assigns a session id per `keyCol` when
@@ -329,6 +166,73 @@ object Ops {
       maxPostingsPerToken: Option[Int] = None,
       pairwiseVerify: Boolean = false
   ): DataFrame = {
+    val (counts, sizes) =
+      overlapCounts(df, idCol, tokensCol, _ < _, maxPostingsPerToken, pairwiseVerify)
+    counts
+      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
+      .join(sizes.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
+      .withColumn("jaccard", col("_c").cast("double") / (col("_na") + col("_nb") - col("_c")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** Ordered-pair containment (|A∩B| / |A| >= threshold) with the same
+    * scale knobs as [[jaccardPairs]]: optional hot-token cap on
+    * candidate GENERATION (excluded tokens are a recall trade only),
+    * and a pairwise array_intersect verify for high-duplicate corpora
+    * where restricting postings to candidate docs degenerates to the
+    * full join (see [[overlapCounts]]). Values of surviving pairs are
+    * always EXACT. d15's canned query is the cap=None postings form of
+    * this (same pairs and counts; d15 additionally rounds + orders).
+    */
+  def containmentPairs(
+      df: DataFrame,
+      idCol: String,
+      tokensCol: String,
+      threshold: Double,
+      maxPostingsPerToken: Option[Int] = None,
+      pairwiseVerify: Boolean = false
+  ): DataFrame = {
+    val (counts, sizes) =
+      overlapCounts(df, idCol, tokensCol, _ =!= _, maxPostingsPerToken, pairwiseVerify)
+    counts
+      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
+      .withColumn("containment", col("_c").cast("double") / col("_na"))
+      .filter(col("containment") >= threshold)
+      .select(col("id_a"), col("id_b"), col("_c").as("n_shared"),
+        col("_na").as("n_a"), col("containment"))
+  }
+
+  /** The posting-list overlap core of [[jaccardPairs]] and
+    * [[containmentPairs]]: (shared-token counts (id_a, id_b, _c) for
+    * the doc pairs `pair` keeps, each doc's distinct-token count
+    * (_id, _n)).
+    *
+    * Worst-case bound for scale: a token appearing in k docs emits
+    * k^2 candidate rows. With a cap, candidate GENERATION excludes
+    * tokens hotter than maxPostingsPerToken (bounding the blowup);
+    * the counts are then computed EXACTLY — from the full postings of
+    * just the candidate docs (default, no array payloads through
+    * shuffles), or with pairwiseVerify=true via array_intersect per
+    * candidate PAIR (the flag is only consulted in the capped branch;
+    * uncapped counts are already exact, so pairwiseVerify without a
+    * cap is a no-op). The pairwise mode is the right verify when the
+    * duplicate rate is high: restricting to candidate docs then
+    * degenerates to the full posting join (measured 10x-replicated
+    * corpus: 80s postings-verify vs ~10s pairwise for the identical
+    * 688-pair result), while its cost is candidates x |tokens|
+    * instead of sum(df^2). Pairs whose only shared tokens are capped
+    * ones are missed either way — a recall trade-off, never a
+    * precision or value error.
+    */
+  private def overlapCounts(
+      df: DataFrame,
+      idCol: String,
+      tokensCol: String,
+      pair: (Column, Column) => Column,
+      maxPostingsPerToken: Option[Int],
+      pairwiseVerify: Boolean
+  ): (DataFrame, DataFrame) = {
     val posting =
       df.select(col(idCol).as("_id"), explode(array_distinct(col(tokensCol))).as("_t"))
     val sizes = posting.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
@@ -336,26 +240,10 @@ object Ops {
     def pairCounts(src: DataFrame): DataFrame =
       src.select(col("_id").as("id_a"), col("_t"))
         .join(src.select(col("_id").as("id_b"), col("_t")), Seq("_t"))
-        .where(col("id_a") < col("id_b"))
+        .where(pair(col("id_a"), col("id_b")))
         .groupBy(col("id_a"), col("id_b"))
         .agg(count(lit(1)).as("_c"))
 
-    // Worst-case bound for scale: a token appearing in k docs emits
-    // k^2 candidate rows. With a cap, candidate GENERATION excludes
-    // tokens hotter than maxPostingsPerToken (bounding the blowup);
-    // the Jaccard itself is then computed EXACTLY — from the full
-    // postings of just the candidate docs (default, no array
-    // payloads through shuffles), or with pairwiseVerify=true via
-    // array_intersect per candidate PAIR (the flag is only consulted
-    // here in the capped branch; uncapped counts are already exact,
-    // so pairwiseVerify without a cap is a no-op). The pairwise mode is the
-    // right verify when the duplicate rate is high: restricting to
-    // candidate docs then degenerates to the full posting join
-    // (measured 10x-replicated corpus: 80s postings-verify vs ~10s
-    // pairwise for the identical 688-pair result), while its cost is
-    // candidates x |tokens| instead of sum(df^2). Pairs whose only
-    // shared tokens are capped ones are missed either way — a recall
-    // trade-off, never a precision or value error.
     val counts = maxPostingsPerToken match {
       case None => pairCounts(posting)
       case Some(cap) =>
@@ -382,76 +270,7 @@ object Ops {
           pairCounts(restricted).join(cands, Seq("id_a", "id_b"), "left_semi")
         }
     }
-    counts
-      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
-      .join(sizes.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
-      .withColumn("jaccard", col("_c").cast("double") / (col("_na") + col("_nb") - col("_c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Ordered-pair containment (|A∩B| / |A| >= threshold) with the same
-    * scale knobs as [[jaccardPairs]]: optional hot-token cap on
-    * candidate GENERATION (excluded tokens are a recall trade only),
-    * and a pairwise array_intersect verify for high-duplicate corpora
-    * where restricting postings to candidate docs degenerates to the
-    * full join (same calculus as jaccardPairs — see the measured
-    * numbers there). Values of surviving pairs are always EXACT.
-    * `pairwiseVerify` is ONLY consulted by the capped branch: with
-    * maxPostingsPerToken=None the posting self-join counts are already
-    * exact and there is nothing to re-verify, so the flag is a no-op
-    * (identical contract in [[jaccardPairs]]).
-    * d15's canned query is the cap=None postings form of this
-    * (same pairs and counts; d15 additionally rounds + orders).
-    */
-  def containmentPairs(
-      df: DataFrame,
-      idCol: String,
-      tokensCol: String,
-      threshold: Double,
-      maxPostingsPerToken: Option[Int] = None,
-      pairwiseVerify: Boolean = false
-  ): DataFrame = {
-    val posting =
-      df.select(col(idCol).as("_id"), explode(array_distinct(col(tokensCol))).as("_t"))
-    val sizes = posting.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
-
-    def pairCounts(src: DataFrame): DataFrame =
-      src.select(col("_id").as("id_a"), col("_t"))
-        .join(src.select(col("_id").as("id_b"), col("_t")), Seq("_t"))
-        .where(col("id_a") =!= col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("_c"))
-
-    val counts = maxPostingsPerToken match {
-      case None => pairCounts(posting)
-      case Some(cap) =>
-        posting.cache()
-        val hot = posting.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-          .filter(col("_df") > cap).select(col("_t"))
-        val capped = posting.join(hot, Seq("_t"), "left_anti").cache()
-        val cands = pairCounts(capped).select(col("id_a"), col("id_b"))
-        if (pairwiseVerify) {
-          val arrays =
-            df.select(col(idCol).as("_aid"), array_distinct(col(tokensCol)).as("_tk"))
-          cands
-            .join(arrays.select(col("_aid").as("id_a"), col("_tk").as("_ta")), "id_a")
-            .join(arrays.select(col("_aid").as("id_b"), col("_tk").as("_tb")), "id_b")
-            .withColumn("_c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
-            .select(col("id_a"), col("id_b"), col("_c"))
-        } else {
-          val candDocs = cands
-            .select(explode(array(col("id_a"), col("id_b"))).as("_id")).distinct()
-          val restricted = posting.join(candDocs, Seq("_id"), "left_semi")
-          pairCounts(restricted).join(cands, Seq("id_a", "id_b"), "left_semi")
-        }
-    }
-    counts
-      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
-      .withColumn("containment", col("_c").cast("double") / col("_na"))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("_c").as("n_shared"),
-        col("_na").as("n_a"), col("containment"))
+    (counts, sizes)
   }
 
   /** Brute-force cosine top-k: broadcast probes against a corpus of
@@ -599,199 +418,6 @@ object Ops {
       .select(col("id_a"), col("id_b"), col("cell"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** Connected components over an undirected edge list (two BIGINT
-    * columns). Two algorithms, same output contract — (idOut,
-    * labelOut): every node appearing in an edge, labeled by its
-    * component's minimum node id:
-    *
-    *  - `algo = "minlabel"` (default): min-label propagation. Each
-    *    round is a keyed join + aggregation (never a cross join);
-    *    rounds converge at the largest component DIAMETER. Near-dup
-    *    graphs are near-cliques (2-3 rounds) — the right default for
-    *    dedup workloads.
-    *  - `algo = "star"`: alternating large-star/small-star contraction
-    *    (Kiveris et al., "Connected Components in MapReduce and
-    *    Beyond", SoCC'14) — converges in O(log n) rounds regardless of
-    *    diameter, the safe choice for web-crawl dup graphs with long
-    *    chains (ConnectedComponentsSpec pins a 10k-node chain to
-    *    ~log-many rounds where min-label would need ~10k).
-    *
-    * Convergence is detected by cheap scalar actions per round (label
-    * sums only decrease), never a driver-side diff of the frames. Both
-    * algorithms raise when `maxIterations` runs out before the
-    * fixpoint ([[Fixpoint]]'s budget rule) instead of returning a
-    * partial labeling.
-    */
-  def connectedComponents(
-      edgePairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIterations: Int = 20,
-      idOut: String = "id",
-      labelOut: String = "label",
-      algo: String = "minlabel"
-  ): DataFrame = {
-    if (algo == "star")
-      return connectedComponentsStar(edgePairs, aCol, bCol,
-        math.max(maxIterations, 50), idOut, labelOut)._1
-    // ONE materialization of the caller's pair plan: the symmetric
-    // edge view below references `pairs` TWICE, so an uncut pair plan
-    // (for d06/d12 the posting/verify join chain) would execute once
-    // per union branch.
-    val pairs = Fixpoint.invariant(edgePairs.select(col(aCol).as("src"), col(bCol).as("dst")))
-    val edges = pairs.union(pairs.select(col("dst"), col("src"))).toDF("src", "dst").cache()
-    val init = edges.groupBy(col("src"))
-      .agg(least(first(col("src")), min(col("dst"))).as("lbl"))
-      .select(col("src").as("id"), col("lbl")).graftCheckpointLazy
-    // labels only decrease, so their sum is the potential; sum over an
-    // empty frame is null — read through Option so a zero-edge graph
-    // converges to an empty result, not an NPE
-    val labelSum = Fixpoint.Potential(l =>
-      Option(l.agg(sum(col("lbl"))).head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
-    // the probe has materialized the last cut, so `edges` can go —
-    // also when the budget runs out
-    val (labels, _) = try Fixpoint.iterate(init, maxIterations,
-      Fixpoint.MustConverge("connectedComponents",
-        "raise maxIterations (min-label needs the largest component's diameter), " +
-          "or use algo = \"star\""),
-      labelSum) { (labels, _) =>
-      val nmin = edges.join(labels.select(col("id").as("src"), col("lbl")), "src")
-        .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-      labels
-        .join(nmin.select(col("dst").as("id"), col("nlbl")), Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-    } finally edges.unpersist()
-    labels.select(col("id").as(idOut), col("lbl").as(labelOut))
-  }
-
-  /** k-core decomposition peeled to FIXPOINT — the convergence-stop
-    * variant of the canned g03 query (g03 keeps 5 fixed rounds so its
-    * DuckDB oracle is a literal CTE unroll; THIS is what a user calls).
-    * `edges` holds both directions of each undirected edge (the g03
-    * convention). Each round is [[peelRound]]; the edge count is a
-    * strictly decreasing potential, so one count per round detects
-    * the fixpoint. Returns (node, deg) over the surviving subgraph —
-    * the true k-core, matching the fixed-round output whenever the
-    * fixed rounds already converged (Round8GraphSpec pins both ways).
-    * Worst case is O(n) rounds on a chain — maxRounds bounds
-    * pathological inputs, and hitting it raises.
-    */
-  def kCore(
-      edges: DataFrame,
-      k: Int,
-      maxRounds: Int = 1000
-  ): DataFrame = {
-    val (e, _) = Fixpoint.iterate(edges.select(col("src"), col("dst")), maxRounds,
-      Fixpoint.MustConverge("kCore", "raise maxRounds"),
-      Fixpoint.Potential(_.count())) { (e, r) => peelRound(e, k, r) }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-  }
-
-  /** One synchronous k-core peel round over a SYMMETRIC edge list
-    * (`src`, `dst`, both directions present): an edge survives iff
-    * both endpoint degrees are >= k. Symmetry makes deg(src) =
-    * COUNT() OVER (PARTITION BY src) and deg(dst) = COUNT() OVER
-    * (PARTITION BY dst) on the same rows, so a round is two window
-    * counts + a filter that reads `e` once — no degree aggregation
-    * and no keep-list joins — and the filter preserves symmetry.
-    * Window ORDER alternates with the round's parity so adjacent
-    * rounds share an exchange: round r ends partitioned by its second
-    * window key and round r + 1 starts with a window on that same key
-    * (filter/project preserve hash partitioning). An odd round ends
-    * on src, so a following groupBy(src) reuses its partitioning too.
-    * Both counts see the same input rows, so their order cannot
-    * change a value.
-    */
-  private[operators] def peelRound(e: DataFrame, k: Int, round: Int): DataFrame = {
-    val wS = Window.partitionBy(col("src"))
-    val wD = Window.partitionBy(col("dst"))
-    val withDegs =
-      if (round % 2 == 1)
-        e.withColumn("_dd", count(lit(1)).over(wD)).withColumn("_ds", count(lit(1)).over(wS))
-      else
-        e.withColumn("_ds", count(lit(1)).over(wS)).withColumn("_dd", count(lit(1)).over(wD))
-    withDegs.where(col("_ds") >= k && col("_dd") >= k).select(col("src"), col("dst"))
-  }
-
-  /** Large-star/small-star contraction CC (Kiveris et al. SoCC'14),
-    * returning (labels, roundsUsed). Each round runs
-    *   large-star: per node u, attach every LARGER neighbor to
-    *     min(N(u) ∪ {u}) — cuts long chains in half;
-    *   small-star: orient edges toward the smaller endpoint, then per
-    *     node u attach u and all smaller neighbors to the minimum —
-    *     flattens partial stars;
-    * both are a groupBy(min) + keyed equi-join, so every round is
-    * shuffle-bounded by the edge count, and the round count is
-    * O(log n) independent of component diameter. Convergence: the
-    * (edge-count, sum(src), sum(dst)) triple is a strictly decreasing
-    * potential until fixpoint (the paper's potential argument), so
-    * one cheap 3-scalar action per round detects stability.
-    */
-  def connectedComponentsStar(
-      edgePairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIterations: Int = 50,
-      idOut: String = "id",
-      labelOut: String = "label"
-  ): (DataFrame, Int) = {
-    // ONE materialization of the caller's pair plan (for d08/d22/d23
-    // the posting/verify join chain): the node universe and the loop's
-    // initial edge set both derive from the cut distinct pair set
-    val base = edgePairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .distinct().graftCheckpointLazy
-    val nodes = base.select(col("src").as("id"))
-      .union(base.select(col("dst").as("id"))).distinct()
-
-    // Round-17 (§2.4, one exchange less per star): the per-node min
-    // used to be a groupBy(src).min + an equi-join back onto the edge
-    // rows — TWO exchanges of the edge set per star (the agg's partial
-    // rows and the join side cannot share one, the partial-agg plans
-    // differ). `min(dst) OVER (PARTITION BY src)` attaches the same
-    // per-src minimum to every row in ONE exchange (+ a partition-local
-    // sort). Value-identical: a window min over the same key equals the
-    // joined-back groupBy min on every row, multiplicities included.
-    val wSrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      // no distinct here: smallStar's terminal distinct canonicalizes
-      // the round's edge set, and min-aggregations are multiplicity-
-      // insensitive — one Exchange less per round
-      sym.withColumn("m", least(col("src"), min(col("dst")).over(wSrc)))
-        .where(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.where(col("src") =!= col("dst"))
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-      val j = oriented.withColumn("m", min(col("dst")).over(wSrc))
-      j.where(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .union(j.select(col("src"), col("m").as("dst")))
-        .distinct()
-    }
-
-    // (edge-count, sum(src), sum(dst)) is the potential
-    def sumOr0(v: Any): Long = Option(v).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val stat = Fixpoint.Potential { e =>
-      val r = e.agg(count(lit(1)), sum(col("src")), sum(col("dst"))).head()
-      (r.getLong(0), sumOr0(r.get(1)), sumOr0(r.get(2)))
-    }
-    val (edges, rounds) = Fixpoint.iterate(base.where(col("src") =!= col("dst")),
-      maxIterations, Fixpoint.MustConverge("connectedComponentsStar", "raise maxIterations"),
-      stat) { (e, _) => smallStar(largeStar(e)) }
-    // converged edge set is a star forest (member -> root); nodes with
-    // no surviving edge (self-loop-only inputs) label themselves
-    val labels = nodes
-      .join(edges.select(col("src").as("id"), col("dst").as("lbl")), Seq("id"), "left")
-      .select(col("id").as(idOut), coalesce(col("lbl"), col("id")).as(labelOut))
-    (labels, rounds)
-  }
-
   /** Deterministic hash-mod stratified sampling: keeps a row iff its
     * 60-bit content hash of `idCol` mod `mod` falls below the
     * stratum's rate. Reproducible (no RNG state), per-row (zero
@@ -833,24 +459,6 @@ object Ops {
     df.withColumn("_cum", coalesce(sum(col(tokenCountCol)).over(win), lit(0L)))
       .withColumn(binOut, expr(s"_cum div $budget"))
       .drop("_cum")
-  }
-
-  /** Skew-safe equi-join: salt the (skewed) left side's key into
-    * `salts` sub-keys and explode the right side across all salts, so
-    * one hot key spreads over `salts` reducers. AQE handles moderate
-    * skew automatically; this is the explicit tool for extreme keys.
-    */
-  def saltedJoin(
-      skewed: DataFrame,
-      other: DataFrame,
-      key: String,
-      salts: Int
-  ): DataFrame = {
-    val saltedL = skewed.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(salts)).cast("int"))
-    val saltedR = other.withColumn("_salt",
-      explode(array((0 until salts).map(lit): _*)))
-    saltedL.join(saltedR, Seq(key, "_salt")).drop("_salt")
   }
 
   /** Exact duplicated-span detection (the Lee et al. shape d09 cans):
@@ -905,60 +513,6 @@ object Ops {
     val ps = graft.functions.Lsh.planes(k, dim, seed)
     df.withColumn("_proj", array(ps.map(w => graft.functions.Lsh.proj(embCol, w)): _*))
       .withColumnRenamed("_proj", "projection")
-  }
-
-  /** Product-quantization top-k ANN (s04's library form). Encodes the
-    * corpus once as `m` one-byte codes (argmin squared-L2 against the
-    * per-subspace slices of `centroids`), then ranks candidates by
-    * asymmetric distance computation: a broadcast (probe, subspace,
-    * code) → distance table joined to the code table and summed.
-    * After encoding, the corpus side of every shuffle carries only
-    * small ints — no float arrays — which is what makes PQ the
-    * memory-bound 100 TB path (4 bytes/vector here vs 256 for raw
-    * floats). Distances are nano-scaled BIGINTs (order-independent
-    * sums). Columns in/out follow the cosineTopK contract; `adc_q`
-    * is the scaled ADC distance (ascending = nearest).
-    */
-  def pqTopK(
-      probes: DataFrame,
-      corpus: DataFrame,
-      centroids: DataFrame,
-      probeId: String,
-      probeVec: String,
-      corpusId: String,
-      corpusVec: String,
-      centroidId: String,
-      centroidVec: String,
-      m: Int,
-      subDim: Int,
-      k: Int
-  ): DataFrame = {
-    def l2q(a: String, b: String) = expr(
-      s"CAST(floor(aggregate(zip_with($a, $b, " +
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), " +
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v) * 1000000000.0 + 0.5) AS BIGINT)")
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val subCents = centroids.select(col(centroidId).as("_c"), ms, col(centroidVec))
-      .select(col("_m"), col("_c"), expr(s"slice($centroidVec, _m * $subDim + 1, $subDim)").as("_cs"))
-    // argmin via min(struct): map-side combinable, no per-group sort
-    val codes = corpus.select(col(corpusId).as("_n"), ms, col(corpusVec))
-      .select(col("_n"), col("_m"), expr(s"slice($corpusVec, _m * $subDim + 1, $subDim)").as("_vs"))
-      .join(broadcast(subCents), Seq("_m"))
-      .withColumn("_dq", l2q("_vs", "_cs"))
-      .groupBy(col("_n"), col("_m"))
-      .agg(min(struct(col("_dq"), col("_c"))).as("_mc"))
-      .select(col("_n"), col("_m"), col("_mc._c").as("_code"))
-    val dtab = probes.select(col(probeId).as("_p"), ms, col(probeVec))
-      .select(col("_p"), col("_m"), expr(s"slice($probeVec, _m * $subDim + 1, $subDim)").as("_ps"))
-      .join(broadcast(subCents), Seq("_m"))
-      .select(col("_p"), col("_m"), col("_c").as("_code"), l2q("_ps", "_cs").as("_dq"))
-    val w = Window.partitionBy(col("_p")).orderBy(col("adc_q").asc, col("_n"))
-    codes.join(broadcast(dtab), Seq("_m", "_code"))
-      .where(col("_n") =!= col("_p"))
-      .groupBy(col("_p"), col("_n")).agg(sum(col("_dq")).as("adc_q"))
-      .withColumn("rn", row_number().over(w).cast("int"))
-      .filter(col("rn") <= k)
-      .select(col("_p").as(probeId), col("rn"), col("_n").as(corpusId), col("adc_q"))
   }
 
   /** Gaps-and-islands (q42's library form): collapses each run of
@@ -1068,83 +622,6 @@ object Ops {
       .drop("_z")
   }
 
-  /** O25: Bloom-prefiltered semi-join — the shuffle-volume cut for
-    * the regime d07's broadcast semi-join can't reach. A broadcast
-    * hash semi works while the key set fits an executor as a hashed
-    * relation; past that the join shuffles BOTH sides on the key. A
-    * Bloom filter of the keys (built distributed via the same
-    * treeAggregate `df.stat.bloomFilter` uses, over xxhash64 of the
-    * key) is a fixed, fpp-tunable fraction of that size and has NO
-    * false negatives — so filtering the big side through it BEFORE
-    * the exact semi-join drops ~(1 - selectivity - fpp) of the rows
-    * ahead of the exchange, and the exact semi-join on the survivors
-    * restores exact semantics. The probe is Spark's own codegen'd
-    * `BloomFilterMightContain` over a binary literal (the expression
-    * behind spark.sql.optimizer.runtime.bloomFilter, which injects
-    * this same shape automatically for selective equi-joins the
-    * optimizer can see through; this API is the manual form for semi
-    * joins and key sets the optimizer can't size). Result is
-    * spec-pinned equal to the plain left_semi join.
-    */
-  /** Realized Bloom-filter geometry for [[bloomSemiJoinWithStats]]:
-    * `expectedFpp` is computed from the actual bit saturation after
-    * insertion, so an undersized filter REPORTS its degradation (fpp
-    * well above the requested target) even though results stay exact
-    * — the failure mode is visible instead of silently eating the
-    * shuffle reduction.
-    */
-  final case class BloomSemiStats(
-      sizedFor: Long,
-      bitSize: Long,
-      expectedFpp: Double,
-      requestedFpp: Double
-  )
-
-  def bloomSemiJoin(
-      df: DataFrame,
-      keyCol: String,
-      keys: DataFrame,
-      keysCol: String,
-      expectedItems: Option[Long] = None,
-      fpp: Double = 0.03
-  ): DataFrame =
-    bloomSemiJoinWithStats(df, keyCol, keys, keysCol, expectedItems, fpp)._1
-
-  /** As [[bloomSemiJoin]], also returning the realized filter stats.
-    * `expectedItems = None` (the default) SELF-SIZES: one cheap
-    * count(keys) action sizes the filter — a fixed default capacity
-    * at 10⁸–10⁹ keys would silently blow the fpp while results stayed
-    * correct, an invisible performance failure. Callers that already
-    * know the cardinality pass `Some(n)` and skip the count.
-    */
-  def bloomSemiJoinWithStats(
-      df: DataFrame,
-      keyCol: String,
-      keys: DataFrame,
-      keysCol: String,
-      expectedItems: Option[Long] = None,
-      fpp: Double = 0.03
-  ): (DataFrame, BloomSemiStats) = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    // non-distinct count: over-counting duplicate keys only oversizes
-    // the filter (safe); distinct would add a shuffle to save bits
-    val sizedFor = expectedItems.getOrElse(math.max(1L, keys.count()))
-    val bf = keys.select(xxhash64(col(keysCol)).as("_h"))
-      .stat.bloomFilter("_h", sizedFor, fpp)
-    val stats = BloomSemiStats(sizedFor, bf.bitSize(), bf.expectedFpp(), fpp)
-    val baos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(baos)
-    val mightContain = Bridge.column(BloomFilterMightContain(
-      Literal(baos.toByteArray),
-      Bridge.expression(xxhash64(col(keyCol)))))
-    // rename the key side so keyCol == keysCol stays unambiguous
-    val out = df.filter(mightContain)
-      .join(keys.select(col(keysCol).as("_bsj_key")).distinct(),
-        col(keyCol) === col("_bsj_key"), "left_semi")
-    (out, stats)
-  }
-
   /** O23: scale-safe global ranking — the two-phase row_number. A
     * `row_number().over(Window.orderBy(...))` is a SINGLE-partition
     * sort+rank: fine on a 60k dictionary, a straggler on the 10⁸–10⁹
@@ -1234,1179 +711,6 @@ object Ops {
     // `_off` made two chained rankGlobal calls ambiguous (t32 ranks
     // the ranked frame again for its serve order)
     guarded.drop("_pid", "_lrank", "_off")
-  }
-
-  /** O22: deterministic Lloyd k-means assignment (s05's library form,
-    * any iteration count). Initial centroids are the k lowest-id
-    * vectors; each iteration is one broadcast NL against the k
-    * centroid rows (assignment = argmin-as-aggregation over
-    * nano-scaled integer L² — map-side combinable) plus one keyed agg
-    * for the update. Centroid means are computed from micro-scaled
-    * BIGINT sums with a single double division — order-independent,
-    * so results are identical under any partitioning (and, for the
-    * canned 2-iteration run, oracle-verified against DuckDB).
-    * Returns (idCol, cell, dq) with dq the final nano-scaled L² to
-    * the vector's centroid. Iterative hygiene: each iteration's k-row
-    * centroid frame is localCheckpoint-ed (plan depth stays linear in
-    * `iters`, the d06 lesson), and the returned assignment is
-    * materialized via localCheckpoint so the quantized-input cache
-    * can be unpersisted HERE — callers get a self-contained frame and
-    * no leaked cache entry. The materialization is one (id, cell, dq)
-    * row per vector — what a pipeline would persist before downstream
-    * use anyway.
-    */
-  def kmeansAssign(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64
-  ): DataFrame = {
-    val ev = quantizedVecs(df, idCol, vecCol).cache()
-    val (_, assign) = lloydLoop(ev, k, iters, dim)
-    val out = assign
-      .select(col("_id").as(idCol), col("_cell").as("cell"), col("_dq").as("dq"))
-      .graftCheckpointEager
-    ev.unpersist()
-    out
-  }
-
-  /** Cluster-balanced sampling (e08's engine, the SemDeDup/DSIR
-    * cluster-then-sample curation step): assign vectors to trained
-    * k-means cells ([[kmeansAssign]]), then keep a fixed `perCell`
-    * quota per cell ranked by the portable hash of the id — a
-    * deterministic stand-in for uniform-within-cluster both engines
-    * compute identically. The rank filter plans as WindowGroupLimit
-    * (Spark 4): each task keeps its local top-`perCell` per cell
-    * BEFORE the shuffle, so window state is perCell·k rows per task
-    * and the output is corpus-size-independent.
-    */
-  def clusterSample(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64,
-      perCell: Int = 4
-  ): DataFrame = {
-    val asg = kmeansAssign(df, idCol, vecCol, k, iters, dim)
-    val w = Window.partitionBy(col("cell"))
-      .orderBy(col("_h"), col(idCol))
-    asg
-      .withColumn("_h", graft.functions.PortableHash.hash60(col(idCol).cast("string")))
-      .withColumn("rn", row_number().over(w).cast("int"))
-      .where(col("rn") <= perCell)
-      .select(col("cell"), col("rn"), col(idCol), col("dq"))
-  }
-
-  /** The trained centroids behind [[kmeansAssign]]: the coordinate
-    * frame (_cid, _cx) its `iters`-th assignment pass compares
-    * against (i.e. after iters-1 mean updates). Returned as a k-row
-    * localCheckpoint — the bounded artifact a pipeline stores next to
-    * the assignment, and what [[ivfPqTrained]] probes queries with.
-    */
-  def kmeansCentroids(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64
-  ): DataFrame = {
-    val ev = quantizedVecs(df, idCol, vecCol).cache()
-    val (cents, _) = lloydLoop(ev, k, iters, dim)
-    val out = cents.graftCheckpointEager
-    ev.unpersist()
-    out
-  }
-
-  /** Nano-scaled integer squared-L² — the exact-on-both-engines
-    * distance every trained-quantizer op shares (e01's trick).
-    */
-  private[operators] def l2q(a: String, b: String) = expr(
-    s"CAST(floor(aggregate(zip_with($a, $b, " +
-      "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), " +
-      "CAST(0 AS DOUBLE), (acc, v) -> acc + v) * 1000000000.0 + 0.5) AS BIGINT)")
-
-  /** (_id, _x, _xq): the vector plus its micro-scaled BIGINT image —
-    * integer centroid sums are order-independent, so Lloyd results
-    * don't depend on partitioning.
-    */
-  private def quantizedVecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("_id"), col(vecCol).as("_x"),
-      expr(s"transform($vecCol, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
-        .as("_xq"))
-
-  /** Deterministic Lloyd: init = k lowest-id vectors; per iteration
-    * one broadcast NL (argmin-as-aggregation) + one keyed mean
-    * update from integer sums; each k-row centroid frame is
-    * localCheckpoint-ed so plan depth stays linear in `iters`.
-    * Returns (the centroids the FINAL assignment used, that final
-    * (_id, _cell, _dq) assignment) — both lazy except the
-    * checkpointed centroid frames.
-    */
-  private def lloydLoop(
-      ev: DataFrame, k: Int, iters: Int, dim: Int): (DataFrame, DataFrame) = {
-    require(iters >= 1, "Lloyd needs at least one iteration")
-    var cents = ev.orderBy(col("_id")).limit(k)
-      .select(col("_id").as("_cid"), col("_x").as("_cx"))
-    var assign: DataFrame = null
-    for (it <- 1 to iters) {
-      assign = ev.crossJoin(broadcast(cents))
-        .withColumn("_dq", l2q("_x", "_cx"))
-        .groupBy(col("_id")).agg(min(struct(col("_dq"), col("_cid"))).as("_m"))
-        .select(col("_id"), col("_m._cid").as("_cell"), col("_m._dq").as("_dq"))
-      if (it < iters) {
-        val dimSums = (1 to dim).map(j => sum(element_at(col("_xq"), j)).as(s"_s$j"))
-        cents = assign.join(ev.select(col("_id"), col("_xq")), "_id")
-          .groupBy(col("_cell"))
-          .agg(count(lit(1)).as("_nc"), dimSums: _*)
-          .select(col("_cell").as("_cid"),
-            array((1 to dim).map(j =>
-              col(s"_s$j").cast("double") / col("_nc") / lit(1000000.0)): _*).as("_cx"))
-          .graftCheckpointEager
-      }
-    }
-    (cents, assign)
-  }
-
-  /** O26: per-subspace TRAINED PQ codebooks — the same deterministic
-    * integer-sum Lloyd as [[kmeansCentroids]], run on the m sliced
-    * sub-vectors simultaneously (the subspace id is folded into every
-    * group key, so all m trainings share each broadcast-NL and
-    * keyed-agg pass instead of launching m job chains). Init per
-    * subspace = slices of the k lowest-id vectors, matching the
-    * untrained s04/s06 codebooks at iters=1. Returns the (m-times-k)-
-    * row frame (_m, _cid, _cs), localCheckpoint-ed.
-    */
-  def pqCodebooks(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int = 4,
-      k: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64
-  ): DataFrame = {
-    val ev = quantizedVecs(df, idCol, vecCol).cache()
-    val out = pqCodebooksFromQuantized(ev, m, k, iters, dim)
-    ev.unpersist()
-    out
-  }
-
-  /** [[pqCodebooks]] over an already-quantized (_id, _x, _xq)
-    * relation — lets [[ivfPqTrained]] feed the coarse training and
-    * the subspace training from ONE quantization pass.
-    */
-  private def pqCodebooksFromQuantized(
-      ev: DataFrame,
-      m: Int,
-      k: Int,
-      iters: Int,
-      dim: Int
-  ): DataFrame = {
-    require(iters >= 1, "Lloyd needs at least one iteration")
-    require(dim % m == 0, s"dim=$dim must split into m=$m subspaces")
-    val sub = dim / m
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val evs = ev.select(col("_id"), ms, col("_x"), col("_xq"))
-      .select(col("_id"), col("_m"),
-        expr(s"slice(_x, _m * $sub + 1, $sub)").as("_xs"),
-        expr(s"slice(_xq, _m * $sub + 1, $sub)").as("_xqs"))
-    var cents = ev.orderBy(col("_id")).limit(k)
-      .select(col("_id").as("_cid"), ms, col("_x"))
-      .select(col("_m"), col("_cid"), expr(s"slice(_x, _m * $sub + 1, $sub)").as("_cs"))
-    var codes: DataFrame = null
-    for (it <- 1 to iters) {
-      codes = evs.join(broadcast(cents), Seq("_m"))
-        .withColumn("_dq", l2q("_xs", "_cs"))
-        .groupBy(col("_id"), col("_m"))
-        .agg(min(struct(col("_dq"), col("_cid"))).as("_mc"))
-        .select(col("_id"), col("_m"), col("_mc._cid").as("_cell"))
-      if (it < iters) {
-        val dimSums = (1 to sub).map(j => sum(element_at(col("_xqs"), j)).as(s"_s$j"))
-        cents = codes.join(evs.select(col("_id"), col("_m"), col("_xqs")), Seq("_id", "_m"))
-          .groupBy(col("_cell"), col("_m"))
-          .agg(count(lit(1)).as("_nc"), dimSums: _*)
-          .select(col("_m"), col("_cell").as("_cid"),
-            array((1 to sub).map(j =>
-              col(s"_s$j").cast("double") / col("_nc") / lit(1000000.0)): _*).as("_cs"))
-          .graftCheckpointEager
-      }
-    }
-    cents.graftCheckpointEager
-  }
-
-  /** O27: IVF+PQ with TRAINED quantizers end-to-end — closes s06's
-    * "trained centroids slot in unchanged" claim by actually
-    * composing them: coarse cells come from [[kmeansAssign]] (and
-    * probes rank against ITS [[kmeansCentroids]] frame), PQ codes
-    * from [[pqCodebooks]]; the query plan downstream of training is
-    * s06's exactly — candidate generation joins cell ids, ranking
-    * joins int codes against the broadcast per-probe distance table,
-    * no float array transits a shuffle after encoding.
-    *
-    * The corpus-sized artifacts (cells = the inverted lists, codes =
-    * the PQ code table) are localCheckpoint-ed: that IS the IVFPQ
-    * index build — paid once, stored, probed cheaply — and it lets
-    * the internal vector cache be unpersisted here instead of leaking.
-    * Output: (p_id, rn, n_id, adc_q) — probe, rank, neighbor id,
-    * nano-scaled integer ADC distance.
-    */
-  def ivfPqTrained(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      probes: DataFrame,
-      probeIdCol: String,
-      probeVecCol: String,
-      k: Int = 8,
-      nprobe: Int = 2,
-      m: Int = 4,
-      kSub: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64,
-      topK: Int = 5,
-      refine: Int = 0
-  ): DataFrame = {
-    val sub = dim / m
-    // ONE quantization pass + ONE coarse training feed every trained
-    // artifact: running kmeansAssign and kmeansCentroids separately
-    // would train the identical Lloyd loop twice and re-quantize the
-    // corpus three times — at 100 TB that's two wasted full-corpus
-    // training sweeps. Values are unchanged (the public APIs wrap
-    // this same lloydLoop; the spec pins s07's oracle either way).
-    val ev = quantizedVecs(corpus, idCol, vecCol).cache()
-    val (centsRaw, assign) = lloydLoop(ev, k, iters, dim)
-    // EAGER checkpoints, materialized while `ev` is still cached: a
-    // lazy checkpoint here would only materialize at the caller's
-    // terminal action — after the unpersist below — recomputing the
-    // corpus quantization from scratch once per artifact (two wasted
-    // full-corpus sweeps; the round-5 advisor caught exactly that).
-    // Each materialization job runs cache-fed, so the quantization
-    // pass is genuinely paid once.
-    val cells = assign.select(col("_id").as("n_id"), col("_cell").as("cell"))
-      .graftCheckpointEager
-    val cents = centsRaw.graftCheckpointEager
-    // trained PQ codebooks from the SAME quantized relation
-    val books = pqCodebooksFromQuantized(ev, m, kSub, iters, dim)
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val codes = ev
-      .select(col("_id").as("n_id"), ms, col("_x"))
-      .select(col("n_id"), col("_m"), expr(s"slice(_x, _m * $sub + 1, $sub)").as("_vs"))
-      .join(broadcast(books), Seq("_m"))
-      .withColumn("_dq", l2q("_vs", "_cs"))
-      .groupBy(col("n_id"), col("_m"))
-      .agg(min(struct(col("_dq"), col("_cid"))).as("_mc"))
-      .select(col("n_id"), col("_m"), col("_mc._cid").as("code"))
-      .graftCheckpointEager
-    ev.unpersist()
-    // probes rank the TRAINED centroids for their nprobe cells
-    val p = probes.select(col(probeIdCol).as("p_id"), col(probeVecCol).as("pe"))
-    val wProbe = Window.partitionBy(col("p_id")).orderBy(col("_dq").asc, col("_cid"))
-    val probeCells = p.crossJoin(broadcast(cents))
-      .withColumn("_dq", l2q("pe", "_cx"))
-      .withColumn("_rnp", row_number().over(wProbe))
-      .filter(col("_rnp") <= nprobe)
-      .select(col("p_id"), col("_cid").as("cell"))
-    // per-probe ADC distance table vs the TRAINED codebooks
-    val dtab = p.select(col("p_id"), ms, col("pe"))
-      .select(col("p_id"), col("_m"), expr(s"slice(pe, _m * $sub + 1, $sub)").as("_ps"))
-      .join(broadcast(books), Seq("_m"))
-      .select(col("p_id"), col("_m"), col("_cid").as("code"), l2q("_ps", "_cs").as("_dq"))
-    // candidates from probed cells only; deliberately un-hinted (the
-    // s06 rule: this side grows with nprobe x cell size — AQE sizes it)
-    val candIds = cells.join(broadcast(probeCells), Seq("cell"))
-      .where(col("n_id") =!= col("p_id"))
-      .select(col("p_id"), col("n_id")).distinct()
-    val w = Window.partitionBy(col("p_id")).orderBy(col("adc_q").asc, col("n_id"))
-    val adcRanked = codes.join(candIds, Seq("n_id"))
-      .join(broadcast(dtab), Seq("p_id", "_m", "code"))
-      .groupBy(col("p_id"), col("n_id")).agg(sum(col("_dq")).as("adc_q"))
-    if (refine <= 0) {
-      adcRanked
-        .withColumn("rn", row_number().over(w).cast("int"))
-        .filter(col("rn") <= topK)
-        .select(col("p_id"), col("rn"), col("n_id"), col("adc_q"))
-    } else {
-      // Exact re-rank (the FAISS IndexRefineFlat posture): ADC keeps
-      // the top-`refine` shortlist per probe, then the TRUE quantized
-      // L2 against the raw vectors re-ranks it. This is what lifts
-      // recall on distance-concentrated corpora where 4-byte codes
-      // can't separate rank 5 from rank 50 (measured: the ADC-only
-      // ceiling is ~0.4 recall@5 at sf0.1 for every knob combination;
-      // refine=50 reaches 0.9+ — docs/SCALING.md §ANN). Scale shape:
-      // the shortlist is probes x refine rows — BROADCAST against the
-      // corpus (one shuffle-free scan), never the reverse; exact work
-      // is probes x refine x dim, corpus-independent. `rn` is the
-      // refined rank; `adc_q` stays the shortlist's ADC integer so the
-      // output schema matches the unrefined path.
-      val wr = Window.partitionBy(col("p_id")).orderBy(col("_xq").asc, col("n_id"))
-      val shortlist = adcRanked
-        .withColumn("_ra", row_number().over(w))
-        .filter(col("_ra") <= refine)
-        .select(col("p_id"), col("n_id"), col("adc_q"))
-      val nv = corpus.select(col(idCol).as("n_id"), col(vecCol).as("_ne"))
-      broadcast(shortlist).join(nv, Seq("n_id"))
-        .join(broadcast(p), Seq("p_id"))
-        .withColumn("_xq", l2q("pe", "_ne"))
-        .withColumn("rn", row_number().over(wr).cast("int"))
-        .filter(col("rn") <= topK)
-        .select(col("p_id"), col("rn"), col("n_id"), col("adc_q"))
-    }
-  }
-
-  /** A persisted trained-IVFPQ index (see [[writeAnnIndex]]):
-    * `lists` — the inverted lists, (cell, n_id, m, code), stored
-    * hive-partitioned BY CELL so a probe reads only its nprobe
-    * cells' directories; `centroids` — the k trained coarse rows;
-    * `codebooks` — the m·k trained subspace rows; `vectors` — the
-    * optional raw-vector store (cell, n_id, vec), also hive-
-    * partitioned by cell, backing [[probeAnnIndex]]'s exact-rerank
-    * `refine` mode (the FAISS IndexRefineFlat posture — ADC codes
-    * prune, stored floats re-rank the shortlist).
-    */
-  final case class AnnIndex(
-      lists: DataFrame,
-      centroids: DataFrame,
-      codebooks: DataFrame,
-      vectors: Option[DataFrame] = None,
-      sigs: Option[DataFrame] = None) {
-
-    /** Index-side statistics for [[probeAnnIndex]]'s auto-refill,
-      * cached on the handle so repeated probes against one index pay
-      * the two counting jobs once, not per call (the stored frames
-      * are immutable per epoch — a handle re-read after compaction
-      * or append recounts).
-      */
-    lazy val listRowCount: Long = lists.count()
-    lazy val centroidCount: Long = centroids.count()
-  }
-
-  /** O29: persist the trained IVFPQ index — the O24 band-index
-    * production pattern applied to ANN. Training cost (the s07
-    * pipeline: one quantization pass, coarse Lloyd, subspace Lloyd,
-    * encode) is paid ONCE at write time; the stored artifact is what
-    * every real ANN service ships: inverted lists of (4-byte codes)
-    * partitioned by coarse cell, plus the two tiny quantizer frames,
-    * plus (storeVectors=true, the default) the cell-partitioned raw
-    * vectors backing refined probes. Day-2 queries and day-2 inserts
-    * ([[probeAnnIndex]], [[appendAnnIndex]]) never retrain; an
-    * UNREFINED probe never touches float arrays of the corpus, and a
-    * refined one reads floats only from its nprobe cell directories.
-    */
-  def writeAnnIndex(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int = 8,
-      m: Int = 4,
-      kSub: Int = 8,
-      iters: Int = 2,
-      dim: Int = 64,
-      storeVectors: Boolean = true,
-      storeSigs: Boolean = false
-  ): Unit = {
-    val sub = dim / m
-    val ev = quantizedVecs(corpus, idCol, vecCol).cache()
-    val (centsRaw, assign) = lloydLoop(ev, k, iters, dim)
-    val cents = centsRaw.graftCheckpointEager
-    val books = pqCodebooksFromQuantized(ev, m, kSub, iters, dim)
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val codes = ev
-      .select(col("_id").as("n_id"), ms, col("_x"))
-      .select(col("n_id"), col("_m"), expr(s"slice(_x, _m * $sub + 1, $sub)").as("_vs"))
-      .join(broadcast(books), Seq("_m"))
-      .withColumn("_dq", l2q("_vs", "_cs"))
-      .groupBy(col("n_id"), col("_m"))
-      .agg(min(struct(col("_dq"), col("_cid"))).as("_mc"))
-      .select(col("n_id"), col("_m").as("m"), col("_mc._cid").as("code"))
-    val lists = assign.select(col("_id").as("n_id"), col("_cell").as("cell"))
-      .join(codes, "n_id")
-      .select(col("cell"), col("n_id"), col("m"), col("code"))
-    // versioned publish for the lists (the mutable half — appends and
-    // compactions target it); quantizers are immutable once written
-    val spark = corpus.sparkSession
-    val v = IndexLayout.nextVersion(spark, s"$path/lists")
-    graft.sinks.RoutedSink.standard().write(s"parquet:$path/lists/$v:by:cell", lists)
-    IndexLayout.publish(spark, s"$path/lists", v)
-    IndexLayout.gcVersions(spark, s"$path/lists", keep = 1)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    books.write.mode("overwrite").parquet(s"$path/codebooks")
-    if (storeVectors) {
-      // raw vectors, cell-partitioned like the lists: a refined probe
-      // reads floats only from its nprobe cell directories. Same
-      // versioned-publish lifecycle as the lists (appends and
-      // compactions target both).
-      val vecs = assign.select(col("_id").as("n_id"), col("_cell").as("cell"))
-        .join(corpus.select(col(idCol).as("n_id"), col(vecCol).as("vec")), "n_id")
-        .select(col("cell"), col("n_id"), col("vec"))
-      val vv = IndexLayout.nextVersion(spark, s"$path/vectors")
-      graft.sinks.RoutedSink.standard().write(s"parquet:$path/vectors/$vv:by:cell", vecs)
-      IndexLayout.publish(spark, s"$path/vectors", vv)
-      IndexLayout.gcVersions(spark, s"$path/vectors", keep = 1)
-    }
-    if (storeSigs) {
-      // O46: the binary-quantization sidecar — 8 bytes/vector of
-      // X14 sign bits, cell-partitioned like the lists, so a
-      // sign-sketch coarse scan ([[probeSignIndex]]) reads popcount
-      // words from its nprobe cell directories and floats never
-      // move until the bounded rerank. Same versioned-publish
-      // lifecycle as the lists (appends/compactions target it).
-      val sg = assign.select(col("_id").as("n_id"), col("_cell").as("cell"))
-        .join(corpus.select(col(idCol).as("n_id"),
-          graft.functions.GraftExpressions.signPack60(col(vecCol)).as("sig")), "n_id")
-        .select(col("cell"), col("n_id"), col("sig"))
-      val sv = IndexLayout.nextVersion(spark, s"$path/sigs")
-      graft.sinks.RoutedSink.standard().write(s"parquet:$path/sigs/$sv:by:cell", sg)
-      IndexLayout.publish(spark, s"$path/sigs", sv)
-      IndexLayout.gcVersions(spark, s"$path/sigs", keep = 1)
-    }
-    ev.unpersist()
-  }
-
-  /** Read an index persisted by [[writeAnnIndex]]. The lists manifest
-    * is resolved here, so reads always see the latest published
-    * version.
-    *
-    * The `cell` partition column keeps its INFERRED type (int when the
-    * stored ids are small) instead of being cast to long: wrapping the
-    * partition attribute in a Cast at the scan breaks DYNAMIC
-    * partition pruning on the pure-join probe path — Catalyst's DPP
-    * rule prunes only when the join key is the raw partition
-    * attribute. [[probeAnnIndex]] casts its probe-side routing column
-    * to this type instead (the broadcast side, where a cast costs
-    * nothing). The band index never hit this because its band/pfx
-    * casts are no-ops that the optimizer erases.
-    *
-    * Pending tombstones ([[tombstoneAnnIndex]]) are masked
-    * immediately via an anti-join on n_id — a deleted vector never
-    * surfaces as a neighbor even before compaction applies the
-    * deletion. On the driver-routed path the probe KEEPS its static
-    * partition pruning during the pending window (the cell isin
-    * filter pushes through the anti-join's left side down to the
-    * scan); the join path's DPP, like the band index's, waits for
-    * compaction to reclaim the tombstone set.
-    */
-  def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): AnnIndex = {
-    val raw = spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/lists"))
-      .select(col("cell"), col("n_id"), col("m"), col("code"))
-    val lists =
-      if (!IndexLayout.hasTombstones(spark, path)) raw
-      else raw.join(IndexLayout.readTombstones(spark, path, "n_id"),
-        Seq("n_id"), "left_anti")
-    // raw-vector store: present iff written with storeVectors=true
-    // (manifest probe). No tombstone anti-join here — refined
-    // candidates derive from the MASKED lists, so a deleted vector
-    // can never re-enter via the vectors join; compaction still
-    // reclaims its vector rows.
-    val vectors =
-      if (IndexLayout.currentVersion(spark, s"$path/vectors").isEmpty) None
-      else Some(spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/vectors"))
-        .select(col("cell"), col("n_id"), col("vec")))
-    // sign-sketch sidecar: present iff written with storeSigs=true.
-    // Tombstones ARE masked here (unlike the vectors store): the
-    // binary probe derives its candidate stream from the sigs
-    // directly, not from the masked lists, so a deleted vector must
-    // disappear from this surface immediately too.
-    val sigs =
-      if (IndexLayout.currentVersion(spark, s"$path/sigs").isEmpty) None
-      else {
-        val rawSigs = spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/sigs"))
-          .select(col("cell"), col("n_id"), col("sig"))
-        Some(
-          if (!IndexLayout.hasTombstones(spark, path)) rawSigs
-          else rawSigs.join(IndexLayout.readTombstones(spark, path, "n_id"),
-            Seq("n_id"), "left_anti"))
-      }
-    AnnIndex(
-      lists,
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebooks"),
-      vectors,
-      sigs)
-  }
-
-  /** O29: rank a probe batch against the STORED index — identical
-    * integer-ADC values to [[ivfPqTrained]] (AnnIndexSpec pins row
-    * equality), but the corpus appears only through its stored lists,
-    * and a probe touches O(nprobe · list length) stored rows, never
-    * the index: with `routeOnDriver = true` (default) the probe→cell
-    * routing table — AT MOST probes × nprobe rows against a k-row
-    * centroid frame, the bounded-batch ingestion contract — is
-    * collected and the probed cells pushed into the lists scan as
-    * PARTITION-KEY LITERALS, so the hive layout statically prunes to
-    * exactly those directories (AnnIndexSpec measures ≤ nprobe of k
-    * read). This is how every real ANN service routes: the coarse
-    * quantizer is driver/router-resident by design, and the routing
-    * collect is bounded by probes × nprobe — a routing table, not
-    * data (the rankGlobal-offsets class of driver state, NOT a
-    * corpus-sized collect). For an unbounded probe RELATION pass
-    * false: pure joins, AQE-sized — and since round 6 the join path
-    * ALSO partition-prunes: the probe→cell join carries the RAW
-    * partition attribute (see readAnnIndex's cell-type note), so
-    * Catalyst plans a DPP filter on the lists scan. Its pruning side
-    * has shuffle stages beneath it (the per-probe top-nprobe window),
-    * which AQE cannot reuse as a broadcast, so the filter only
-    * survives physical planning when
-    * `spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly`
-    * is false (Spark then runs the pruning subquery as its own small
-    * job — probes × k rows — before the index scan; set in this
-    * library's session builders and recommended for any deployment
-    * probing partitioned indexes). With the default conf the filter
-    * degrades to a full-index read — correct, just unpruned.
-    */
-  /** Allow-lists with at most this many distinct ids get a broadcast
-    * hint in [[probeAnnIndex]]'s semi-join; larger ones are left to
-    * the optimizer (a 4M-id hashed relation is tens of MB — safely
-    * driver-resident; a corpus-scale list is not).
-    */
-  private[operators] val ProbeAllowBroadcastMax = 4L << 20
-
-  /** Most probes [[probeSignIndex]] collects to the driver with
-    * `routeOnDriver = true` (the probe batch, vectors included, becomes
-    * a local relation).
-    */
-  private[operators] val ProbeRouteOnDriverMax = 1 << 16
-
-  def probeAnnIndex(
-      probes: DataFrame,
-      probeIdCol: String,
-      probeVecCol: String,
-      index: AnnIndex,
-      nprobe: Int = 2,
-      m: Int = 4,
-      dim: Int = 64,
-      topK: Int = 5,
-      routeOnDriver: Boolean = true,
-      refine: Int = 0,
-      allowedIds: Option[DataFrame] = None,
-      autoScaleFiltered: Boolean = true,
-      allowedIdsCount: Option[Long] = None
-  ): DataFrame = {
-    val sub = dim / m
-    val p = probes.select(col(probeIdCol).as("p_id"), col(probeVecCol).as("pe"))
-    // O41 auto-refill: a predicate keeping fraction f of the corpus
-    // leaves ~f of each cell's candidates, so holding recall needs
-    // nprobe (and refine) scaled ~1/f — previously documented
-    // guidance the caller had to apply by hand. f derives from two
-    // cheap aggregates: the allow-list's distinct id count vs the
-    // index's id count (list rows / m — replay duplicates inflate
-    // both sides of nothing that matters for a knob). nprobe is
-    // capped at the cell count, refine at the allow-list size (a
-    // shortlist can't exceed the eligible ids). Pass
-    // autoScaleFiltered = false to pin the knobs (e.g. a
-    // latency-bound serving path that pre-tuned them) — the call is
-    // then FULLY LAZY again: no Spark job runs here (round-11 fix;
-    // previously the distinct count ran regardless). The index-side
-    // counts are cached on the [[AnnIndex]] handle, so even the
-    // auto path pays them once per handle, not once per call. A
-    // caller that knows its allow-list cardinality passes
-    // `allowedIdsCount` and skips the distinct count on the auto
-    // path too.
-    val allowIdsFrame = allowedIds.map { allow =>
-      allow.select(col(allow.columns.head).as("n_id"))
-    }
-    val allowN: Option[Long] = allowIdsFrame match {
-      case Some(ids) if autoScaleFiltered =>
-        Some(allowedIdsCount.getOrElse(ids.distinct().count()))
-      case _ => allowedIdsCount
-    }
-    val (effNprobe, effRefine) = allowN match {
-      case Some(n) if autoScaleFiltered && n > 0 =>
-        val idxN = math.max(1L, index.listRowCount / m)
-        val f = math.min(1.0, n.toDouble / idxN)
-        val nCells = index.centroidCount.toInt
-        val np = math.min(nCells.toLong, math.ceil(nprobe / f).toLong).toInt
-        val rf =
-          if (refine <= 0) refine
-          else math.min(n, math.ceil(refine / f).toLong).toInt
-        (np, rf)
-      case _ => (nprobe, refine)
-    }
-    val wProbe = Window.partitionBy(col("p_id")).orderBy(col("_dq").asc, col("_cid"))
-    // the routing column is cast to the STORED partition column's
-    // inferred type on THIS (broadcast) side — keeping the lists side
-    // the raw partition attribute is what lets both static pruning
-    // (isin literals) and the join path's dynamic partition pruning
-    // reach the hive layout (see readAnnIndex's cell-type note)
-    val cellType = index.lists.schema("cell").dataType
-    val probeCells = p.crossJoin(broadcast(index.centroids))
-      .withColumn("_dq", l2q("pe", "_cx"))
-      .withColumn("_rnp", row_number().over(wProbe))
-      .filter(col("_rnp") <= effNprobe)
-      .select(col("p_id"), col("_cid").cast(cellType).as("cell"))
-    val cellFilter: Option[Seq[Any]] =
-      if (!routeOnDriver) None
-      else Some(probeCells.select(col("cell").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq match {
-        case ids if cellType == org.apache.spark.sql.types.IntegerType => ids.map(_.toInt)
-        case ids => ids
-      })
-    val lists = cellFilter
-      .map(ids => index.lists.where(col("cell").isin(ids: _*)))
-      .getOrElse(index.lists)
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val dtab = p.select(col("p_id"), ms, col("pe"))
-      .select(col("p_id"), col("_m").as("m"), expr(s"slice(pe, _m * $sub + 1, $sub)").as("_ps"))
-      .join(broadcast(index.codebooks.withColumnRenamed("_m", "m")), Seq("m"))
-      .select(col("p_id"), col("m"), col("_cid").as("code"), l2q("_ps", "_cs").as("_dq"))
-    val w = Window.partitionBy(col("p_id")).orderBy(col("adc_q").asc, col("n_id"))
-    // Replay guard: an at-least-once re-run of appendAnnIndex (or a
-    // replayed appendAnnIndexStream micro-batch) leaves EXACT
-    // duplicate (cell, n_id, m, code) rows in the stored lists. The
-    // band-index probe is naturally immune (it distincts candidate
-    // pairs); here a duplicated row would double-count that
-    // subspace's distance in the ADC sum and silently corrupt the
-    // ranking. Distinct AFTER the probe-cell join so both routing
-    // paths stay pruned first (cell directories via isin literals or
-    // the broadcast join) — the dedup shuffle is bounded by matched
-    // candidates, never the index. Duplicates are permanently
-    // reclaimed by [[compactAnnIndex]].
-    // O41: FILTERED search — the attribute-constrained probe every
-    // serving system eventually needs ("neighbors among docs passing
-    // this predicate"). PRE-filter semantics: the allow-list
-    // semi-joins the candidate stream BEFORE ADC ranking, so the
-    // top-k is taken over allowed candidates only (post-filtering a
-    // fixed-k result silently starves selective predicates). The
-    // allow-list is an id set (first column used) — filter output,
-    // typically orders of magnitude under corpus size, hence the
-    // broadcast WHILE IT FITS: past ~4M distinct ids (tens of MB
-    // hashed on the driver) the hint is dropped and the optimizer
-    // sizes the semi-join itself — degrading to a shuffle instead of
-    // OOMing the driver on a corpus-scale allow-list. For predicates
-    // at that scale, filter at index-write time instead. Selectivity
-    // eats candidates — see the auto-refill note above; the spec
-    // measures the trade on the stored index.
-    val cand = lists.join(broadcast(probeCells), Seq("cell"))
-    val allowFiltered = allowIdsFrame.fold(cand) { ids =>
-      // the broadcast hint is forced only when the cardinality is
-      // KNOWN to fit; known-too-big drops to a plain semi-join, and
-      // an UNKNOWN size (autoScaleFiltered = false, no caller count)
-      // also omits the hint and lets AQE size the side at runtime —
-      // running a count here just to decide would defeat the lazy
-      // serving-path contract, and force-broadcasting a side nobody
-      // measured risks a driver OOM on a corpus-scale allow-list
-      // (the exact failure O41's cap exists to prevent). AQE still
-      // converts the semi-join to a broadcast when the list is
-      // small, so the pinned-knob path loses nothing when the list
-      // is what serving paths actually pass.
-      val side = allowN match {
-        case Some(n) if n <= ProbeAllowBroadcastMax => broadcast(ids)
-        case _ => ids
-      }
-      cand.join(side, Seq("n_id"), "left_semi")
-    }
-    val adcRanked = allowFiltered
-      .where(col("n_id") =!= col("p_id"))
-      .select(col("p_id"), col("n_id"), col("m"), col("code")).distinct()
-      .join(broadcast(dtab), Seq("p_id", "m", "code"))
-      .groupBy(col("p_id"), col("n_id")).agg(sum(col("_dq")).as("adc_q"))
-    if (effRefine <= 0) {
-      adcRanked
-        .withColumn("rn", row_number().over(w).cast("int"))
-        .filter(col("rn") <= topK)
-        .select(col("p_id"), col("rn"), col("n_id"), col("adc_q"))
-    } else {
-      // Exact re-rank against the STORED raw vectors (see
-      // [[ivfPqTrained]]'s refine doc for the recall/cost calculus).
-      // The vectors scan keeps the same cell routing as the lists —
-      // a refined probe reads floats only from its nprobe cell
-      // directories. Tombstoned ids can't resurface here: the
-      // shortlist comes from the masked lists.
-      require(index.vectors.nonEmpty,
-        "probeAnnIndex(refine > 0) needs an index written with storeVectors=true")
-      val wr = Window.partitionBy(col("p_id")).orderBy(col("_xq").asc, col("n_id"))
-      val shortlist = adcRanked
-        .withColumn("_ra", row_number().over(w))
-        .filter(col("_ra") <= effRefine)
-        .select(col("p_id"), col("n_id"), col("adc_q"))
-      val vecs = cellFilter
-        .map(ids => index.vectors.get.where(col("cell").isin(ids: _*)))
-        .getOrElse(index.vectors.get)
-        .select(col("n_id"), col("vec").as("_ne")).distinct()
-      broadcast(shortlist).join(vecs, Seq("n_id"))
-        .join(broadcast(p), Seq("p_id"))
-        .withColumn("_xq", l2q("pe", "_ne"))
-        .withColumn("rn", row_number().over(wr).cast("int"))
-        .filter(col("rn") <= topK)
-        .select(col("p_id"), col("rn"), col("n_id"), col("adc_q"))
-    }
-  }
-
-  /** O46: binary-quantized FILTERED probe against the stored index —
-    * the s10 sign-sketch coarse pass composed with O41's pre-filter
-    * semantics, on the persisted layout. The candidate stream is the
-    * sigs sidecar of the nprobe routed cells (8 bytes/vector read,
-    * statically pruned exactly like the lists), the allow-list
-    * semi-joins it BEFORE ranking (pre-filter: top-k over allowed
-    * candidates only; hint only when the known cardinality fits —
-    * the O41 rule), the coarse rank is popcount Hamming on the
-    * 60-bit packs (floats never move), and only the top-M survivors
-    * per probe join the cell-pruned vectors store for the exact
-    * cosine rerank — a probes x M bounded join. At 100 TB: coarse
-    * bytes = 8/vector of nprobe cells, rerank floats = probes x M
-    * rows; nothing corpus-scaled shuffles. With nprobe = k (all
-    * cells) the result equals the in-query s12 composition
-    * row-for-row (AnnIndexSpec pins it); recall vs the exact
-    * filtered answer is spec-floored on both paths.
-    */
-  def probeSignIndex(
-      probes: DataFrame,
-      probeIdCol: String,
-      probeVecCol: String,
-      index: AnnIndex,
-      nprobe: Int = 2,
-      hammingTopM: Int = 50,
-      topK: Int = 5,
-      routeOnDriver: Boolean = true,
-      allowedIds: Option[DataFrame] = None,
-      allowedIdsCount: Option[Long] = None
-  ): DataFrame = {
-    require(index.sigs.nonEmpty,
-      "probeSignIndex needs an index written with storeSigs=true")
-    require(index.vectors.nonEmpty,
-      "probeSignIndex needs an index written with storeVectors=true (exact rerank)")
-    val p0 = probes.select(col(probeIdCol).as("p_id"), col(probeVecCol).as("pe"),
-      graft.functions.GraftExpressions.signPack60(col(probeVecCol)).as("psig"))
-    // probe→cell routing: identical to probeAnnIndex (driver-resident
-    // coarse quantizer, bounded probes x nprobe routing table pushed
-    // as partition-key literals, or the DPP join path).
-    // Round-17 (§2.4 remove repeated passes): with routeOnDriver the
-    // probe BATCH is materialized once into a LOCAL relation — the
-    // routing path already collects a probes-bounded table, and the
-    // former shape re-evaluated the probe sub-plan (scan + sort-limit
-    // + sign-pack) once per broadcast build PLUS once for the routing
-    // collect, and re-ran the probe→cell window INSIDE the main plan
-    // (s15 warm path: ~1/3 of its 33 stage-jobs were these repeats).
-    // Local relations broadcast without a job. Bounded by the probe
-    // batch — the documented serving contract of this mode.
-    val spark = probes.sparkSession
-    val cellType = index.sigs.get.schema("cell").dataType
-    val wProbe = Window.partitionBy(col("p_id")).orderBy(col("_dq").asc, col("_cid"))
-    def probeCellsOf(pp: DataFrame): DataFrame =
-      pp.select(col("p_id"), col("pe")).crossJoin(broadcast(index.centroids))
-        .withColumn("_dq", l2q("pe", "_cx"))
-        .withColumn("_rnp", row_number().over(wProbe))
-        .filter(col("_rnp") <= nprobe)
-        .select(col("p_id"), col("_cid").cast(cellType).as("cell"))
-    val (p, probeCells, cellFilter) =
-      if (!routeOnDriver) (p0, probeCellsOf(p0), None)
-      else {
-        import scala.jdk.CollectionConverters._
-        // loud bound on the driver-side probe batch: one row past the
-        // bound is enough to refuse, never the whole batch
-        val probeRows = p0.limit(ProbeRouteOnDriverMax + 1).collect()
-        require(probeRows.length <= ProbeRouteOnDriverMax,
-          s"probeSignIndex(routeOnDriver = true) collects the probe batch to the driver: " +
-            s"more than $ProbeRouteOnDriverMax probes — split the batch or pass " +
-            "routeOnDriver = false")
-        val pLocal = spark.createDataFrame(probeRows.toSeq.asJava, p0.schema)
-        val cellRows = probeCellsOf(pLocal).collect()
-        val cellsLocal = spark.createDataFrame(cellRows.toSeq.asJava,
-          probeCellsOf(pLocal).schema)
-        val ids = cellRows.map(_.getAs[Number](1).longValue).distinct.toSeq
-        val lits: Seq[Any] =
-          if (cellType == org.apache.spark.sql.types.IntegerType) ids.map(_.toInt)
-          else ids
-        (pLocal, cellsLocal, Some(lits))
-      }
-    val sigs = cellFilter
-      .map(ids => index.sigs.get.where(col("cell").isin(ids: _*)))
-      .getOrElse(index.sigs.get)
-    val cand = sigs.join(broadcast(probeCells), Seq("cell"))
-      .where(col("n_id") =!= col("p_id"))
-      .select(col("p_id"), col("n_id"), col("sig")).distinct() // replayed appends
-    val allowFiltered = allowedIds.fold(cand) { allow =>
-      val ids = allow.select(col(allow.columns.head).as("n_id"))
-      val side = allowedIdsCount match {
-        case Some(n) if n <= ProbeAllowBroadcastMax => broadcast(ids)
-        case _ => ids
-      }
-      cand.join(side, Seq("n_id"), "left_semi")
-    }
-    val wH = Window.partitionBy(col("p_id")).orderBy(col("hamming"), col("n_id"))
-    val survivors = allowFiltered
-      .join(broadcast(p.select(col("p_id"), col("psig"))), Seq("p_id"))
-      .withColumn("hamming", bit_count(col("psig").bitwiseXOR(col("sig"))).cast("int"))
-      // SignPack60 yields null for sub-60-dim vectors → null hamming,
-      // and ascending sorts nulls FIRST — a malformed row would crowd
-      // real candidates out of the top-M shortlist (round-12 advice)
-      .where(col("hamming").isNotNull)
-      .withColumn("hrn", row_number().over(wH))
-      .filter(col("hrn") <= hammingTopM)
-      .select(col("p_id"), col("n_id"), col("hamming"))
-    val vecs = cellFilter
-      .map(ids => index.vectors.get.where(col("cell").isin(ids: _*)))
-      .getOrElse(index.vectors.get)
-      .select(col("n_id"), col("vec").as("_ne")).distinct()
-    val wC = Window.partitionBy(col("p_id")).orderBy(col("cosine").desc, col("n_id"))
-    broadcast(survivors).join(vecs, Seq("n_id"))
-      .join(broadcast(p.select(col("p_id"), col("pe"))), Seq("p_id"))
-      .withColumn("cosine", graft.functions.VectorFunctions.cosine("pe", "_ne"))
-      .withColumn("rn", row_number().over(wC).cast("int"))
-      .filter(col("rn") <= topK)
-      .select(col("p_id"), col("rn"), col("n_id"), col("hamming"), col("cosine"))
-  }
-
-  /** O29's insert path — the reason real ANN services separate
-    * training from serving: day-2 vectors are encoded against the
-    * STORED quantizers (one broadcast pass each for cell assignment
-    * and codes — no retraining, no corpus access) and their list
-    * rows appended into the hive layout, landing only in the cells
-    * the new vectors hash to. Probes see them immediately.
-    * Periodically retrain + rewrite when drift accumulates — that's
-    * [[writeAnnIndex]] again.
-    *
-    * Replay caveat (same as every file-append sink): a re-run of this
-    * call — or an at-least-once replayed
-    * [[graft.streaming.Streams.appendAnnIndexStream]] micro-batch —
-    * appends its (cell, n_id, m, code) rows AGAIN. [[probeAnnIndex]]
-    * distincts candidate rows so rankings stay correct, and the next
-    * [[compactAnnIndex]] reclaims the duplicate bytes.
-    */
-  def appendAnnIndex(
-      newVecs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      m: Int = 4,
-      dim: Int = 64
-  ): Unit = {
-    val spark = newVecs.sparkSession
-    val sub = dim / m
-    val idx = readAnnIndex(spark, path)
-    val v = newVecs.select(col(idCol).as("n_id"), col(vecCol).as("_x"))
-    val cells = v.crossJoin(broadcast(idx.centroids))
-      .withColumn("_dq", l2q("_x", "_cx"))
-      .groupBy(col("n_id")).agg(min(struct(col("_dq"), col("_cid"))).as("_mc"))
-      .select(col("n_id"), col("_mc._cid").as("cell"))
-    val ms = explode(array((0 until m).map(lit(_)): _*)).as("_m")
-    val codes = v.select(col("n_id"), ms, col("_x"))
-      .select(col("n_id"), col("_m").as("m"), expr(s"slice(_x, _m * $sub + 1, $sub)").as("_vs"))
-      .join(broadcast(idx.codebooks.withColumnRenamed("_m", "m")), Seq("m"))
-      .withColumn("_dq", l2q("_vs", "_cs"))
-      .groupBy(col("n_id"), col("m"))
-      .agg(min(struct(col("_dq"), col("_cid"))).as("_mc"))
-      .select(col("n_id"), col("m"), col("_mc._cid").as("code"))
-    graft.sinks.RoutedSink.standard().write(
-      s"parquet-append:${IndexLayout.resolveDir(spark, s"$path/lists")}:by:cell",
-      cells.join(codes, "n_id").select(col("cell"), col("n_id"), col("m"), col("code")))
-    // keep the raw-vector store in sync when present (refined probes
-    // must see day-2 vectors too); replay duplicates are tolerated by
-    // the probe's distinct and reclaimed by compactAnnIndex
-    if (IndexLayout.currentVersion(spark, s"$path/vectors").isDefined) {
-      graft.sinks.RoutedSink.standard().write(
-        s"parquet-append:${IndexLayout.resolveDir(spark, s"$path/vectors")}:by:cell",
-        cells.join(v, "n_id").select(col("cell"), col("n_id"), col("_x").as("vec")))
-    }
-    // ... and the sign-sketch sidecar (binary probes must see day-2
-    // vectors too); replay duplicates tolerated by the probe's
-    // distinct, reclaimed by compactAnnIndex
-    if (IndexLayout.currentVersion(spark, s"$path/sigs").isDefined) {
-      graft.sinks.RoutedSink.standard().write(
-        s"parquet-append:${IndexLayout.resolveDir(spark, s"$path/sigs")}:by:cell",
-        cells.join(v, "n_id").select(col("cell"), col("n_id"),
-          graft.functions.GraftExpressions.signPack60(col("_x")).as("sig")))
-    }
-  }
-
-  /** Register vectors for DELETION from the persisted ANN index — the
-    * takedown/retention path ([[Dedup.tombstoneBandIndex]]'s vector
-    * twin). The very next [[readAnnIndex]] masks the ids from every
-    * probe; [[compactAnnIndex]] applies them permanently.
-    */
-  def tombstoneAnnIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.addTombstones(ids, idCol, "n_id", path)
-
-  /** Periodic maintenance for the appended ANN index — the
-    * [[Dedup.compactBandIndex]] pattern on the inverted lists:
-    * crash-recover + migrate the layout, rewrite each cell into one
-    * file (one repartition keyed on the partition column), DISTINCT
-    * away replayed append duplicates, anti-join pending tombstones
-    * (AQE-sized — the tombstone side is takedown-list sized), then
-    * publish by atomically flipping the lists manifest. Only the
-    * tombstone files present at entry are deleted afterwards; ids
-    * arriving mid-compaction survive to the next cycle. Quantizer
-    * frames are immutable and untouched.
-    */
-  def compactAnnIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      keepVersions: Int = 1
-  ): Unit = {
-    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
-    def compactComponent(compPath: String): Unit = {
-      IndexLayout.recover(spark, compPath)
-      IndexLayout.ensureVersioned(spark, compPath)
-      val base = spark.read.parquet(IndexLayout.resolveDir(spark, compPath)).distinct()
-      val pruned =
-        if (tombFiles.isEmpty) base
-        else base.join(
-          spark.read.parquet(tombFiles.map(_.toString): _*).select(col("n_id")),
-          Seq("n_id"), "left_anti")
-      val next = IndexLayout.nextVersion(spark, compPath)
-      pruned
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$compPath/$next")
-      IndexLayout.publish(spark, compPath, next)
-      IndexLayout.gcVersions(spark, compPath, keepVersions)
-    }
-    compactComponent(s"$path/lists")
-    // the raw-vector store shares the tombstone set and replay
-    // semantics — compact it in the same cycle when present
-    if (IndexLayout.currentVersion(spark, s"$path/vectors").isDefined)
-      compactComponent(s"$path/vectors")
-    if (IndexLayout.currentVersion(spark, s"$path/sigs").isDefined)
-      compactComponent(s"$path/sigs")
-    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
-  }
-
-  /** O40: materialize q62's deterministic global shuffle as the
-    * training-shard LAYOUT a loader actually consumes — shard=K hive
-    * directories whose files stream rows in permutation order, so
-    * "read shard dirs round-robin, each file top to bottom" IS the
-    * epoch order, with no rank column and no sort at read time. The
-    * permutation is pure (id, seed) arithmetic (portable 60-bit
-    * hash; `skey` is kept in the files as the replay/audit key), so
-    * re-running with the same seed reproduces every shard's row
-    * SEQUENCE bit-for-bit (file split points may shift — range
-    * boundary sampling is seeded per physical exchange — but the
-    * ordered concatenation per shard is identical), and a different
-    * seed is a fresh epoch permutation of the same corpus.
-    *
-    * Plan: one hash projection (codegen), ONE shuffle
-    * (`repartitionByRange(nShards, shard, skey, id)` — near-1:1
-    * shard→task placement; see the inline note), per-task sort on
-    * (shard, skey, id) — each task writes one ordered file per shard
-    * range it holds. No global sort, no rank, no driver state. At
-    * 100 TB: size nShards so corpus/nShards ≈ the file-size target
-    * (hundreds of MB) — shards scale out the write AND bound any
-    * single file.
-    */
-  def writeShuffledShards(
-      df: DataFrame,
-      idCol: String,
-      path: String,
-      nShards: Int = 8,
-      seed: String = "42",
-      keepVersions: Int = 1
-  ): Unit = {
-    // Epoch publish is ATOMIC via the shared IndexLayout manifest
-    // (the O30 pattern the band/ANN indexes already use): the new
-    // epoch builds into a fresh `v0000N/` while readers keep
-    // resolving `_CURRENT` to the old one, then the manifest flips.
-    // A loader racing the rewrite sees whole epochs, never a
-    // half-overwritten directory. Retired epochs stay for
-    // `keepVersions` flips (the in-flight-reader grace window; size
-    // it to cover an epoch's read time at 100 TB), then GC.
-    val spark = df.sparkSession
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    val next = IndexLayout.nextVersion(spark, path)
-    shuffledShardsCore(df, idCol, s"$path/$next", nShards, seed, mode = "overwrite",
-      op = "writeShuffledShards")
-    writeShardLayoutMeta(spark, s"$path/$next", nShards, seed, idCol = idCol,
-      schemaSig = shardSchemaSig(df))
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
-
-  /** Read the CURRENT epoch of an O40 shard layout (manifest-resolved;
-    * falls back to `path` itself for a pre-versioning in-place layout).
-    * A loader wanting the file-stream contract lists shard dirs under
-    * this same resolved directory.
-    */
-  def readShuffledShards(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(IndexLayout.resolveDir(spark, path))
-
-  /** O47: snapshot read — the CURRENT-epoch read above, pinned to a
-    * named retained version instead. The epoch machinery always kept
-    * `keepVersions` retired epochs as the in-flight-reader grace
-    * window; this is the surface that makes the window usable ON
-    * PURPOSE: a training job pins its epoch for the whole run while
-    * the nightly rewrite publishes the next (no mid-run permutation
-    * change), an eval A/B reads two epochs side by side, an incident
-    * review replays exactly what the loader saw. Versions come from
-    * [[shardVersions]]; a GC'd / unknown / crash-orphaned version
-    * fails loudly (silent fallback to current would be a wrong-data
-    * bug in a reproducibility surface). Same contract for the band/
-    * ANN index layouts via [[IndexLayout.resolveDirAt]] directly.
-    */
-  def readShuffledShardsAt(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      version: String): DataFrame =
-    spark.read.parquet(IndexLayout.resolveDirAt(spark, path, version))
-
-  /** The pinnable snapshot names of an O40 layout, oldest first,
-    * current last — `shardVersions(...).last` is what
-    * [[readShuffledShards]] resolves.
-    */
-  def shardVersions(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] =
-    IndexLayout.listVersions(spark, path)
-
-  private val ShardLayoutMetaName = "_LAYOUT"
-
-  /** Order-insensitive schema fingerprint of the USER columns (the
-    * core's derived skey/shard are excluded by construction — callers
-    * fingerprint the input frame). Column order can't corrupt a
-    * parquet read; a missing/extra/retyped column can.
-    */
-  private def shardSchemaSig(df: DataFrame): String =
-    df.schema.fields.map(f => s"${f.name}:${f.dataType.sql}").sorted.mkString(",")
-
-  private def writeShardLayoutMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      versionDir: String,
-      nShards: Int,
-      seed: String,
-      idCol: String = null,
-      schemaSig: String = null
-  ): Unit = {
-    // JSON-escape interpolated strings: a column name carrying a
-    // quote or backslash would otherwise corrupt the manifest, while
-    // readShardLayoutSchema's regex already expects escape sequences
-    // (round-12 advice — write and read must stay symmetric)
-    val idPart = if (idCol == null) "" else s""","idCol":"${jsonEscape(idCol)}""""
-    val scPart =
-      if (schemaSig == null) "" else s""","schema":"${jsonEscape(schemaSig)}""""
-    IndexLayout.writeMeta(spark, versionDir, ShardLayoutMetaName,
-      s"""{"nShards":$nShards,"seed":"${jsonEscape(seed)}"$idPart$scPart}""")
-  }
-
-  private[operators] def jsonEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  private def jsonUnescape(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  /** schema fingerprint from a `_LAYOUT` manifest; None for layouts
-    * stamped before round 12 added the field.
-    */
-  private def readShardLayoutSchema(
-      spark: org.apache.spark.sql.SparkSession,
-      versionDir: String
-  ): Option[String] =
-    IndexLayout.readMeta(spark, versionDir, ShardLayoutMetaName).flatMap { s =>
-      """"schema"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-        .map(m => jsonUnescape(m.group(1)))
-    }
-
-  /** idCol from a `_LAYOUT` manifest; None for layouts stamped before
-    * O43 added the field (readShardLayoutMeta's regexes are untouched,
-    * so ST13 validation reads old and new manifests alike).
-    */
-  private def readShardLayoutIdCol(
-      spark: org.apache.spark.sql.SparkSession,
-      versionDir: String
-  ): Option[String] =
-    IndexLayout.readMeta(spark, versionDir, ShardLayoutMetaName).flatMap { s =>
-      """"idCol"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-        .map(m => jsonUnescape(m.group(1)))
-    }
-
-  private def readShardLayoutMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      versionDir: String
-  ): Option[(Int, String)] =
-    IndexLayout.readMeta(spark, versionDir, ShardLayoutMetaName).map { s =>
-      val n = """"nShards"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-        .getOrElse(sys.error(s"bad $ShardLayoutMetaName in $versionDir: $s")).group(1).toInt
-      val sd = """"seed"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-        .getOrElse(sys.error(s"bad $ShardLayoutMetaName in $versionDir: $s")).group(1)
-      (n, jsonUnescape(sd))
-    }
-
-  /** O40's INGESTION half: append a batch (e.g. one streaming
-    * micro-batch — ST13 routes here) into an existing shard layout.
-    * Shard assignment is the same pure (id, seed) arithmetic, so a
-    * row lands in the same shard=K directory the full rewrite would
-    * put it in, and each appended file is internally
-    * permutation-ordered. What appending CANNOT give is the exact
-    * cross-file global order — files interleave by arrival, so the
-    * epoch order is approximate until the next
-    * [[writeShuffledShards]] rewrite (the nightly "ingest
-    * continuously, reshuffle at the epoch boundary" shape). Replay
-    * caveat (same as appendAnnIndex): an at-least-once retry appends
-    * duplicate rows — dedupe on `idCol` at the epoch rewrite, or
-    * loader-side.
-    *
-    * (nShards, seed) are NOT trusted from the caller: the layout's
-    * own `_LAYOUT` manifest (stamped by [[writeShuffledShards]]) is
-    * authoritative — the appendAnnIndex discipline, where parameters
-    * derive from the stored quantizers. Omit them (the defaults) and
-    * the stored values are used; pass them and they are VALIDATED,
-    * so a redeployed ingester whose config drifted (different seed →
-    * rows landing under a different permutation regime than the
-    * epoch rewrite would assign) fails fast instead of silently
-    * violating the placement guarantee. Appending to a path with no
-    * layout yet requires explicit values and creates epoch v00001.
-    */
-  def appendShuffledShards(
-      df: DataFrame,
-      idCol: String,
-      path: String,
-      nShards: Int = -1,
-      seed: String = null
-  ): Unit = {
-    val op = "appendShuffledShards"
-    val spark = df.sparkSession
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    IndexLayout.currentVersion(spark, path) match {
-      case Some(v) =>
-        val dir = s"$path/$v"
-        readShardLayoutMeta(spark, dir) match {
-          case Some((n0, s0)) =>
-            require(nShards == -1 || nShards == n0,
-              s"$op: layout at $path was written with nShards=$n0 but the caller " +
-                s"passed nShards=$nShards — appending under a different shard count " +
-                "would break the placement guarantee; omit the argument to use the " +
-                "stored value, or rewrite the epoch with writeShuffledShards")
-            require(seed == null || seed == s0,
-              s"$op: layout at $path was written with seed='$s0' but the caller " +
-                s"passed seed='$seed' — appending under a different permutation " +
-                "regime would break the placement guarantee; omit the argument to " +
-                "use the stored value, or rewrite the epoch with writeShuffledShards")
-            // Schema-drift guard (round 12): parquet will happily
-            // append a batch whose columns drifted into the same
-            // shard directories, and a later read resolves the mixed
-            // footers NONDETERMINISTICALLY (a missing column comes
-            // back silently null, a retyped one may fail only on the
-            // files that disagree). Refuse loudly instead; schema
-            // evolution is an epoch-rewrite event by design. Layouts
-            // stamped before the field carry no signature — validated
-            // from their next rewrite on.
-            readShardLayoutSchema(spark, dir).foreach { stamped =>
-              val batchSig = shardSchemaSig(df)
-              require(batchSig == stamped,
-                s"$op: batch schema does not match the layout's stamped schema —\n" +
-                  s"  layout: $stamped\n  batch:  $batchSig\n" +
-                  "a mixed-schema shard directory reads nondeterministically " +
-                  "(missing columns silently null). Evolve the schema with a " +
-                  "writeShuffledShards epoch rewrite, not an append.")
-            }
-            shuffledShardsCore(df, idCol, dir, n0, s0, mode = "append", op = op)
-          case None =>
-            // migrated pre-versioning layout: no stored parameters to
-            // derive from — require explicit values once and stamp
-            // the manifest so later appends are self-describing
-            require(nShards > 0 && seed != null,
-              s"$op: layout at $path predates the _LAYOUT manifest — pass the " +
-                "original nShards and seed explicitly once to stamp it")
-            shuffledShardsCore(df, idCol, dir, nShards, seed, mode = "append", op = op)
-            writeShardLayoutMeta(spark, dir, nShards, seed, idCol = idCol,
-              schemaSig = shardSchemaSig(df))
-        }
-      case None =>
-        require(nShards > 0 && seed != null,
-          s"$op: no layout exists at $path — pass nShards and seed for the first write")
-        writeShuffledShards(df, idCol, path, nShards, seed)
-    }
   }
 
   /** O42: incremental aggregate-view maintenance — merge a
@@ -2508,291 +812,4 @@ object Ops {
     untouched.unionByName(merged)
   }
 
-  /** O43: compact an O40 shard layout's CURRENT epoch into a fresh
-    * one — the small-file/ordering repair step every streaming-fed
-    * lake layout eventually needs. Continuous
-    * [[appendShuffledShards]] ingestion degrades the layout along
-    * two axes the docs already concede: (1) each micro-batch lands
-    * one parquet file per touched shard, so a day of 1-minute
-    * triggers leaves ~1440 small files per shard (open/seek/footer
-    * overhead dominates the scan at 100 TB — the classic
-    * small-files problem); (2) cross-file epoch order within a shard
-    * decays to arrival order; (3) at-least-once retries may have
-    * appended duplicate ids. One compaction call repairs all three:
-    * it reads the current epoch, optionally dedupes on `idCol`
-    * (retried rows are byte-identical, so any survivor is THE row),
-    * and re-runs the exact full-rewrite path under the layout's own
-    * `_LAYOUT` parameters (manifest-authoritative — the
-    * appendShuffledShards discipline; caller passes nothing), so the
-    * result is bit-identical in content and order to what
-    * [[writeShuffledShards]] would produce from scratch: one range
-    * task per shard, one sorted file per shard dir, exact
-    * permutation order restored. The flip is the same atomic
-    * `_CURRENT` publish — readers mid-scan keep the old epoch for
-    * `keepVersions` flips, then GC. Cost = one read + one
-    * range-exchange + one write of the LAYOUT (never re-hashing the
-    * source corpus), which is the floor for a rewrite; run it at the
-    * epoch boundary the O40 scaladoc already prescribes.
-    */
-  def compactShuffledShards(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      idColArg: String = null,
-      dedupe: Boolean = true,
-      keepVersions: Int = 1
-  ): Unit = {
-    val op = "compactShuffledShards"
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    val v = IndexLayout.currentVersion(spark, path).getOrElse(
-      sys.error(s"$op: no epoch published at $path — nothing to compact"))
-    val dir = s"$path/$v"
-    val (n0, s0) = readShardLayoutMeta(spark, dir).getOrElse(
-      sys.error(s"$op: $dir has no $ShardLayoutMetaName manifest — " +
-        "rewrite once with writeShuffledShards to stamp it"))
-    // idCol is manifest-authoritative when stamped (layouts written
-    // since O43); for older layouts the caller supplies it once and
-    // the fresh epoch's manifest records it. A caller-passed value
-    // that contradicts the manifest fails fast (the append
-    // discipline).
-    val idColStored = readShardLayoutIdCol(spark, dir)
-    val id = (idColStored, Option(idColArg)) match {
-      case (Some(m), Some(c)) =>
-        require(m == c, s"$op: layout at $path was written with idCol='$m' but " +
-          s"the caller passed idCol='$c' — omit the argument to use the stored value")
-        m
-      case (Some(m), None) => m
-      case (None, Some(c)) => c
-      case (None, None) => sys.error(
-        s"$op: layout at $path predates the idCol manifest field — pass idCol once to stamp it")
-    }
-    // Drop the derived columns; the core recomputes both from the
-    // manifest parameters (identical values — same id, same seed).
-    val rows0 = spark.read.parquet(dir).drop("skey", "shard")
-    require(rows0.columns.contains(id), s"$op: layout rows have no '$id' column")
-    val rows = if (dedupe) rows0.dropDuplicates(id) else rows0
-    val next = IndexLayout.nextVersion(spark, path)
-    shuffledShardsCore(rows, id, s"$path/$next", n0, s0, mode = "overwrite", op = op)
-    writeShardLayoutMeta(spark, s"$path/$next", n0, s0, idCol = id,
-      schemaSig = shardSchemaSig(rows))
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
-
-  /** O44: the token-ID training shards — [[TextAnalysis.tokenizeWindows]]
-    * (X15 encode + fixed `window`-length padded context windows) fed
-    * straight into the O40 epoch-shard writer, so the stored corpus is
-    * loader-ready ID ARRAYS, not documents: every row carries exactly
-    * `window` ints in `ids` plus `n_real` (pad boundary) and its
-    * provenance (`doc_id`, `window_id`). `sample_id` = "doc:window" is
-    * the permutation/replay key. The whole job is one map-only encode
-    * stage plus O40's single range exchange — the same two-stage shape
-    * at 100 TB, where `window`-sized rows also make shard files
-    * uniformly sized (nShards sizes the file target directly).
-    * Read back with [[readShuffledShards]]; compact/reshard with
-    * [[compactShuffledShards]] (idCol is manifest-stamped).
-    */
-  def packTokenShards(
-      docs: DataFrame,
-      path: String,
-      window: Int = 64,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      nShards: Int = 8,
-      seed: String = "42",
-      keepVersions: Int = 1
-  ): Unit = {
-    val windows = TextAnalysis.tokenizeWindows(docs, window, textCol)
-      .withColumn("sample_id",
-        concat(col(idCol).cast("string"), lit(":"), col("window_id").cast("string")))
-    writeShuffledShards(windows, "sample_id", path, nShards, seed, keepVersions)
-  }
-
-  private val MergeMetaName = "_MERGE"
-
-  /** O45: the MERGE-applying sink — apply a (key, version, payload,
-    * tombstone) changelog batch (q65's compaction output, ST15's
-    * update stream) to a STORED keyed table as a versioned
-    * upsert/delete, so compacted state is incrementally *applied*,
-    * not just recomputable. Semantics are last-writer-wins on the
-    * lexicographic `versionCols` struct (ties broken tombstone-wins,
-    * then by payload — deterministic): re-applying any batch, stale
-    * or duplicated, can never move state backwards, which is the
-    * at-least-once replay guarantee a foreachBatch sink needs.
-    * Tombstone rows are KEPT in the table (flagged) rather than
-    * deleted, because a tombstone must keep suppressing older upserts
-    * that arrive in later batches (ST15's contract); [[readMerged]]
-    * filters them, and `dropTombstones = true` purges at apply time
-    * once upstream guarantees no late data (the retention knob).
-    *
-    * Plan shape at 100 TB: stored rows whose key the batch does not
-    * touch pass through an ANTI join against the batch's key set —
-    * the table is scanned once, never shuffled (O42's discipline);
-    * only touched keys union the batch and re-reduce (one
-    * map-side-combinable struct-max, q65's own agg). `broadcastKeys`
-    * defaults true because a micro-batch's key set is
-    * trigger-bounded; pass false for bulk backfills and let AQE
-    * decide (the O41 lesson: never force-broadcast an unbounded
-    * side). Epoch publish is the atomic O30 `_CURRENT` flip; key,
-    * version and tombstone columns are stamped in a `_MERGE`
-    * manifest on first apply and VALIDATED against every later one —
-    * the manifest is authoritative, callers' args are checked, never
-    * trusted (the O43 discipline).
-    */
-  def applyChangelog(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      batch: DataFrame,
-      keyCols: Seq[String],
-      versionCols: Seq[String],
-      tombstoneCol: String = "is_tombstone",
-      broadcastKeys: Boolean = true,
-      dropTombstones: Boolean = false,
-      keepVersions: Int = 1
-  ): Unit = {
-    val op = "applyChangelog"
-    require(keyCols.nonEmpty, s"$op: at least one key column")
-    require(versionCols.nonEmpty, s"$op: at least one version column")
-    val declared = keyCols ++ versionCols :+ tombstoneCol
-    val missing = declared.filterNot(batch.columns.contains)
-    require(missing.isEmpty, s"$op: batch is missing columns ${missing.mkString(", ")}")
-    require(declared.distinct.size == declared.size,
-      s"$op: key/version/tombstone columns overlap")
-
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-
-    // LWW reduce struct: version prefix, then tombstone (true > false
-    // so a delete wins a same-version tie), then the payload columns
-    // as the final deterministic tie-break
-    val payloadCols = batch.columns.filterNot(declared.contains).toSeq
-    val wCols = (versionCols :+ tombstoneCol) ++ payloadCols
-    def lww(df: DataFrame): DataFrame =
-      df.groupBy(keyCols.map(col): _*)
-        .agg(max(struct(wCols.map(col): _*)).as("_w"))
-        .select(keyCols.map(col) ++ wCols.map(c => col(s"_w.$c").as(c)): _*)
-        .select(batch.columns.toIndexedSeq.map(col): _*) // restore batch column order
-
-    val incoming = lww(batch)
-    val curMeta = IndexLayout.currentVersion(spark, path)
-      .map(v => (v, IndexLayout.readMeta(spark, s"$path/$v", MergeMetaName)))
-    curMeta match {
-      case Some((v, None)) =>
-        // an EMPTY current version (a fresh dir ensureVersioned just
-        // migrated) bootstraps like no version at all; a version
-        // holding DATA without the manifest is someone else's layout
-        val p = new org.apache.hadoop.fs.Path(s"$path/$v")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        require(!hasData, s"$op: $path/$v holds data but no $MergeMetaName " +
-          "manifest — was this layout written by a different sink?")
-      case _ => ()
-    }
-    val merged = curMeta match {
-      case None | Some((_, None)) => incoming
-      case Some((v, Some(meta))) =>
-        val expect = mergeMetaJson(keyCols, versionCols, tombstoneCol)
-        require(meta == expect,
-          s"$op: manifest at $path declares $meta but the caller passed $expect — " +
-            "the stored layout's contract wins; fix the caller")
-        val stored = spark.read.parquet(s"$path/$v")
-        require(stored.columns.sorted.sameElements(batch.columns.sorted),
-          s"$op: stored schema ${stored.columns.sorted.mkString(",")} != " +
-            s"batch schema ${batch.columns.sorted.mkString(",")}")
-        val keys0 = incoming.select(keyCols.map(col): _*)
-        val keys = if (broadcastKeys) broadcast(keys0) else keys0
-        def keyCond(l: DataFrame) = keyCols.map(k => l(k) <=> keys(k)).reduce(_ && _)
-        val untouched = stored.join(keys, keyCond(stored), "left_anti")
-          .select(batch.columns.toIndexedSeq.map(col): _*)
-        val touched = stored.join(keys, keyCond(stored), "left_semi")
-          .select(batch.columns.toIndexedSeq.map(col): _*)
-          .unionByName(incoming)
-        untouched.unionByName(lww(touched))
-    }
-    val out = if (dropTombstones) merged.filter(!col(tombstoneCol)) else merged
-    val next = IndexLayout.nextVersion(spark, path)
-    out.write.mode("overwrite").parquet(s"$path/$next")
-    IndexLayout.writeMeta(spark, s"$path/$next", MergeMetaName,
-      mergeMetaJson(keyCols, versionCols, tombstoneCol))
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
-
-  private def mergeMetaJson(
-      keyCols: Seq[String], versionCols: Seq[String], tombstoneCol: String): String =
-    s"""{"keyCols":"${keyCols.mkString("+")}","versionCols":"${versionCols.mkString("+")}",""" +
-      s""""tombstoneCol":"$tombstoneCol"}"""
-
-  /** Read the CURRENT state of an O45 merge table: live rows only
-    * (tombstone suppressors filtered out via the manifest-recorded
-    * flag column — no caller-supplied names to get wrong).
-    */
-  def readMerged(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val v = IndexLayout.currentVersion(spark, path).getOrElse(
-      sys.error(s"readMerged: no epoch published at $path"))
-    readMergedVersionDir(spark, path, v)
-  }
-
-  /** O47's pinned-snapshot read for the O45 merge table: the
-    * CURRENT-state read above, pinned to a named retained epoch —
-    * same reproducibility contract as [[readShuffledShardsAt]] (a
-    * consumer pins its epoch for a whole run while changelog batches
-    * publish the next; GC'd / unknown / crash-orphaned versions fail
-    * loudly rather than silently falling back to current). Versions
-    * come from [[shardVersions]] on the same path.
-    */
-  def readMergedAt(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      version: String): DataFrame = {
-    IndexLayout.resolveDirAt(spark, path, version) // loud validation
-    readMergedVersionDir(spark, path, version)
-  }
-
-  private def readMergedVersionDir(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      v: String): DataFrame = {
-    val meta = IndexLayout.readMeta(spark, s"$path/$v", MergeMetaName).getOrElse(
-      sys.error(s"readMerged: $path/$v has no $MergeMetaName manifest"))
-    val tomb = "\"tombstoneCol\":\"([^\"]+)\"".r.findFirstMatchIn(meta)
-      .map(_.group(1)).getOrElse(
-        sys.error(s"readMerged: malformed $MergeMetaName manifest: $meta"))
-    spark.read.parquet(s"$path/$v").filter(!col(tomb))
-  }
-
-  private def shuffledShardsCore(
-      df: DataFrame,
-      idCol: String,
-      path: String,
-      nShards: Int,
-      seed: String,
-      mode: String,
-      op: String
-  ): Unit = {
-    // `op` = the public entry point, so a validation failure inside a
-    // streaming foreachBatch names the API the user actually called
-    require(nShards > 0, s"$op: nShards must be > 0, got $nShards")
-    Seq("skey", "shard").foreach(c =>
-      require(!df.columns.contains(c),
-        s"$op: input already has a '$c' column — rename it first"))
-    val h = graft.functions.PortableHash.hash60(
-      concat(col(idCol).cast("string"), lit("#" + seed)))
-    df.withColumn("skey", h)
-      .withColumn("shard", pmod(col("skey"), lit(nShards)).cast("int"))
-      // RANGE-partition on (shard, skey), not hash on shard: hashing
-      // nShards shard ids into nShards tasks is balls-in-bins — ~1/e
-      // of write tasks sit idle while collided tasks serially write
-      // 2-3 shards. Range placement is ~1:1 by construction; a shard
-      // the sampler splits across two adjacent tasks just writes two
-      // files whose part-numbers (= range order) keep the sorted file
-      // listing in permutation order, which is all the loader
-      // contract needs.
-      .repartitionByRange(nShards, col("shard"), col("skey"), col(idCol))
-      .sortWithinPartitions(col("shard"), col("skey"), col(idCol))
-      .write.mode(mode).partitionBy("shard").parquet(path)
-  }
 }

@@ -1614,7 +1614,7 @@ object Relational {
         val keys = t(spark, dir, "orders")
           .filter($"o_totalprice" > 450000.0)
           .select($"o_orderkey")
-        Ops.bloomSemiJoin(li, "l_orderkey", keys, "o_orderkey")
+        Joins.bloomSemiJoin(li, "l_orderkey", keys, "o_orderkey")
           .groupBy($"l_returnflag")
           .agg(
             sumd(dec2($"l_quantity")).as("sum_qty"),
@@ -1633,7 +1633,7 @@ object Relational {
 
     Q(
       "q56_salted_skew_join",
-      "Skew-mitigated fact join through Ops.saltedJoin, exact vs the plain join oracle",
+      "Skew-mitigated fact join through Joins.saltedJoin, exact vs the plain join oracle",
       (spark, dir) => {
         import spark.implicits._
         // The O7 skew machinery in a canned query: events (the skewed
@@ -1653,7 +1653,7 @@ object Relational {
             floor($"value" * 100).cast("long").as("_cents"))
         val cust = t(spark, dir, "customer")
           .select($"c_custkey".as("k"), $"c_mktsegment")
-        Ops.saltedJoin(ev, cust, "k", salts = 8)
+        Joins.saltedJoin(ev, cust, "k", salts = 8)
           .groupBy($"c_mktsegment".as("segment"))
           .agg(count(lit(1)).as("n_events"), sum($"_cents").as("sum_cents"))
           .orderBy($"segment")
@@ -1686,7 +1686,7 @@ object Relational {
           .select($"event_id", $"user_id", $"ts")
         val c = ev.filter($"event_type" === "click")
           .select($"user_id", $"ts")
-        Ops.asofJoin(p, c, "user_id", "ts", "ts", outCol = "click_ts")
+        Joins.asofJoin(p, c, "user_id", "ts", "ts", outCol = "click_ts")
           .select($"event_id", $"user_id",
             // exact integer micros; -1 marks "no prior click" so the
             // hash compare never sees an engine-specific NULL encoding
@@ -1721,7 +1721,7 @@ object Relational {
           .select($"event_id", $"user_id", $"ts")
         val c = ev.filter($"event_type" === "click")
           .select($"user_id", $"ts")
-        Ops.asofJoinNative(p, c, "user_id", "ts", "ts", outCol = "click_ts")
+        Joins.asofJoinNative(p, c, "user_id", "ts", "ts", outCol = "click_ts")
           .select($"event_id", $"user_id",
             coalesce(unix_micros($"ts") - unix_micros($"click_ts"), lit(-1L))
               .as("lag_us"))
@@ -1802,7 +1802,7 @@ object Relational {
           .select($"event_id", $"user_id", $"ts")
         val p = ev.filter($"event_type" === "purchase")
           .select($"user_id", $"ts")
-        Ops.asofJoinNative(c, p, "user_id", "ts", "ts",
+        Joins.asofJoinNative(c, p, "user_id", "ts", "ts",
             outCol = "next_purchase_ts", direction = "forward")
           .select($"event_id", $"user_id",
             coalesce(unix_micros($"next_purchase_ts") - unix_micros($"ts"), lit(-1L))
@@ -1834,7 +1834,7 @@ object Relational {
           .select($"event_id".as("s_id"), $"user_id".as("s_user"), $"ts".as("s_ts"))
           .withColumn("s_hi", $"s_ts" + expr("INTERVAL 1 HOUR"))
         val others = ev.select($"user_id".as("e_user"), $"ts".as("e_ts"), $"event_id".as("e_id"))
-        Ops.intervalJoinNative(signups, others,
+        Joins.intervalJoinNative(signups, others,
             leftKeyCol = "s_user", rightKeyCol = "e_user",
             loCol = "s_ts", hiCol = "s_hi", rightTsCol = "e_ts",
             joinType = "left")

@@ -16,7 +16,7 @@ import graft.tables.Tables
   */
 object Similarity {
 
-  /** DuckDB CTE chain replicating Ops.kmeansAssign(k=8, iters=2,
+  /** DuckDB CTE chain replicating Clustering.kmeansAssign(k=8, iters=2,
     * dim=64) on `embeddings`, ending in
     * `fin(n_id, cell, dq)` — the exact-integer Lloyd formulation the
     * s05 oracle introduced, shared with e08's cluster-sampling
@@ -91,7 +91,9 @@ object Similarity {
     //    three passes overlap in the broadcast-build threads, which
     //    wins at small scale where per-pass latency dominates.
     //  - single-pass (§2.3 "aggregate before you shuffle"): ONE
-    //    tokenize into the (doc_id, w, tf) aggregate, cached; dl is
+    //    tokenize into the (doc_id, w, tf) aggregate, cut lazily (its
+    //    blocks go with the returned plan — the ContextCleaner frees
+    //    them; nothing is left in the CacheManager); dl is
     //    sum(tf) per doc and df is the per-term row count of the
     //    query-term slice of tf — no second or third corpus pass, no
     //    vocabulary-wide distinct shuffle. Wins once the corpus
@@ -100,12 +102,10 @@ object Similarity {
     // Default picks by the scan's estimated input size — a plan-time
     // statistic, not a data read; the two forms return identical rows
     // at any flip point, so the condition can never change results.
-    val usesSingle = singlePass.getOrElse {
-      val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-      bytes > (64L << 20) // past 64 MB of docs the pass count dominates
-    }
+    // past 64 MB of docs the pass count dominates
+    val usesSingle = singlePass.getOrElse(Ops.inputEstimate(docs).bytes > (64L << 20))
     val scored = if (usesSingle) {
-      val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")).cache()
+      val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")).graftCheckpointLazy
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       val stats = dl.agg(sum(col("dl")).as("ntok"), count(lit(1)).as("ndocs"))
       val dfreq = tf
@@ -267,10 +267,7 @@ object Similarity {
         // reproduces them — trained s05 centroids slot in unchanged.
         val M = 4
         val sub = 16
-        def l2q(a: String, b: String) = expr(
-          s"CAST(floor(aggregate(zip_with($a, $b, " +
-            "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), " +
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v) * 1000000000.0 + 0.5) AS BIGINT)")
+        import Clustering.l2q
         val e = Tables.load(spark, dir, "embeddings")
         val cents = e.orderBy($"vec_id").limit(8)
           .select($"vec_id".as("c_id"), $"embedding".as("ce"))
@@ -524,10 +521,7 @@ object Similarity {
         // exact on both engines (the e01 integer-sum trick).
         val M = 4
         val sub = 16
-        def l2q(a: String, b: String) = expr(
-          s"CAST(floor(aggregate(zip_with($a, $b, " +
-            "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), " +
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v) * 1000000000.0 + 0.5) AS BIGINT)")
+        import Clustering.l2q
         val e = Tables.load(spark, dir, "embeddings")
         val ms = explode(array((0 until M).map(lit(_)): _*)).as("m")
         val subCents = e.orderBy($"vec_id").limit(8)
@@ -618,7 +612,7 @@ object Similarity {
         // no float array in any post-encode shuffle.
         val e = Tables.load(spark, dir, "embeddings")
         val probes = e.orderBy($"vec_id").limit(10)
-        Ops.ivfPqTrained(e, "vec_id", "embedding",
+        VectorIndex.ivfPqTrained(e, "vec_id", "embedding",
             probes, "vec_id", "embedding",
             k = 8, nprobe = 2, m = 4, kSub = 8, iters = 2, dim = 64, topK = 5)
           .orderBy($"p_id", $"rn")
@@ -692,7 +686,7 @@ object Similarity {
         import spark.implicits._
         // s03/d10 use fixed centroids and note "a trained quantizer
         // slots in unchanged" — this IS that training loop, and since
-        // round 4 it IS the library API: Ops.kmeansAssign (O22) runs
+        // round 4 it IS the library API: Clustering.kmeansAssign (O22) runs
         // the deterministic Lloyd iterations (micro-scaled BIGINT
         // centroid sums — order-independent; nano-scaled integer L²
         // distances; argmin-as-aggregation) and this query is just
@@ -701,7 +695,7 @@ object Similarity {
         // iteration: one broadcast NL against k centroid rows + one
         // keyed agg — linear in the corpus, the Lloyd shape you'd run
         // at 100 TB.
-        Ops.kmeansAssign(Tables.load(spark, dir, "embeddings"),
+        Clustering.kmeansAssign(Tables.load(spark, dir, "embeddings"),
             "vec_id", "embedding", k = 8, iters = 2, dim = 64)
           .groupBy($"cell")
           .agg(count(lit(1)).as("n"), sum($"dq").as("sse_q"))
@@ -1161,8 +1155,8 @@ object Similarity {
             LexIndex.readLexIndex(spark, s"$tmp/lex"))
           .select($"q_id".cast("int").as("q"), $"doc_id".as("id"), $"rn")
         val probes = emb.orderBy($"vec_id").limit(10)
-        val ann = Ops.probeSignIndex(probes, "vec_id", "embedding",
-            Ops.readAnnIndex(spark, s"$tmp/ann"),
+        val ann = VectorIndex.probeSignIndex(probes, "vec_id", "embedding",
+            VectorIndex.readAnnIndex(spark, s"$tmp/ann"),
             nprobe = 16, hammingTopM = 50, topK = 5)
           .where($"p_id".between(1, 4))
           .select($"p_id".cast("int").as("q"), $"n_id".as("id"), $"rn")
@@ -1239,7 +1233,7 @@ object Similarity {
       s15Memo.getOrElseUpdate(dir, {
         val tmp = java.nio.file.Files.createTempDirectory("graft-s15").toString
         LexIndex.writeLexIndex(Tables.load(spark, dir, "documents"), s"$tmp/lex")
-        Ops.writeAnnIndex(Tables.load(spark, dir, "embeddings"),
+        VectorIndex.writeAnnIndex(Tables.load(spark, dir, "embeddings"),
           "vec_id", "embedding", s"$tmp/ann",
           k = 16, m = 4, kSub = 8, storeSigs = true)
         tmp

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * as-of join: a logical node, a planner strategy, and a sort-merge
   * physical operator — the plan shape pandas.merge_asof / QuestDB /
   * kdb run natively, here as a first-class Spark operator instead of
-  * the union+window encoding (Ops.asofJoin).
+  * the union+window encoding (Joins.asofJoin).
   *
   * Why it beats the window form at scale: the window encoding unions
   * BOTH sides into one frame, shuffles and sorts the union, then runs
@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * last_ts) pair of state per partition. No union row-widening, no
   * window buffer, no null-sentinel columns.
   *
-  * Semantics (identical to Ops.asofJoin, spec-pinned): for each left
+  * Semantics (identical to Joins.asofJoin, spec-pinned): for each left
   * row, `outAttr` = max right ts with right.key == left.key and
   * right.ts <= left.ts (inclusive), null when none exists. Null left
   * keys match nothing; null right keys/ts are skipped.
@@ -54,7 +54,7 @@ final case class AsOfJoin(
 }
 
 /** Plans [[AsOfJoin]] to [[AsOfJoinExec]]. Register per-session via
-  * `spark.experimental.extraStrategies` (Ops.asofJoinNative does this
+  * `spark.experimental.extraStrategies` (Joins.asofJoinNative does this
   * idempotently) or globally through GraftExtensions.
   */
 object AsOfJoinStrategy extends SparkStrategy {
@@ -76,7 +76,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   * builds (a prefix of left rows can match ANY right row).
   * Registered via injectOptimizerRule (GraftExtensions) and
   * idempotently through experimental.extraOptimizations
-  * (Ops.asofJoinNative).
+  * (Joins.asofJoinNative).
   */
 object AsOfJoinLimitPushdown
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {

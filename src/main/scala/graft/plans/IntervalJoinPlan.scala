@@ -64,7 +64,7 @@ final case class IntervalJoin(
 }
 
 /** Plans [[IntervalJoin]] to [[IntervalJoinExec]]. Registered
-  * per-session by Ops.intervalJoinNative (idempotent) or globally via
+  * per-session by Joins.intervalJoinNative (idempotent) or globally via
   * GraftExtensions.
   */
 object IntervalJoinStrategy extends SparkStrategy {

@@ -76,7 +76,7 @@ object SqlJoinFunctions {
       require(args.length >= 5 && args.length <= 7,
         s"$fn takes 5 to 7 arguments, got ${args.length}")
       val spark = SparkSession.active
-      graft.operators.Ops.asofJoinNative(
+      graft.operators.Joins.asofJoinNative(
         spark.table(strArg(args, 0, fn, "left table")),
         spark.table(strArg(args, 1, fn, "right table")),
         strArg(args, 2, fn, "key column"),
@@ -105,7 +105,7 @@ object SqlJoinFunctions {
       require(args.length >= 7 && args.length <= 10,
         s"$fn takes 7 to 10 arguments, got ${args.length}")
       val spark = SparkSession.active
-      graft.operators.Ops.intervalJoinNative(
+      graft.operators.Joins.intervalJoinNative(
         spark.table(strArg(args, 0, fn, "left table")),
         spark.table(strArg(args, 1, fn, "right table")),
         strArg(args, 2, fn, "left key column"),

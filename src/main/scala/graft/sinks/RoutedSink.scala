@@ -74,7 +74,7 @@ object RoutedSink {
     // epoch flip. Cols split on '+'; the tombstone column is the ST15
     // convention `is_tombstone`.
     r.add("merge:{path:path}:key:{cols}:v:{vcols}", (df, kw) =>
-      graft.operators.Ops.applyChangelog(df.sparkSession, kw("path"), df,
+      graft.operators.ShardLayout.applyChangelog(df.sparkSession, kw("path"), df,
         kw("cols").split('+').toIndexedSeq, kw("vcols").split('+').toIndexedSeq))
     r.add("noop:{name}", (df, _) => { df.count(); () })
     new RoutedSink(r)

@@ -118,7 +118,7 @@ object Streams {
     * passes the purchase's timestamp, at which point every earlier
     * click has either arrived or been excluded by the same watermark
     * that bounds every other stateful op here. The batch twin is
-    * Ops.asofJoin on the same events (spec-pinned).
+    * Joins.asofJoin on the same events (spec-pinned).
     *
     * State per user is BOUNDED: everything below the watermark
     * compacts to ONE long (the latest click ts — older clicks can
@@ -371,7 +371,7 @@ object Streams {
     * ANN. Encoding a micro-batch needs two broadcast-argmin
     * aggregations against the stored quantizers (cell assignment +
     * PQ codes), which append-mode streaming forbids mid-plan, so each
-    * batch runs [[graft.operators.Ops.appendAnnIndex]] inside
+    * batch runs [[graft.operators.VectorIndex.appendAnnIndex]] inside
     * foreachBatch — reading the two tiny quantizer frames per batch,
     * never the corpus — and appends through the routed
     * `parquet-append` sink into only the cells the new vectors hash
@@ -379,7 +379,7 @@ object Streams {
     * checkpointing + the file-append replay caveat documented on
     * appendAnnIndex: a replayed micro-batch appends duplicate rows,
     * which probeAnnIndex's candidate distinct keeps harmless and
-    * [[graft.operators.Ops.compactAnnIndex]] reclaims.
+    * [[graft.operators.VectorIndex.compactAnnIndex]] reclaims.
     */
   def appendAnnIndexStream(
       vecStream: DataFrame,
@@ -391,20 +391,20 @@ object Streams {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecStream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Ops.appendAnnIndex(batch.toDF(), idCol, vecCol, indexPath,
+        graft.operators.VectorIndex.appendAnnIndex(batch.toDF(), idCol, vecCol, indexPath,
           m = m, dim = dim)
     }
 
   /** ST13: continuous ingestion into the O40 training-shard layout —
     * each micro-batch routes through
-    * [[graft.operators.Ops.appendShuffledShards]] (foreachBatch: the
+    * [[graft.operators.ShardLayout.appendShuffledShards]] (foreachBatch: the
     * per-batch range repartition + per-task sort is not expressible
     * as a single append-mode streaming plan), so every streamed doc
     * lands in the SAME shard=K directory the batch rewrite would
     * assign it (pure (id, seed) arithmetic — shard placement is
     * ingestion-order-independent) and each appended file is
     * internally permutation-ordered. Cross-file epoch order stays
-    * approximate until the epoch-boundary [[graft.operators.Ops
+    * approximate until the epoch-boundary [[graft.operators.ShardLayout
     * .writeShuffledShards]] rewrite — the "ingest all day, reshuffle
     * nightly" production shape. Exactly-once = checkpointing + the
     * file-append replay caveat on appendShuffledShards (replayed
@@ -425,7 +425,7 @@ object Streams {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Ops.appendShuffledShards(batch.toDF(), idCol, path,
+        graft.operators.ShardLayout.appendShuffledShards(batch.toDF(), idCol, path,
           nShards, seed)
     }
 
@@ -437,11 +437,11 @@ object Streams {
     * per-row work — no agg, no watermark, no state store — so it runs
     * INSIDE the streaming plan and tokens flow incrementally; only
     * the shard placement runs per micro-batch (foreachBatch →
-    * [[graft.operators.Ops.appendShuffledShards]] keyed on the
+    * [[graft.operators.ShardLayout.appendShuffledShards]] keyed on the
     * doc:window sample_id, manifest-validated like ST13). Epoch
     * hygiene is ST13's exactly: appended files are internally
     * permutation-ordered, cross-file order decays to arrival order,
-    * and the boundary [[graft.operators.Ops.compactShuffledShards]]
+    * and the boundary [[graft.operators.ShardLayout.compactShuffledShards]]
     * (O43) restores exact epoch order and dedupes at-least-once
     * replays on sample_id. (nShards, seed) default to
     * "derive from _LAYOUT"; required only when the first micro-batch
@@ -462,7 +462,7 @@ object Streams {
         concat(col(idCol).cast("string"), lit(":"), col("window_id").cast("string")))
     windows.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Ops.appendShuffledShards(batch.toDF(), "sample_id", path,
+        graft.operators.ShardLayout.appendShuffledShards(batch.toDF(), "sample_id", path,
           nShards, seed)
     }
   }
@@ -471,7 +471,7 @@ object Streams {
     * index (O29) — the ingestion-time "what does this new embedding
     * near-duplicate" check, the vector analogue of ST6. Each
     * micro-batch of probe vectors is ranked by
-    * [[graft.operators.Ops.probeAnnIndex]] — top-k per probe needs a
+    * [[graft.operators.VectorIndex.probeAnnIndex]] — top-k per probe needs a
     * per-probe aggregation and window, which append-mode streaming
     * forbids mid-plan, so the batch ranking runs per micro-batch in
     * foreachBatch (exactly how a serving layer drains a probe queue)
@@ -489,7 +489,7 @@ object Streams {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     probeStream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val idx = graft.operators.Ops.readAnnIndex(batch.sparkSession, indexPath)
+        val idx = graft.operators.VectorIndex.readAnnIndex(batch.sparkSession, indexPath)
         // allowedIds is a static frame RE-EXECUTED per micro-batch,
         // but refresh semantics depend on its source: a JDBC/Delta/
         // catalog-table frame re-reads current data each trigger (the
@@ -498,14 +498,14 @@ object Streams {
         // allow-list files are NOT picked up (re-create the frame, or
         // read through a table, for rights tables that must revoke)
         graft.sinks.RoutedSink.standard().write(s"parquet-append:$outPath",
-          graft.operators.Ops.probeAnnIndex(batch.toDF(), "vec_id", "embedding",
+          graft.operators.VectorIndex.probeAnnIndex(batch.toDF(), "vec_id", "embedding",
             idx, nprobe = nprobe, topK = topK, refine = refine,
             allowedIds = allowedIds))
     }
 
   /** ST22: streaming BINARY-quantized filtered probe — the ST9
     * serving pattern over O46's sign-sketch path: each micro-batch
-    * of probe vectors runs [[graft.operators.Ops.probeSignIndex]]
+    * of probe vectors runs [[graft.operators.VectorIndex.probeSignIndex]]
     * against the persisted sigs sidecar (popcount coarse scan on the
     * nprobe routed cells, allow-list pre-filter, exact rerank from
     * the cell-pruned vectors store) and results append through the
@@ -526,9 +526,9 @@ object Streams {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     probeStream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val idx = graft.operators.Ops.readAnnIndex(batch.sparkSession, indexPath)
+        val idx = graft.operators.VectorIndex.readAnnIndex(batch.sparkSession, indexPath)
         graft.sinks.RoutedSink.standard().write(s"parquet-append:$outPath",
-          graft.operators.Ops.probeSignIndex(batch.toDF(), "vec_id", "embedding",
+          graft.operators.VectorIndex.probeSignIndex(batch.toDF(), "vec_id", "embedding",
             idx, nprobe = nprobe, hammingTopM = hammingTopM, topK = topK,
             allowedIds = allowedIds, allowedIdsCount = allowedIdsCount))
     }

@@ -3,11 +3,11 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.Ops
+import graft.operators.{Ops, VectorIndex}
 import graft.tables.Tables
 
 /** Recall/cost sweep for the trained IVF+PQ pipeline (s07 /
-  * Ops.ivfPqTrained) against the s01 brute-force ground truth.
+  * VectorIndex.ivfPqTrained) against the s01 brute-force ground truth.
   *
   * The corpus embeddings are unit-normalized (verified: norms in
   * [1 - 1e-7, 1 + 1e-7] at sf0.1), so the index's L2 ADC ranking and
@@ -66,7 +66,7 @@ object AnnSweep {
     println(s"corpus=$nCorpus probes=${gt.size} dir=$dir")
     grid.foreach { case (k, nprobe, m, kSub, refine) =>
       val t0 = System.nanoTime()
-      val res = Ops.ivfPqTrained(e, "vec_id", "embedding",
+      val res = VectorIndex.ivfPqTrained(e, "vec_id", "embedding",
           probes, "vec_id", "embedding",
           k = k, nprobe = nprobe, m = m, kSub = kSub, iters = 2, dim = 64,
           topK = 5, refine = refine)

@@ -95,7 +95,7 @@ object ScaleProbe {
         .select($"vec_id".as("c_id"), $"embedding".as("ce"))
       val probes = emb.orderBy($"vec_id").limit(10)
         .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-      graft.operators.Ops.pqTopK(probes,
+      graft.operators.VectorIndex.pqTopK(probes,
         emb.select($"vec_id".as("n_id"), $"embedding".as("ne")), cents,
         "p_id", "pe", "n_id", "ne", "c_id", "ce", m = 4, subDim = 16, k = 5).count()
     }

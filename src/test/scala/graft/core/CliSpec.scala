@@ -52,7 +52,7 @@ class CliSpec extends SparkTestBase {
   test("sql subcommand reaches the NATIVE join tier via the asof_join TVF (X10)") {
     // round-9 gap: AsOfJoin/IntervalJoin were Scala-only — `Cli sql`
     // could not express them. The asof_join(...) table-valued
-    // function closes it; row equality vs Ops.asofJoinNative pins
+    // function closes it; row equality vs Joins.asofJoinNative pins
     // that the SQL surface runs the same operator, not a lookalike.
     import org.apache.spark.sql.functions._
     spark.sparkContext.setLogLevel("WARN")
@@ -68,7 +68,7 @@ class CliSpec extends SparkTestBase {
         "asof_join('x10_purchases', 'x10_clicks', 'user_id', 'ts', 'ts') " +
         "ORDER BY event_id")
     assert(out.head == "event_id\tuser_id\tm", out.take(2).mkString("|"))
-    val viaScala = graft.operators.Ops.asofJoinNative(
+    val viaScala = graft.operators.Joins.asofJoinNative(
         spark.table("x10_purchases"), spark.table("x10_clicks"),
         "user_id", "ts", "ts")
       .select(col("event_id"), col("user_id"), col("asof_ts").cast("string").as("m"))
@@ -77,7 +77,7 @@ class CliSpec extends SparkTestBase {
       .map(r => Seq(r.get(0), r.get(1), if (r.isNullAt(2)) "NULL" else r.getString(2))
         .mkString("\t"))
     assert(out.tail == viaScala.toSeq,
-      s"sql TVF result differs from Ops.asofJoinNative " +
+      s"sql TVF result differs from Joins.asofJoinNative " +
         s"(${out.tail.take(2)} vs ${viaScala.take(2).toSeq})")
     assert(out.tail.nonEmpty)
     // and the physical plan really is the custom exec
@@ -103,7 +103,7 @@ class CliSpec extends SparkTestBase {
         "interval_join('x10_windows', 'x10_cl', 'p_user', 'c_user', 'lo', 'hi', 'c_ts') " +
         "ORDER BY p_event, c")
     assert(out.head == "p_event\tc", out.take(2).mkString("|"))
-    val viaScala = graft.operators.Ops.intervalJoinNative(
+    val viaScala = graft.operators.Joins.intervalJoinNative(
         spark.table("x10_windows"), spark.table("x10_cl"),
         "p_user", "c_user", "lo", "hi", "c_ts")
       .select(col("p_event"), col("c_ts").cast("string").as("c"))
@@ -111,7 +111,7 @@ class CliSpec extends SparkTestBase {
       .collect()
       .map(r => s"${r.get(0)}\t${r.getString(1)}")
     assert(out.tail == viaScala.toSeq && out.tail.nonEmpty,
-      s"sql TVF result differs from Ops.intervalJoinNative (n=${out.tail.size} vs ${viaScala.length})")
+      s"sql TVF result differs from Joins.intervalJoinNative (n=${out.tail.size} vs ${viaScala.length})")
   }
 
   test("X10 TVF error surface: wrong arity, non-literal arg, missing table all fail loudly") {

@@ -146,7 +146,7 @@ class DataPipelineSpec extends SparkTestBase {
   test("the soft-dedup branch carries weight/split columns into the O40 shards") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-shards12").toString
     val shardDir = wkf.run(s"docs.shards.$outDir").asInstanceOf[String]
-    val sf = graft.operators.Ops.readShuffledShards(spark, shardDir)
+    val sf = graft.operators.ShardLayout.readShuffledShards(spark, shardDir)
     val cols = sf.columns.toSet
     Seq("weight_ppm", "split", "cluster_id", "n_members").foreach(c =>
       assert(cols.contains(c), s"shard layout lost curation column $c: $cols"))
@@ -168,7 +168,7 @@ class DataPipelineSpec extends SparkTestBase {
   test("the token-shard terminal carries curation columns on every fixed-length sample") {
     val outDir = java.nio.file.Files.createTempDirectory("graft-tokshards12").toString
     val shardDir = wkf.run(s"docs.tokenshards.$outDir").asInstanceOf[String]
-    val sf = graft.operators.Ops.readShuffledShards(spark, shardDir)
+    val sf = graft.operators.ShardLayout.readShuffledShards(spark, shardDir)
     val cols = sf.columns.toSet
     Seq("ids", "n_real", "sample_id", "weight_ppm", "split", "cluster_id").foreach(c =>
       assert(cols.contains(c), s"token shards lost column $c: $cols"))
@@ -197,7 +197,7 @@ class DataPipelineSpec extends SparkTestBase {
     // re-weighted de docs), both published through the routed S7
     // merge: sink
     val servedPath = wkf.run(s"docs.serve.repair.$outDir").asInstanceOf[String]
-    val epochs = graft.operators.Ops.shardVersions(spark, servedPath)
+    val epochs = graft.operators.ShardLayout.shardVersions(spark, servedPath)
     assert(epochs.size == 2, s"expected seed+repair epochs, got $epochs")
     val capped = wkf.run("docs.capped").asInstanceOf[DataFrame]
       .drop("n_grp", "cum_before").cache()
@@ -229,7 +229,7 @@ class DataPipelineSpec extends SparkTestBase {
       "the pinned seed epoch does not equal the seeded corpus")
     // a version that never existed fails loudly
     intercept[IllegalArgumentException] {
-      graft.operators.Ops.readMergedAt(spark, servedPath, "v9999")
+      graft.operators.ShardLayout.readMergedAt(spark, servedPath, "v9999")
     }
     capped.unpersist(); cur.unpersist()
   }

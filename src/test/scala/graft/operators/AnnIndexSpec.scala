@@ -19,23 +19,23 @@ class AnnIndexSpec extends SparkTestBase {
 
   private lazy val indexPath = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-index").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
     dir
   }
 
   test("probe against the stored index equals the in-query trained pipeline") {
     val probes = emb.orderBy(col("vec_id")).limit(10)
-    val stored = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath))
+    val stored = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val inQuery = Ops.ivfPqTrained(emb, "vec_id", "embedding",
+    val inQuery = VectorIndex.ivfPqTrained(emb, "vec_id", "embedding",
       probes, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(stored == inQuery && stored.nonEmpty)
     // the unbounded-probe path (pure joins, no driver routing) must
     // return the same rows — only the scan pruning differs
-    val unrouted = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath), routeOnDriver = false)
+    val unrouted = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath), routeOnDriver = false)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(unrouted == inQuery)
   }
@@ -51,8 +51,8 @@ class AnnIndexSpec extends SparkTestBase {
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
-    val probed = Ops.probeAnnIndex(one, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath))
+    val probed = VectorIndex.probeAnnIndex(one, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath))
     probed.collect()
     val scans = collectFileScans(probed.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("lists")))
@@ -70,8 +70,8 @@ class AnnIndexSpec extends SparkTestBase {
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
-    val probed = Ops.probeAnnIndex(one, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath), routeOnDriver = false)
+    val probed = VectorIndex.probeAnnIndex(one, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath), routeOnDriver = false)
     probed.collect()
     val scans = collectFileScans(probed.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("lists")))
@@ -90,7 +90,7 @@ class AnnIndexSpec extends SparkTestBase {
     // concentrated corpus for EVERY knob combination; the refine
     // stage is what buys production recall (FAISS IndexRefineFlat).
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-recall").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val truth = Ops.cosineTopK(
         probes.select(col("vec_id").as("p_id"), col("embedding").as("pe")),
@@ -105,9 +105,9 @@ class AnnIndexSpec extends SparkTestBase {
         got.getOrElse(p, Set.empty[Long]).intersect(t).size.toDouble / t.size
       }.sum / truth.size
     }
-    val stored = recallOf(Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir), nprobe = 4, refine = 100))
-    val inQuery = recallOf(Ops.ivfPqTrained(emb, "vec_id", "embedding",
+    val stored = recallOf(VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir), nprobe = 4, refine = 100))
+    val inQuery = recallOf(VectorIndex.ivfPqTrained(emb, "vec_id", "embedding",
       probes, "vec_id", "embedding",
       k = 16, nprobe = 4, m = 4, kSub = 8, refine = 100))
     info(f"recall@5 at (k=16, nprobe=4, m=4, kSub=8, refine=100): " +
@@ -116,10 +116,10 @@ class AnnIndexSpec extends SparkTestBase {
     assert(inQuery >= 0.6, f"in-query refined recall@5 $inQuery%.2f below the 0.6 floor")
     // the two paths rank against the same quantizers + the same exact
     // re-rank — they must agree row-for-row, not just on recall
-    val a = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir), nprobe = 4, refine = 100)
+    val a = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir), nprobe = 4, refine = 100)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val b = Ops.ivfPqTrained(emb, "vec_id", "embedding",
+    val b = VectorIndex.ivfPqTrained(emb, "vec_id", "embedding",
       probes, "vec_id", "embedding",
       k = 16, nprobe = 4, m = 4, kSub = 8, refine = 100)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -138,8 +138,8 @@ class AnnIndexSpec extends SparkTestBase {
     // knobs pinned (autoScaleFiltered = false): this test measures the
     // PRUNING contract at nprobe=2 — auto-refill would widen the probe
     // to ~nprobe/f cells by design and void the <= 2 bound
-    val probed = Ops.probeAnnIndex(one, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath), allowedIds = Some(allow),
+    val probed = VectorIndex.probeAnnIndex(one, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath), allowedIds = Some(allow),
       autoScaleFiltered = false)
     probed.collect()
     val scans = collectFileScans(probed.queryExecution.executedPlan)
@@ -156,7 +156,7 @@ class AnnIndexSpec extends SparkTestBase {
     // eligible (~40% of the corpus). Exact reference = s09's
     // formulation: filter candidates FIRST, then top-k.
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-filt").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val allow = emb.where(col("label") % 3 === 0).select(col("vec_id"))
     val allowedSet = allow.collect().map(_.getLong(0)).toSet
@@ -169,8 +169,8 @@ class AnnIndexSpec extends SparkTestBase {
       .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).toSet }
     // selectivity ~0.4 keeps ~0.4 of each cell's candidates, so the
     // refill doubles nprobe (4 -> 8) per the O41 guidance
-    val got = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-        Ops.readAnnIndex(spark, dir), nprobe = 8, refine = 100,
+    val got = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+        VectorIndex.readAnnIndex(spark, dir), nprobe = 8, refine = 100,
         allowedIds = Some(allow), autoScaleFiltered = false)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(got.nonEmpty)
@@ -199,7 +199,7 @@ class AnnIndexSpec extends SparkTestBase {
     // The pin: DEFAULT nprobe=2 with a ~10%-selective predicate,
     // no manual knob turning, still full-k results above the floor.
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-auto").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val allow = emb.where(col("label") % 10 === 1).select(col("vec_id"))
     val truth = Ops.cosineTopK(
@@ -209,8 +209,8 @@ class AnnIndexSpec extends SparkTestBase {
         "p_id", "pe", "n_id", "ne", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).toSet }
-    def run(auto: Boolean) = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-        Ops.readAnnIndex(spark, dir), refine = 50,
+    def run(auto: Boolean) = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+        VectorIndex.readAnnIndex(spark, dir), refine = 50,
         allowedIds = Some(allow), autoScaleFiltered = auto)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     def recallOf(rows: Array[(Long, Int, Long)]) = {
@@ -238,9 +238,9 @@ class AnnIndexSpec extends SparkTestBase {
     // (deterministic; they inherit their twins' cells and codes)
     val twins = emb.orderBy(col("vec_id").desc).limit(2)
       .select((col("vec_id") + lit(900000L)).as("vec_id"), col("embedding"))
-    Ops.appendAnnIndex(twins, "vec_id", "embedding", indexPath)
-    val probe = Ops.probeAnnIndex(twins, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath))
+    VectorIndex.appendAnnIndex(twins, "vec_id", "embedding", indexPath)
+    val probe = VectorIndex.probeAnnIndex(twins, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath))
     val rows = probe.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
     // probing an appended vector with ITSELF: its original (identical
     // codes) attains adc = sum_m min_c dq(p_m, book[c]) — the global
@@ -269,8 +269,8 @@ class AnnIndexSpec extends SparkTestBase {
     q.processAllAvailable(); q.stop()
     val streamed = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val batch = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath))
+    val batch = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(streamed == batch && streamed.nonEmpty)
     probes.unpersist()
@@ -294,8 +294,8 @@ class AnnIndexSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(streamed.nonEmpty && streamed.forall(t => allowed.contains(t._3)),
       "a streamed result escaped the allow-list")
-    val batch = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-        Ops.readAnnIndex(spark, indexPath), nprobe = 4, allowedIds = Some(allow))
+    val batch = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+        VectorIndex.readAnnIndex(spark, indexPath), nprobe = 4, allowedIds = Some(allow))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(streamed == batch)
     probes.unpersist()
@@ -303,7 +303,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("ST22: streaming binary filtered probes equal the batch O46 probe, allow-list honored") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sign-stream-idx").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val srcDir = java.nio.file.Files.createTempDirectory("graft-sign-stream").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-sign-out").toString
@@ -324,8 +324,8 @@ class AnnIndexSpec extends SparkTestBase {
     val streamed = keyed(spark.read.parquet(outDir).collect())
     assert(streamed.nonEmpty && streamed.forall(t => allowed.contains(t._3)),
       "a streamed binary result escaped the allow-list")
-    val batch = keyed(Ops.probeSignIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir), nprobe = 8,
+    val batch = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir), nprobe = 8,
       allowedIds = Some(allow), allowedIdsCount = Some(allowed.size.toLong)).collect())
     assert(streamed == batch, "streamed binary probe != batch O46 probe")
     probes.unpersist()
@@ -343,8 +343,8 @@ class AnnIndexSpec extends SparkTestBase {
     q.processAllAvailable(); q.stop()
     val streamed = spark.read.parquet(outDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val batch = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, indexPath), refine = 25)
+    val batch = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath), refine = 25)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(streamed == batch && streamed.nonEmpty)
     probes.unpersist()
@@ -352,7 +352,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("ST10 + lifecycle: streamed appends, replay guard, tombstone, compaction") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-life").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
     val twins = emb.orderBy(col("vec_id").desc).limit(2)
       .select((col("vec_id") + lit(900000L)).as("vec_id"), col("embedding")).cache()
 
@@ -370,8 +370,8 @@ class AnnIndexSpec extends SparkTestBase {
     // streamed vectors are probe-visible from the stored files alone,
     // with the original twin at the rank-1 ADC distance (same pin as
     // the batch-append test)
-    def probeRows() = Ops.probeAnnIndex(twins, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir))
+    def probeRows() = VectorIndex.probeAnnIndex(twins, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
     val originals = twins.collect().map(r => r.getLong(0) - 900000L).toSet
     val streamedIds = twins.collect().map(_.getLong(0)).sorted
@@ -386,7 +386,7 @@ class AnnIndexSpec extends SparkTestBase {
 
     // replay: re-running the append leaves exact duplicate list rows;
     // the probe's candidate distinct must keep rankings EXACT
-    Ops.appendAnnIndex(twins, "vec_id", "embedding", dir)
+    VectorIndex.appendAnnIndex(twins, "vec_id", "embedding", dir)
     val listsDir = IndexLayout.resolveDir(spark, s"$dir/lists")
     assert(spark.read.parquet(listsDir)
       .groupBy("cell", "n_id", "m", "code").count()
@@ -401,14 +401,14 @@ class AnnIndexSpec extends SparkTestBase {
     val dropped = streamedIds.head - 900000L
     assert(baseline.exists(_._3 == dropped),
       "precondition: the doomed original must be a neighbor before the takedown")
-    Ops.tombstoneAnnIndex(
+    VectorIndex.tombstoneAnnIndex(
       emb.filter(col("vec_id") === dropped).select("vec_id"), "vec_id", dir)
     val masked = probeRows()
     assert(!masked.exists(_._3 == dropped),
       "pending tombstone must mask the vector from all neighbor lists")
 
     // compaction applies the deletion + reclaims replay duplicates
-    Ops.compactAnnIndex(spark, dir)
+    VectorIndex.compactAnnIndex(spark, dir)
     val compacted = IndexLayout.resolveDir(spark, s"$dir/lists")
     assert(spark.read.parquet(compacted)
       .filter(col("n_id") === dropped).count() == 0,
@@ -432,7 +432,7 @@ class AnnIndexSpec extends SparkTestBase {
     // avoid one).
     val probes = emb.orderBy(col("vec_id")).limit(5)
     val allow = emb.where(col("label") % 3 === 0).select(col("vec_id"))
-    val idx = Ops.readAnnIndex(spark, indexPath)
+    val idx = VectorIndex.readAnnIndex(spark, indexPath)
     @volatile var jobs = 0
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // job-group filter: suites run concurrently in the test JVM, so
@@ -455,7 +455,7 @@ class AnnIndexSpec extends SparkTestBase {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = Ops.probeAnnIndex(probes, "vec_id", "embedding", idx,
+      val df = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding", idx,
         routeOnDriver = false, allowedIds = Some(allow),
         autoScaleFiltered = false)
       assert(df.columns.contains("n_id") || df.columns.nonEmpty)
@@ -476,9 +476,9 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("O46 binary filtered probe: in-query parity at nprobe=k and recall floors at selectivity 0.1") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-sign").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
-    val idx = Ops.readAnnIndex(spark, dir)
+    val idx = VectorIndex.readAnnIndex(spark, dir)
     assert(idx.sigs.nonEmpty, "storeSigs=true must publish the sigs sidecar")
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val allow = emb.where(col("label") % 10 === 0).select(col("vec_id"))
@@ -488,7 +488,7 @@ class AnnIndexSpec extends SparkTestBase {
     // parity: with nprobe = k every cell is probed, so the stored
     // composition must equal the in-query s12 composition row-for-row
     // (p_id, rn, n_id, hamming)
-    val stored = keyed(Ops.probeSignIndex(probes, "vec_id", "embedding", idx,
+    val stored = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx,
       nprobe = 16, hammingTopM = 50, topK = 3,
       allowedIds = Some(allow), allowedIdsCount = Some(allowN)).collect())
     val inQuery = keyed(Similarity.all.find(_.name == "s12_filtered_sign_rerank").get
@@ -515,7 +515,7 @@ class AnnIndexSpec extends SparkTestBase {
     val rIn = recallOf(inQuery)
     // the deployed knobs: nprobe=8 per the O41 selectivity-0.1 refill
     // guidance (a 10% predicate keeps ~10% of each cell's candidates)
-    val rStored = recallOf(keyed(Ops.probeSignIndex(probes, "vec_id", "embedding", idx,
+    val rStored = recallOf(keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx,
       nprobe = 8, hammingTopM = 50, topK = 3,
       allowedIds = Some(allow), allowedIdsCount = Some(allowN)).collect()))
     info(s"filtered binary recall@3 at selectivity 0.1: " +
@@ -530,7 +530,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("O46 pruning: the binary probe reads only its nprobe cell partitions of sigs AND vectors") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-sigprune").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val totalCells =
       new java.io.File(IndexLayout.resolveDir(spark, s"$dir/sigs")).listFiles()
@@ -540,8 +540,8 @@ class AnnIndexSpec extends SparkTestBase {
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
-    val probed = Ops.probeSignIndex(one, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir), nprobe = 2, hammingTopM = 20, topK = 5)
+    val probed = VectorIndex.probeSignIndex(one, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir), nprobe = 2, hammingTopM = 20, topK = 5)
     probed.collect()
     def dirsRead(component: String): Long = {
       val scans = collectFileScans(probed.queryExecution.executedPlan)
@@ -560,28 +560,28 @@ class AnnIndexSpec extends SparkTestBase {
   test("O46 lifecycle: appended sigs are probe-visible, tombstones mask, compaction reclaims") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-sign-lc").toString
     val base = emb.where(col("vec_id") % 7 =!= 0)
-    Ops.writeAnnIndex(base, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(base, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val day2 = emb.where(col("vec_id") % 7 === 0)
-    Ops.appendAnnIndex(day2, "vec_id", "embedding", dir)
+    VectorIndex.appendAnnIndex(day2, "vec_id", "embedding", dir)
     val day2Ids = day2.select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(day2Ids.nonEmpty)
     val probes = emb.orderBy(col("vec_id")).limit(10)
-    def hits() = Ops.probeSignIndex(probes, "vec_id", "embedding",
-      Ops.readAnnIndex(spark, dir), nprobe = 16, hammingTopM = 200, topK = 10)
+    def hits() = VectorIndex.probeSignIndex(probes, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, dir), nprobe = 16, hammingTopM = 200, topK = 10)
       .collect().map(_.getLong(2)).toSet
     val afterAppend = hits()
     assert(afterAppend.exists(day2Ids.contains),
       "appended vectors never surfaced through the binary probe")
     // tombstone a day-2 id that did surface, verify immediate masking
     val victim = afterAppend.find(day2Ids.contains).get
-    Ops.tombstoneAnnIndex(
+    VectorIndex.tombstoneAnnIndex(
       spark.range(victim, victim + 1).toDF("vec_id"), "vec_id", dir)
     assert(!hits().contains(victim), "tombstoned id still surfaces via sigs")
-    Ops.compactAnnIndex(spark, dir)
+    VectorIndex.compactAnnIndex(spark, dir)
     assert(!hits().contains(victim), "compaction resurfaced a tombstoned id")
     // compaction reclaimed the sig rows physically, not just masked
-    val sigRows = Ops.readAnnIndex(spark, dir).sigs.get
+    val sigRows = VectorIndex.readAnnIndex(spark, dir).sigs.get
     assert(sigRows.where(col("n_id") === victim).count() == 0)
   }
 

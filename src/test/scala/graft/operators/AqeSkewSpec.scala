@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** AQE skew handling: the runtime complement to Ops.saltedJoin. A
+/** AQE skew handling: the runtime complement to Joins.saltedJoin. A
   * manually salted join is the portable fix; this spec proves the
   * OTHER documented knob (SURVEY §6) actually fires in this engine —
   * AQE detects a skewed sort-merge partition at runtime and splits it

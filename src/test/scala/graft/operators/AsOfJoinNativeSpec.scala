@@ -40,8 +40,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       df.select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
           Option(r.getTimestamp(3)))).toSet
-    val reference = normalize(Ops.asofJoin(p, c, "user_id", "ts", "ts"))
-    val native = normalize(Ops.asofJoinNative(p, c, "user_id", "ts", "ts"))
+    val reference = normalize(Joins.asofJoin(p, c, "user_id", "ts", "ts"))
+    val native = normalize(Joins.asofJoinNative(p, c, "user_id", "ts", "ts"))
     assert(native == reference)
     assert(reference.exists(_._4.isEmpty), "corpus should exercise the no-match path")
   }
@@ -59,7 +59,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       ("a", ts("2024-01-01 00:00:15")),
       ("b", ts("2024-01-01 00:00:06")) // after left id=3 -> no match
     ).toDF("k", "ts")
-    val got = Ops.asofJoinNative(left, right, "k", "ts", "ts")
+    val got = Joins.asofJoinNative(left, right, "k", "ts", "ts")
       .collect().map(r => r.getLong(2) -> Option(r.getTimestamp(3))).toMap
     assert(got == Map(
       1L -> Some(ts("2024-01-01 00:00:10")),
@@ -74,7 +74,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("ts"))
     val c = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"))
-    val df = Ops.asofJoinNative(p, c, "user_id", "ts", "ts")
+    val df = Joins.asofJoinNative(p, c, "user_id", "ts", "ts")
     df.collect() // finalize any adaptive plan
     val all = flatten(df.queryExecution.executedPlan)
     assert(all.exists(_.isInstanceOf[graft.plans.AsOfJoinExec]), all.head.toString)
@@ -95,7 +95,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       ("a", ts("2024-01-01 00:00:01")), // before everything: discarded
       ("a", ts("2024-01-01 00:00:10"))
     ).toDF("k", "ts")
-    val got = Ops.asofJoinNative(left, right, "k", "ts", "ts", direction = "forward")
+    val got = Joins.asofJoinNative(left, right, "k", "ts", "ts", direction = "forward")
       .collect().map(r => r.getLong(2) -> Option(r.getTimestamp(3))).toMap
     val t10 = Some(ts("2024-01-01 00:00:10"))
     assert(got == Map(1L -> t10, 2L -> t10, 3L -> t10, 4L -> None), s"got $got")
@@ -107,7 +107,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("ts"))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"))
-    val got = Ops.asofJoinNative(c, p, "user_id", "ts", "ts", direction = "forward")
+    val got = Joins.asofJoinNative(c, p, "user_id", "ts", "ts", direction = "forward")
       .select(col("event_id"), unix_micros(col("asof_ts")).as("m"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
 
@@ -135,7 +135,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       (None: Option[String], Some(ts("2024-01-01 00:00:01"))), // null key: skipped
       (Some("a"), None: Option[java.sql.Timestamp]) // null ts: skipped
     ).toDF("k", "ts")
-    val got = Ops.asofJoinNative(left, right, "k", "ts", "ts")
+    val got = Joins.asofJoinNative(left, right, "k", "ts", "ts")
       .collect().map(r => r.getLong(2) -> Option(r.getTimestamp(3))).toMap
     assert(got == Map(
       1L -> Some(ts("2024-01-01 00:00:05")),
@@ -150,7 +150,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .toDF("k", "day", "id")
     val right = Seq(("a", d("2024-03-01")), ("a", d("2024-06-01")))
       .toDF("k", "day")
-    val got = Ops.asofJoinNative(left, right, "k", "day", "day")
+    val got = Joins.asofJoinNative(left, right, "k", "day", "day")
       .collect().map(r => r.getLong(2) -> Option(r.getDate(3))).toMap
     assert(got == Map(1L -> Some(d("2024-03-01")), 2L -> None), s"got $got")
   }
@@ -160,7 +160,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val left = Seq(("a", "2024-01-01", 1L)).toDF("k", "ts", "id")
     val right = Seq(("a", "2024-01-01")).toDF("k", "ts")
     val e = intercept[Exception] {
-      Ops.asofJoinNative(left, right, "k", "ts", "ts").collect()
+      Joins.asofJoinNative(left, right, "k", "ts", "ts").collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -175,7 +175,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val lTs = Seq(("a", ts("2024-01-02 00:00:00"), 1L)).toDF("k", "t", "id")
     val rDate = Seq(("a", java.sql.Date.valueOf("2024-01-01"))).toDF("k", "t")
     val e1 = intercept[IllegalArgumentException] {
-      Ops.asofJoinNative(lTs, rDate, "k", "t", "t")
+      Joins.asofJoinNative(lTs, rDate, "k", "t", "t")
     }
     assert(e1.getMessage.contains("SAME type"), e1.getMessage)
     // long vs int keys: without the check this only dies at runtime
@@ -183,7 +183,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val lLong = Seq((1L, ts("2024-01-02 00:00:00"), 1L)).toDF("k", "t", "id")
     val rInt = Seq((1, ts("2024-01-01 00:00:00"))).toDF("k", "t")
     val e2 = intercept[IllegalArgumentException] {
-      Ops.asofJoinNative(lLong, rInt, "k", "t", "t")
+      Joins.asofJoinNative(lLong, rInt, "k", "t", "t")
     }
     assert(e2.getMessage.contains("SAME type"), e2.getMessage)
   }
@@ -194,11 +194,11 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .toDF("k", "t", "asof_ts")
     val right = Seq(("a", ts("2024-01-01 00:00:00"))).toDF("k", "t")
     val e = intercept[IllegalArgumentException] {
-      Ops.asofJoinNative(left, right, "k", "t", "t")
+      Joins.asofJoinNative(left, right, "k", "t", "t")
     }
     assert(e.getMessage.contains("asof_ts"), e.getMessage)
     // a distinct outCol on the same frame works
-    val ok = Ops.asofJoinNative(left, right, "k", "t", "t", outCol = "matched_ts")
+    val ok = Joins.asofJoinNative(left, right, "k", "t", "t", outCol = "matched_ts")
     assert(ok.columns.count(_ == "matched_ts") == 1)
   }
 
@@ -207,10 +207,10 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val c = ev.filter(col("event_type") === "click").select(col("user_id"), col("ts"))
-    val upper = Ops.asofJoinNative(p, c, "USER_ID", "TS", "TS")
+    val upper = Joins.asofJoinNative(p, c, "USER_ID", "TS", "TS")
       .select(col("event_id"), col("asof_ts")).collect()
       .map(r => r.getLong(0) -> Option(r.getTimestamp(1))).toMap
-    val exact = Ops.asofJoinNative(p, c, "user_id", "ts", "ts")
+    val exact = Joins.asofJoinNative(p, c, "user_id", "ts", "ts")
       .select(col("event_id"), col("asof_ts")).collect()
       .map(r => r.getLong(0) -> Option(r.getTimestamp(1))).toMap
     assert(upper == exact)
@@ -225,8 +225,8 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .select(col("user_id"), col("ts"))
     def normalize(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), Option(r.getTimestamp(3)))).toSet
-    val got = normalize(Ops.asofJoinNative(p, c, "user_id", "ts", "ts"))
-    val ref = normalize(Ops.asofJoin(
+    val got = normalize(Joins.asofJoinNative(p, c, "user_id", "ts", "ts"))
+    val ref = normalize(Joins.asofJoin(
       p, c, "user_id", "ts", "ts"))
     assert(got == ref)
   }
@@ -237,7 +237,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("ts"))
     val c = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"))
-    val full = Ops.asofJoinNative(p, c, "user_id", "ts", "ts")
+    val full = Joins.asofJoinNative(p, c, "user_id", "ts", "ts")
     val limited = full.limit(25)
     // the optimized plan must show LocalLimit BELOW the AsOfJoin node
     val opt = limited.queryExecution.optimizedPlan
@@ -261,7 +261,7 @@ class AsOfJoinNativeSpec extends SparkTestBase {
     val c = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"))
       .repartition(col("user_id")).sortWithinPartitions(col("user_id"), col("ts"))
-    val df = Ops.asofJoinNative(p, c, "user_id", "ts", "ts")
+    val df = Joins.asofJoinNative(p, c, "user_id", "ts", "ts")
     df.collect()
     val all = flatten(df.queryExecution.executedPlan)
     // the two repartition exchanges are the only ones; the operator

@@ -43,7 +43,7 @@ class AsOfJoinPropSpec extends SparkTestBase {
         }
 
       for (dir <- Seq("backward", "forward")) {
-        val got = Ops.asofJoinNative(
+        val got = Joins.asofJoinNative(
             l, r.select($"rk".as("k"), $"rts"), "k", "ts", "rts",
             outCol = "m", direction = dir)
           .select($"l_id", $"m")

@@ -29,4 +29,18 @@ class Bm25FormSpec extends SparkTestBase {
     assert(single == multi,
       s"forms diverge:\nsingle=${single.take(5)}\nmulti=${multi.take(5)}")
   }
+
+  test("single-pass bm25TopK leaves no (doc_id, w, tf) aggregate cached once consumed") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // a local corpus of this test only: no concurrent suite holds its plan
+    val docs = Seq((1L, "hash join table scan"), (2L, "slow query scan scan"),
+      (3L, "stream window agg hash")).toDF("doc_id", "text")
+    val q = Similarity.bm25Queries.toDF("q_id", "term")
+    assert(Similarity.bm25TopK(docs, q, singlePass = Some(true)).collect().nonEmpty)
+    val tf = docs.select(col("doc_id"), explode(expr(TextAnalysis.sparkWords)).as("w"))
+      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
+    assert(tf.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the single-pass tf aggregate is still in the CacheManager")
+  }
 }

@@ -26,12 +26,12 @@ class CheckpointModeSpec extends SparkTestBase {
       .unionAll(edges.select($"id_b".as("src"), $"id_a".as("dst")))
 
     // min-label needs ~40 rounds on the 41-node chain
-    def cc() = Ops.connectedComponents(edges, "id_a", "id_b", maxIterations = 50).collect()
+    def cc() = Clustering.connectedComponents(edges, "id_a", "id_b", maxIterations = 50).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val localCc = cc()
     val truth = (1L to 41L).map(_ -> 1L).toMap ++ Seq(100L, 101L, 102L).map(_ -> 100L)
     assert(localCc == truth)
-    val localCore = Ops.kCore(sym, k = 2).collect()
+    val localCore = Clustering.kCore(sym, k = 2).collect()
       .map(r => r.getLong(0)).toSet
 
     val ckDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
@@ -39,7 +39,7 @@ class CheckpointModeSpec extends SparkTestBase {
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {
       val relCc = cc()
-      val relCore = Ops.kCore(sym, k = 2).collect()
+      val relCore = Clustering.kCore(sym, k = 2).collect()
         .map(r => r.getLong(0)).toSet
       assert(relCc == localCc)
       assert(relCore == localCore)

@@ -21,8 +21,8 @@ class ConnectedComponentsSpec extends SparkTestBase {
         (1000L to 1050L).map(i => (i, i + 1)) ++ // a chain
         Seq((2000L, 2000L), (3000L, 3001L)) // self-loop + pair
       ).toDF("a", "b")
-    val ml = labelsOf(Ops.connectedComponents(edges, "a", "b", maxIterations = 500))
-    val st = labelsOf(Ops.connectedComponents(edges, "a", "b", algo = "star"))
+    val ml = labelsOf(Clustering.connectedComponents(edges, "a", "b", maxIterations = 500))
+    val st = labelsOf(Clustering.connectedComponents(edges, "a", "b", algo = "star"))
     assert(st == ml)
   }
 
@@ -30,7 +30,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
     import spark.implicits._
     val n = 10000L
     val chain = spark.range(n - 1).select(col("id").as("a"), (col("id") + 1).as("b"))
-    val (labels, rounds) = Ops.connectedComponentsStar(chain, "a", "b")
+    val (labels, rounds) = Clustering.connectedComponentsStar(chain, "a", "b")
     assert(rounds <= 25, s"star took $rounds rounds on a ${n}-node chain")
     val bad = labels.filter(col("label") =!= 0L).count()
     assert(bad == 0, s"$bad nodes not labeled by the component minimum")
@@ -43,17 +43,17 @@ class ConnectedComponentsSpec extends SparkTestBase {
     // used to return a partial labeling with 20 labels for one component
     val chain = (1L to 40L).map(i => (i, i + 1)).toDF("a", "b")
     val ex = intercept[IllegalArgumentException] {
-      Ops.connectedComponents(chain, "a", "b").collect()
+      Clustering.connectedComponents(chain, "a", "b").collect()
     }
     assert(ex.getMessage.contains("no fixpoint within 20 rounds"), ex.getMessage)
-    val labels = labelsOf(Ops.connectedComponents(chain, "a", "b", maxIterations = 50))
+    val labels = labelsOf(Clustering.connectedComponents(chain, "a", "b", maxIterations = 50))
     assert(labels.size == 41 && labels.values.toSet == Set(1L))
   }
 
   test("star raises when maxIterations is too small") {
     val chain = spark.range(999).select(col("id").as("a"), (col("id") + 1).as("b"))
     val ex = intercept[IllegalArgumentException] {
-      Ops.connectedComponentsStar(chain, "a", "b", maxIterations = 2)
+      Clustering.connectedComponentsStar(chain, "a", "b", maxIterations = 2)
     }
     assert(ex.getMessage.contains("no fixpoint within 2 rounds"), ex.getMessage)
   }
@@ -61,14 +61,14 @@ class ConnectedComponentsSpec extends SparkTestBase {
   test("both algorithms return empty on an empty edge list (no NPE)") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Ops.connectedComponents(empty, "a", "b").count() == 0)
-    assert(Ops.connectedComponents(empty, "a", "b", algo = "star").count() == 0)
+    assert(Clustering.connectedComponents(empty, "a", "b").count() == 0)
+    assert(Clustering.connectedComponents(empty, "a", "b", algo = "star").count() == 0)
   }
 
   test("star handles self-loop-only nodes by labeling them themselves") {
     import spark.implicits._
     val edges = Seq((5L, 5L), (7L, 8L)).toDF("a", "b")
-    val st = labelsOf(Ops.connectedComponents(edges, "a", "b", algo = "star"))
+    val st = labelsOf(Clustering.connectedComponents(edges, "a", "b", algo = "star"))
     assert(st == Map(5L -> 5L, 7L -> 7L, 8L -> 7L))
   }
 }

@@ -37,4 +37,18 @@ class FanOutSpec extends AnyFunSuite {
     // SAME object — no repartition node was added
     assert(out eq wide)
   }
+
+  test("many small files open one split each: a scan that fills the cores passes through") {
+    import spark.implicits._
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout-files").toString
+    (1 to 32 * cores).toDF("x").repartition(4 * cores).write.mode("overwrite").parquet(dir)
+    // splits are packed at openCostInBytes per file: at half a split
+    // per file, 4 x cores files open about 2 x cores splits
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.openCostInBytes", (64L << 20).toString)
+    val df = session.read.parquet(dir)
+    assert(df.rdd.getNumPartitions >= cores)
+    assert(Ops.fanOutSmallScan(df) eq df)
+  }
 }

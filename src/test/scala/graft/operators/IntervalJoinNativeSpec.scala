@@ -49,7 +49,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
         .groupBy(identity).view.mapValues(_.length).toMap
     for (jt <- Seq("inner", "left")) {
       val reference = normalize(composed(jt))
-      val native = normalize(Ops.intervalJoinNative(signups, others,
+      val native = normalize(Joins.intervalJoinNative(signups, others,
         "s_user", "e_user", "s_ts", "s_hi", "e_ts", joinType = jt))
       assert(native == reference, s"joinType=$jt mismatch")
     }
@@ -64,7 +64,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
     val right = Seq((1L, 10L, 0L), (1L, 15L, 1L), (1L, 20L, 2L), (1L, 21L, 3L))
       .toDF("rk", "rts", "rid")
     def ids(lowInc: Boolean, upInc: Boolean) =
-      Ops.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts",
+      Joins.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts",
         lowerInclusive = lowInc, upperInclusive = upInc)
         .select($"rid").collect().map(_.getLong(0)).toSet
     assert(ids(false, true) == Set(1L, 2L))       // (10, 20]
@@ -85,7 +85,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
     ).toDF("k", "lo", "hi", "lid")
     val right = Seq((1L, 5L), (1L, 10L), (1L, 50L), (1L, 90L), (1L, 200L))
       .toDF("rk", "rts")
-    val got = Ops.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts")
+    val got = Joins.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts")
       .select($"lid", $"rts").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = Set((10L, 5L), (10L, 10L), (10L, 50L), (10L, 90L),
       (20L, 5L), (20L, 10L), (30L, 50L), (30L, 90L))
@@ -105,10 +105,10 @@ class IntervalJoinNativeSpec extends SparkTestBase {
       (java.lang.Long.valueOf(3L), java.lang.Long.valueOf(5L)),
       (java.lang.Long.valueOf(3L), null.asInstanceOf[java.lang.Long]) // null ts skipped
     ).toDF("rk", "rts")
-    val inner = Ops.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts")
+    val inner = Joins.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts")
       .select($"lid", $"rts").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(inner == Set((4L, 5L)), s"got $inner")
-    val outer = Ops.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts",
+    val outer = Joins.intervalJoinNative(left, right, "k", "rk", "lo", "hi", "rts",
       joinType = "left")
       .select($"lid", $"rts").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
@@ -117,7 +117,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
 
   test("the plan runs IntervalJoinExec: no nested-loop join, no SMJ, one exchange per side") {
     val (signups, others) = eventsSides
-    val df = Ops.intervalJoinNative(signups, others,
+    val df = Joins.intervalJoinNative(signups, others,
       "s_user", "e_user", "s_ts", "s_hi", "e_ts", joinType = "left")
     df.collect()
     val nodes = flatten(df.queryExecution.executedPlan)
@@ -137,7 +137,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
       .sortWithinPartitions(col("s_user"), col("s_ts"))
     val rPre = others.repartition(8, col("e_user"))
       .sortWithinPartitions(col("e_user"), col("e_ts"))
-    val df = Ops.intervalJoinNative(lPre, rPre,
+    val df = Joins.intervalJoinNative(lPre, rPre,
       "s_user", "e_user", "s_ts", "s_hi", "e_ts")
     df.collect()
     val nodes = flatten(df.queryExecution.executedPlan)
@@ -154,17 +154,17 @@ class IntervalJoinNativeSpec extends SparkTestBase {
     val left = Seq((1L, 0L, 9L)).toDF("k", "lo", "hi")
     val rightInt = Seq((1, 5L)).toDF("rk", "rts")
     val e1 = intercept[IllegalArgumentException] {
-      Ops.intervalJoinNative(left, rightInt, "k", "rk", "lo", "hi", "rts")
+      Joins.intervalJoinNative(left, rightInt, "k", "rk", "lo", "hi", "rts")
     }
     assert(e1.getMessage.contains("SAME type"), e1.getMessage)
     val rightIntTs = Seq((1L, 5)).toDF("rk", "rts")
     val e2 = intercept[IllegalArgumentException] {
-      Ops.intervalJoinNative(left, rightIntTs, "k", "rk", "lo", "hi", "rts")
+      Joins.intervalJoinNative(left, rightIntTs, "k", "rk", "lo", "hi", "rts")
     }
     assert(e2.getMessage.contains("ONE type"), e2.getMessage)
     val rightClash = Seq((1L, 5L)).toDF("k", "rts")
     val e3 = intercept[IllegalArgumentException] {
-      Ops.intervalJoinNative(left, rightClash, "k", "k", "lo", "hi", "rts")
+      Joins.intervalJoinNative(left, rightClash, "k", "k", "lo", "hi", "rts")
     }
     assert(e3.getMessage.contains("collide"), e3.getMessage)
   }
@@ -193,7 +193,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
       .withColumn("s_hi", col("s_ts") + expr("INTERVAL 1 HOUR"))
     val r = ev.select(col("user_id").as("e_user"), col("ts").as("e_ts"),
       col("event_id").as("e_id"), col("value").as("e_value"))
-    val ij = Ops.intervalJoinNative(l, r, "s_user", "e_user", "s_ts", "s_hi", "e_ts",
+    val ij = Joins.intervalJoinNative(l, r, "s_user", "e_user", "s_ts", "s_hi", "e_ts",
         joinType = "left")
       .select(col("s_id"), col("e_id"))
     val ijSchemas = "ReadSchema: [^\n]*".r
@@ -206,7 +206,7 @@ class IntervalJoinNativeSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("ts"), col("props"))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value"))
-    val ao = Ops.asofJoinNative(c, p, "user_id", "ts", "ts", outCol = "m_ts")
+    val ao = Joins.asofJoinNative(c, p, "user_id", "ts", "ts", outCol = "m_ts")
       .select(col("event_id"), col("m_ts"))
     val aoSchemas = "ReadSchema: [^\n]*".r
       .findAllIn(ao.queryExecution.executedPlan.toString).toList

@@ -51,7 +51,7 @@ class IntervalJoinPropSpec extends SparkTestBase {
       joinType <- Seq("inner", "left")
     } {
       val (l, r) = randCorpus(seed, n = 40, keyDom = 3)
-      val native = Ops.intervalJoinNative(l, r, "k", "rk", "lo", "hi", "rts",
+      val native = Joins.intervalJoinNative(l, r, "k", "rk", "lo", "hi", "rts",
         joinType, lowerInclusive = linc, upperInclusive = uinc)
       val ref = composed(l, r, linc, uinc, joinType)
       val label = s"seed=$seed linc=$linc uinc=$uinc join=$joinType"

@@ -78,13 +78,13 @@ class LexIndexSpec extends SparkTestBase {
     // rrfFuse — must reproduce the oracle-gated in-query s14 exactly
     val annDir = java.nio.file.Files.createTempDirectory("graft-hybrid-ann").toString
     val emb = Tables.load(spark, sfDir, "embeddings")
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", annDir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", annDir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val bm = LexIndex.probeLexIndex(queries, LexIndex.readLexIndex(spark, indexPath))
       .select(col("q_id").cast("int").as("q"), col("doc_id").as("id"), col("rn"))
     val probes = emb.orderBy(col("vec_id")).limit(10)
-    val ann = Ops.probeSignIndex(probes, "vec_id", "embedding",
-        Ops.readAnnIndex(spark, annDir), nprobe = 16, hammingTopM = 50, topK = 5)
+    val ann = VectorIndex.probeSignIndex(probes, "vec_id", "embedding",
+        VectorIndex.readAnnIndex(spark, annDir), nprobe = 16, hammingTopM = 50, topK = 5)
       .where(col("p_id").between(1, 4))
       .select(col("p_id").cast("int").as("q"), col("n_id").as("id"), col("rn"))
     val stored = Similarity.rrfFuse(bm, ann, "q", "id", "rn", k = 5)

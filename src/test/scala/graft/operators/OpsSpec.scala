@@ -19,7 +19,7 @@ class OpsSpec extends SparkTestBase {
     // right side shares the key column name, ts column renamed
     val clicks = ev.filter($"event_type" === "click")
       .select($"user_id", $"ts".as("c_ts"))
-    val got = Ops.asofJoin(purchases, clicks, keyCol = "user_id", leftTsCol = "ts",
+    val got = Joins.asofJoin(purchases, clicks, keyCol = "user_id", leftTsCol = "ts",
       rightTsCol = "c_ts", outCol = "last_click_ts")
     // NB: asofJoin unions on keyCol, so clicks need the same key name
     val expected = graft.SparkEntry.queries("q23_asof_join")(spark, sfDir)
@@ -166,7 +166,7 @@ class OpsSpec extends SparkTestBase {
     // components: {1,2,3,4} (chain), {7,9}, and 11-12-13 (triangle)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 9L),
       (11L, 12L), (12L, 13L), (11L, 13L)).toDF("a", "b")
-    val cc = Ops.connectedComponents(edges, "a", "b").collect()
+    val cc = Clustering.connectedComponents(edges, "a", "b").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       7L -> 7L, 9L -> 7L, 11L -> 11L, 12L -> 11L, 13L -> 11L))
@@ -205,7 +205,7 @@ class OpsSpec extends SparkTestBase {
     // rename to share the join key name
     val custK = Tables.load(spark, sfDir, "customer")
       .select($"c_custkey".as("o_custkey"), $"c_nationkey")
-    val salted = Ops.saltedJoin(orders, custK, "o_custkey", salts = 4)
+    val salted = Joins.saltedJoin(orders, custK, "o_custkey", salts = 4)
     val plain = orders.join(custK, "o_custkey")
     assert(salted.count() == plain.count())
     assert(salted.except(plain).count() == 0)
@@ -245,7 +245,7 @@ class OpsSpec extends SparkTestBase {
       .select($"vec_id".as("c_id"), $"embedding".as("ce"))
     val probes = e.orderBy($"vec_id").limit(10)
       .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val api = Ops.pqTopK(probes, e.select($"vec_id".as("n_id"), $"embedding".as("ne")), cents,
+    val api = VectorIndex.pqTopK(probes, e.select($"vec_id".as("n_id"), $"embedding".as("ne")), cents,
       "p_id", "pe", "n_id", "ne", "c_id", "ce", m = 4, subDim = 16, k = 5)
     val canned = graft.SparkEntry.queries("s04_sim_pq_topk")(spark, sfDir)
     assert(api.except(canned).count() == 0 && canned.except(api).count() == 0)
@@ -298,14 +298,14 @@ class OpsSpec extends SparkTestBase {
     val e = graft.tables.Tables.load(spark, sfDir, "embeddings")
     val canned = graft.SparkEntry.queries("s05_kmeans_cells")(spark, sfDir)
       .collect().map(r => (r.getAs[Long]("cell"), (r.getAs[Long]("n"), r.getAs[Long]("sse_q")))).toMap
-    val api = Ops.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
+    val api = Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), sum(col("dq")).as("sse_q"))
       .collect().map(r => (r.getAs[Long]("cell"), (r.getAs[Long]("n"), r.getAs[Long]("sse_q")))).toMap
     assert(api == canned)
     // Lloyd monotonicity on the quantized objective across iterations
     def sse(iters: Int): Long =
-      Ops.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = iters)
+      Clustering.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = iters)
         .agg(sum(col("dq"))).head().getLong(0)
     val s = (1 to 3).map(sse)
     assert(s(1) <= s(0) && s(2) <= s(1), s"SSE increased across iterations: $s")
@@ -318,7 +318,7 @@ class OpsSpec extends SparkTestBase {
     // not depend on how the data is partitioned (FP means would).
     val e = graft.tables.Tables.load(spark, sfDir, "embeddings")
     def runOn(df: org.apache.spark.sql.DataFrame) =
-      Ops.kmeansAssign(df, "vec_id", "embedding", k = 8, iters = 2)
+      Clustering.kmeansAssign(df, "vec_id", "embedding", k = 8, iters = 2)
         .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val base = runOn(e)
     val repart = runOn(e.repartition(7, col("label")))
@@ -332,7 +332,7 @@ class OpsSpec extends SparkTestBase {
     // selective key set: 50 of the 1000 event_ids
     val keys = Tables.load(spark, sfDir, "events")
       .select($"event_id".as("eid")).distinct().orderBy($"eid").limit(50)
-    val got = Ops.bloomSemiJoin(ev, "event_id", keys, "eid",
+    val got = Joins.bloomSemiJoin(ev, "event_id", keys, "eid",
       expectedItems = Some(100L), fpp = 0.01)
     val want = ev.join(keys, $"event_id" === $"eid", "left_semi")
     assert(got.count() == want.count())
@@ -344,7 +344,7 @@ class OpsSpec extends SparkTestBase {
     assert(pre.contains("might_contain"), pre.take(400))
     assert(got.count() > 0 && got.count() < ev.count())
     // same column name on both sides must not be ambiguous
-    val sameName = Ops.bloomSemiJoin(ev,
+    val sameName = Joins.bloomSemiJoin(ev,
       "event_id", keys.select($"eid".as("event_id")), "event_id", Some(100L), 0.01)
     assert(sameName.count() == want.count())
   }
@@ -355,7 +355,7 @@ class OpsSpec extends SparkTestBase {
     val keys = ev.select($"event_id".as("eid")).distinct().orderBy($"eid").limit(50)
     val want = ev.join(keys, $"event_id" === $"eid", "left_semi").count()
     // default: no fixed capacity anywhere — sized from count(keys)
-    val (auto, autoStats) = Ops.bloomSemiJoinWithStats(ev, "event_id", keys, "eid")
+    val (auto, autoStats) = Joins.bloomSemiJoinWithStats(ev, "event_id", keys, "eid")
     assert(auto.count() == want)
     assert(autoStats.sizedFor == 50L, autoStats)
     // a well-sized filter realizes roughly its requested fpp
@@ -364,7 +364,7 @@ class OpsSpec extends SparkTestBase {
     // negatives), and the degradation must be visible in the stats —
     // the realized fpp blows far past the request instead of failing
     // silently
-    val (under, underStats) = Ops.bloomSemiJoinWithStats(
+    val (under, underStats) = Joins.bloomSemiJoinWithStats(
       ev, "event_id", keys, "eid", expectedItems = Some(5L), fpp = 0.01)
     assert(under.count() == want)
     assert(underStats.expectedFpp > underStats.requestedFpp * 5,
@@ -389,7 +389,7 @@ class OpsSpec extends SparkTestBase {
       val plain = RuntimeAudit.run(
         li.join(keys, $"l_orderkey" === $"o_orderkey", "left_semi"))
       val bloomed = RuntimeAudit.run(
-        Ops.bloomSemiJoin(li, "l_orderkey", keys, "o_orderkey"))
+        Joins.bloomSemiJoin(li, "l_orderkey", keys, "o_orderkey"))
       assert(bloomed.rows == plain.rows, s"$bloomed vs $plain")
       // ~10% key selectivity + fpp: the bloomed exchanges must carry
       // well under half of what the plain semi-join shuffles

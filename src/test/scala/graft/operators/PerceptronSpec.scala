@@ -42,14 +42,14 @@ class PerceptronSpec extends SparkTestBase {
     // top-5, so the majority votes (and thus every e11 row) agree
     val emb = graft.tables.Tables.load(spark, sfDir, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft-e11-ann").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     // the query's OWN probe definition (shared helper) — fixed-count
     // hash-ranked sample, renamed back to the probeAnnIndex arg shape
     val probes = Embeddings.e11Probes(emb)
       .select($"p_id".as("vec_id"), $"pe".as("embedding"))
     val nCorpus = emb.count().toInt
-    val annTop = Ops.probeAnnIndex(probes, "vec_id", "embedding",
-        Ops.readAnnIndex(spark, dir), nprobe = 16, topK = 5, refine = nCorpus)
+    val annTop = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
+        VectorIndex.readAnnIndex(spark, dir), nprobe = 16, topK = 5, refine = nCorpus)
       .select($"p_id", $"n_id")
       .join(emb.select($"vec_id".as("n_id"), $"label".as("n_label")), "n_id")
     val wV = org.apache.spark.sql.expressions.Window

@@ -105,7 +105,7 @@ class PipelineSpec extends SparkTestBase {
     // vectors) — so the trained path demonstrably starts from the
     // oracle-pinned untrained one and only the Lloyd updates differ
     val e = graft.tables.Tables.load(spark, sfDir, "embeddings")
-    val books1 = Ops.pqCodebooks(e, "vec_id", "embedding", m = 4, k = 8, iters = 1, dim = 64)
+    val books1 = Clustering.pqCodebooks(e, "vec_id", "embedding", m = 4, k = 8, iters = 1, dim = 64)
     val expect = e.orderBy(col("vec_id")).limit(8)
       .select(col("vec_id").as("_cid"),
         explode(array((0 until 4).map(lit(_)): _*)).as("_m"), col("embedding"))

@@ -390,16 +390,16 @@ class Round11bSpec extends SparkTestBase {
     val b1 = docs.where($"doc_id" % 4 === 1)
     val b2 = docs.where($"doc_id" % 4 === 2)
     val path = java.nio.file.Files.createTempDirectory("graft-o43").toString + "/layout"
-    Ops.writeShuffledShards(base, "doc_id", path, nShards = 4, seed = "s43")
-    Ops.appendShuffledShards(b1, "doc_id", path)
-    Ops.appendShuffledShards(b2, "doc_id", path)
+    ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 4, seed = "s43")
+    ShardLayout.appendShuffledShards(b1, "doc_id", path)
+    ShardLayout.appendShuffledShards(b2, "doc_id", path)
     val before = graft.operators.IndexLayout.resolveDir(spark, path)
     val fragged = shardDataFiles(before)
     assert(fragged.values.exists(_.size > 1),
       "appends did not fragment — the fixture lost its point")
-    val preRows = Ops.readShuffledShards(spark, path)
+    val preRows = ShardLayout.readShuffledShards(spark, path)
       .select($"doc_id", $"lang", $"source").collect().toSet
-    Ops.compactShuffledShards(spark, path) // idCol from the manifest
+    ShardLayout.compactShuffledShards(spark, path) // idCol from the manifest
     val after = graft.operators.IndexLayout.resolveDir(spark, path)
     assert(after != before, "compaction did not publish a fresh epoch")
     val compacted = shardDataFiles(after)
@@ -412,7 +412,7 @@ class Round11bSpec extends SparkTestBase {
       s"a shard holds more files than covering range tasks: $compacted")
     assert(compacted.values.map(_.size).sum < fragged.values.map(_.size).sum,
       "compaction did not reduce the file count")
-    val postRows = Ops.readShuffledShards(spark, path)
+    val postRows = ShardLayout.readShuffledShards(spark, path)
       .select($"doc_id", $"lang", $"source").collect().toSet
     assert(postRows === preRows, "compaction changed the row content")
     // exact permutation order restored: per shard, the sorted file
@@ -434,14 +434,14 @@ class Round11bSpec extends SparkTestBase {
       .select($"doc_id", $"lang", $"source")
     val base = docs.where($"doc_id" % 7 === 0)
     val path = java.nio.file.Files.createTempDirectory("graft-o43b").toString + "/layout"
-    Ops.writeShuffledShards(base, "doc_id", path, nShards = 2, seed = "s43b")
-    Ops.appendShuffledShards(base, "doc_id", path) // the retry: exact replay
-    assert(Ops.readShuffledShards(spark, path).count() === base.count() * 2)
+    ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 2, seed = "s43b")
+    ShardLayout.appendShuffledShards(base, "doc_id", path) // the retry: exact replay
+    assert(ShardLayout.readShuffledShards(spark, path).count() === base.count() * 2)
     val e = intercept[RuntimeException](
-      Ops.compactShuffledShards(spark, path, idColArg = "lang"))
+      ShardLayout.compactShuffledShards(spark, path, idColArg = "lang"))
     assert(e.getMessage.contains("idCol"), s"wrong failure: ${e.getMessage}")
-    Ops.compactShuffledShards(spark, path)
-    val out = Ops.readShuffledShards(spark, path)
+    ShardLayout.compactShuffledShards(spark, path)
+    val out = ShardLayout.readShuffledShards(spark, path)
     assert(out.count() === base.count(), "dedupe left replayed rows behind")
     assert(out.select($"doc_id").distinct().count() === base.count())
   }

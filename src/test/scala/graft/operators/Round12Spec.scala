@@ -123,17 +123,17 @@ class Round12Spec extends SparkTestBase {
     val vers = Seq("v")
 
     // first apply bootstraps the table (and stamps the manifest)
-    Ops.applyChangelog(spark, dir, batch((1L, 1L, 10L, "a", false), (1L, 2L, 10L, "b", false)),
+    ShardLayout.applyChangelog(spark, dir, batch((1L, 1L, 10L, "a", false), (1L, 2L, 10L, "b", false)),
       keys, vers)
-    assert(Ops.readMerged(spark, dir).orderBy($"user_id", $"k")
+    assert(ShardLayout.readMerged(spark, dir).orderBy($"user_id", $"k")
       .select($"k", $"payload").collect().toSeq ==
       Seq(Row(1L, "a"), Row(2L, "b")))
 
     // newer upsert wins, tombstone deletes, new key inserts
-    Ops.applyChangelog(spark, dir, batch(
+    ShardLayout.applyChangelog(spark, dir, batch(
       (1L, 1L, 20L, "a2", false), (1L, 2L, 20L, "b", true), (1L, 3L, 10L, "c", false)),
       keys, vers)
-    assert(Ops.readMerged(spark, dir).orderBy($"k")
+    assert(ShardLayout.readMerged(spark, dir).orderBy($"k")
       .select($"k", $"payload").collect().toSeq ==
       Seq(Row(1L, "a2"), Row(3L, "c")))
     // the tombstone row is KEPT as a flagged suppressor in the table
@@ -144,25 +144,25 @@ class Round12Spec extends SparkTestBase {
     // replay safety: re-applying the STALE first batch moves nothing —
     // k=1 keeps v=20, and the late k=2 upsert (v=10 < tombstone v=20)
     // stays suppressed
-    Ops.applyChangelog(spark, dir, batch((1L, 1L, 10L, "a", false), (1L, 2L, 10L, "b", false)),
+    ShardLayout.applyChangelog(spark, dir, batch((1L, 1L, 10L, "a", false), (1L, 2L, 10L, "b", false)),
       keys, vers)
-    assert(Ops.readMerged(spark, dir).orderBy($"k")
+    assert(ShardLayout.readMerged(spark, dir).orderBy($"k")
       .select($"k", $"payload").collect().toSeq ==
       Seq(Row(1L, "a2"), Row(3L, "c")))
 
     // NULL keys merge as one key (null-safe equality), never fork
-    Ops.applyChangelog(spark, dir,
+    ShardLayout.applyChangelog(spark, dir,
       Seq((2L, Option.empty[Long], 5L, "n1", false)).toDF("user_id", "k", "v", "payload", "is_tombstone"),
       keys, vers)
-    Ops.applyChangelog(spark, dir,
+    ShardLayout.applyChangelog(spark, dir,
       Seq((2L, Option.empty[Long], 6L, "n2", false)).toDF("user_id", "k", "v", "payload", "is_tombstone"),
       keys, vers)
-    assert(Ops.readMerged(spark, dir).where($"user_id" === 2L)
+    assert(ShardLayout.readMerged(spark, dir).where($"user_id" === 2L)
       .select($"payload").collect().toSeq == Seq(Row("n2")))
 
     // the stored manifest is authoritative: contradicting args fail loudly
     val e = intercept[IllegalArgumentException] {
-      Ops.applyChangelog(spark, dir, batch((9L, 9L, 1L, "x", false)), Seq("user_id"), vers)
+      ShardLayout.applyChangelog(spark, dir, batch((9L, 9L, 1L, "x", false)), Seq("user_id"), vers)
     }
     assert(e.getMessage.contains("manifest"))
   }
@@ -197,13 +197,13 @@ class Round12Spec extends SparkTestBase {
       .select($"user_id", $"k", $"last.ts_us".as("last_ts_us"),
         $"last.event_type".as("last_op"), $"last.value".as("last_value"), $"n_ops")
       .where($"last_op" =!= "error")
-    val got = Ops.readMerged(spark, mdir)
+    val got = ShardLayout.readMerged(spark, mdir)
       .select($"user_id", $"k", $"last_ts_us", $"last_op", $"last_value", $"n_ops")
     assert(got.count() == batch.count())
     assert(got.except(batch).isEmpty && batch.except(got).isEmpty,
       "stream-applied merge table diverged from batch q65 compaction")
     // tombstoned keys are gone from the read surface
-    assert(Ops.readMerged(spark, mdir).where($"last_op" === "error").count() == 0)
+    assert(ShardLayout.readMerged(spark, mdir).where($"last_op" === "error").count() == 0)
   }
 
   // ------------------------------------------------------------- O44
@@ -211,9 +211,9 @@ class Round12Spec extends SparkTestBase {
   test("O44 packTokenShards: epoch layout stores loader-ready padded ID arrays") {
     val dir = java.nio.file.Files.createTempDirectory("o44").toString
     val w = 32
-    Ops.packTokenShards(docs, dir, window = w, nShards = 4, seed = "r12")
+    ShardLayout.packTokenShards(docs, dir, window = w, nShards = 4, seed = "r12")
 
-    val back = Ops.readShuffledShards(spark, dir)
+    val back = ShardLayout.readShuffledShards(spark, dir)
     // loader contract: fixed-length int arrays + pad boundary + replay
     // key (parquet re-reads element nullability as true — assert the
     // element TYPE and no-null DATA instead)
@@ -241,8 +241,8 @@ class Round12Spec extends SparkTestBase {
     assert(bad == 0, s"$bad documents fail the shard-reassemble decode round trip")
 
     // layout discipline: manifest-stamped idCol, compactable in place
-    Ops.compactShuffledShards(spark, dir)
-    assert(Ops.readShuffledShards(spark, dir).count() == nWindows,
+    ShardLayout.compactShuffledShards(spark, dir)
+    assert(ShardLayout.readShuffledShards(spark, dir).count() == nWindows,
       "compaction changed the sample count")
   }
 
@@ -251,33 +251,33 @@ class Round12Spec extends SparkTestBase {
   test("O47: a pinned epoch read survives the next publish; orphans and GC'd versions fail loudly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString + "/shards"
     val ep1 = docs.select($"doc_id", $"lang").where($"doc_id" < 100)
-    Ops.writeShuffledShards(ep1, "doc_id", dir, nShards = 4, seed = "e1")
-    val v1 = Ops.shardVersions(spark, dir).last
+    ShardLayout.writeShuffledShards(ep1, "doc_id", dir, nShards = 4, seed = "e1")
+    val v1 = ShardLayout.shardVersions(spark, dir).last
     // epoch 2: different corpus AND permutation regime
     val ep2 = docs.select($"doc_id", $"lang").where($"doc_id" >= 100 && $"doc_id" < 300)
-    Ops.writeShuffledShards(ep2, "doc_id", dir, nShards = 4, seed = "e2")
-    val vs = Ops.shardVersions(spark, dir)
+    ShardLayout.writeShuffledShards(ep2, "doc_id", dir, nShards = 4, seed = "e2")
+    val vs = ShardLayout.shardVersions(spark, dir)
     assert(vs.size == 2 && vs.head == v1,
       s"expected the retired epoch retained in the grace window: $vs")
     // the pinned read sees epoch 1 EXACTLY while current resolves to epoch 2
-    val pinned = Ops.readShuffledShardsAt(spark, dir, v1)
+    val pinned = ShardLayout.readShuffledShardsAt(spark, dir, v1)
     assert(pinned.select($"doc_id").exceptAll(ep1.select($"doc_id")).isEmpty
       && ep1.select($"doc_id").exceptAll(pinned.select($"doc_id")).isEmpty)
-    val current = Ops.readShuffledShards(spark, dir)
+    val current = ShardLayout.readShuffledShards(spark, dir)
     assert(current.count() == ep2.count() && current.count() != pinned.count())
     // a version that never existed, and one above _CURRENT (a crash
     // orphan: directory present, never published), both fail loudly
     intercept[IllegalArgumentException] {
-      Ops.readShuffledShardsAt(spark, dir, "v99999")
+      ShardLayout.readShuffledShardsAt(spark, dir, "v99999")
     }
     new java.io.File(dir.stripPrefix("file:"), "v00003").mkdirs()
     intercept[IllegalArgumentException] {
-      Ops.readShuffledShardsAt(spark, dir, "v00003")
+      ShardLayout.readShuffledShardsAt(spark, dir, "v00003")
     }
     // a third publish GC's epoch 1 (keepVersions=1) — the pin expires loudly
-    Ops.writeShuffledShards(ep1, "doc_id", dir, nShards = 4, seed = "e3")
+    ShardLayout.writeShuffledShards(ep1, "doc_id", dir, nShards = 4, seed = "e3")
     intercept[IllegalArgumentException] {
-      Ops.readShuffledShardsAt(spark, dir, v1)
+      ShardLayout.readShuffledShardsAt(spark, dir, v1)
     }
   }
 
@@ -320,45 +320,45 @@ class Round12Spec extends SparkTestBase {
   test("appendShuffledShards refuses a drifted batch schema; column order stays free") {
     val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString + "/shards"
     val base = docs.select($"doc_id", $"lang", $"n_chars").where($"doc_id" < 100)
-    Ops.writeShuffledShards(base, "doc_id", dir, nShards = 4, seed = "d1")
+    ShardLayout.writeShuffledShards(base, "doc_id", dir, nShards = 4, seed = "d1")
     // same columns, different order: order can't corrupt parquet —
     // accepted, and the layout stays readable
-    Ops.appendShuffledShards(
+    ShardLayout.appendShuffledShards(
       docs.select($"n_chars", $"doc_id", $"lang")
         .where($"doc_id" >= 100 && $"doc_id" < 120), "doc_id", dir)
-    assert(Ops.readShuffledShards(spark, dir).count() == 120)
+    assert(ShardLayout.readShuffledShards(spark, dir).count() == 120)
     // a MISSING column would read back silently null for the new
     // files — refused loudly
     val missing = intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(
+      ShardLayout.appendShuffledShards(
         docs.select($"doc_id", $"lang").where($"doc_id" >= 120 && $"doc_id" < 130),
         "doc_id", dir)
     }
     assert(missing.getMessage.contains("stamped schema"))
     // a RETYPED column may fail only on the files that disagree — refused
     intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(
+      ShardLayout.appendShuffledShards(
         docs.select($"doc_id", $"lang", $"n_chars".cast("int").as("n_chars"))
           .where($"doc_id" >= 120 && $"doc_id" < 130), "doc_id", dir)
     }
     // an EXTRA column would vanish on a non-mergeSchema read — refused
     intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(
+      ShardLayout.appendShuffledShards(
         base.withColumn("extra", lit(1L)).where($"doc_id" < 10), "doc_id", dir)
     }
     // rejected batches never landed: count and schema unchanged
-    val back = Ops.readShuffledShards(spark, dir)
+    val back = ShardLayout.readShuffledShards(spark, dir)
     assert(back.count() == 120)
     // schema evolution is an epoch REWRITE event: the same drifted
     // frame accepted through writeShuffledShards, and the new stamp
     // now guards the evolved schema
-    Ops.writeShuffledShards(base.withColumn("extra", lit(1L)), "doc_id", dir,
+    ShardLayout.writeShuffledShards(base.withColumn("extra", lit(1L)), "doc_id", dir,
       nShards = 4, seed = "d1")
-    Ops.appendShuffledShards(
+    ShardLayout.appendShuffledShards(
       docs.select($"doc_id", $"lang", $"n_chars").withColumn("extra", lit(2L))
         .where($"doc_id" >= 100 && $"doc_id" < 110), "doc_id", dir)
     intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(base.limit(5), "doc_id", dir) // old schema now drifts
+      ShardLayout.appendShuffledShards(base.limit(5), "doc_id", dir) // old schema now drifts
     }
   }
 

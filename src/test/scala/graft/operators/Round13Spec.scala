@@ -28,13 +28,13 @@ class Round13Spec extends SparkTestBase {
 
   test("probeSignIndex: a malformed (null-sig) sidecar row cannot crowd the shortlist") {
     val dir = java.nio.file.Files.createTempDirectory("graft-nullsig").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 8, m = 4, kSub = 8, storeSigs = true)
-    val idx = Ops.readAnnIndex(spark, dir)
+    val idx = VectorIndex.readAnnIndex(spark, dir)
     val probes = emb.orderBy($"vec_id").limit(5)
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    val clean = keyed(Ops.probeSignIndex(probes, "vec_id", "embedding", idx,
+    val clean = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx,
       nprobe = 8, hammingTopM = 10, topK = 3))
     // corrupt the handle: one null-sig row in EVERY cell (SignPack60's
     // output for a sub-60-dim vector). Ascending Hamming order sorts
@@ -45,7 +45,7 @@ class Round13Spec extends SparkTestBase {
       .withColumn("sig", lit(null).cast("long"))
       .select($"cell", $"n_id", $"sig")
     val dirty = idx.copy(sigs = Some(idx.sigs.get.unionByName(badRows)))
-    val guarded = keyed(Ops.probeSignIndex(probes, "vec_id", "embedding", dirty,
+    val guarded = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", dirty,
       nprobe = 8, hammingTopM = 10, topK = 3))
     assert(guarded == clean, s"null-sig rows changed the result: " +
       s"clean=${clean.size} dirty=${guarded.size}")
@@ -54,15 +54,15 @@ class Round13Spec extends SparkTestBase {
 
   test("probeSignIndex(routeOnDriver = true) refuses a probe batch past its bound") {
     val dir = java.nio.file.Files.createTempDirectory("graft-probebound").toString
-    Ops.writeAnnIndex(emb, "vec_id", "embedding", dir,
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 8, m = 4, kSub = 8, storeSigs = true)
-    val idx = Ops.readAnnIndex(spark, dir)
-    val probes = spark.range(Ops.ProbeRouteOnDriverMax + 1L)
+    val idx = VectorIndex.readAnnIndex(spark, dir)
+    val probes = spark.range(VectorIndex.ProbeRouteOnDriverMax + 1L)
       .select($"id".as("vec_id"), array(lit(0.5f)).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      Ops.probeSignIndex(probes, "vec_id", "embedding", idx)
+      VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx)
     }
-    assert(e.getMessage.contains(s"more than ${Ops.ProbeRouteOnDriverMax} probes"),
+    assert(e.getMessage.contains(s"more than ${VectorIndex.ProbeRouteOnDriverMax} probes"),
       e.getMessage)
   }
 
@@ -124,18 +124,18 @@ class Round13Spec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-esc").toString + "/shards"
     val seed = """e"poch\1"""
     val df = docs.select($"doc_id", $"lang").limit(200)
-    Ops.writeShuffledShards(df, "doc_id", dir, nShards = 4, seed = seed)
-    assert(Ops.readShuffledShards(spark, dir).count() == 200)
+    ShardLayout.writeShuffledShards(df, "doc_id", dir, nShards = 4, seed = seed)
+    assert(ShardLayout.readShuffledShards(spark, dir).count() == 200)
     // append validates the caller's seed against the manifest — an
     // unescaped write would have corrupted the JSON and either failed
     // to parse or stored a mangled seed that can never match again
     val more = docs.select($"doc_id", $"lang")
       .where($"doc_id" >= 200 && $"doc_id" < 250)
-    Ops.appendShuffledShards(more, "doc_id", dir, seed = seed)
-    assert(Ops.readShuffledShards(spark, dir).count() == 250)
+    ShardLayout.appendShuffledShards(more, "doc_id", dir, seed = seed)
+    assert(ShardLayout.readShuffledShards(spark, dir).count() == 250)
     // and a WRONG seed still fails loudly (the guard is not vacuous)
     intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(more, "doc_id", dir, seed = "other")
+      ShardLayout.appendShuffledShards(more, "doc_id", dir, seed = "other")
     }
   }
 }

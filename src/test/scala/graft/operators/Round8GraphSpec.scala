@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * The canned g01/g03 queries keep FIXED round counts so their DuckDB
   * oracles terminate (a data-dependent fixpoint can't be a literal
-  * CTE unroll); Ops.kCore / Graph.pageRankConverged are what a user
+  * CTE unroll); Clustering.kCore / Graph.pageRankConverged are what a user
   * calls. These specs pin both directions of the contract:
   * fixpoint == fixed-round output where the fixed rounds already
   * converged (g03's graph), and fixpoint != fixed-round where they
@@ -32,7 +32,7 @@ class Round8GraphSpec extends SparkTestBase {
   test("kCore fixpoint equals g03's 5 fixed rounds (already converged there)") {
     val fixed = graft.SparkEntry.queries("g03_kcore_peel")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fix = Ops.kCore(g03Edges, k = 3)
+    val fix = Clustering.kCore(g03Edges, k = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fix == fixed,
       s"kCore fixpoint (${fix.size} nodes) != g03 5-round output (${fixed.size})")
@@ -59,9 +59,9 @@ class Round8GraphSpec extends SparkTestBase {
     assert(after5 == 5, s"5 fixed rounds should leave 5 chain nodes, got $after5")
     // the shared window peel round (g03's and kCore's) equals the
     // degree-agg + semi-join round, five rounds deep
-    val peeled = (1 to 5).foldLeft(e)((cur, r) => Ops.peelRound(cur, 2, r))
+    val peeled = (1 to 5).foldLeft(e)((cur, r) => Clustering.peelRound(cur, 2, r))
     assert(peeled.collect().toSet == e5.collect().toSet)
-    assert(Ops.kCore(e, k = 2).count() == 0,
+    assert(Clustering.kCore(e, k = 2).count() == 0,
       "a chain has no 2-core: the fixpoint must be empty")
   }
 
@@ -69,7 +69,7 @@ class Round8GraphSpec extends SparkTestBase {
     val und = (1 to 14).map(i => (i.toLong, (i + 1).toLong)).toDF("u", "v")
     val e = und.select($"u".as("src"), $"v".as("dst"))
       .unionAll(und.select($"v".as("src"), $"u".as("dst")))
-    val ex = intercept[IllegalArgumentException] { Ops.kCore(e, k = 2, maxRounds = 2) }
+    val ex = intercept[IllegalArgumentException] { Clustering.kCore(e, k = 2, maxRounds = 2) }
     assert(ex.getMessage.contains("no fixpoint"), ex.getMessage)
   }
 

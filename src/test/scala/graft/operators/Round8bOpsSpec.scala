@@ -34,7 +34,7 @@ class Round8bOpsSpec extends SparkTestBase {
     java.lang.Long.parseLong(d.take(8).map("%02x".format(_)).mkString.take(15), 16)
   }
 
-  // ---- q57 / Ops.asofJoin ---------------------------------------
+  // ---- q57 / Joins.asofJoin ---------------------------------------
 
   test("q57 matches a per-purchase scan replay (latest click at-or-before, -1 when none)") {
     val got = q("q57_asof_join").collect()
@@ -62,7 +62,7 @@ class Round8bOpsSpec extends SparkTestBase {
     val left = Seq((1L, 7L, ts0)).toDF("event_id", "user_id", "ts")
     val right = Seq((7L, ts0), (7L, java.sql.Timestamp.valueOf("2024-01-01 00:00:05")))
       .toDF("user_id", "ts")
-    val out = Ops.asofJoin(left, right, "user_id", "ts", "ts", outCol = "click_ts")
+    val out = Joins.asofJoin(left, right, "user_id", "ts", "ts", outCol = "click_ts")
       .select(col("click_ts")).collect()
     assert(out.head.getTimestamp(0) == ts0)
   }
@@ -261,7 +261,7 @@ class Round8bOpsSpec extends SparkTestBase {
   // ---- e08 cluster-balanced sampling ----------------------------
 
   test("e08 picks the hash-least 4 ids per trained cell, exactly") {
-    val asg = Ops.kmeansAssign(Tables.load(spark, sfDir, "embeddings"),
+    val asg = Clustering.kmeansAssign(Tables.load(spark, sfDir, "embeddings"),
       "vec_id", "embedding", k = 8, iters = 2, dim = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val expected = asg.groupBy(_._2).toSeq.flatMap { case (cell, rows) =>

@@ -234,8 +234,8 @@ class Round9bOpsSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("shards").toString
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"lang")
-    Ops.writeShuffledShards(docs, "doc_id", s"$dir/a", nShards = 4, seed = "7")
-    val back = Ops.readShuffledShards(spark, s"$dir/a")
+    ShardLayout.writeShuffledShards(docs, "doc_id", s"$dir/a", nShards = 4, seed = "7")
+    val back = ShardLayout.readShuffledShards(spark, s"$dir/a")
     // coverage: exactly the input ids, each once
     assert(back.count() == docs.count())
     assert(back.select($"doc_id").exceptAll(docs.select($"doc_id")).isEmpty)
@@ -244,15 +244,15 @@ class Round9bOpsSpec extends SparkTestBase {
     // the loader contract: every FILE streams rows in (skey, id) order
     assertFilesOrdered(s"$dir/a")
     // determinism: same seed reproduces the exact per-shard sequences
-    Ops.writeShuffledShards(docs, "doc_id", s"$dir/b", nShards = 4, seed = "7")
-    val seqA = Ops.readShuffledShards(spark, s"$dir/a").orderBy($"shard", $"skey", $"doc_id")
+    ShardLayout.writeShuffledShards(docs, "doc_id", s"$dir/b", nShards = 4, seed = "7")
+    val seqA = ShardLayout.readShuffledShards(spark, s"$dir/a").orderBy($"shard", $"skey", $"doc_id")
       .select($"doc_id").collect().map(_.getLong(0)).toSeq
-    val seqB = Ops.readShuffledShards(spark, s"$dir/b").orderBy($"shard", $"skey", $"doc_id")
+    val seqB = ShardLayout.readShuffledShards(spark, s"$dir/b").orderBy($"shard", $"skey", $"doc_id")
       .select($"doc_id").collect().map(_.getLong(0)).toSeq
     assert(seqA == seqB)
     // collision guard: a pre-existing shard column is rejected loudly
     val err = intercept[IllegalArgumentException] {
-      Ops.writeShuffledShards(docs.withColumn("shard", lit(1)), "doc_id", s"$dir/c")
+      ShardLayout.writeShuffledShards(docs.withColumn("shard", lit(1)), "doc_id", s"$dir/c")
     }
     assert(err.getMessage.contains("shard"))
   }
@@ -262,9 +262,9 @@ class Round9bOpsSpec extends SparkTestBase {
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"lang")
     val path = s"$dir/l"
-    Ops.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e0")
+    ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e0")
     assert(graft.operators.IndexLayout.currentVersion(spark, path).contains("v00001"))
-    val epoch0 = Ops.readShuffledShards(spark, path)
+    val epoch0 = ShardLayout.readShuffledShards(spark, path)
       .orderBy($"shard", $"skey", $"doc_id").select($"doc_id")
       .collect().map(_.getLong(0)).toSeq
 
@@ -277,18 +277,18 @@ class Round9bOpsSpec extends SparkTestBase {
     val bad = new java.util.concurrent.atomic.AtomicLong(0)
     val reader = new Thread(() => {
       while (!stop.get()) {
-        val n = Ops.readShuffledShards(spark, path).count()
+        val n = ShardLayout.readShuffledShards(spark, path).count()
         if (n != docs.count()) bad.incrementAndGet()
       }
     })
     reader.start()
     try {
       // epoch rewrite under a DIFFERENT seed — a fresh permutation
-      Ops.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e1")
+      ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e1")
     } finally { stop.set(true); reader.join() }
     assert(bad.get() == 0, s"${bad.get()} reads saw a partial epoch during the rewrite")
     assert(graft.operators.IndexLayout.currentVersion(spark, path).contains("v00002"))
-    val epoch1 = Ops.readShuffledShards(spark, path)
+    val epoch1 = ShardLayout.readShuffledShards(spark, path)
       .orderBy($"shard", $"skey", $"doc_id").select($"doc_id")
       .collect().map(_.getLong(0)).toSeq
     assert(epoch1.sorted == epoch0.sorted && epoch1 != epoch0,
@@ -298,24 +298,24 @@ class Round9bOpsSpec extends SparkTestBase {
     // omitted; a drifted explicit (nShards, seed) fails fast instead
     // of silently appending under a different permutation regime
     val batch = docs.limit(50).withColumn("doc_id", $"doc_id" + 1000000L)
-    Ops.appendShuffledShards(batch, "doc_id", path)
-    val all = Ops.readShuffledShards(spark, path)
+    ShardLayout.appendShuffledShards(batch, "doc_id", path)
+    val all = ShardLayout.readShuffledShards(spark, path)
     assert(all.count() == docs.count() + 50)
     assert(all.where(pmod($"skey", lit(4)).cast("int") =!= $"shard").isEmpty)
     assertFilesOrdered(path)
     val seedErr = intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e0")
+      ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e0")
     }
     assert(seedErr.getMessage.contains("seed"))
     val shardsErr = intercept[IllegalArgumentException] {
-      Ops.appendShuffledShards(batch, "doc_id", path, nShards = 8)
+      ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 8)
     }
     assert(shardsErr.getMessage.contains("nShards"))
     // matching explicit values still pass (config pinning)
-    Ops.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e1")
+    ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e1")
     // retired epoch GC'd down to keepVersions=1: v00001 still present
     // as the grace window, nothing older
-    Ops.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e2")
+    ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e2")
     val vs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("v")).sorted
     assert(vs.toSeq == Seq("v00002", "v00003"), s"unexpected versions: ${vs.toSeq}")
   }

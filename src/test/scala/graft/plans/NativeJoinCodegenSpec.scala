@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkTestBase
-import graft.operators.Ops
+import graft.operators.Joins
 import graft.tables.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
@@ -46,7 +46,7 @@ class NativeJoinCodegenSpec extends SparkTestBase {
   private def clicks = ev.filter(col("event_type") === "click")
     .select(col("user_id"), col("ts"))
 
-  private def asofDf = Ops.asofJoinNative(purchases, clicks, "user_id", "ts", "ts")
+  private def asofDf = Joins.asofJoinNative(purchases, clicks, "user_id", "ts", "ts")
     // downstream arithmetic that must FUSE into the join's span
     .select(col("event_id"), (unix_micros(col("ts")) - unix_micros(col("asof_ts"))).as("lag"))
 
@@ -56,7 +56,7 @@ class NativeJoinCodegenSpec extends SparkTestBase {
   private def cls = ev.filter(col("event_type") === "click")
     .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
 
-  private def intervalDf = Ops.intervalJoinNative(windows, cls,
+  private def intervalDf = Joins.intervalJoinNative(windows, cls,
       "p_user", "c_user", "lo", "hi", "c_ts")
     .select(col("p_event"), unix_micros(col("c_ts")).as("c_us"))
 
@@ -82,9 +82,9 @@ class NativeJoinCodegenSpec extends SparkTestBase {
   test("codegen-on == codegen-off row-for-row (as-of, both directions; interval, both join types)") {
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    val asofFwd = Ops.asofJoinNative(purchases, clicks, "user_id", "ts", "ts",
+    val asofFwd = Joins.asofJoinNative(purchases, clicks, "user_id", "ts", "ts",
       direction = "forward")
-    val intervalOuter = Ops.intervalJoinNative(windows, cls,
+    val intervalOuter = Joins.intervalJoinNative(windows, cls,
       "p_user", "c_user", "lo", "hi", "c_ts", joinType = "left")
     val on = Seq(rows(asofDf), rows(asofFwd.select(col("event_id"), col("asof_ts"))),
       rows(intervalDf), rows(intervalOuter.select(col("p_event"), col("c_ts"))))
@@ -104,13 +104,13 @@ class NativeJoinCodegenSpec extends SparkTestBase {
       .toDF("k", "lo", "hi", "tag")
     val r = Seq((BigDecimal(1), 12L, "x"), (BigDecimal(2), 30L, "y"))
       .toDF("rk", "ts", "rtag")
-    val j = Ops.intervalJoinNative(l, r, "k", "rk", "lo", "hi", "ts")
+    val j = Joins.intervalJoinNative(l, r, "k", "rk", "lo", "hi", "ts")
     j.collect()
     assert(!codegenSpanOver(j, _.isInstanceOf[IntervalJoinExec]),
       "decimal-key interval join must not claim codegen support")
     assert(j.select($"tag", $"rtag").collect().map(x => (x.getString(0), x.getString(1)))
       .toSet == Set(("a", "x")))
-    val aj = Ops.asofJoinNative(
+    val aj = Joins.asofJoinNative(
       l.select($"k", $"lo".as("ts"), $"tag"),
       r.select($"rk".as("k"), $"ts"), "k", "ts", "ts", outCol = "m")
     aj.collect()

@@ -268,7 +268,7 @@ class StreamingSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("ts"))
     val c = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"))
-    val batch = graft.operators.Ops
+    val batch = graft.operators.Joins
       .asofJoin(p, c, "user_id", "ts", "ts", outCol = "click_ts")
       .select(col("event_id"), col("user_id"),
         coalesce(unix_micros(col("ts")) - unix_micros(col("click_ts")), lit(-1L)).as("lag_us"))
@@ -301,7 +301,7 @@ class StreamingSpec extends SparkTestBase {
     // reads resolve the layout's _CURRENT manifest (versioned since
     // round 10 — the first micro-batch created v00001, the second
     // appended into it after deriving (nShards, seed) from _LAYOUT)
-    val back = graft.operators.Ops.readShuffledShards(spark, out)
+    val back = graft.operators.ShardLayout.readShuffledShards(spark, out)
     // every doc exactly once, in the shard the pure arithmetic assigns
     assert(back.count() == docs.count())
     assert(back.select(col("doc_id")).exceptAll(docs.select(col("doc_id"))).isEmpty)
@@ -330,7 +330,7 @@ class StreamingSpec extends SparkTestBase {
     // write would be tautological (both sort by the same pure
     // arithmetic), but THIS check fails the moment the writer stops
     // ordering its files (e.g. a dropped sortWithinPartitions).
-    graft.operators.Ops.writeShuffledShards(
+    graft.operators.ShardLayout.writeShuffledShards(
       back.drop("skey", "shard"), "doc_id", s"$dir/epoch", nShards = 4, seed = "7")
     // per shard: concatenating the files in LISTING order, each read
     // individually top to bottom, must yield the (skey, id)-sorted
@@ -351,7 +351,7 @@ class StreamingSpec extends SparkTestBase {
     // and the rewrite carries exactly the ingested rows — BOTH
     // directions (one-sided exceptAll would pass a rewrite that
     // silently drops a shard)
-    val epochIds = graft.operators.Ops.readShuffledShards(spark, s"$dir/epoch")
+    val epochIds = graft.operators.ShardLayout.readShuffledShards(spark, s"$dir/epoch")
       .select(col("doc_id"))
     assert(epochIds.count() == docs.count())
     assert(epochIds.exceptAll(docs.select(col("doc_id"))).isEmpty)
@@ -659,12 +659,12 @@ class StreamingSpec extends SparkTestBase {
     q.processAllAvailable(); q.stop()
     // epoch-boundary repair, then the streamed layout must hold the
     // SAME loader-ready samples as a from-scratch batch O44 run
-    graft.operators.Ops.compactShuffledShards(spark, out)
+    graft.operators.ShardLayout.compactShuffledShards(spark, out)
     val batchDir = s"$dir/batch"
-    graft.operators.Ops.packTokenShards(docs, batchDir, window = 64,
+    graft.operators.ShardLayout.packTokenShards(docs, batchDir, window = 64,
       nShards = 4, seed = "ep0")
     def content(path: String) =
-      graft.operators.Ops.readShuffledShards(spark, path)
+      graft.operators.ShardLayout.readShuffledShards(spark, path)
         .select($"sample_id", $"n_real",
           expr("concat_ws(' ', transform(ids, x -> cast(x as string)))").as("idstr"))
     assert(content(out).exceptAll(content(batchDir)).isEmpty
