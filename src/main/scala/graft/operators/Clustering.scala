@@ -19,7 +19,7 @@ object Clustering {
     *  - `algo = "minlabel"` (default): min-label propagation. Each
     *    round is a keyed join + aggregation (never a cross join);
     *    rounds converge at the largest component DIAMETER. Near-dup
-    *    graphs are near-cliques (2-3 rounds) — the right default for
+    *    graphs are near-cliques (1-2 rounds) — the right default for
     *    dedup workloads.
     *  - `algo = "star"`: alternating large-star/small-star contraction
     *    (Kiveris et al., "Connected Components in MapReduce and
@@ -28,11 +28,11 @@ object Clustering {
     *    chains (ConnectedComponentsSpec pins a 10k-node chain to
     *    ~log-many rounds where min-label would need ~10k).
     *
-    * Convergence is detected by cheap scalar actions per round (label
-    * sums only decrease), never a driver-side diff of the frames. Both
-    * algorithms raise when `maxIterations` runs out before the
-    * fixpoint ([[Fixpoint]]'s budget rule) instead of returning a
-    * partial labeling.
+    * Convergence is detected by one cheap action per round (min-label:
+    * did any label drop; star: a decreasing scalar potential), never a
+    * driver-side diff of the frames. Both algorithms raise when
+    * `maxIterations` runs out before the fixpoint ([[Fixpoint]]'s
+    * budget rule) instead of returning a partial labeling.
     */
   def connectedComponents(
       edgePairs: DataFrame,
@@ -42,10 +42,27 @@ object Clustering {
       idOut: String = "id",
       labelOut: String = "label",
       algo: String = "minlabel"
-  ): DataFrame = {
+  ): DataFrame =
     if (algo == "star")
-      return connectedComponentsStar(edgePairs, aCol, bCol,
+      connectedComponentsStar(edgePairs, aCol, bCol,
         math.max(maxIterations, 50), idOut, labelOut)._1
+    else minLabel(edgePairs, aCol, bCol, maxIterations, idOut, labelOut)._1
+
+  /** Min-label CC, returning (labels, roundsUsed). Each node starts at
+    * the minimum of itself and its neighbours; a round lowers a label
+    * to its neighbours' minimum label and flags `_chg` where it did.
+    * The first round that lowers no label is the fixpoint, so a graph
+    * its initial labeling already solves (cliques, stars centred on
+    * their minimum id) settles in round 1.
+    */
+  private[operators] def minLabel(
+      edgePairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxIterations: Int,
+      idOut: String,
+      labelOut: String
+  ): (DataFrame, Int) = {
     // ONE materialization of the caller's pair plan: the symmetric
     // edge view below references `pairs` TWICE, so an uncut pair plan
     // (for d06/d12 the posting/verify join chain) would execute once
@@ -55,25 +72,22 @@ object Clustering {
     val init = edges.groupBy(col("src"))
       .agg(least(first(col("src")), min(col("dst"))).as("lbl"))
       .select(col("src").as("id"), col("lbl")).graftCheckpointLazy
-    // labels only decrease, so their sum is the potential; sum over an
-    // empty frame is null — read through Option so a zero-edge graph
-    // converges to an empty result, not an NPE
-    val labelSum = Fixpoint.Potential(l =>
-      Option(l.agg(sum(col("lbl"))).head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
+    val settled = Fixpoint.Settled((_, next) => next.where(col("_chg")).isEmpty)
     // the probe has materialized the last cut, so `edges` can go —
     // also when the budget runs out
-    val (labels, _) = try Fixpoint.iterate(init, maxIterations,
+    val (labels, rounds) = try Fixpoint.iterate(init, maxIterations,
       Fixpoint.MustConverge("connectedComponents",
         "raise maxIterations (min-label needs the largest component's diameter), " +
           "or use algo = \"star\""),
-      labelSum) { (labels, _) =>
+      settled) { (labels, _) =>
       val nmin = edges.join(labels.select(col("id").as("src"), col("lbl")), "src")
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
       labels
         .join(nmin.select(col("dst").as("id"), col("nlbl")), Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
+          (col("nlbl") < col("lbl")).as("_chg"))
     } finally edges.unpersist()
-    labels.select(col("id").as(idOut), col("lbl").as(labelOut))
+    (labels.select(col("id").as(idOut), col("lbl").as(labelOut)), rounds)
   }
 
   /** k-core decomposition peeled to FIXPOINT — the convergence-stop

@@ -172,7 +172,7 @@ object Dedup {
     * via Ops.jaccardPairs — a boilerplate shingle shared by k docs
     * emits k² candidate rows uncapped, so at corpus scale the cap
     * bounds the posting self-join. Jaccard values for surviving pairs
-    * stay exact (recomputed from the full postings of candidate docs);
+    * stay exact (the verify adds the hot shingles both docs hold);
     * pairs whose ONLY shared shingles are boilerplate are dropped — a
     * recall trade-off, never a value error (DedupScaleSpec pins both).
     * The canned oracle-gated d04 stays uncapped: at sf0.01 the hottest
@@ -183,39 +183,24 @@ object Dedup {
   def ngramJaccardAtScale(
       docs: DataFrame,
       threshold: Double = 0.4,
-      maxPostingsPerToken: Int = 1000,
-      pairwiseVerify: Boolean = false
+      maxPostingsPerToken: Int = 1000
   ): DataFrame =
-    Ops.jaccardPairs(shingleArrays(docs), "doc_id", "sh", threshold,
-      Some(maxPostingsPerToken), pairwiseVerify)
+    Ops.jaccardPairs(shingleArrays(docs), "doc_id", "sh", threshold, Some(maxPostingsPerToken))
 
-  /** d15's scale path: ordered containment pairs with the d04 knob
-    * calculus ([[Ops.containmentPairs]] — hot-shingle cap on candidate
-    * generation, pairwise array_intersect verify for high-dup
-    * corpora). maxPostingsPerToken = None returns the same pair SET
-    * with the same exact counts as the canned d15 query (Round7bOpsSpec
-    * pins row/count identity) — but the `containment` column here is
+  /** d15's scale path: ordered containment pairs with d04's
+    * hot-shingle cap on candidate generation ([[Ops.containmentPairs]]).
+    * maxPostingsPerToken = None returns the same pair SET with the
+    * same exact counts as the canned d15 query (Round7bOpsSpec pins
+    * row/count identity) — but the `containment` column here is
     * unrounded and the frame unordered, where d15 rounds to 6 dp and
-    * sorts for its oracle. Note pairwiseVerify is a capped-branch
-    * strategy knob: with no cap the counts are already exact and the
-    * flag is a no-op (see [[Ops.containmentPairs]]).
+    * sorts for its oracle.
     */
   def containmentAtScale(
       docs: DataFrame,
       threshold: Double = 0.8,
-      maxPostingsPerToken: Option[Int] = None,
-      pairwiseVerify: Boolean = false
+      maxPostingsPerToken: Option[Int] = None
   ): DataFrame =
-    Ops.containmentPairs(shingleArrays(docs), "doc_id", "sh", threshold,
-      maxPostingsPerToken, pairwiseVerify)
-
-  /** Exploded (doc_id, shingle) posting list — distinct per doc by
-    * construction (array_distinct above).
-    */
-  private[operators] def shinglePosting(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    shingleArrays(spark, dir).select($"doc_id", explode($"sh").as("s"))
-  }
+    Ops.containmentPairs(shingleArrays(docs), "doc_id", "sh", threshold, maxPostingsPerToken)
 
   /** 16 minhash "permutations": per shingle, perm i is the first 16
     * hex chars of md5(s || "|i"). DuckDB computes the identical
@@ -479,30 +464,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** The original posting-groupBy signature derivation, kept as the
-    * independent reference formulation for DedupScaleSpec's equality
-    * pin (min() aggregate over exploded postings, HOF-free but one
-    * extra shuffle).
-    */
-  private[operators] def minhashCandidatesPostingRef(posting: DataFrame): DataFrame = {
-    val mhAggs = (0 until numPerms).map { i =>
-      min(substring(md5(concat(col("s"), lit(s"|$i"))), 1, 16)).as(s"mh$i")
-    }
-    val sig = posting.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
-    val bands = sig.select(
-      col("doc_id"),
-      posexplode(
-        array((0 until 4).map(bnd =>
-          md5(concat_ws("|", (bnd * 4 until bnd * 4 + 4).map(r => col(s"mh$r")): _*))
-        ): _*)
-      ).as(Seq("band", "bh"))
-    )
-    val la = bands.select(col("doc_id").as("id_a"), col("band"), col("bh"))
-    val lb = bands.select(col("doc_id").as("id_b"), col("band"), col("bh"))
-    la.join(lb, Seq("band", "bh")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-  }
-
   /** The 100 TB configuration of the minhash-LSH dedup (d02): LSH
     * banding for candidates, then exact Jaccard verified PAIRWISE via
     * array_intersect on the candidate pairs — the right verify when
@@ -524,39 +485,6 @@ object Dedup {
       .withColumn("c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
       .withColumn("jaccard",
         col("c").cast("double") / (size(col("_ta")) + size(col("_tb")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** The pre-round-13 d02/d21 verify, kept ONLY as the independent
-    * reference formulation for DedupScaleSpec's equality pin: posting
-    * lists restricted to candidate docs (semi-join), shared-shingle
-    * counts via a shingle-keyed self-join, candidate-filtered, exact
-    * Jaccard from per-doc sizes. Value-identical to
-    * [[minhashLshAtScale]] but quadratic within one hot shingle's
-    * candidate posting — a boilerplate shingle shared by g candidate
-    * docs emits g²/2 join rows before the pair agg, which is why the
-    * canned queries now route through the pairwise verify.
-    */
-  private[graft] def minhashLshPostingVerifyRef(
-      docs: DataFrame, threshold: Double = 0.4): DataFrame = {
-    val sh = shingleArrays(docs).cache()
-    val posting = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val cands = minhashCandidates(sh).cache()
-    val candDocs =
-      cands.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val restricted = posting.join(candDocs, Seq("doc_id"), "left_semi")
-    val sizes = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-    restricted.select(col("doc_id").as("id_a"), col("s"))
-      .join(restricted.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(cands, Seq("id_a", "id_b"), "left_semi")
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -1710,9 +1638,9 @@ object Dedup {
     // Round 13: verified pairs come from the pairwise
     // array_intersect verify (the O13 scale path) — the former
     // restricted-posting self-join was quadratic within one hot
-    // shingle's candidate posting (see minhashLshPostingVerifyRef's
-    // scaladoc and docs/SCALING.md round 13); value-identical,
-    // spec-pinned in DedupScaleSpec.
+    // shingle's candidate posting (docs/SCALING.md round 13);
+    // value-identical, spec-pinned in DedupScaleSpec, which keeps the
+    // posting form as its reference.
     val pairs = minhashLshAtScale(docs).select(col("id_a"), col("id_b"))
     val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
       idOut = "doc_id", labelOut = "cluster_id", algo = "star")

@@ -19,11 +19,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Loop-invariant inputs go through [[invariant]].
   *
   * '''The probe.''' The convergence test runs on the round's cut and
-  * is the round's only materializing action; nothing is probed before
-  * round 1. A [[Potential]] probe compares a scalar that strictly
-  * decreases until the fixpoint (edge count, label sum) with the
+  * is the round's only ACTION; nothing is probed before round 1. A
+  * [[Potential]] probe compares a scalar that strictly decreases until
+  * the fixpoint (edge count, star CC's edge potential) with the
   * previous round's; a [[Settled]] probe tests the previous and the
-  * new state; a [[semiNaive]] loop stops on an empty delta.
+  * new state (min-label CC: no label dropped); a [[semiNaive]] loop
+  * stops on an empty delta. With adaptive execution on, the action is
+  * not the only work that runs eagerly: taking a lazy cut
+  * (`localCheckpoint(eager = false)`) plans the cut query adaptively,
+  * which runs every shuffle stage of it at once; only its final stage
+  * waits for the probe. An [[invariant]] cut over a join chain (CC's
+  * pair plan) therefore runs that chain's jobs where it is taken.
   *
   * '''The budget.''' An operator that promises a fixpoint (CC, k-core,
   * converged LPA) passes [[MustConverge]]: running out of rounds raises

@@ -204,9 +204,10 @@ object Graph {
     *
     * Scale shape: per round ONE join of the symmetric edge list
     * against the node-keyed label frame (keyed on dst) + ONE
-    * (node, label) count + ONE node-keyed argmax — all keyed
-    * shuffles, linear in edges. The argmax is max(struct(c, -label)):
-    * a map-side-combinable aggregation, NOT a per-node window sort.
+    * node-keyed exchange shared by the (node, label) count and the
+    * node-keyed argmax — keyed shuffles, linear in edges. The argmax
+    * is max(struct(c, -label)): an aggregation, NOT a per-node window
+    * sort.
     * Label state is 16 bytes/node.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
@@ -258,8 +259,8 @@ object Graph {
   }
 
   /** One synchronous LPA round (see [[labelPropagation]] for the
-    * plan-shape discussion — one dst-keyed join, one (node, label)
-    * count, one map-side-combinable argmax).
+    * plan-shape discussion — one dst-keyed join, then one src-keyed
+    * exchange under the (node, label) count and the argmax).
     */
   private def lpaRound(sym: DataFrame, lbl: DataFrame): DataFrame = {
     val nbr = sym.join(lbl.select(col("node").as("dst"), col("l")), Seq("dst"))
@@ -267,8 +268,9 @@ object Graph {
     // src alone satisfies the clustered distribution of BOTH the
     // (src, l) count and the per-src argmax (subset rule), so after
     // the explicit repartition the two aggregations run back-to-back
-    // with no further exchange. The count still aggregates partially
-    // before each task emits (hash agg above the exchange), and src
+    // with no further exchange. The price: that exchange ships the
+    // raw neighbour rows — the count's partial aggregation sits above
+    // it, so nothing is combined map-side before the shuffle. src
     // cardinality = node count, so the partitioning is as spread as
     // (src, l) was. Measured at sf0.1: g05 2.9 -> 2.4 s, g10
     // 4.0 -> 3.3 s warm; values unchanged (oracle-gated).

@@ -3,6 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Filter, LogicalPlan, Project, Repartition, RepartitionByExpression}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.internal.SQLConf
 
 /** Generic, reusable operator API — the canned `SparkEntry.queries`
   * are instantiations of these over the test corpus; users apply them
@@ -24,6 +28,11 @@ object Ops {
     * same truncated lineage, survivable executors. One knob, every
     * loop (CheckpointModeSpec pins value-equality of both modes and
     * that reliable mode actually writes checkpoint files).
+    *
+    * `eager = false` defers only the final stage: with adaptive
+    * execution on, building the local checkpoint's rdd plans the cut
+    * query adaptively, which runs every shuffle stage of it right away
+    * — only the last stage runs at the first action on the result.
     */
   def checkpointFrame[T](df: Dataset[T], eager: Boolean = false): Dataset[T] =
     if (df.sparkSession.conf
@@ -48,27 +57,57 @@ object Ops {
     * (measured: the d04 shingle build ran 1.2-1.9 s on one task of a
     * 32-core session). Guide §2.5's "input skew: one unsplittable
     * file → repartition immediately after the read", made
-    * scale-adaptive: the repartition only fires when the scan cannot
+    * scale-adaptive: the repartition only fires when the input cannot
     * fill the session's cores, so a production-scale table (thousands
     * of splits) passes through untouched — no shuffle is ever added at
     * 100 TB. Locally it costs one sub-MB round-robin exchange
     * (deterministic under Spark's sort-before-repartition) and unlocks
     * full-width parallelism for the expression work above it.
     *
-    * The split count is [[inputEstimate]]'s plan-time estimate — no
-    * physical planning, so a 100 TB scan never pays a second planning
-    * pass here. Non-file plans (in-memory test frames, post-shuffle
-    * inputs) keep the rdd-based count; intended inputs are scan-only
-    * projections, where that path is never reached.
+    * The partition count is decided at plan time and runs no job: a
+    * plan over ONE file scan opens [[inputEstimate]]'s splits; an
+    * explicit `repartition(n)` / `coalesce(n)` keeps n; a shuffled
+    * input under adaptive execution (a pipeline cell's dedup output)
+    * gets the count `CoalesceShufflePartitions` would size from the
+    * estimated bytes — asking its rdd would run every shuffle stage of
+    * its plan and throw the result away; anything else has no
+    * exchange, and its rdd's count runs nothing.
     */
   def fanOutSmallScan(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val parts: Long = inputEstimate(df).splits.getOrElse {
-      try df.rdd.getNumPartitions.toLong
-      catch { case scala.util.control.NonFatal(_) => cores.toLong }
+    val est = inputEstimate(df)
+    def explicit(p: LogicalPlan): Option[Long] = p match {
+      case r: Repartition => Some(r.numPartitions.toLong)
+      case r: RepartitionByExpression => r.optNumPartitions.map(_.toLong)
+      case Project(_, child) => explicit(child)
+      case Filter(_, child) => explicit(child)
+      case _ => None
     }
+    val parts: Long = est.splits.orElse(explicit(df.queryExecution.optimizedPlan))
+      .getOrElse(df.queryExecution.executedPlan match {
+        case _: AdaptiveSparkPlanExec =>
+          coalescedPartitions(df.sparkSession.sessionState.conf, est.bytes, cores)
+        case _ =>
+          try df.rdd.getNumPartitions.toLong
+          catch { case scala.util.control.NonFatal(_) => cores.toLong }
+      })
     if (parts >= cores) df else df.repartition(cores)
   }
+
+  /** `ShufflePartitionsUtil`'s coalesced partition count for a shuffle
+    * of `bytes`: the advisory size, shrunk to spread over `cores` when
+    * parallelism comes first, never below the minimum partition size.
+    */
+  private def coalescedPartitions(conf: SQLConf, bytes: BigInt, cores: Int): Long =
+    if (!conf.coalesceShufflePartitionsEnabled) conf.numShufflePartitions
+    else {
+      val minParts = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse(
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) cores else 1)
+      val target = ((bytes + minParts - 1) / minParts)
+        .min(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        .max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+      ((bytes + target - 1) / target).max(1).min(conf.numShufflePartitions).toLong
+    }
 
   /** Plan-time size of `df`'s input — no job runs, no physical plan is
     * built. `bytes` is the optimizer's size estimate of the plan (what
@@ -147,10 +186,11 @@ object Ops {
 
   /** Exact pairwise Jaccard >= `threshold` over a token-array column,
     * via posting-list self-join intersection counts (no cross join,
-    * no array payloads through shuffles). Token arrays are made
-    * distinct on entry (set semantics) so the posting-count and
-    * array_intersect verify paths agree for any input; for already-
-    * distinct arrays the array_distinct is a no-op.
+    * no token arrays through shuffles). Token arrays are made distinct
+    * on entry (set semantics); for already-distinct arrays the
+    * array_distinct is a no-op. `maxPostingsPerToken` caps candidate
+    * generation; the values of surviving pairs are exact either way
+    * (see [[overlapCounts]]).
     *
     * Caching: the capped path caches the posting list for its 3-5
     * consumers and cannot unpersist it before the caller's terminal
@@ -163,11 +203,9 @@ object Ops {
       idCol: String,
       tokensCol: String,
       threshold: Double,
-      maxPostingsPerToken: Option[Int] = None,
-      pairwiseVerify: Boolean = false
+      maxPostingsPerToken: Option[Int] = None
   ): DataFrame = {
-    val (counts, sizes) =
-      overlapCounts(df, idCol, tokensCol, _ < _, maxPostingsPerToken, pairwiseVerify)
+    val (counts, sizes) = overlapCounts(df, idCol, tokensCol, _ < _, maxPostingsPerToken)
     counts
       .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
       .join(sizes.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
@@ -177,24 +215,20 @@ object Ops {
   }
 
   /** Ordered-pair containment (|A∩B| / |A| >= threshold) with the same
-    * scale knobs as [[jaccardPairs]]: optional hot-token cap on
-    * candidate GENERATION (excluded tokens are a recall trade only),
-    * and a pairwise array_intersect verify for high-duplicate corpora
-    * where restricting postings to candidate docs degenerates to the
-    * full join (see [[overlapCounts]]). Values of surviving pairs are
-    * always EXACT. d15's canned query is the cap=None postings form of
-    * this (same pairs and counts; d15 additionally rounds + orders).
+    * optional hot-token cap on candidate GENERATION as [[jaccardPairs]]
+    * (excluded tokens are a recall trade only). Values of surviving
+    * pairs are always EXACT. d15's canned query is the cap=None
+    * postings form of this (same pairs and counts; d15 additionally
+    * rounds + orders).
     */
   def containmentPairs(
       df: DataFrame,
       idCol: String,
       tokensCol: String,
       threshold: Double,
-      maxPostingsPerToken: Option[Int] = None,
-      pairwiseVerify: Boolean = false
+      maxPostingsPerToken: Option[Int] = None
   ): DataFrame = {
-    val (counts, sizes) =
-      overlapCounts(df, idCol, tokensCol, _ =!= _, maxPostingsPerToken, pairwiseVerify)
+    val (counts, sizes) = overlapCounts(df, idCol, tokensCol, _ =!= _, maxPostingsPerToken)
     counts
       .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
       .withColumn("containment", col("_c").cast("double") / col("_na"))
@@ -209,29 +243,23 @@ object Ops {
     * (_id, _n)).
     *
     * Worst-case bound for scale: a token appearing in k docs emits
-    * k^2 candidate rows. With a cap, candidate GENERATION excludes
-    * tokens hotter than maxPostingsPerToken (bounding the blowup);
-    * the counts are then computed EXACTLY — from the full postings of
-    * just the candidate docs (default, no array payloads through
-    * shuffles), or with pairwiseVerify=true via array_intersect per
-    * candidate PAIR (the flag is only consulted in the capped branch;
-    * uncapped counts are already exact, so pairwiseVerify without a
-    * cap is a no-op). The pairwise mode is the right verify when the
-    * duplicate rate is high: restricting to candidate docs then
-    * degenerates to the full posting join (measured 10x-replicated
-    * corpus: 80s postings-verify vs ~10s pairwise for the identical
-    * 688-pair result), while its cost is candidates x |tokens|
-    * instead of sum(df^2). Pairs whose only shared tokens are capped
-    * ones are missed either way — a recall trade-off, never a
-    * precision or value error.
+    * k^2 candidate rows. With a cap, tokens in more than
+    * `maxPostingsPerToken` docs are HOT: candidate generation self-joins
+    * only the non-hot postings, whose count is each candidate's shared
+    * non-hot tokens, and the verify adds the hot tokens both docs hold —
+    * `size(array_intersect)` of the two docs' hot-token sets. So the
+    * counts are EXACT |A∩B| in one pass: no second self-join over the
+    * candidate docs' postings, and only hot-token sets (not whole token
+    * arrays) ride the candidate joins. Pairs whose only shared tokens
+    * are hot are missed — a recall trade-off, never a precision or
+    * value error.
     */
   private def overlapCounts(
       df: DataFrame,
       idCol: String,
       tokensCol: String,
       pair: (Column, Column) => Column,
-      maxPostingsPerToken: Option[Int],
-      pairwiseVerify: Boolean
+      maxPostingsPerToken: Option[Int]
   ): (DataFrame, DataFrame) = {
     val posting =
       df.select(col(idCol).as("_id"), explode(array_distinct(col(tokensCol))).as("_t"))
@@ -247,28 +275,24 @@ object Ops {
     val counts = maxPostingsPerToken match {
       case None => pairCounts(posting)
       case Some(cap) =>
-        // the capped path consumes the posting list 3-5 times (df
-        // stats, anti-join, both self-join sides, sizes) — cache it
-        // rather than re-exploding the token arrays per consumer
+        // the capped path consumes the posting list 4-5 times (df
+        // stats, anti-join, semi-join, sizes) — cache it rather than
+        // re-exploding the token arrays per consumer; `capped` feeds
+        // both self-join sides
         posting.cache()
         val hot = posting.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
           .filter(col("_df") > cap).select(col("_t"))
         val capped = posting.join(hot, Seq("_t"), "left_anti").cache()
-        val cands = pairCounts(capped).select(col("id_a"), col("id_b"))
-        if (pairwiseVerify) {
-          val arrays =
-            df.select(col(idCol).as("_aid"), array_distinct(col(tokensCol)).as("_tk"))
-          cands
-            .join(arrays.select(col("_aid").as("id_a"), col("_tk").as("_ta")), "id_a")
-            .join(arrays.select(col("_aid").as("id_b"), col("_tk").as("_tb")), "id_b")
-            .withColumn("_c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
-            .select(col("id_a"), col("id_b"), col("_c"))
-        } else {
-          val candDocs = cands
-            .select(explode(array(col("id_a"), col("id_b"))).as("_id")).distinct()
-          val restricted = posting.join(candDocs, Seq("_id"), "left_semi")
-          pairCounts(restricted).join(cands, Seq("id_a", "id_b"), "left_semi")
-        }
+        val hotSets = posting.join(hot, Seq("_t"), "left_semi")
+          .groupBy(col("_id")).agg(collect_set(col("_t")).as("_h"))
+        // a doc without hot tokens has no set and shares none
+        // (size(null) reads -1, or null under ANSI)
+        val sharedHot = when(col("_ha").isNull || col("_hb").isNull, lit(0))
+          .otherwise(size(array_intersect(col("_ha"), col("_hb"))))
+        pairCounts(capped)
+          .join(hotSets.select(col("_id").as("id_a"), col("_h").as("_ha")), Seq("id_a"), "left")
+          .join(hotSets.select(col("_id").as("id_b"), col("_h").as("_hb")), Seq("id_b"), "left")
+          .select(col("id_a"), col("id_b"), (col("_c") + sharedHot).as("_c"))
     }
     (counts, sizes)
   }

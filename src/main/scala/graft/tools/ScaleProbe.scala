@@ -20,16 +20,12 @@ object ScaleProbe {
     val cap = args.lift(1).map(_.toInt).getOrElse(200)
     val planes = args.lift(2).map(_.toInt).getOrElse(12)
     // capped: skip the deliberately-quadratic baselines;
-    // pairwise: additionally skip the postings-restricted verify
-    // (degenerates toward the full join on 100%-dup-rate corpora —
-    // measured at 10x; pairwise verify is the documented choice there)
-    // cheap: only the linear probes + the scaled-plane knob (for
-    // scales where the pair-verify paths exceed single-box local
-    // disk — at 100x the pairwise candidate join spills >60 GB; a
-    // cluster spreads that across executor disks)
+    // cheap: additionally skip the pair-verify paths (for scales
+    // where they exceed single-box local disk — at 100x the candidate
+    // verify join spills >60 GB; a cluster spreads that across
+    // executor disks)
     val mode = args.lift(3).getOrElse("full")
-    val cappedOnly = mode == "capped" || mode == "pairwise" || mode == "cheap"
-    val pairwiseOnly = mode == "pairwise" || mode == "cheap"
+    val cappedOnly = mode == "capped" || mode == "cheap"
     val cheapOnly = mode == "cheap"
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -66,16 +62,11 @@ object ScaleProbe {
     else t(s"ngramJaccard UNCAPPED") {
       graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, Int.MaxValue).count()
     }
-    if (pairwiseOnly)
-      println(s"ngramJaccard cap=$cap (postings verify): SKIPPED (mode=pairwise)")
-    else t(s"ngramJaccard cap=$cap") {
-      graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, cap).count()
-    }
     if (cheapOnly)
       println("pair-verify paths: SKIPPED (mode=cheap; spill exceeds single-box disk at this scale)")
     else {
-      t(s"ngramJaccard cap=$cap pairwise-verify") {
-        graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, cap, pairwiseVerify = true).count()
+      t(s"ngramJaccard cap=$cap") {
+        graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, cap).count()
       }
       t(s"minhashLshAtScale (pairwise verify)") {
         graft.operators.Dedup.minhashLshAtScale(docs).count()

@@ -50,6 +50,20 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(labels.size == 41 && labels.values.toSet == Set(1L))
   }
 
+  test("min-label settles in one round when the initial labels are final") {
+    import spark.implicits._
+    // a 6-clique on 10..15 and a star centred on its minimum id 1:
+    // every node's min(self, neighbours) already is its component's
+    // minimum, so round 1 lowers no label
+    val clique = for (a <- 10L to 15L; b <- a + 1 to 15L) yield (a, b)
+    val star = (2L to 9L).map(leaf => (1L, leaf))
+    val edges = (clique ++ star).toDF("a", "b")
+    val (labels, rounds) = Clustering.minLabel(edges, "a", "b", 20, "id", "label")
+    assert(rounds == 1, s"min-label took $rounds rounds")
+    assert(labelsOf(labels) ==
+      ((10L to 15L).map(_ -> 10L) ++ (1L to 9L).map(_ -> 1L)).toMap)
+  }
+
   test("star raises when maxIterations is too small") {
     val chain = spark.range(999).select(col("id").as("a"), (col("id") + 1).as("b"))
     val ex = intercept[IllegalArgumentException] {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale guards for the dedup pipelines: the hot-shingle cap must
@@ -8,6 +9,62 @@ import org.apache.spark.sql.functions._
   * keeping exact Jaccard values for every surviving pair.
   */
 class DedupScaleSpec extends SparkTestBase {
+
+  /** The pre-round-13 d02/d21 verify, kept ONLY as the independent
+    * reference formulation for the equality pin below: posting lists
+    * restricted to candidate docs (semi-join), shared-shingle counts
+    * via a shingle-keyed self-join, candidate-filtered, exact Jaccard
+    * from per-doc sizes. Value-identical to
+    * [[Dedup.minhashLshAtScale]] but quadratic within one hot
+    * shingle's candidate posting — a boilerplate shingle shared by g
+    * candidate docs emits g²/2 join rows before the pair agg, which is
+    * why the canned queries route through the pairwise verify.
+    */
+  private def minhashLshPostingVerifyRef(docs: DataFrame, threshold: Double = 0.4): DataFrame = {
+    val sh = Dedup.shingleArrays(docs).cache()
+    val posting = sh.select(col("doc_id"), explode(col("sh")).as("s"))
+    val cands = Dedup.minhashCandidates(sh).cache()
+    val candDocs =
+      cands.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
+    val restricted = posting.join(candDocs, Seq("doc_id"), "left_semi")
+    val sizes = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
+    restricted.select(col("doc_id").as("id_a"), col("s"))
+      .join(restricted.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
+      .where(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("c"))
+      .join(cands, Seq("id_a", "id_b"), "left_semi")
+      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
+      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
+      .withColumn("jaccard",
+        col("c").cast("double") / (col("na") + col("nb") - col("c")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** The original posting-groupBy signature derivation, kept as the
+    * independent reference formulation for the banding equality pin
+    * below (min() aggregate over the exploded (doc_id, s) postings,
+    * HOF-free but one extra shuffle; 16 permutations, 4 bands of 4).
+    */
+  private def minhashCandidatesPostingRef(posting: DataFrame): DataFrame = {
+    val mhAggs = (0 until 16).map { i =>
+      min(substring(md5(concat(col("s"), lit(s"|$i"))), 1, 16)).as(s"mh$i")
+    }
+    val sig = posting.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
+    val bands = sig.select(
+      col("doc_id"),
+      posexplode(
+        array((0 until 4).map(bnd =>
+          md5(concat_ws("|", (bnd * 4 until bnd * 4 + 4).map(r => col(s"mh$r")): _*))
+        ): _*)
+      ).as(Seq("band", "bh"))
+    )
+    val la = bands.select(col("doc_id").as("id_a"), col("band"), col("bh"))
+    val lb = bands.select(col("doc_id").as("id_b"), col("band"), col("bh"))
+    la.join(lb, Seq("band", "bh")).where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+  }
 
   // 120 docs: 10 boilerplate words shared by ALL docs + an 8-word
   // tail. Docs 0..5 reuse 3 tails (id % 3), so (0,3) (1,4) (2,5) are
@@ -44,11 +101,84 @@ class DedupScaleSpec extends SparkTestBase {
     capped.foreach { case (pair, j) =>
       assert(j == 1.0 && uncapped(pair) == j, s"$pair: capped=$j uncapped=${uncapped(pair)}")
     }
-    // the pairwise (array_intersect) verify mode returns the identical
-    // result — it is a cost trade-off, not a semantics change
-    val pairwise = Dedup.ngramJaccardAtScale(skewedDocs, 0.3, 10, pairwiseVerify = true)
+    // the one-pass verify (non-hot count + shared hot-token sets)
+    // returns what re-counting the candidate docs' full postings does
+    val postingRef = cappedJaccardPostingRef(skewedDocs, 0.3, 10)
+    assert(postingRef == capped, s"posting verify diverged: ${postingRef.size} vs ${capped.size}")
+  }
+
+  /** The restricted-postings capped verify `Ops.jaccardPairs` used
+    * before its one-pass verify, kept as the independent reference
+    * formulation: candidates from the non-hot postings, then exact
+    * counts re-derived by a shingle-keyed self-join over the FULL
+    * postings of the candidate docs.
+    */
+  private def cappedJaccardPostingRef(
+      docs: DataFrame, threshold: Double, cap: Int): Map[(Long, Long), Double] = {
+    val posting = Dedup.shingleArrays(docs).select(col("doc_id").as("_id"), explode(col("sh")).as("_t"))
+    val sizes = posting.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
+    def pairCounts(src: DataFrame) =
+      src.select(col("_id").as("id_a"), col("_t"))
+        .join(src.select(col("_id").as("id_b"), col("_t")), Seq("_t"))
+        .where(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("_c"))
+    val hot = posting.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
+      .filter(col("_df") > cap).select(col("_t"))
+    val cands = pairCounts(posting.join(hot, Seq("_t"), "left_anti")).select(col("id_a"), col("id_b"))
+    val candDocs = cands.select(explode(array(col("id_a"), col("id_b"))).as("_id")).distinct()
+    pairCounts(posting.join(candDocs, Seq("_id"), "left_semi"))
+      .join(cands, Seq("id_a", "id_b"), "left_semi")
+      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
+      .join(sizes.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
+      .withColumn("jaccard", col("_c").cast("double") / (col("_na") + col("_nb") - col("_c")))
+      .filter(col("jaccard") >= threshold)
+      .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")), r.getAs[Double]("jaccard")))
+      .toMap
+  }
+
+  // Surviving pairs share hot AND non-hot tokens with partial overlap,
+  // so each exact value lies strictly between the threshold and 1 and
+  // any count missing the hot tokens both docs hold reads low. Hot
+  // tokens h0..h2 sit in more than `cap` = 3 docs; the fillers (ids
+  // 20..27) carry them with six private tokens each, far below every
+  // threshold. (1,2): 3 hot + 4 non-hot shared of 9 each; (3,4): hot
+  // sets {h0,h1} vs {h0,h2} meet in h0; (5,6): no hot token on either
+  // side; (7,8): a hot token on one side only.
+  private def hotTokenDocs = {
+    import spark.implicits._
+    def p(prefix: String, n: Int) = (1 to n).map(i => s"$prefix$i")
+    val hot3 = Seq("h0", "h1", "h2")
+    (Seq(
+      1L -> (hot3 ++ p("a", 4) ++ p("pp", 2)),
+      2L -> (hot3 ++ p("a", 4) ++ p("qq", 2)),
+      3L -> (Seq("h0", "h1") ++ p("b", 3) ++ Seq("r1")),
+      4L -> (Seq("h0", "h2") ++ p("b", 3) ++ Seq("s1", "s2")),
+      5L -> (p("c", 4) ++ Seq("t1")),
+      6L -> (p("c", 4) ++ Seq("u1")),
+      7L -> (Seq("h0") ++ p("d", 4)),
+      8L -> (p("d", 4) ++ Seq("v1"))
+    ) ++ (20L to 27L).map(id => id -> (hot3 ++ p(s"f${id}_", 6)))).toDF("id", "tk")
+  }
+
+  test("capped survivors carry the exact overlap when they share hot and non-hot tokens") {
+    val docs = hotTokenDocs
+    def jac(cap: Option[Int]) = Ops.jaccardPairs(docs, "id", "tk", 0.4, cap)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(pairwise == capped, s"pairwise verify diverged: ${pairwise.size} vs ${capped.size}")
+    val (exact, capped) = (jac(None), jac(Some(3)))
+    assert(capped.keySet == Set((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L)), s"capped: $capped")
+    capped.foreach { case (pair, j) =>
+      assert(j > 0.4 && j < 1.0 && exact.get(pair).contains(j),
+        s"$pair: capped=$j uncapped=${exact.get(pair)}")
+    }
+    def cont(cap: Option[Int]) = Ops.containmentPairs(docs, "id", "tk", 0.5, cap)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(4)))).toMap
+    val (exactC, cappedC) = (cont(None), cont(Some(3)))
+    assert(cappedC.keySet == Set((1L, 2L), (2L, 1L), (3L, 4L), (4L, 3L), (5L, 6L), (6L, 5L),
+      (7L, 8L), (8L, 7L)), s"capped: $cappedC")
+    cappedC.foreach { case (pair, v @ (_, c)) =>
+      assert(c > 0.5 && c < 1.0 && exactC.get(pair).contains(v),
+        s"$pair: capped=$v uncapped=${exactC.get(pair)}")
+    }
   }
 
   test("pairwise array_intersect verify equals the posting-join verify (d02/d21 reroute)") {
@@ -60,7 +190,7 @@ class DedupScaleSpec extends SparkTestBase {
     val pairwise = Dedup.minhashLshAtScale(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     spark.catalog.clearCache()
-    val postingRef = Dedup.minhashLshPostingVerifyRef(docs)
+    val postingRef = minhashLshPostingVerifyRef(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(pairwise == postingRef && pairwise.nonEmpty,
       s"${pairwise.size} vs ${postingRef.size}")
@@ -93,7 +223,8 @@ class DedupScaleSpec extends SparkTestBase {
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val grouped = Dedup.minhashCandidatesPostingRef(Dedup.shinglePosting(spark, sfDir))
+    val grouped = minhashCandidatesPostingRef(
+        Dedup.shingleArrays(spark, sfDir).select(col("doc_id"), explode(col("sh")).as("s")))
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(perRow == grouped && perRow.nonEmpty)

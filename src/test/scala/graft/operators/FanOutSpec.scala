@@ -51,4 +51,31 @@ class FanOutSpec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions >= cores)
     assert(Ops.fanOutSmallScan(df) eq df)
   }
+
+  test("a shuffled input under adaptive execution is decided without running a job") {
+    import spark.implicits._
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "true")
+    val grouped = session.range(1000).groupBy(($"id" % 10).as("k")).count()
+    val sc = session.sparkContext
+    // concurrent suites share the context: count only this thread's jobs
+    val group = s"fanout-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "fanOutSmallScan decision")
+    val out = try Ops.fanOutSmallScan(grouped) finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftbridge.SparkCoreBridge.flushListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"fanOutSmallScan ran ${jobs.get} jobs")
+    // a few KB coalesce into one partition: spread to session width
+    assert(!(out eq grouped))
+    assert(out.count() == 10L)
+  }
 }

@@ -106,12 +106,11 @@ class Round7bOpsSpec extends SparkTestBase {
     // (round 17) global clearCache removed: suites run concurrently on a shared session, and clearing the GLOBAL cache yanks other suites' in-flight cached frames
   }
 
-  test("containmentAtScale capped+pairwise keeps exact values on surviving pairs") {
+  test("containmentAtScale capped keeps exact values on surviving pairs") {
     val docs = Tables.load(spark, sfDir, "documents")
     val canned = q("d15_containment")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val capped = Dedup.containmentAtScale(docs, 0.8,
-      maxPostingsPerToken = Some(8), pairwiseVerify = true)
+    val capped = Dedup.containmentAtScale(docs, 0.8, maxPostingsPerToken = Some(8))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
     // cap is a recall trade only: surviving pairs carry the EXACT
     // full-posting counts, never values computed from capped postings
