@@ -12,25 +12,18 @@ import org.apache.spark.sql.expressions.Window
   */
 object Clustering {
   /** Connected components over an undirected edge list (two BIGINT
-    * columns). Two algorithms, same output contract — (idOut,
-    * labelOut): every node appearing in an edge, labeled by its
-    * component's minimum node id:
+    * columns) by min-label propagation. Output (idOut, labelOut):
+    * every node appearing in an edge, labeled by its component's
+    * minimum node id. Each round is a keyed join + aggregation (never
+    * a cross join); rounds converge at the largest component
+    * DIAMETER. Near-dup graphs are near-cliques (1-2 rounds) — the
+    * right choice for dedup workloads. For graphs with long chains
+    * (web-crawl dup graphs) call [[connectedComponentsStar]], which
+    * has the same output contract and converges in O(log n) rounds
+    * regardless of diameter.
     *
-    *  - `algo = "minlabel"` (default): min-label propagation. Each
-    *    round is a keyed join + aggregation (never a cross join);
-    *    rounds converge at the largest component DIAMETER. Near-dup
-    *    graphs are near-cliques (1-2 rounds) — the right default for
-    *    dedup workloads.
-    *  - `algo = "star"`: alternating large-star/small-star contraction
-    *    (Kiveris et al., "Connected Components in MapReduce and
-    *    Beyond", SoCC'14) — converges in O(log n) rounds regardless of
-    *    diameter, the safe choice for web-crawl dup graphs with long
-    *    chains (ConnectedComponentsSpec pins a 10k-node chain to
-    *    ~log-many rounds where min-label would need ~10k).
-    *
-    * Convergence is detected by one cheap action per round (min-label:
-    * did any label drop; star: a decreasing scalar potential), never a
-    * driver-side diff of the frames. Both algorithms raise when
+    * Convergence is detected by one cheap action per round (did any
+    * label drop), never a driver-side diff of the frames. Raises when
     * `maxIterations` runs out before the fixpoint ([[Fixpoint]]'s
     * budget rule) instead of returning a partial labeling.
     */
@@ -40,13 +33,8 @@ object Clustering {
       bCol: String,
       maxIterations: Int = 20,
       idOut: String = "id",
-      labelOut: String = "label",
-      algo: String = "minlabel"
-  ): DataFrame =
-    if (algo == "star")
-      connectedComponentsStar(edgePairs, aCol, bCol,
-        math.max(maxIterations, 50), idOut, labelOut)._1
-    else minLabel(edgePairs, aCol, bCol, maxIterations, idOut, labelOut)._1
+      labelOut: String = "label"
+  ): DataFrame = minLabel(edgePairs, aCol, bCol, maxIterations, idOut, labelOut)._1
 
   /** Min-label CC, returning (labels, roundsUsed). Each node starts at
     * the minimum of itself and its neighbours; a round lowers a label
@@ -78,7 +66,7 @@ object Clustering {
     val (labels, rounds) = try Fixpoint.iterate(init, maxIterations,
       Fixpoint.MustConverge("connectedComponents",
         "raise maxIterations (min-label needs the largest component's diameter), " +
-          "or use algo = \"star\""),
+          "or call connectedComponentsStar"),
       settled) { (labels, _) =>
       val nmin = edges.join(labels.select(col("id").as("src"), col("lbl")), "src")
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
@@ -151,7 +139,9 @@ object Clustering {
     * O(log n) independent of component diameter. Convergence: the
     * (edge-count, sum(src), sum(dst)) triple is a strictly decreasing
     * potential until fixpoint (the paper's potential argument), so
-    * one cheap 3-scalar action per round detects stability.
+    * one cheap 3-scalar action per round detects stability. Labels
+    * follow [[connectedComponents]]' output contract; running out of
+    * `maxIterations` raises.
     */
   def connectedComponentsStar(
       edgePairs: DataFrame,

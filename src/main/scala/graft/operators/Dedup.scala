@@ -259,68 +259,59 @@ object Dedup {
       )
   }
 
+  /** The band index's lifecycle ([[IndexLayout.KeySetIndex]]): rows
+    * (doc_id, band, bh, pfx) under hive (band, pfx) dirs, where `pfx`
+    * is the first hex char of the band hash — band-count × 16
+    * directories.
+    */
+  private val BandIndex = new IndexLayout.KeySetIndex("BandIndex", "band", "pfx")
+
+  private def bandIndexKeys(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandKeys(docs, idCol, textCol).withColumnRenamed(idCol, "doc_id")
+      .withColumn("pfx", substring(col("bh"), 1, 1))
+
   /** Persist the standing corpus band index — the production form of
     * d11's "standing corpus whose (band, bh) index would be
     * precomputed and stored". Written through the pattern-routed sink
-    * (S3), hive-partitioned by (band, bh-prefix): `pfx` is the first
-    * hex char of the band hash, giving band-count × 16 directories.
-    * Day-2 ingestion probes the stored files and NEVER re-shingles
-    * the corpus — index build cost is paid once, at corpus-write
-    * time — and because the probe join carries `pfx` as a key,
-    * DYNAMIC PARTITION PRUNING cuts the scan to only the buckets the
-    * batch's band keys hit: the day-2 read is O(buckets probed), not
-    * O(index). At 100 TB widen the prefix (2–3 hex chars → 256–4096
-    * buckets per band) so each directory stays file-pruned.
+    * (S3) as a versioned epoch (the [[IndexLayout.KeySetIndex]]
+    * lifecycle: a rewrite never touches live data, and a corpus that
+    * yields no band keys raises instead of publishing an unreadable
+    * epoch). Day-2 ingestion probes the stored files and NEVER
+    * re-shingles the corpus — index build cost is paid once, at
+    * corpus-write time — and because the probe join carries `pfx` as
+    * a key, DYNAMIC PARTITION PRUNING cuts the scan to only the
+    * buckets the batch's band keys hit: the day-2 read is O(buckets
+    * probed), not O(index). At 100 TB widen the prefix (2–3 hex chars
+    * → 256–4096 buckets per band) so each directory stays file-pruned.
     */
   def writeBandIndex(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       path: String
-  ): Unit = {
-    val spark = docs.sparkSession
-    // versioned publish (IndexLayout): build the hive layout in a
-    // fresh version directory, then atomically flip the manifest —
-    // a rewrite over an existing index never touches live data, and
-    // readers racing the flip see the old version or the new one.
-    val v = IndexLayout.nextVersion(spark, path)
-    graft.sinks.RoutedSink.standard()
-      .write(s"parquet:$path/$v:by:band+pfx",
-        bandKeys(docs, idCol, textCol).withColumnRenamed(idCol, "doc_id")
-          .withColumn("pfx", substring(col("bh"), 1, 1)))
-    IndexLayout.publish(spark, path, v)
-    IndexLayout.gcVersions(spark, path, keep = 1)
-  }
+  ): Unit = BandIndex.write(bandIndexKeys(docs, idCol, textCol), path)
 
   /** Day-N index maintenance (the day-3 story): after a batch's
     * near-dup verdicts are in and its KEPT docs selected (d12's
     * keeper rule), their band keys must join the standing index —
     * otherwise tomorrow's batch can near-duplicate today's keepers
-    * undetected. Routed-sink APPEND into the same (band, pfx) hive
-    * layout: new files land only in the buckets the kept docs hash
-    * to, nothing existing is rewritten, and the very next
+    * undetected. Routed-sink APPEND into the current epoch's (band,
+    * pfx) hive layout: new files land only in the buckets the kept
+    * docs hash to, nothing existing is rewritten, and the very next
     * [[probeBandIndex]] sees day-2 keepers with zero corpus
     * recompute. Pass only the KEPT docs — appending dropped
     * near-dups would make the index flag every future re-ingest of
     * content it already rejected against a doc_id that no longer
-    * exists downstream.
+    * exists downstream. Single-maintainer contract: serialize appends
+    * and compactions in one maintenance queue; an append that a
+    * compaction's publish overtakes raises.
     */
   def appendBandIndex(
       kept: DataFrame,
       idCol: String,
       textCol: String,
       path: String
-  ): Unit =
-    // appends land inside the CURRENT version directory (manifest-
-    // resolved). Single-maintainer contract: an append racing a
-    // compaction's publish can land in the version the compaction
-    // already read — serialize appends and compactions in one
-    // maintenance queue (the norm for index upkeep), as with any
-    // non-transactional hive layout.
-    graft.sinks.RoutedSink.standard()
-      .write(s"parquet-append:${IndexLayout.resolveDir(kept.sparkSession, path)}:by:band+pfx",
-        bandKeys(kept, idCol, textCol).withColumnRenamed(idCol, "doc_id")
-          .withColumn("pfx", substring(col("bh"), 1, 1)))
+  ): Unit = BandIndex.append(bandIndexKeys(kept, idCol, textCol), path)
 
   /** Register documents for DELETION from the persisted band index —
     * the takedown/retention obligation of a 100 TB training corpus.
@@ -332,7 +323,7 @@ object Dedup {
     * reclaimed). d12's drop list is the natural producer.
     */
   def tombstoneBandIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.addTombstones(ids, idCol, "doc_id", path)
+    BandIndex.tombstone(ids, idCol, path)
 
   /** Periodic compaction for the append-maintained index: daily
     * appends leave one small file per (bucket, day), and a year of
@@ -341,75 +332,26 @@ object Dedup {
     * hash-repartition pass keyed on the bucket columns, so every
     * bucket's rows land in exactly one task (for a 100 TB index,
     * salt the repartition key to target N files per bucket instead).
-    *
-    * Publishing is crash-safe and reader-atomic since round 6: the
-    * rewrite builds the next VERSION directory and atomically flips
-    * the `_CURRENT` manifest (see [[IndexLayout]] — the round-5
-    * two-rename swap had a no-directory window for racing readers and
-    * no crash recovery). On entry, [[IndexLayout.recover]] cleans
-    * anything a previous crash left (stale legacy swap dirs,
-    * unpublished version dirs) and a legacy unversioned index is
-    * migrated in place by metadata-only renames.
-    *
-    * Compaction also DISTINCTs — the index is semantically a set of
-    * (doc_id, band, bh) keys, and a replayed streaming micro-batch
-    * (the at-least-once file-append caveat) or a re-run batch append
-    * leaves exact duplicate rows — and applies pending TOMBSTONES
-    * ([[tombstoneBandIndex]]): an anti-join (AQE-sized; the tombstone
-    * side is takedown-list sized, not corpus-sized) drops deleted
-    * docs' band keys from the rewrite. Only the tombstone files
-    * present when compaction STARTED are deleted afterwards, so ids
-    * arriving mid-compaction survive to the next cycle.
-    *
-    * `keepVersions` retired versions are retained as the reader grace
-    * window before GC.
+    * The rewrite DISTINCTs (a replayed append leaves exact duplicate
+    * rows), applies pending tombstones, and publishes a new epoch
+    * atomically — see [[IndexLayout.KeySetIndex.compact]]. A
+    * compaction whose tombstones cover every doc raises and leaves
+    * the current epoch live.
     */
-  def compactBandIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit = {
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    val src = IndexLayout.resolveDir(spark, path)
-    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
-    val base = spark.read.parquet(src).distinct()
-    val pruned =
-      if (tombFiles.isEmpty) base
-      else base.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    val next = IndexLayout.nextVersion(spark, path)
-    pruned
-      .repartition(col("band"), col("pfx"))
-      .write.mode("overwrite").partitionBy("band", "pfx").parquet(s"$path/$next")
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
+  def compactBandIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit =
+    BandIndex.compact(spark, path, keepVersions)
 
   /** Read a band index persisted by [[writeBandIndex]]. The result
     * feeds [[probeBandIndex]] (batch day-2) and
     * [[graft.streaming.Streams.dupCandidatesStream]] (ST6) unchanged —
     * one stored artifact serves both ingestion surfaces. The manifest
-    * is resolved HERE, so every read sees the latest published
-    * version (legacy unversioned paths read as before).
-    *
-    * Pending tombstones ([[tombstoneBandIndex]]) are masked
-    * immediately via an anti-join over the scan — a taken-down doc
-    * never surfaces as a candidate even before the compaction that
-    * deletes its rows. The mask sits between the scan and the probe
-    * join, which costs the probe its dynamic partition pruning WHILE
-    * tombstones are pending (Catalyst's DPP rule only looks through
-    * project/filter, not joins) — correctness outranks the scan cut,
-    * the window lasts until the next [[compactBandIndex]] reclaims
-    * the tombstone set, and the no-tombstone plan is byte-identical
-    * to round 5's (BandIndexSpec still pins the pruning).
+    * is resolved at read time and pending tombstones are masked
+    * ([[IndexLayout.KeySetIndex.read]]); with none pending the plan
+    * keeps its dynamic partition pruning (BandIndexSpec pins it).
     */
-  def readBandIndex(spark: SparkSession, path: String): DataFrame = {
-    val idx = spark.read.parquet(IndexLayout.resolveDir(spark, path))
-      .select(col("doc_id"), col("band").cast("int"),
-        col("pfx").cast("string"), col("bh"))
-    if (!IndexLayout.hasTombstones(spark, path)) idx
-    else idx.join(IndexLayout.readTombstones(spark, path, "doc_id"),
-      Seq("doc_id"), "left_anti")
-  }
+  def readBandIndex(spark: SparkSession, path: String): DataFrame =
+    BandIndex.read(spark, path,
+      col("doc_id"), col("band").cast("int"), col("pfx").cast("string"), col("bh"))
 
   /** Day-2 probe of a new batch against a PERSISTED band index:
     * band the batch per row (no aggregation), broadcast it against
@@ -818,7 +760,7 @@ object Dedup {
       // min-label propagation: near-dup clusters are almost cliques,
       // so 2-3 diameter-bounded rounds in practice (hard cap 20). The
       // driver-side loop carries only the convergence COUNT, not data.
-      (spark, dir) => clusterQuery(spark, dir, algo = "minlabel"),
+      (spark, dir) => clusterQuery(spark, dir, star = false),
       Some(d06OracleSql)
     ),
 
@@ -831,7 +773,7 @@ object Dedup {
       // graphs), where min-label's diameter-bounded rounds blow up.
       // Oracle-gating it proves algorithm equivalence on real pairs,
       // not just the spec's synthetic graphs.
-      (spark, dir) => clusterQuery(spark, dir, algo = "star"),
+      (spark, dir) => clusterQuery(spark, dir, star = true),
       Some(d06OracleSql)
     ),
 
@@ -1183,7 +1125,7 @@ object Dedup {
         // doc_id)): the map-side-combinable aggregation shape (the
         // s04/SCALING.md rule), not a per-cluster sort. One broadcast
         // of the (cluster, keeper) frame joins the verdict back.
-        val cl = clusterQuery(spark, dir, algo = "minlabel")
+        val cl = clusterQuery(spark, dir, star = false)
         val meta = Tables.load(spark, dir, "documents").select($"doc_id", $"n_chars")
         val j = cl.join(meta, "doc_id")
         val keep = j.groupBy($"cluster_id")
@@ -1642,8 +1584,8 @@ object Dedup {
     // value-identical, spec-pinned in DedupScaleSpec, which keeps the
     // posting form as its reference.
     val pairs = minhashLshAtScale(docs).select(col("id_a"), col("id_b"))
-    val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
-      idOut = "doc_id", labelOut = "cluster_id", algo = "star")
+    val labels = Clustering.connectedComponentsStar(pairs, "id_a", "id_b",
+      idOut = "doc_id", labelOut = "cluster_id")._1
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -1684,7 +1626,7 @@ object Dedup {
   /** The exact-Jaccard>=0.4 duplicate pair list (d04's verified
     * pairs) and the shared d06/d08 cluster query over them.
     */
-  private def clusterQuery(spark: SparkSession, dir: String, algo: String): DataFrame = {
+  private def clusterQuery(spark: SparkSession, dir: String, star: Boolean): DataFrame = {
     import spark.implicits._
     val sh = shingleArrays(spark, dir).cache()
     val posting = sh.select($"doc_id", explode($"sh").as("s"))
@@ -1697,8 +1639,11 @@ object Dedup {
       .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
       .where($"c".cast("double") / ($"na" + $"nb" - $"c") >= 0.4)
       .select($"id_a", $"id_b")
-    val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
-      idOut = "doc_id", labelOut = "cluster_id", algo = algo)
+    val labels =
+      if (star) Clustering.connectedComponentsStar(pairs, "id_a", "id_b",
+        idOut = "doc_id", labelOut = "cluster_id")._1
+      else Clustering.connectedComponents(pairs, "id_a", "id_b",
+        idOut = "doc_id", labelOut = "cluster_id")
     val win = org.apache.spark.sql.expressions.Window.partitionBy($"cluster_id")
     labels
       .withColumn("n_members", count(lit(1)).over(win).cast("long"))

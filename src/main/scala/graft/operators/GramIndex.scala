@@ -224,36 +224,14 @@ object GramIndex {
     noveltyTail(bg, covSet, Seq("bucket", "g"))
   }
 
-  /** True when `batchId` already appended into the CURRENT epoch —
-    * the streaming trigger's replay guard: once a batch's append is
-    * committed, probing it again is WRONG (the index now contains the
-    * batch's own counts, so every batch position would reach
-    * stored + batch ≥ 2 and unique content would be falsely flagged
-    * repeated); the completed attempt already wrote the batch's probe
-    * rows before it appended, so the whole trigger skips.
+  /** Where the index's append ledger lives: the `grams` store's root,
+    * whose CURRENT epoch holds the `_appends` markers. The streams'
+    * two-phase trigger ([[graft.streaming.Streams]]) keys its replay
+    * guard here — once `batch-N` is committed, probing batch N again
+    * is WRONG (the index now contains the batch's own counts, so
+    * every batch position would reach stored + batch ≥ 2).
     */
-  def appendCommitted(spark: SparkSession, path: String, batchId: Long): Boolean =
-    IL.appendCommitted(spark, IL.resolveDir(spark, s"$path/grams"), batchId)
-
-  /** The two-phase trigger ledger's FIRST marker (kind `outdone`):
-    * true when `batchId`'s OUTPUT rows are durably written but its
-    * index append may not have committed. The streams' replay guard
-    * needs both phases because the index append becomes
-    * reader-visible at its file moves, BEFORE the batch marker — a
-    * crash in that window would otherwise let the replayed trigger
-    * re-probe against an index already holding the batch's own
-    * counts and OVERWRITE the correct batch-keyed output files with
-    * wrong rows (every unique singleton gram reads stored+batch >= 2).
-    * With the outdone marker the replay skips the probe/output phase
-    * (already durable, computed against the pre-append state) and
-    * re-drives only the idempotent index append.
-    */
-  def outputCommitted(spark: SparkSession, path: String, batchId: Long): Boolean =
-    IL.appendCommitted(spark, IL.resolveDir(spark, s"$path/grams"), batchId, "outdone")
-
-  /** Record `batchId`'s output phase durable (see [[outputCommitted]]). */
-  def commitOutput(spark: SparkSession, path: String, batchId: Long): Unit =
-    IL.commitAppend(spark, IL.resolveDir(spark, s"$path/grams"), batchId, "outdone")
+  def ledgerRoot(path: String): String = s"$path/grams"
 
   def appendGramIndex(batch: DataFrame, path: String, batchId: Long): Unit = {
     val spark = batch.sparkSession

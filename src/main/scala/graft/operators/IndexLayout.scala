@@ -1,11 +1,13 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Versioned-directory + manifest layout shared by the persisted band
-  * index (O24/O28) and the persisted ANN index (O29).
+/** Versioned-directory + manifest layout shared by the persisted
+  * indexes: the key-set indexes ([[KeySetIndex]] — O24 band, O54
+  * perceptual, O57 frame), the ANN index (O29) and the lexical and
+  * gram stores (O51/O52).
   *
   * Round 5 published compactions by a two-rename directory swap, which
   * has a window where a racing reader sees NO directory and no crash
@@ -569,5 +571,97 @@ object IndexLayout {
     if (fs.exists(dir) && fs.listStatus(dir).forall(st =>
         st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")))
       fs.delete(dir, true)
+  }
+
+  /** The lifecycle of a persisted SET of per-document keys — the O24
+    * band index ([[Dedup.writeBandIndex]]), the O54 perceptual index
+    * and the O57 frame index ([[Multimodal.writePerceptualIndex]],
+    * [[Multimodal.writeFrameIndex]]). Rows are `doc_id` plus the
+    * index's own key columns, hive-partitioned on `partCols`; the
+    * owners keep only what differs (key derivation, read-side casts,
+    * the probe). Set semantics make a replayed append harmless to the
+    * probes (their distinct absorbs duplicate rows) and compaction
+    * reclaims the duplicates.
+    *
+    * An epoch with no rows is never published: a zero-row
+    * `partitionBy` write leaves only `_SUCCESS`, which Spark cannot
+    * read back (no schema to infer), so both [[write]] and [[compact]]
+    * fail loudly before the flip and the current epoch stays live.
+    */
+  final class KeySetIndex(name: String, partCols: String*) {
+    private val by = partCols.mkString("+")
+
+    private def requireRows(keys: DataFrame, op: String, hint: String): Unit =
+      require(keys.limit(1).count() > 0,
+        s"$op$name: $hint — refusing to publish an unreadable epoch")
+
+    /** Versioned publish of a fresh epoch holding `keys`. */
+    def write(keys: DataFrame, path: String): Unit = {
+      val spark = keys.sparkSession
+      requireRows(keys, "write", "the corpus yields no index keys; guard upstream")
+      val v = nextVersion(spark, path)
+      graft.sinks.RoutedSink.standard().write(s"parquet:$path/$v:by:$by", keys)
+      publish(spark, path, v)
+      gcVersions(spark, path, keep = 1)
+    }
+
+    /** Append `keys` into the CURRENT epoch (new files in the hit
+      * partitions only), failing loudly if a rewrite published a new
+      * epoch meanwhile ([[requireStillCurrent]]).
+      */
+    def append(keys: DataFrame, path: String): Unit = {
+      val spark = keys.sparkSession
+      val dir = resolveDir(spark, path)
+      graft.sinks.RoutedSink.standard().write(s"parquet-append:$dir:by:$by", keys)
+      requireStillCurrent(spark, path, dir, s"append$name")
+    }
+
+    /** Manifest-resolved read projected to `cols`, with pending
+      * tombstones masked by an anti-join over the scan. The mask sits
+      * between the scan and the probe join, so a probe loses its
+      * dynamic partition pruning WHILE tombstones are pending
+      * (Catalyst's DPP rule looks through project/filter, not joins);
+      * the window closes at the next [[compact]], and the
+      * no-tombstone plan is the plain pruned scan.
+      */
+    def read(spark: SparkSession, path: String, cols: Column*): DataFrame = {
+      val idx = spark.read.parquet(resolveDir(spark, path)).select(cols: _*)
+      if (!hasTombstones(spark, path)) idx
+      else idx.join(readTombstones(spark, path, "doc_id"), Seq("doc_id"), "left_anti")
+    }
+
+    /** Register `ids` for deletion ([[addTombstones]]). */
+    def tombstone(ids: DataFrame, idCol: String, path: String): Unit =
+      addTombstones(ids, idCol, "doc_id", path)
+
+    /** Rewrite the current epoch as one file per partition bucket:
+      * crash leftovers recovered, a legacy layout migrated, duplicate
+      * rows dropped, the tombstone-file snapshot applied, the append
+      * ledger carried forward, then an atomic publish; exactly the
+      * consumed tombstone files are deleted, so ids arriving
+      * mid-compaction survive to the next cycle. `keepVersions`
+      * retired epochs stay as the reader grace window.
+      */
+    def compact(spark: SparkSession, path: String, keepVersions: Int): Unit = {
+      recover(spark, path)
+      ensureVersioned(spark, path)
+      val src = resolveDir(spark, path)
+      val base = spark.read.parquet(src).distinct()
+      val tombFiles = tombstoneFiles(spark, path)
+      val pruned =
+        if (tombFiles.isEmpty) base
+        else base.join(
+          spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
+          Seq("doc_id"), "left_anti")
+      requireRows(pruned, "compact", "tombstones empty the index; rebuild instead")
+      val next = nextVersion(spark, path)
+      pruned
+        .repartition(partCols.map(col): _*)
+        .write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$path/$next")
+      copyAppendLedger(spark, src, s"$path/$next")
+      publish(spark, path, next)
+      deleteTombstoneFiles(spark, path, tombFiles)
+      gcVersions(spark, path, keepVersions)
+    }
   }
 }

@@ -1608,8 +1608,9 @@ object Multimodal {
   // 4 × 15-bit bands; Hamming ≤ 3 ⇒ ≥ 1 band agrees exactly) stored
   // in the O24 band-index shape: hive (band, pfx) dirs — pfx = the
   // band segment's top 4 bits, 16 buckets per band — under the O30
-  // versioned-epoch lifecycle. A probe broadcasts the batch's band
-  // keys (batch rows × 4), equi-joins the stored side with DPP
+  // versioned-epoch lifecycle (IndexLayout.KeySetIndex). A probe
+  // broadcasts the batch's band keys (batch rows × 4), equi-joins the
+  // stored side with DPP
   // pruning down to the probed buckets, and verifies candidates with
   // the exact bit_count(xor) ≤ maxHamming — the corpus appears ONLY
   // through pruned index files, so day-2 cost is O(batch +
@@ -1630,88 +1631,47 @@ object Multimodal {
           .as(Seq("band", "seg")))
       .withColumn("pfx", shiftrightunsigned(col("seg"), 11).cast("int"))
 
-  /** Persist the corpus's perceptual band keys (versioned publish —
-    * the writeBandIndex lifecycle). Stored row: (doc_id, ah, format,
-    * band, seg, pfx). */
+  /** The perceptual index's lifecycle ([[IndexLayout.KeySetIndex]]):
+    * rows (doc_id, ah, format, band, seg, pfx) under hive (band, pfx)
+    * dirs.
+    */
+  private val PerceptualIndex = new IndexLayout.KeySetIndex("PerceptualIndex", "band", "pfx")
+
+  /** Persist the corpus's perceptual band keys as a versioned epoch.
+    * An empty or all-unhashable corpus (every body sub-60 bytes →
+    * avgHash60 null) raises instead of publishing an unreadable epoch.
+    */
   def writePerceptualIndex(
       assets: DataFrame,
       idCol: String,
       payloadCol: String,
-      path: String): Unit = {
-    val spark = assets.sparkSession
-    val bands = perceptualBands(assets, idCol, payloadCol)
-    // an empty or all-unhashable corpus (every body sub-60 bytes →
-    // avgHash60 null) would publish a zero-row hive epoch whose
-    // parquet store carries no schema — unreadable at the first
-    // probe, with the previous epoch already GC'd. Fail loudly at
-    // build time (the writeLexIndex/writeGramIndex discipline).
-    require(bands.limit(1).count() > 0,
-      "writePerceptualIndex: the corpus yields no perceptual hashes " +
-        "(empty, or every payload's body is sub-60-byte/unparseable) — " +
-        "refusing to publish an unreadable epoch; guard upstream")
-    val v = IndexLayout.nextVersion(spark, path)
-    graft.sinks.RoutedSink.standard()
-      .write(s"parquet:$path/$v:by:band+pfx", bands)
-    IndexLayout.publish(spark, path, v)
-    IndexLayout.gcVersions(spark, path, keep = 1)
-  }
+      path: String): Unit =
+    PerceptualIndex.write(perceptualBands(assets, idCol, payloadCol), path)
 
   /** Manifest-resolved read; feeds [[probePerceptualIndex]]. Pending
     * tombstones ([[tombstonePerceptualIndex]]) are masked immediately
-    * via an anti-join over the scan — a taken-down asset never
-    * surfaces as a near-dup even before the compaction that deletes
-    * its band keys. As in O24's readBandIndex, the mask sits between
-    * scan and probe join and costs the probe its DPP WHILE tombstones
-    * are pending; correctness outranks the scan cut and the window
-    * closes at the next [[compactPerceptualIndex]].
+    * — a taken-down asset never surfaces as a near-dup even before the
+    * compaction that deletes its band keys (the probe loses its DPP
+    * while they are pending; see [[IndexLayout.KeySetIndex.read]]).
     */
-  def readPerceptualIndex(spark: SparkSession, path: String): DataFrame = {
-    val idx = spark.read.parquet(IndexLayout.resolveDir(spark, path))
-      .select(col("doc_id"), col("ah"), col("format"),
-        col("band").cast("int"), col("seg"), col("pfx").cast("int"))
-    if (!IndexLayout.hasTombstones(spark, path)) idx
-    else idx.join(IndexLayout.readTombstones(spark, path, "doc_id"),
-      Seq("doc_id"), "left_anti")
-  }
+  def readPerceptualIndex(spark: SparkSession, path: String): DataFrame =
+    PerceptualIndex.read(spark, path, col("doc_id"), col("ah"), col("format"),
+      col("band").cast("int"), col("seg"), col("pfx").cast("int"))
 
   /** Register assets for DELETION from the perceptual index — the
-    * takedown/retention obligation, image modality (the O24/O51
-    * tombstone discipline). Masked from the very next read; applied
-    * permanently by [[compactPerceptualIndex]].
+    * takedown/retention obligation, image modality. Masked from the
+    * very next read; applied permanently by [[compactPerceptualIndex]].
     */
   def tombstonePerceptualIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.addTombstones(ids, idCol, "doc_id", path)
+    PerceptualIndex.tombstone(ids, idCol, path)
 
   /** Periodic compaction for the append-maintained perceptual index
-    * (the compactBandIndex lifecycle): DISTINCTs the band-key set (a
-    * replayed batch append leaves exact duplicate rows), applies the
-    * tombstone-file snapshot permanently, rewrites each (band, pfx)
-    * bucket into one file, carries the ST25 append ledger forward,
-    * publishes atomically, and deletes exactly the consumed tombstone
-    * files (ids arriving mid-compaction survive).
+    * ([[IndexLayout.KeySetIndex.compact]]): one file per (band, pfx)
+    * bucket, replayed-append duplicates and tombstoned assets dropped,
+    * the ST25 append ledger carried forward.
     */
-  def compactPerceptualIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit = {
-    IndexLayout.recover(spark, path)
-    val src = IndexLayout.resolveDir(spark, path)
-    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
-    val base = spark.read.parquet(src).distinct()
-    val pruned =
-      if (tombFiles.isEmpty) base
-      else base.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    require(pruned.limit(1).count() > 0,
-      "compactPerceptualIndex: tombstones empty the index — refusing " +
-        "to publish an unreadable epoch; rebuild instead")
-    val next = IndexLayout.nextVersion(spark, path)
-    pruned
-      .repartition(col("band"), col("pfx"))
-      .write.mode("overwrite").partitionBy("band", "pfx").parquet(s"$path/$next")
-    IndexLayout.copyAppendLedger(spark, src, s"$path/$next")
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
+  def compactPerceptualIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit =
+    PerceptualIndex.compact(spark, path, keepVersions)
 
   /** Day-2 probe: perceptual near-dups of `batch` against the stored
     * corpus — (new_id, idx_id, hamming, cross_container), hamming ≤
@@ -1748,51 +1708,16 @@ object Multimodal {
   }
 
   /** Day-N maintenance: append the KEPT batch assets' band keys into
-    * the current epoch (appendBandIndex's contract: single
-    * maintenance queue vs compactions; replayed appends leave
-    * duplicate band-key rows the probe's distinct absorbs — band keys
-    * are a SET, no count semantics to corrupt). */
+    * the current epoch (single maintenance queue vs compactions;
+    * replayed appends leave duplicate band-key rows the probe's
+    * distinct absorbs — band keys are a SET, no count semantics to
+    * corrupt). */
   def appendPerceptualIndex(
       kept: DataFrame,
       idCol: String,
       payloadCol: String,
       path: String): Unit =
-    graft.sinks.RoutedSink.standard()
-      .write(s"parquet-append:${IndexLayout.resolveDir(kept.sparkSession, path)}:by:band+pfx",
-        perceptualBands(kept, idCol, payloadCol))
-
-  /** ST25's replay guard (the GramIndex.appendCommitted twin): true
-    * when `batchId`'s append is already committed into the CURRENT
-    * epoch. The set semantics above make the APPEND replay-harmless,
-    * but the streaming trigger's PROBE is not: once the batch's own
-    * keys are indexed, a re-probe would emit near-dup pairs BETWEEN
-    * assets of the same batch — rows the probe-before-append contract
-    * excludes — so a replayed trigger must skip entirely.
-    */
-  def perceptualAppendCommitted(
-      spark: SparkSession, path: String, batchId: Long): Boolean =
-    IndexLayout.appendCommitted(spark, IndexLayout.resolveDir(spark, path), batchId)
-
-  /** Mark `batchId`'s streamed probe+append trigger complete. */
-  def commitPerceptualAppend(
-      spark: SparkSession, path: String, batchId: Long): Unit =
-    IndexLayout.commitAppend(spark, IndexLayout.resolveDir(spark, path), batchId)
-
-  /** Two-phase trigger ledger, first marker (the GramIndex
-    * outputCommitted contract): the batch's near-dup pair OUTPUT is
-    * durable, the index append may not be — a replay must skip the
-    * probe (re-probing after the batch's band keys are indexed would
-    * emit intra-batch pairs and overwrite the correct batch-keyed
-    * output files) and re-drive only the append.
-    */
-  def perceptualOutputCommitted(
-      spark: SparkSession, path: String, batchId: Long): Boolean =
-    IndexLayout.appendCommitted(spark, IndexLayout.resolveDir(spark, path), batchId, "outdone")
-
-  /** Record `batchId`'s output phase durable. */
-  def commitPerceptualOutput(
-      spark: SparkSession, path: String, batchId: Long): Unit =
-    IndexLayout.commitAppend(spark, IndexLayout.resolveDir(spark, path), batchId, "outdone")
+    PerceptualIndex.append(perceptualBands(kept, idCol, payloadCol), path)
 
   // ---------------------------------------------------------------
   // O57: the PERSISTED video-frame index — m10's day-2 incremental
@@ -1815,71 +1740,41 @@ object Multimodal {
   private def framePfx(fk: Column): Column =
     shiftrightunsigned(fk, 54).cast("int") // top 6 of 60 bits -> 64 buckets
 
-  /** Persist a video corpus's frame keys (versioned publish — the
-    * writePerceptualIndex lifecycle). `videos` = (doc_id, payload)
-    * ISO-BMFF containers; frames come from the REAL sample tables.
+  /** The frame index's lifecycle ([[IndexLayout.KeySetIndex]]): rows
+    * (doc_id, fk, pfx) under 64 hive pfx dirs.
     */
-  def writeFrameIndex(videos: DataFrame, path: String): Unit = {
-    val spark = videos.sparkSession
-    val keys = frameKeys(videos).withColumn("pfx", framePfx(col("fk")))
-    require(keys.limit(1).count() > 0,
-      "writeFrameIndex: the corpus yields no indexed frames (empty, " +
-        "or no parseable sample tables) — refusing to publish an " +
-        "unreadable epoch; guard upstream")
-    val v = IndexLayout.nextVersion(spark, path)
-    graft.sinks.RoutedSink.standard().write(s"parquet:$path/$v:by:pfx", keys)
-    IndexLayout.publish(spark, path, v)
-    IndexLayout.gcVersions(spark, path, keep = 1)
-  }
+  private val FrameIndex = new IndexLayout.KeySetIndex("FrameIndex", "pfx")
+
+  private def frameIndexKeys(videos: DataFrame): DataFrame =
+    frameKeys(videos).withColumn("pfx", framePfx(col("fk")))
+
+  /** Persist a video corpus's frame keys as a versioned epoch.
+    * `videos` = (doc_id, payload) ISO-BMFF containers; frames come
+    * from the REAL sample tables. A corpus with no parseable sample
+    * tables raises instead of publishing an unreadable epoch.
+    */
+  def writeFrameIndex(videos: DataFrame, path: String): Unit =
+    FrameIndex.write(frameIndexKeys(videos), path)
 
   /** Manifest-resolved read; feeds [[probeFrameIndex]]. Pending
-    * tombstones mask immediately (anti-join over the scan — costs the
-    * probe its DPP while pending, closed at the next
-    * [[compactFrameIndex]]; the O54 trade, correctness first).
+    * tombstones mask immediately ([[IndexLayout.KeySetIndex.read]]).
     */
-  def readFrameIndex(spark: SparkSession, path: String): DataFrame = {
-    val idx = spark.read.parquet(IndexLayout.resolveDir(spark, path))
-      .select(col("doc_id"), col("fk"), col("pfx").cast("int"))
-    if (!IndexLayout.hasTombstones(spark, path)) idx
-    else idx.join(IndexLayout.readTombstones(spark, path, "doc_id"),
-      Seq("doc_id"), "left_anti")
-  }
+  def readFrameIndex(spark: SparkSession, path: String): DataFrame =
+    FrameIndex.read(spark, path, col("doc_id"), col("fk"), col("pfx").cast("int"))
 
   /** Register videos for DELETION from the frame index — the
     * takedown/retention obligation, video modality. Masked from the
     * very next read; applied permanently by [[compactFrameIndex]].
     */
   def tombstoneFrameIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    IndexLayout.addTombstones(ids, idCol, "doc_id", path)
+    FrameIndex.tombstone(ids, idCol, path)
 
-  /** Periodic compaction (the compactPerceptualIndex lifecycle):
-    * DISTINCTs the key set, applies the tombstone-file snapshot
-    * permanently, rewrites each pfx bucket, carries the append ledger
-    * forward, publishes atomically, deletes exactly the consumed
-    * tombstone files.
+  /** Periodic compaction ([[IndexLayout.KeySetIndex.compact]]): one
+    * file per pfx bucket, duplicates and tombstoned videos dropped,
+    * the ST28 append ledger carried forward.
     */
-  def compactFrameIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit = {
-    IndexLayout.recover(spark, path)
-    val src = IndexLayout.resolveDir(spark, path)
-    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
-    val base = spark.read.parquet(src).distinct()
-    val pruned =
-      if (tombFiles.isEmpty) base
-      else base.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    require(pruned.limit(1).count() > 0,
-      "compactFrameIndex: tombstones empty the index — refusing to " +
-        "publish an unreadable epoch; rebuild instead")
-    val next = IndexLayout.nextVersion(spark, path)
-    pruned
-      .repartition(col("pfx"))
-      .write.mode("overwrite").partitionBy("pfx").parquet(s"$path/$next")
-    IndexLayout.copyAppendLedger(spark, src, s"$path/$next")
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
+  def compactFrameIndex(spark: SparkSession, path: String, keepVersions: Int = 1): Unit =
+    FrameIndex.compact(spark, path, keepVersions)
 
   /** Day-2 probe: shared-frame pairs between `batch` videos and the
     * stored corpus — (new_id, idx_id, n_shared), the cross-split
@@ -1934,35 +1829,5 @@ object Multimodal {
   /** Day-N maintenance: append the KEPT batch videos' frame keys into
     * the current epoch (set semantics — the O54 append contract). */
   def appendFrameIndex(kept: DataFrame, path: String): Unit =
-    graft.sinks.RoutedSink.standard()
-      .write(s"parquet-append:${IndexLayout.resolveDir(kept.sparkSession, path)}:by:pfx",
-        frameKeys(kept).withColumn("pfx", framePfx(col("fk"))))
-
-  /** ST28's replay guard (the perceptualAppendCommitted twin): true
-    * when `batchId`'s probe+append trigger already completed against
-    * the CURRENT epoch — a replayed trigger must skip whole (a
-    * re-probe after the batch's own keys are indexed would emit
-    * intra-batch pairs the probe-before-append contract excludes).
-    */
-  def frameAppendCommitted(
-      spark: SparkSession, path: String, batchId: Long): Boolean =
-    IndexLayout.appendCommitted(spark, IndexLayout.resolveDir(spark, path), batchId)
-
-  /** Mark `batchId`'s streamed probe+append trigger complete. */
-  def commitFrameAppend(
-      spark: SparkSession, path: String, batchId: Long): Unit =
-    IndexLayout.commitAppend(spark, IndexLayout.resolveDir(spark, path), batchId)
-
-  /** Two-phase trigger ledger, first marker: the batch's pair OUTPUT
-    * is durable, the index append may not be — a replay skips the
-    * probe and re-drives only the (idempotent, set-semantics) append.
-    */
-  def frameOutputCommitted(
-      spark: SparkSession, path: String, batchId: Long): Boolean =
-    IndexLayout.appendCommitted(spark, IndexLayout.resolveDir(spark, path), batchId, "outdone")
-
-  /** Record `batchId`'s output phase durable. */
-  def commitFrameOutput(
-      spark: SparkSession, path: String, batchId: Long): Unit =
-    IndexLayout.commitAppend(spark, IndexLayout.resolveDir(spark, path), batchId, "outdone")
+    FrameIndex.append(frameIndexKeys(kept), path)
 }

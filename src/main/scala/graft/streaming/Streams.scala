@@ -338,32 +338,24 @@ object Streams {
 
   /** ST6's write half: streaming maintenance of the persisted band
     * index. Each micro-batch of KEPT docs (post-verdict, the
-    * [[graft.operators.Dedup.appendBandIndex]] contract) bands per
-    * row — stateless, append-mode legal — and appends through the
-    * same routed `:append` sink route the batch maintainer uses, so
-    * one write surface serves both ingestion modes. Exactly-once =
-    * checkpointing + the replay caveat of any file-append sink: a
-    * replayed micro-batch appends its band keys twice, which is
-    * HARMLESS to probe semantics (candidates are distinct-ed) and
-    * reclaimed by the next [[graft.operators.Dedup.compactBandIndex]]
-    * if dedup-on-compact is added; strict once-only needs per-batch
-    * subdirectories (the `targetFor(batchId)` form below).
+    * [[graft.operators.Dedup.appendBandIndex]] contract) appends
+    * through that same batch maintainer, so one write surface serves
+    * both ingestion modes; the manifest is resolved per micro-batch,
+    * so a compaction publishing mid-stream redirects the next batch
+    * to the new epoch. Exactly-once = checkpointing + the replay
+    * caveat of any file-append sink: a replayed micro-batch appends
+    * its band keys twice, which is HARMLESS to probe semantics
+    * (candidates are distinct-ed) and reclaimed by the next
+    * [[graft.operators.Dedup.compactBandIndex]].
     */
   def appendBandIndexStream(
       keptDocs: DataFrame,
       path: String
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    routedStreamSink(
-      graft.operators.Dedup.bandKeys(keptDocs, "doc_id", "text")
-        .withColumn("pfx", substring(col("bh"), 1, 1)),
-      graft.sinks.RoutedSink.standard(),
-      // resolve the manifest PER micro-batch (targetFor runs at each
-      // trigger): appends land inside the current version directory,
-      // and a compaction publishing mid-stream redirects the next
-      // batch to the new version automatically
-      _ => "parquet-append:" +
-        graft.operators.IndexLayout.resolveDir(keptDocs.sparkSession, path) +
-        ":by:band+pfx")
+    keptDocs.writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        graft.operators.Dedup.appendBandIndex(batch.toDF(), "doc_id", "text", path)
+    }
 
   /** ST9's write half (ST10): streaming maintenance of the persisted
     * trained-IVFPQ index — a vector-ingestion stream grows the stored
@@ -562,64 +554,74 @@ object Streams {
           graft.operators.LexIndex.probeLexIndex(batch.toDF(), idx, k = topK))
     }
 
+  /** The two-phase exactly-once trigger behind the ledger-guarded
+    * streams (ST24 [[gramProbeStream]], ST25 [[perceptualProbeStream]],
+    * ST26 [[noveltyStream]], ST27 [[curateStream]], ST28
+    * [[frameDupStream]]). Each trigger PROBES the index with its batch
+    * (`output`), appends the result to `outPath`, and THEN appends the
+    * batch into the index (`append`) — so later batches see earlier
+    * ones and no batch is compared with itself. The micro-batch id
+    * keys the index's append ledger under the current epoch of
+    * `ledgerRoot`, and two markers make the whole trigger exactly-once
+    * under foreachBatch's at-least-once replays:
+    *
+    *  1. `batch-N` present: the trigger completed — skip it whole. A
+    *     re-probe would read the batch's own appended keys (repeated
+    *     intervals for unique content, ~0 novelty, intra-batch
+    *     near-dups), and the completed attempt already wrote its rows.
+    *  2. `outdone-N` present: the output is durable but the append
+    *     may not be. The append becomes reader-visible at its file
+    *     moves, BEFORE `batch-N` lands, so a replay in that window
+    *     must not re-probe either: it skips straight to the append,
+    *     which is idempotent (ledger-keyed counts, or key sets whose
+    *     duplicates the probes absorb).
+    *
+    * The output goes through the batch-keyed `parquet-append-batch`
+    * route (stage-then-move under deterministic names), so a death
+    * between the output write and `outdone-N` rewrites the same files
+    * instead of doubling rows. The batch is cached across both phases.
+    */
+  private def twoPhaseTrigger(
+      df0: DataFrame, batchId: Long, ledgerRoot: String, outPath: String)(
+      output: DataFrame => DataFrame, append: DataFrame => Unit): Unit = {
+    import graft.operators.IndexLayout
+    val spark = df0.sparkSession
+    def ledger = IndexLayout.resolveDir(spark, ledgerRoot)
+    if (!IndexLayout.appendCommitted(spark, ledger, batchId)) {
+      val df = df0.cache()
+      try {
+        if (!IndexLayout.appendCommitted(spark, ledger, batchId, "outdone")) {
+          graft.sinks.RoutedSink.standard()
+            .write(s"parquet-append-batch:$outPath:id:$batchId", output(df))
+          IndexLayout.commitAppend(spark, ledger, batchId, "outdone")
+        }
+        append(df)
+        IndexLayout.commitAppend(spark, ledger, batchId)
+      } finally df.unpersist()
+    }
+  }
+
+  /** ST24's per-trigger body: [[graft.operators.GramIndex.probeGramIndex]]
+    * rows out, the batch's gram counts into the index. */
+  private[graft] def gramProbeTrigger(
+      df: DataFrame, batchId: Long, indexPath: String, outPath: String): Unit =
+    twoPhaseTrigger(df, batchId, graft.operators.GramIndex.ledgerRoot(indexPath), outPath)(
+      b => graft.operators.GramIndex.probeGramIndex(
+        b, graft.operators.GramIndex.readGramIndex(b.sparkSession, indexPath)),
+      b => graft.operators.GramIndex.appendGramIndex(b, indexPath, batchId))
+
   /** ST24: streaming repeated-interval detection — t28's memorization
     * report at INGESTION, over O52's stored gram index: each
     * micro-batch of documents is probed against the persisted gram
     * counts (covered iff stored + within-batch occurrences ≥ 2,
     * islands per doc — the probe plan broadcasts only the batch's
     * gram set, DPP-pruning the stored buckets), the intervals append
-    * through the routed sink, and THEN the batch's own gram counts
-    * append into the index — so later batches see earlier ones (the
-    * probe-before-append order keeps each batch's contract: new docs
-    * vs the past + themselves, never double-counted). The index is
-    * the state; the stream holds none. The WHOLE TRIGGER is
-    * exactly-once under the engine's at-least-once foreachBatch
-    * replays: the micro-batch id keys O52's append ledger, and a
-    * replayed trigger SKIPS ENTIRELY when its marker exists — not
-    * just the append. Skipping the probe too is load-bearing: a
-    * committed append means the index already contains the batch's
-    * own counts, so re-probing would see stored + batch ≥ 2 at every
-    * batch position and append false "repeated" rows for unique
-    * content to the output (the completed attempt wrote the batch's
-    * probe rows BEFORE it appended, so nothing is lost by skipping).
-    * The OUTPUT append is exactly-once too: it goes through the
-    * batch-keyed `parquet-append-batch` route (stage-then-move under
-    * deterministic names), so a driver death BETWEEN the output write
-    * and the ledger commit — the window where the replay re-runs the
-    * whole trigger — rewrites the same files instead of duplicating
-    * the batch's probe rows. StreamingSpec stages an engine-level
-    * replay and pins index state + probe rows identical.
+    * to `outPath`, and then the batch's own gram counts append into
+    * the index. Exactly-once per trigger ([[twoPhaseTrigger]]); the
+    * index is the state, the stream holds none. StreamingSpec stages
+    * an engine-level replay and pins index state + probe rows
+    * identical.
     */
-  /** ST24's per-trigger body, factored for direct crash-window
-    * testing. TWO-PHASE replay guard: the batch marker alone cannot
-    * cover the window where the index append's file MOVES have
-    * happened but the marker hasn't (the appended counts are
-    * reader-visible at the moves) — a replayed probe there would see
-    * stored+batch >= 2 for every unique batch gram and overwrite the
-    * correct output files with false "repeated" rows. So phase 1
-    * (probe + batch-keyed output write) commits its own `outdone`
-    * marker BEFORE any index mutation; a replay after it skips
-    * straight to the idempotent append.
-    */
-  private[graft] def gramProbeTrigger(
-      df0: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String): Unit = {
-    val spark = df0.sparkSession
-    if (!graft.operators.GramIndex.appendCommitted(spark, indexPath, batchId)) {
-      val df = df0.cache()
-      try {
-        if (!graft.operators.GramIndex.outputCommitted(spark, indexPath, batchId)) {
-          val idx = graft.operators.GramIndex.readGramIndex(spark, indexPath)
-          graft.sinks.RoutedSink.standard().write(
-            s"parquet-append-batch:$outPath:id:$batchId",
-            graft.operators.GramIndex.probeGramIndex(df, idx))
-          graft.operators.GramIndex.commitOutput(spark, indexPath, batchId)
-        }
-        graft.operators.GramIndex.appendGramIndex(df, indexPath, batchId)
-      } finally df.unpersist()
-    }
-  }
-
   def gramProbeStream(
       docStream: DataFrame,
       indexPath: String,
@@ -798,43 +800,25 @@ object Streams {
         graft.operators.IndexLayout.resolveDir(keptPayloads.sparkSession, path) +
         ":by:band+pfx")
 
+  /** ST26's per-trigger body: novelty scores out, the batch's gram
+    * counts into the index. */
+  private[graft] def noveltyTrigger(
+      df: DataFrame, batchId: Long, indexPath: String, outPath: String): Unit =
+    twoPhaseTrigger(df, batchId, graft.operators.GramIndex.ledgerRoot(indexPath), outPath)(
+      b => graft.operators.GramIndex.noveltyFromIndex(
+        b, graft.operators.GramIndex.readGramIndex(b.sparkSession, indexPath)),
+      b => graft.operators.GramIndex.appendGramIndex(b, indexPath, batchId))
+
   /** ST26: streaming NOVELTY scoring at ingestion — t30 served from
     * O52's stored gram counts, per micro-batch: each incoming doc is
     * scored "how much of you is new vs EVERYTHING ingested before
     * you" (exact ppm — GramIndex.noveltyFromIndex, covered = exists
     * in the store, the against-the-past-only semantics), the scores
-    * append through the routed sink, and THEN the batch's own counts
-    * append into the index, so the next batch's novelty accounts for
-    * this one. Trigger-level exactly-once exactly as ST24 (the ledger
-    * marker skips a replayed trigger whole — a re-scored batch would
-    * otherwise read its own appended grams and report ~0 novelty for
-    * everything; the score append is batch-keyed stage-then-move, so
-    * the pre-commit crash window cannot duplicate score rows either).
-    * Index is the state; the stream holds none.
+    * append to `outPath`, and then the batch's own counts append into
+    * the index, so the next batch's novelty accounts for this one.
+    * Exactly-once per trigger ([[twoPhaseTrigger]]); the index is the
+    * state, the stream holds none.
     */
-  /** ST26's per-trigger body — the gramProbeTrigger two-phase
-    * discipline with the novelty scorer in phase 1 (a replayed score
-    * after the moves would read ~0 novelty for everything).
-    */
-  private[graft] def noveltyTrigger(
-      df0: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String): Unit = {
-    val spark = df0.sparkSession
-    if (!graft.operators.GramIndex.appendCommitted(spark, indexPath, batchId)) {
-      val df = df0.cache()
-      try {
-        if (!graft.operators.GramIndex.outputCommitted(spark, indexPath, batchId)) {
-          val idx = graft.operators.GramIndex.readGramIndex(spark, indexPath)
-          graft.sinks.RoutedSink.standard().write(
-            s"parquet-append-batch:$outPath:id:$batchId",
-            graft.operators.GramIndex.noveltyFromIndex(df, idx))
-          graft.operators.GramIndex.commitOutput(spark, indexPath, batchId)
-        }
-        graft.operators.GramIndex.appendGramIndex(df, indexPath, batchId)
-      } finally df.unpersist()
-    }
-  }
-
   def noveltyStream(
       docStream: DataFrame,
       indexPath: String,
@@ -845,6 +829,33 @@ object Streams {
         noveltyTrigger(batch.toDF(), batchId, indexPath, outPath)
     }
 
+  /** ST27's per-trigger body: O56 verdicts out, the ADMITTED docs'
+    * gram counts into the index. The append depends on the verdicts,
+    * and a replay after the append's file moves must not recompute
+    * them (every verdict would flip to rejected_novelty), so the
+    * append always reads the admitted ids back from the batch-keyed
+    * output files — the durable phase-1 verdicts.
+    */
+  private[graft] def curateTrigger(
+      df: DataFrame, batchId: Long,
+      indexPath: String, outPath: String,
+      minWords: Long, minUniqPpm: Long, minNoveltyPpm: Long): Unit =
+    twoPhaseTrigger(df, batchId, graft.operators.GramIndex.ledgerRoot(indexPath), outPath)(
+      b => graft.operators.Curation.curateBatch(
+        b, graft.operators.GramIndex.readGramIndex(b.sparkSession, indexPath),
+        minWords, minUniqPpm, minNoveltyPpm),
+      { b =>
+        val verdicts = graft.operators.IndexLayout
+          .readStagedBatch(b.sparkSession, outPath, batchId)
+          .getOrElse(sys.error(
+            s"curateTrigger: outdone marker present for batch $batchId but its " +
+              "output files are missing — was the sink directory cleaned?"))
+        val admitted = b.join(
+          verdicts.where(col("verdict") === "admitted").select(col("doc_id")),
+          Seq("doc_id"), "left_semi")
+        graft.operators.GramIndex.appendGramIndex(admitted, indexPath, batchId)
+      })
+
   /** ST27: the end-to-end streaming CURATION loop — the composition
     * the single-signal streams (ST12 decontamination, ST24 repeated
     * intervals, ST26 novelty) exist to feed, run as ONE per-trigger
@@ -852,20 +863,13 @@ object Streams {
     * verdict from O56 (quality gate first — failing docs never cost
     * gram work and never touch the index; then the novelty gate
     * against the stored O52 counts), the full verdict frame appends
-    * through the routed sink (the audit trail: every doc's fate and
-    * the numbers behind it), and THEN only the ADMITTED docs' gram
-    * counts append into the index — so the next batch's novelty is
-    * measured against the curated corpus, not against spam it
-    * rejected (a rejected doc's content stays "novel": if a clean
-    * version arrives later it is judged on its own merits).
-    * Trigger-level exactly-once exactly as ST24/ST26: the ledger
-    * marker skips a replayed trigger whole (a re-curated batch would
-    * read its own admitted grams and reject everything as restated),
-    * and the verdict append is batch-keyed stage-then-move, so a
-    * driver death between the audit write and the ledger commit
-    * cannot duplicate verdict rows — admission counts read from the
-    * audit trail stay exact under any crash. Index is the state; the
-    * stream holds none.
+    * to `outPath` (the audit trail: every doc's fate and the numbers
+    * behind it), and then only the ADMITTED docs' gram counts append
+    * into the index — so the next batch's novelty is measured against
+    * the curated corpus, not against spam it rejected. Exactly-once
+    * per trigger ([[twoPhaseTrigger]]), so admission counts read from
+    * the audit trail stay exact under any crash. The index is the
+    * state; the stream holds none.
     *
     * OPERATIONAL COUPLING (retention): the append phase re-reads the
     * admitted ids from `outPath`'s batch-keyed files, so the audit
@@ -879,45 +883,6 @@ object Streams {
     * files): delete the `outdone-N` marker under the index epoch's
     * `_appends/` to force a full phase-1 recompute of that batch.
     */
-  /** ST27's per-trigger body — two-phase like gramProbeTrigger, with
-    * one extra subtlety: the index append depends on the VERDICTS
-    * (admitted docs only), and a replay after the append's file moves
-    * must not recompute them (the index already holds the batch's
-    * admitted grams — every verdict would flip to rejected_novelty
-    * and even the appended set would diverge). The batch-keyed output
-    * files ARE the durable phase-1 verdicts, so the append phase
-    * always reads the admitted ids back from them.
-    */
-  private[graft] def curateTrigger(
-      df0: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String,
-      minWords: Long, minUniqPpm: Long, minNoveltyPpm: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    val spark = df0.sparkSession
-    if (!graft.operators.GramIndex.appendCommitted(spark, indexPath, batchId)) {
-      val df = df0.cache()
-      try {
-        if (!graft.operators.GramIndex.outputCommitted(spark, indexPath, batchId)) {
-          val idx = graft.operators.GramIndex.readGramIndex(spark, indexPath)
-          graft.sinks.RoutedSink.standard().write(
-            s"parquet-append-batch:$outPath:id:$batchId",
-            graft.operators.Curation.curateBatch(
-              df, idx, minWords, minUniqPpm, minNoveltyPpm))
-          graft.operators.GramIndex.commitOutput(spark, indexPath, batchId)
-        }
-        val verdicts = graft.operators.IndexLayout
-          .readStagedBatch(spark, outPath, batchId)
-          .getOrElse(sys.error(
-            s"curateTrigger: outdone marker present for batch $batchId but its " +
-              "output files are missing — was the sink directory cleaned?"))
-        val admitted = df.join(
-          verdicts.where(col("verdict") === "admitted").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        graft.operators.GramIndex.appendGramIndex(admitted, indexPath, batchId)
-      } finally df.unpersist()
-    }
-  }
-
   def curateStream(
       docStream: DataFrame,
       indexPath: String,
@@ -932,55 +897,27 @@ object Streams {
           minWords, minUniqPpm, minNoveltyPpm)
     }
 
+  /** ST25's per-trigger body: verified near-dup pairs out, the batch's
+    * band keys into the index. The index path is its own ledger root. */
+  private[graft] def perceptualTrigger(
+      df: DataFrame, batchId: Long, indexPath: String, outPath: String): Unit =
+    twoPhaseTrigger(df, batchId, indexPath, outPath)(
+      b => graft.operators.Multimodal.probePerceptualIndex(b, "doc_id", "payload",
+        graft.operators.Multimodal.readPerceptualIndex(b.sparkSession, indexPath)),
+      b => graft.operators.Multimodal.appendPerceptualIndex(b, "doc_id", "payload", indexPath))
+
   /** ST25: streaming PERCEPTUAL near-dup at ingestion — the O54 twin
     * of ST24's probe-then-append loop, closing the image modality's
     * live path: each micro-batch of (doc_id, payload) assets is
     * probed against the persisted perceptual band index (AvgHash60
     * bands broadcast, (band, pfx) buckets DPP-pruned, exact
     * Hamming ≤ 3 verify — batch-bounded at any corpus size), the
-    * verified near-dup pairs append through the routed sink, and
-    * THEN the batch's own band keys append into the index — later
-    * batches see earlier ones, and no batch matches itself (the
-    * probe's new_id != idx_id guard only fires across the split
-    * because the batch is probed BEFORE it is appended). The index is
-    * the state; the stream holds none. The WHOLE TRIGGER is replay
-    * exactly-once (the ST24 discipline): the append itself is
-    * replay-harmless (band keys are a SET the probe's distinct
-    * absorbs), but a re-PROBE after the batch's keys are indexed
-    * would emit near-dup pairs BETWEEN assets of the same batch —
-    * rows the probe-before-append contract excludes — so a replayed
-    * trigger finds its ledger marker and skips entirely; the pair
-    * append itself is batch-keyed stage-then-move, closing the
-    * pre-commit crash window for the output rows as well.
+    * verified near-dup pairs append to `outPath`, and then the
+    * batch's own band keys append into the index — later batches see
+    * earlier ones, and no batch matches itself. Exactly-once per
+    * trigger ([[twoPhaseTrigger]]); the index is the state, the
+    * stream holds none.
     */
-  /** ST25's per-trigger body — two-phase like gramProbeTrigger: a
-    * crash between appendPerceptualIndex and the batch marker used to
-    * let the replay re-probe against its own appended band keys
-    * (intra-batch pairs, overwriting the correct output files). The
-    * append itself stays a plain key append (replay lands duplicate
-    * keys the probe's distinct absorbs and compaction reclaims —
-    * the documented O54 contract).
-    */
-  private[graft] def perceptualTrigger(
-      df0: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String): Unit = {
-    val spark = df0.sparkSession
-    if (!graft.operators.Multimodal.perceptualAppendCommitted(spark, indexPath, batchId)) {
-      val df = df0.cache()
-      try {
-        if (!graft.operators.Multimodal.perceptualOutputCommitted(spark, indexPath, batchId)) {
-          val idx = graft.operators.Multimodal.readPerceptualIndex(spark, indexPath)
-          graft.sinks.RoutedSink.standard().write(
-            s"parquet-append-batch:$outPath:id:$batchId",
-            graft.operators.Multimodal.probePerceptualIndex(df, "doc_id", "payload", idx))
-          graft.operators.Multimodal.commitPerceptualOutput(spark, indexPath, batchId)
-        }
-        graft.operators.Multimodal.appendPerceptualIndex(df, "doc_id", "payload", indexPath)
-        graft.operators.Multimodal.commitPerceptualAppend(spark, indexPath, batchId)
-      } finally df.unpersist()
-    }
-  }
-
   def perceptualProbeStream(
       assetStream: DataFrame,
       indexPath: String,
@@ -991,6 +928,15 @@ object Streams {
         perceptualTrigger(batch.toDF(), batchId, indexPath, outPath)
     }
 
+  /** ST28's per-trigger body: shared-frame pairs out, the batch's frame
+    * keys into the index. The index path is its own ledger root. */
+  private[graft] def frameDupTrigger(
+      df: DataFrame, batchId: Long, indexPath: String, outPath: String): Unit =
+    twoPhaseTrigger(df, batchId, indexPath, outPath)(
+      b => graft.operators.Multimodal.probeFrameIndex(
+        b, graft.operators.Multimodal.readFrameIndex(b.sparkSession, indexPath)),
+      b => graft.operators.Multimodal.appendFrameIndex(b, indexPath))
+
   /** ST28: streaming FRAME-LEVEL video dedup at ingestion — the O57
     * twin of ST25's probe-then-append loop, closing the video
     * modality's live path: each micro-batch of (doc_id, payload)
@@ -998,34 +944,11 @@ object Streams {
     * (hash60 frame keys broadcast, pfx buckets DPP-pruned, the
     * FrameDfCap boilerplate exclusion applied on the UNION document
     * frequency — batch-bounded at any corpus size), the shared-frame
-    * pairs append through the routed sink, and THEN the batch's own
-    * frame keys append into the index. Replay discipline is exactly
-    * ST25's: the trigger is two-phase exactly-once (batch marker
-    * skips whole; `outdone` marker skips the probe and re-drives only
-    * the idempotent set-semantics append), and the pair output is
-    * batch-keyed stage-then-move. The index is the state; the stream
-    * holds none.
+    * pairs append to `outPath`, and then the batch's own frame keys
+    * append into the index. Exactly-once per trigger
+    * ([[twoPhaseTrigger]]); the index is the state, the stream holds
+    * none.
     */
-  private[graft] def frameDupTrigger(
-      df0: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String): Unit = {
-    val spark = df0.sparkSession
-    if (!graft.operators.Multimodal.frameAppendCommitted(spark, indexPath, batchId)) {
-      val df = df0.cache()
-      try {
-        if (!graft.operators.Multimodal.frameOutputCommitted(spark, indexPath, batchId)) {
-          val idx = graft.operators.Multimodal.readFrameIndex(spark, indexPath)
-          graft.sinks.RoutedSink.standard().write(
-            s"parquet-append-batch:$outPath:id:$batchId",
-            graft.operators.Multimodal.probeFrameIndex(df, idx))
-          graft.operators.Multimodal.commitFrameOutput(spark, indexPath, batchId)
-        }
-        graft.operators.Multimodal.appendFrameIndex(df, indexPath)
-        graft.operators.Multimodal.commitFrameAppend(spark, indexPath, batchId)
-      } finally df.unpersist()
-    }
-  }
-
   def frameDupStream(
       videoStream: DataFrame,
       indexPath: String,
@@ -1035,6 +958,29 @@ object Streams {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         frameDupTrigger(batch.toDF(), batchId, indexPath, outPath)
     }
+
+  /** ST29's per-trigger body: WARC records → provenance gate →
+    * extraction, then [[curateTrigger]] on the extracted docs. */
+  private[graft] def crawlIngestTrigger(
+      archives: org.apache.spark.sql.DataFrame, batchId: Long,
+      indexPath: String, outPath: String,
+      allow: Seq[String], block: Seq[String],
+      minWords: Long, minUniqPpm: Long, minNoveltyPpm: Long): Unit = {
+    import org.apache.spark.sql.functions.col
+    // replay short-circuit BEFORE constructing the prep plan: the
+    // ledger check costs one file stat, but building crawlDocs costs
+    // real driver work (the lineage cut plans the query at
+    // construction) — a replayed trigger must stay a no-op-priced
+    // no-op (round 16; measured 15 s → ledger-stat after this guard)
+    val spark = archives.sparkSession
+    if (graft.operators.IndexLayout.appendCommitted(spark, graft.operators.IndexLayout
+        .resolveDir(spark, graft.operators.GramIndex.ledgerRoot(indexPath)), batchId)) return
+    val docs = graft.operators.CrawlIngest
+      .crawlDocs(graft.sources.Warc.records(archives).toDF(), allow, block)
+      .select(col("doc_id"), col("text"))
+    curateTrigger(docs, batchId, indexPath, outPath,
+      minWords, minUniqPpm, minNoveltyPpm)
+  }
 
   /** ST29: the CRAWL INGESTION loop end-to-end — raw WARC archives
     * landing in a directory become curated, admitted corpus content
@@ -1051,26 +997,6 @@ object Streams {
     * (path, offset)-ordered recrawl choice, pure columnar extraction
     * — a replayed trigger recomputes the identical doc frame).
     */
-  private[graft] def crawlIngestTrigger(
-      archives: org.apache.spark.sql.DataFrame, batchId: Long,
-      indexPath: String, outPath: String,
-      allow: Seq[String], block: Seq[String],
-      minWords: Long, minUniqPpm: Long, minNoveltyPpm: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    // replay short-circuit BEFORE constructing the prep plan: the
-    // ledger check costs one file stat, but building crawlDocs costs
-    // real driver work (the lineage cut plans the query at
-    // construction) — a replayed trigger must stay a no-op-priced
-    // no-op (round 16; measured 15 s → ledger-stat after this guard)
-    if (graft.operators.GramIndex.appendCommitted(
-        archives.sparkSession, indexPath, batchId)) return
-    val docs = graft.operators.CrawlIngest
-      .crawlDocs(graft.sources.Warc.records(archives).toDF(), allow, block)
-      .select(col("doc_id"), col("text"))
-    curateTrigger(docs, batchId, indexPath, outPath,
-      minWords, minUniqPpm, minNoveltyPpm)
-  }
-
   def crawlIngestStream(
       archiveStream: DataFrame,
       indexPath: String,

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev-only: run one canned query and print every Spark job's wall
@@ -34,12 +33,7 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     (1 to runs).foreach { r =>

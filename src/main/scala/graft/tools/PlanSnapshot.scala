@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: write `.explain("formatted")` of named canned queries to
   * `<outDir>/<query>_<label>.txt` — the before/after plan evidence for
@@ -20,13 +19,7 @@ object PlanSnapshot {
     val label = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession("spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query timer: runs the named queries N times against a
   * sf dir and prints each run's wall time. Usage:
@@ -16,13 +15,7 @@ object QueryTime {
     //   SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }
-    val b0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val spark = ToolSession(("spark.sql.adaptive.enabled" -> "true") +: extra: _*)
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     names.foreach { name =>

@@ -94,12 +94,7 @@ object RuntimeAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names =
       if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     names.foreach { name =>

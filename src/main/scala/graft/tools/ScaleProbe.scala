@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale experiment driver: runs the capped/parameterized variants of
@@ -27,13 +26,7 @@ object ScaleProbe {
     val mode = args.lift(3).getOrElse("full")
     val cappedOnly = mode == "capped" || mode == "cheap"
     val cheapOnly = mode == "cheap"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession("spark.sql.adaptive.enabled" -> "true")
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -22,7 +22,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
         Seq((2000L, 2000L), (3000L, 3001L)) // self-loop + pair
       ).toDF("a", "b")
     val ml = labelsOf(Clustering.connectedComponents(edges, "a", "b", maxIterations = 500))
-    val st = labelsOf(Clustering.connectedComponents(edges, "a", "b", algo = "star"))
+    val st = labelsOf(Clustering.connectedComponentsStar(edges, "a", "b")._1)
     assert(st == ml)
   }
 
@@ -76,13 +76,13 @@ class ConnectedComponentsSpec extends SparkTestBase {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(Clustering.connectedComponents(empty, "a", "b").count() == 0)
-    assert(Clustering.connectedComponents(empty, "a", "b", algo = "star").count() == 0)
+    assert(Clustering.connectedComponentsStar(empty, "a", "b")._1.count() == 0)
   }
 
   test("star handles self-loop-only nodes by labeling them themselves") {
     import spark.implicits._
     val edges = Seq((5L, 5L), (7L, 8L)).toDF("a", "b")
-    val st = labelsOf(Clustering.connectedComponents(edges, "a", "b", algo = "star"))
+    val st = labelsOf(Clustering.connectedComponentsStar(edges, "a", "b")._1)
     assert(st == Map(5L -> 5L, 7L -> 7L, 8L -> 7L))
   }
 }

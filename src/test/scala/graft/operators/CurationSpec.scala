@@ -113,53 +113,67 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("trigger crash window: a replay AFTER the index file moves but BEFORE the batch marker converges exactly") {
-    // the window the two-phase ledger exists for: appendGramIndex's
-    // moves make the batch's counts reader-visible, then the driver
-    // dies before the batch marker lands. A single-marker replay
-    // would re-probe against an index already holding the batch
-    // (every verdict flips to rejected_novelty, singleton grams read
-    // as repeated) and OVERWRITE the correct batch-keyed outputs.
-    def markerOf(idxPath: String, id: Long) = new org.apache.hadoop.fs.Path(
-      IndexLayout.resolveDir(spark, s"$idxPath/grams") + "/_appends",
-      f"batch-$id%020d")
-    def eraseMarker(idxPath: String, id: Long): Unit = {
-      val p = markerOf(idxPath, id)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      assert(fs.delete(p, false), s"no marker to erase at $p")
+    // the window the two-phase ledger exists for: the index append's
+    // moves make the batch reader-visible, then the driver dies
+    // before the batch marker lands. A single-marker replay would
+    // re-probe against an index already holding the batch (verdicts
+    // flip to rejected_novelty, singleton grams read as repeated,
+    // novelty drops to ~0, the batch's own twins pair up) and
+    // OVERWRITE the correct batch-keyed outputs. Every ledger-guarded
+    // trigger runs batch 0, loses its marker, and replays.
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def netGrams(idxPath: String) = rows(GramIndex.readGramIndex(spark, idxPath).grams
+      .groupBy(col("bucket").cast("long"), col("g")).agg(sum(col("c"))))
+    def ledgerDir(ledgerRoot: String) = IndexLayout.resolveDir(spark, ledgerRoot)
+    def crashReplay(name: String, ledgerRoot: String, outPath: String,
+        index: () => Seq[String])(trigger: => Unit): Unit = {
+      trigger
+      val out0 = rows(spark.read.parquet(outPath))
+      val idx0 = index()
+      val marker = new org.apache.hadoop.fs.Path(
+        ledgerDir(ledgerRoot) + "/_appends", f"batch-${0L}%020d")
+      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.delete(marker, false), s"$name: no marker to erase at $marker")
+      assert(!IndexLayout.appendCommitted(spark, ledgerDir(ledgerRoot), 0L))
+      trigger
+      assert(rows(spark.read.parquet(outPath)) == out0,
+        s"$name: replay in the crash window changed the output")
+      assert(index() == idx0, s"$name: replay in the crash window changed the index")
+      assert(IndexLayout.appendCommitted(spark, ledgerDir(ledgerRoot), 0L))
     }
-    def gramsOfIdx(idxPath: String) = GramIndex.readGramIndex(spark, idxPath).grams
-      .select(col("bucket").cast("long"), col("g"), col("c"))
-      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-crashwin").toString
-    GramIndex.writeGramIndex(docs.where($"doc_id" < 300), s"$dir/idx", gram = 8, nBuckets = 8)
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-crashwin-$tag").toString
     val b1 = docs.where($"doc_id" >= 300 && $"doc_id" < 350).select($"doc_id", $"text")
-    graft.streaming.Streams.curateTrigger(
-      b1, 0L, s"$dir/idx", s"$dir/out", 5L, 350000L, 100000L)
-    val out0 = keyed(spark.read.parquet(s"$dir/out"))
-    val idx0 = gramsOfIdx(s"$dir/idx")
-    eraseMarker(s"$dir/idx", 0L) // the crash state: files moved, marker gone
-    assert(!GramIndex.appendCommitted(spark, s"$dir/idx", 0L))
-    graft.streaming.Streams.curateTrigger(
-      b1, 0L, s"$dir/idx", s"$dir/out", 5L, 350000L, 100000L)
-    assert(keyed(spark.read.parquet(s"$dir/out")) == out0,
-      "replay in the crash window changed the verdict outputs")
-    assert(gramsOfIdx(s"$dir/idx") == idx0,
-      "replay in the crash window changed the index's net counts")
-    assert(GramIndex.appendCommitted(spark, s"$dir/idx", 0L))
-    // same window for the ST24 probe trigger on a fresh setup
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-crashwin2").toString
-    GramIndex.writeGramIndex(docs.where($"doc_id" < 300), s"$dir2/idx", gram = 8, nBuckets = 8)
-    graft.streaming.Streams.gramProbeTrigger(b1, 0L, s"$dir2/idx", s"$dir2/out")
-    val p0 = spark.read.parquet(s"$dir2/out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    eraseMarker(s"$dir2/idx", 0L)
-    graft.streaming.Streams.gramProbeTrigger(b1, 0L, s"$dir2/idx", s"$dir2/out")
-    val p1 = spark.read.parquet(s"$dir2/out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(p1 == p0,
-      "replayed probe emitted false repeated intervals from the batch's own counts")
+    def gramCase(name: String)(trigger: (String, String) => Unit): Unit = {
+      val dir = tmp(name)
+      GramIndex.writeGramIndex(docs.where($"doc_id" < 300), s"$dir/idx", gram = 8, nBuckets = 8)
+      crashReplay(name, GramIndex.ledgerRoot(s"$dir/idx"), s"$dir/out",
+        () => netGrams(s"$dir/idx"))(trigger(s"$dir/idx", s"$dir/out"))
+    }
+    gramCase("curate")((idx, out) => graft.streaming.Streams.curateTrigger(
+      b1, 0L, idx, out, 5L, 350000L, 100000L))
+    gramCase("gramProbe")((idx, out) => graft.streaming.Streams.gramProbeTrigger(b1, 0L, idx, out))
+    gramCase("novelty")((idx, out) => graft.streaming.Streams.noveltyTrigger(b1, 0L, idx, out))
+    // the key-set indexes: each batch carries two copies of the same
+    // content, so a re-probe after the append would pair them up; the
+    // replayed append lands duplicate keys, so the index compares as a set
+    val pdir = tmp("perceptual")
+    Multimodal.writePerceptualIndex(Multimodal.imagePayloads(spark, sfDir)
+      .where($"doc_id" < 300), "doc_id", "payload", s"$pdir/idx")
+    def rewrapped(shift: Int, offset: Long) = Multimodal.payloadsWithContainer(spark, sfDir,
+        containerShift = shift, idOffset = offset)
+      .where($"doc_id" - offset < 50).select($"doc_id", $"payload")
+    val pb = rewrapped(1, 1000000000L).unionByName(rewrapped(2, 2000000000L))
+    crashReplay("perceptual", s"$pdir/idx", s"$pdir/out",
+      () => rows(Multimodal.readPerceptualIndex(spark, s"$pdir/idx").distinct()))(
+      graft.streaming.Streams.perceptualTrigger(pb, 0L, s"$pdir/idx", s"$pdir/out"))
+    val fdir = tmp("frame")
+    Multimodal.writeFrameIndex(Multimodal.videoPayloadsOf(docs.where($"doc_id" < 300)), s"$fdir/idx")
+    def remuxed(offset: Long) = docs.where($"doc_id" < 50)
+      .select(($"doc_id" + offset).as("doc_id"), $"text")
+    val fb = Multimodal.videoPayloadsOf(remuxed(300L).unionByName(remuxed(400L)))
+    crashReplay("frameDup", s"$fdir/idx", s"$fdir/out",
+      () => rows(Multimodal.readFrameIndex(spark, s"$fdir/idx").distinct()))(
+      graft.streaming.Streams.frameDupTrigger(fb, 0L, s"$fdir/idx", s"$fdir/out"))
   }
 
   test("parquet-append-batch is exactly-once: a replayed write rewrites the same files, never doubling rows") {

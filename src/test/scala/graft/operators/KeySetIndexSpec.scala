@@ -1,0 +1,83 @@
+package graft.operators
+
+import graft.SparkTestBase
+import graft.tables.Tables
+import org.apache.spark.sql.DataFrame
+
+/** The empty-epoch guards of the key-set index lifecycle
+  * ([[IndexLayout.KeySetIndex]]), one case per index. A zero-row
+  * `partitionBy` parquet write leaves only `_SUCCESS`, which Spark
+  * cannot read back, so a write whose corpus yields no keys and a
+  * compaction whose tombstones cover every doc must both raise before
+  * publishing — and leave the current epoch live and readable.
+  */
+class KeySetIndexSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private lazy val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+
+  private final case class Lifecycle(
+      write: (DataFrame, String) => Unit,
+      read: String => DataFrame,
+      tombstone: (DataFrame, String) => Unit,
+      compact: String => Unit)
+
+  private def guardsHold(name: String, ix: Lifecycle, seed: DataFrame, noKeys: DataFrame): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-empty-$name").toString
+    ix.write(seed, dir)
+    val live = IndexLayout.currentVersion(spark, dir)
+    val n = ix.read(dir).count()
+    assert(live.nonEmpty && n > 0, s"$name: the seed epoch is empty")
+
+    val onWrite = intercept[IllegalArgumentException](ix.write(noKeys, dir))
+    assert(onWrite.getMessage.contains("unreadable epoch"), onWrite.getMessage)
+    assert(IndexLayout.currentVersion(spark, dir) == live,
+      s"$name: a keyless write moved the manifest")
+    assert(ix.read(dir).count() == n, s"$name: the live epoch changed under a keyless write")
+
+    ix.tombstone(ix.read(dir).select("doc_id").distinct(), dir)
+    val onCompact = intercept[IllegalArgumentException](ix.compact(dir))
+    assert(onCompact.getMessage.contains("unreadable epoch"), onCompact.getMessage)
+    assert(IndexLayout.currentVersion(spark, dir) == live,
+      s"$name: a compaction to zero rows moved the manifest")
+    assert(ix.read(dir).count() == 0, s"$name: tombstoned docs surfaced")
+    assert(spark.read.parquet(IndexLayout.resolveDir(spark, dir)).count() == n,
+      s"$name: the live epoch changed under a refused compaction")
+  }
+
+  test("band index: a keyless write and a compaction to zero rows raise; the live epoch stays readable") {
+    guardsHold("band",
+      Lifecycle(
+        Dedup.writeBandIndex(_, "doc_id", "text", _),
+        Dedup.readBandIndex(spark, _),
+        Dedup.tombstoneBandIndex(_, "doc_id", _),
+        Dedup.compactBandIndex(spark, _)),
+      seed = docs.where($"doc_id" < 20),
+      // under three words: no shingles, no band keys
+      noKeys = Seq((1L, "two words")).toDF("doc_id", "text"))
+  }
+
+  test("perceptual index: a keyless write and a compaction to zero rows raise; the live epoch stays readable") {
+    guardsHold("perceptual",
+      Lifecycle(
+        Multimodal.writePerceptualIndex(_, "doc_id", "payload", _),
+        Multimodal.readPerceptualIndex(spark, _),
+        Multimodal.tombstonePerceptualIndex(_, "doc_id", _),
+        Multimodal.compactPerceptualIndex(spark, _)),
+      seed = Multimodal.imagePayloads(spark, sfDir).where($"doc_id" < 20),
+      // a sub-60-byte body has no perceptual hash
+      noKeys = Seq((1L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload"))
+  }
+
+  test("frame index: a keyless write and a compaction to zero rows raise; the live epoch stays readable") {
+    guardsHold("frame",
+      Lifecycle(
+        Multimodal.writeFrameIndex(_, _),
+        Multimodal.readFrameIndex(spark, _),
+        Multimodal.tombstoneFrameIndex(_, "doc_id", _),
+        Multimodal.compactFrameIndex(spark, _)),
+      seed = Multimodal.videoPayloadsOf(docs.where($"doc_id" < 20)),
+      // under 50 bytes of text: a container with no whole sample
+      noKeys = Multimodal.videoPayloadsOf(Seq((1L, "tiny")).toDF("doc_id", "text")))
+  }
+}
