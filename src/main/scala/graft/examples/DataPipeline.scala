@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Workflow
-import graft.functions.PortableHash
+import graft.functions.{GraftExpressions, PortableHash}
 import graft.operators.{Clustering, Dedup, Ops, ShardLayout}
 import graft.tables.Tables
 
@@ -14,7 +14,7 @@ import graft.tables.Tables
   * collapses into one Catalyst plan at the terminal action — a
   * language filter declared in the TERMINAL export cell reaches the
   * parquet scan through seven upstream cells (every cell between is
-  * pushdown-transparent by construction: semi/anti joins on doc_id,
+  * pushdown-transparent by construction: anti joins on doc_id,
   * the dedup window and packing window keyed on lang, row-local
   * filters), and nothing materializes between stages unless a cell
   * opts into a materialization policy (`pinCanonical = true` pins the
@@ -28,6 +28,28 @@ import graft.tables.Tables
   * Run: sbt "runMain graft.examples.DataPipeline"
   */
 object DataPipeline {
+
+  /** The C4/Gopher quality gate over a `text` column: keep a doc of
+    * n words iff 20 <= n <= 100000 and its repetition
+    * dup_frac = 1 - distinct/total word 3-grams is below 0.3. A doc of
+    * n words has n - 2 3-grams, so the rule needs only the size of
+    * its distinct-3-gram array: no explode, no (doc, 3-gram) shuffle,
+    * no verdict join — the gate is one Filter and adds no exchange to
+    * any route through it. Catalyst pushes it through docs.clean and
+    * inlines the aliases, so each reference is evaluated on its own
+    * (see [[graft.functions.WordCount]]): words are counted by the
+    * byte-pass WordCount, and the 3-gram array is referenced once,
+    * behind the length rule's short circuit. The (doc, 3-gram) count
+    * form keeps the same docs — its per-doc group count is the number
+    * of distinct 3-grams and its sum is n - 2 (DataPipelineSpec pins
+    * the equivalence). Null text is dropped.
+    */
+  private[graft] def qualityGate(in: DataFrame): DataFrame = {
+    val n = GraftExpressions.wordCount(col("text"))
+    val distinctGrams = size(GraftExpressions.wordShingles(col("text"), 3, distinct = true))
+    in.where(n >= 20 && n <= 100000 &&
+      lit(1.0) - distinctGrams.cast("double") / (n - 2) < 0.3)
+  }
 
   def build(spark: SparkSession, dir: String,
       pinCanonical: Boolean = false): Workflow = {
@@ -95,35 +117,14 @@ object DataPipeline {
       }
       .depend("in" -> "docs.canonical")
 
-    // quality gate — the t12/t17 filter families as ONE cell: C4/
-    // Gopher length+shape rules are per-row expressions; the
-    // repetition rule needs the (doc, 3-gram) count, joined back as
-    // a keep verdict. docs.dedup (and everything below it) consumes
-    // this cell, so downstream cells see only surviving docs, and
-    // because the whole route is one plan, the verdict join and the
-    // downstream work share the scan. (docs.lang/.langstats stay on
-    // docs.clean on purpose — they are the §1 pushdown/pruning proof
-    // points, which need a scan the quality join doesn't force to
-    // read text.)
+    // quality gate — the t12/t17 filter families as ONE row-local
+    // filter (see qualityGate); docs.dedup and everything below it
+    // consume this cell, so downstream cells see only surviving docs.
+    // (docs.lang/.langstats stay on docs.clean on purpose — they are
+    // the §1 pushdown/pruning proof points, which need a scan that the
+    // gate doesn't force to read text.)
     wkf
-      .provide("docs.quality") { ctx =>
-        val in = ctx.as[DataFrame]("in")
-        val shape = in
-          .withColumn("_w", expr("filter(split(text, ' '), x -> x <> '')"))
-          .withColumn("_nw", size(col("_w")).cast("long"))
-          .where(col("_nw") >= 20 && col("_nw") <= 100000)
-          .drop("_w", "_nw")
-        val rep = shape
-          .select(col("doc_id"), explode(
-            graft.functions.GraftExpressions.wordShingles(col("text"), 3, distinct = false))
-            .as("g"))
-          .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-          .groupBy(col("doc_id"))
-          .agg((lit(1.0) - count(lit(1)).cast("double") / sum(col("c"))).as("dup_frac"))
-          .where(col("dup_frac") < 0.3)
-          .select(col("doc_id"))
-        shape.join(rep, Seq("doc_id"), "left_semi")
-      }
+      .provide("docs.quality") { ctx => qualityGate(ctx.as[DataFrame]("in")) }
       .depend("in" -> "docs.clean")
 
     // language slice — the cross-cell pushdown proof point: this

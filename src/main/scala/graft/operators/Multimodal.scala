@@ -607,6 +607,29 @@ object Multimodal {
     graft.operators.Dedup.bandKeysFromShingles(rb, idCol, "_sk")
   }
 
+  /** The raster band index ([[IndexLayout.KeySetIndex]]):
+    * [[rasterBandKeys]] rows (doc_id, band, bh) plus `pfx`, the first
+    * hex char of the band hash, under hive (band, pfx) dirs — the text
+    * band index's layout, so ST16 probes it the same way.
+    */
+  private val RasterBandIndex = new IndexLayout.KeySetIndex("RasterBandIndex", "band", "pfx")
+
+  /** Append the kept payloads' raster band keys into the CURRENT
+    * epoch; an append that a concurrent publish overtook raises
+    * instead of landing in a retired epoch
+    * ([[IndexLayout.KeySetIndex.append]]).
+    */
+  private[graft] def appendRasterBandIndex(
+      kept: DataFrame,
+      idCol: String,
+      payloadCol: String,
+      path: String
+  ): Unit =
+    RasterBandIndex.append(
+      rasterBandKeys(kept, idCol, payloadCol).withColumnRenamed(idCol, "doc_id")
+        .withColumn("pfx", substring(col("bh"), 1, 1)),
+      path)
+
   private def le16hex(c: Column): Column =
     concat(substring(hexN(c, 4), 3, 2), substring(hexN(c, 4), 1, 2))
   private def le32hex(c: Column): Column =

@@ -188,11 +188,12 @@ object Ops {
     * via posting-list self-join intersection counts (no cross join,
     * no token arrays through shuffles). Token arrays are made distinct
     * on entry (set semantics); for already-distinct arrays the
-    * array_distinct is a no-op. `maxPostingsPerToken` caps candidate
-    * generation; the values of surviving pairs are exact either way
-    * (see [[overlapCounts]]).
+    * array_distinct is a no-op. Both set sizes ride the pair count,
+    * so `df` must hold ONE row per id (see [[overlapCounts]]).
+    * `maxPostingsPerToken` caps candidate generation; the values of
+    * surviving pairs are exact either way.
     *
-    * Caching: the capped path caches the posting list for its 3-5
+    * Caching: the capped path caches the posting list for its three
     * consumers and cannot unpersist it before the caller's terminal
     * action — call `spark.catalog.clearCache()` (or unpersist via the
     * storage UI) after consuming the result if you invoke this
@@ -204,22 +205,19 @@ object Ops {
       tokensCol: String,
       threshold: Double,
       maxPostingsPerToken: Option[Int] = None
-  ): DataFrame = {
-    val (counts, sizes) = overlapCounts(df, idCol, tokensCol, _ < _, maxPostingsPerToken)
-    counts
-      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
-      .join(sizes.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
+  ): DataFrame =
+    overlapCounts(df, idCol, tokensCol, _ < _, maxPostingsPerToken)
       .withColumn("jaccard", col("_c").cast("double") / (col("_na") + col("_nb") - col("_c")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Ordered-pair containment (|A∩B| / |A| >= threshold) with the same
     * optional hot-token cap on candidate GENERATION as [[jaccardPairs]]
-    * (excluded tokens are a recall trade only). Values of surviving
-    * pairs are always EXACT. d15's canned query is the cap=None
-    * postings form of this (same pairs and counts; d15 additionally
-    * rounds + orders).
+    * (excluded tokens are a recall trade only) and the same
+    * one-row-per-id contract. Values of surviving pairs are always
+    * EXACT; |A| is the `_na` the pair count carries. d15's canned
+    * query is the cap=None postings form of this (same pairs and
+    * counts; d15 additionally rounds + orders).
     */
   def containmentPairs(
       df: DataFrame,
@@ -227,20 +225,26 @@ object Ops {
       tokensCol: String,
       threshold: Double,
       maxPostingsPerToken: Option[Int] = None
-  ): DataFrame = {
-    val (counts, sizes) = overlapCounts(df, idCol, tokensCol, _ =!= _, maxPostingsPerToken)
-    counts
-      .join(sizes.select(col("_id").as("id_a"), col("_n").as("_na")), "id_a")
+  ): DataFrame =
+    overlapCounts(df, idCol, tokensCol, _ =!= _, maxPostingsPerToken)
       .withColumn("containment", col("_c").cast("double") / col("_na"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("_c").as("n_shared"),
         col("_na").as("n_a"), col("containment"))
-  }
 
   /** The posting-list overlap core of [[jaccardPairs]] and
-    * [[containmentPairs]]: (shared-token counts (id_a, id_b, _c) for
-    * the doc pairs `pair` keeps, each doc's distinct-token count
-    * (_id, _n)).
+    * [[containmentPairs]]: one row (id_a, id_b, _na, _nb, _c) per doc
+    * pair that `pair` keeps and that shares a token, where `_c` is the
+    * shared-token count and `_na`/`_nb` are the two docs' distinct-token
+    * counts.
+    *
+    * Contract: `df` holds ONE row per id. A doc's set size is computed
+    * in its row (`size(array_distinct(tokens))`) and carried on each of
+    * its posting rows through the self-join, and the pair count groups
+    * on it — no per-doc size aggregate and no joins back onto the
+    * pairs. Two rows with one id would be counted as two docs of that
+    * id. Every caller meets the contract: `Dedup.shingleArrays` emits
+    * one row per `doc_id`.
     *
     * Worst-case bound for scale: a token appearing in k docs emits
     * k^2 candidate rows. With a cap, tokens in more than
@@ -260,25 +264,25 @@ object Ops {
       tokensCol: String,
       pair: (Column, Column) => Column,
       maxPostingsPerToken: Option[Int]
-  ): (DataFrame, DataFrame) = {
-    val posting =
-      df.select(col(idCol).as("_id"), explode(array_distinct(col(tokensCol))).as("_t"))
-    val sizes = posting.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
+  ): DataFrame = {
+    val posting = df
+      .select(col(idCol).as("_id"), array_distinct(col(tokensCol)).as("_d"))
+      .select(col("_id"), size(col("_d")).cast("long").as("_n"), explode(col("_d")).as("_t"))
 
     def pairCounts(src: DataFrame): DataFrame =
-      src.select(col("_id").as("id_a"), col("_t"))
-        .join(src.select(col("_id").as("id_b"), col("_t")), Seq("_t"))
+      src.select(col("_id").as("id_a"), col("_n").as("_na"), col("_t"))
+        .join(src.select(col("_id").as("id_b"), col("_n").as("_nb"), col("_t")), Seq("_t"))
         .where(pair(col("id_a"), col("id_b")))
-        .groupBy(col("id_a"), col("id_b"))
+        .groupBy(col("id_a"), col("id_b"), col("_na"), col("_nb"))
         .agg(count(lit(1)).as("_c"))
 
-    val counts = maxPostingsPerToken match {
+    maxPostingsPerToken match {
       case None => pairCounts(posting)
       case Some(cap) =>
-        // the capped path consumes the posting list 4-5 times (df
-        // stats, anti-join, semi-join, sizes) — cache it rather than
-        // re-exploding the token arrays per consumer; `capped` feeds
-        // both self-join sides
+        // the capped path consumes the posting list 3 times (df stats,
+        // anti-join, semi-join) — cache it rather than re-exploding
+        // the token arrays per consumer; `capped` feeds both self-join
+        // sides
         posting.cache()
         val hot = posting.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
           .filter(col("_df") > cap).select(col("_t"))
@@ -292,9 +296,8 @@ object Ops {
         pairCounts(capped)
           .join(hotSets.select(col("_id").as("id_a"), col("_h").as("_ha")), Seq("id_a"), "left")
           .join(hotSets.select(col("_id").as("id_b"), col("_h").as("_hb")), Seq("id_b"), "left")
-          .select(col("id_a"), col("id_b"), (col("_c") + sharedHot).as("_c"))
+          .select(col("id_a"), col("id_b"), col("_na"), col("_nb"), (col("_c") + sharedHot).as("_c"))
     }
-    (counts, sizes)
   }
 
   /** Brute-force cosine top-k: broadcast probes against a corpus of

@@ -781,24 +781,22 @@ object Streams {
       .select(col("doc_id"), col("band"), col("corpus_id"))
 
   /** ST16's write half: streaming maintenance of the persisted raster
-    * band index — the same routed `:append` sink and manifest-
-    * resolved versioned layout as [[appendBandIndexStream]], so one
-    * write surface serves text and media indexes alike (and the same
-    * replay caveat applies: a replayed micro-batch's duplicate band
-    * keys are harmless to probe semantics and reclaimed at the next
-    * compaction).
+    * band index — each micro-batch appends through
+    * [[graft.operators.Multimodal.appendRasterBandIndex]] inside
+    * foreachBatch, as [[appendBandIndexStream]] does for text, so the
+    * epoch is resolved per batch and a batch that a concurrent publish
+    * overtook fails the query instead of landing in a retired epoch. A
+    * replayed micro-batch appends its band keys twice; the raster
+    * index has no compaction to reclaim them yet.
     */
   def appendRasterBandIndexStream(
       keptPayloads: DataFrame,
       path: String
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    routedStreamSink(
-      graft.operators.Multimodal.rasterBandKeys(keptPayloads, "doc_id", "payload")
-        .withColumn("pfx", substring(col("bh"), 1, 1)),
-      graft.sinks.RoutedSink.standard(),
-      _ => "parquet-append:" +
-        graft.operators.IndexLayout.resolveDir(keptPayloads.sparkSession, path) +
-        ":by:band+pfx")
+    keptPayloads.writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        graft.operators.Multimodal.appendRasterBandIndex(batch.toDF(), "doc_id", "payload", path)
+    }
 
   /** ST26's per-trigger body: novelty scores out, the batch's gram
     * counts into the index. */

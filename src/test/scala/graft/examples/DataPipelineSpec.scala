@@ -42,8 +42,8 @@ class DataPipelineSpec extends SparkTestBase {
 
   test("a lang filter in the TERMINAL export cell reaches the scan through 7 cells") {
     // raw → clean → quality → dedup → canonical → sample → packed →
-    // export: every intermediate cell is pushdown-transparent (semi/
-    // anti joins on doc_id, windows PARTITIONED on lang — dedup keys
+    // export: every intermediate cell is pushdown-transparent (anti
+    // joins on doc_id, windows PARTITIONED on lang — dedup keys
     // (h, lang) precisely so this predicate can cross it, row-local
     // filters), so the terminal predicate must land in the parquet
     // scan — SURVEY §1's thesis at full pipeline width
@@ -56,6 +56,85 @@ class DataPipelineSpec extends SparkTestBase {
     assert(pushed.exists(_.contains("EqualTo(lang,de)")),
       s"lang filter did not reach any documents scan: $pushed")
     assert(df.count() > 0, "the de export must be non-empty for the pin to bite")
+  }
+
+  /** The repetition rule in its (doc, 3-gram) count form — one row
+    * per 3-gram occurrence, a count per (doc, gram), then distinct
+    * grams over occurrences per doc, joined back as a keep verdict —
+    * kept as the reference that [[DataPipeline.qualityGate]] must
+    * agree with.
+    */
+  private def countFormGate(in: DataFrame): DataFrame = {
+    val shape = in
+      .withColumn("_nw", size(expr("filter(split(text, ' '), x -> x <> '')")).cast("long"))
+      .where(col("_nw") >= 20 && col("_nw") <= 100000)
+      .drop("_nw")
+    val rep = shape
+      .select(col("doc_id"), explode(
+        graft.functions.GraftExpressions.wordShingles(col("text"), 3, distinct = false)).as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
+      .agg((lit(1.0) - count(lit(1)).cast("double") / sum(col("c"))).as("dup_frac"))
+      .where(col("dup_frac") < 0.3)
+      .select(col("doc_id"))
+    shape.join(rep, Seq("doc_id"), "left_semi")
+  }
+
+  private def keptIds(df: DataFrame): Set[Long] =
+    df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+
+  test("docs.quality keeps the (doc, 3-gram) count form's docs on the sf0.01 corpus") {
+    // the oracle-scale corpus sits next to the spec-scale one
+    val sf = DataPipeline.build(spark, new java.io.File(sfDir).getParent + "/sf0.01")
+    val clean = sf.run("docs.clean").asInstanceOf[DataFrame]
+    val got = keptIds(sf.run("docs.quality").asInstanceOf[DataFrame])
+    val expected = keptIds(countFormGate(clean))
+    assert(got == expected,
+      s"only new: ${(got -- expected).take(5)}, only reference: ${(expected -- got).take(5)}")
+    // both rules must bite for the agreement to mean anything
+    assert(got.nonEmpty && got.size < clean.count(), s"kept ${got.size}")
+  }
+
+  test("docs.quality agrees with the count form at the rule boundaries") {
+    import spark.implicits._
+    def words(n: Int, tag: String) = (1 to n).map(i => s"$tag$i")
+    // 22 words, 20 3-grams of which 14 are distinct: distinct/total is
+    // 0.7, so dup_frac sits exactly on the 0.3 bound and the strict
+    // '<' drops it, in either form's IEEE arithmetic
+    val atBound = (words(13, "u") ++ Seq.fill(9)("r")).mkString(" ")
+    val grams = atBound.split(" ").sliding(3).map(_.mkString(" ")).toSeq
+    assert(grams.size == 20 && grams.distinct.size == 14)
+    // 4 of 22 3-grams repeat (dup_frac ~ 0.18): kept
+    val under = (words(17, "v") ++ Seq.fill(7)("r")).mkString(" ")
+    val rows = Seq(
+      1L -> Some(atBound),
+      2L -> Some(under),
+      3L -> Some(words(19, "w").mkString(" ")),
+      4L -> Some(words(20, "w").mkString(" ")),
+      5L -> Some(words(20, "x").mkString("  ", "   ", " ")),
+      6L -> Some(words(19, "y").mkString("    ", "  ", "  ")),
+      7L -> None
+    ).toDF("doc_id", "text")
+    val got = keptIds(DataPipeline.qualityGate(rows))
+    assert(got == keptIds(countFormGate(rows)))
+    assert(got == Set(2L, 4L, 5L), s"kept $got")
+  }
+
+  test("docs.quality is one row-local filter: no exchange, no generator, one 3-gram build") {
+    val df = wkf.run("docs.quality").asInstanceOf[DataFrame]
+    df.collect()
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+      s"exchange in the quality plan:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]),
+      s"generator in the quality plan:\n$plan")
+    // the scan's DataFilters only list the pushed-down predicate (no
+    // parquet filter can evaluate it); the Filter node evaluates it
+    val shingles = nodes
+      .filterNot(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+      .flatMap(_.expressions.flatMap(_.collect { case w: graft.functions.WordShingles => w }))
+    assert(shingles.size == 1, s"${shingles.size} 3-gram builds in the quality plan:\n$plan")
   }
 
   test("pinCanonical exercises the materialization policy over the composed DAG") {
@@ -327,15 +406,21 @@ class DataPipelineSpec extends SparkTestBase {
     assert(verdicts() == v1, "replayed takedown changed verdicts")
   }
 
-  private def fileScans(plan: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = plan match {
-    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+  /** Every physical node of an executed plan, through AQE stages and
+    * reused exchanges (the final plan only, never AQE's initial one).
+    */
+  private def planNodes(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = plan match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      fileScans(a.executedPlan)
+      planNodes(a.executedPlan)
     case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      fileScans(q.plan)
+      q +: planNodes(q.plan)
     case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-      fileScans(r.child)
-    case other => other.children.flatMap(fileScans)
+      r +: planNodes(r.child)
+    case other => other +: other.children.flatMap(planNodes)
   }
+
+  private def fileScans(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    planNodes(plan).collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
 }

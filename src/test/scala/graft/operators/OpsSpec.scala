@@ -100,6 +100,25 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("capped jaccardPairs carries doc sizes on the postings: no per-doc count aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val sh = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), expr("array_distinct(filter(split(text, ' '), x -> x <> ''))").as("toks"))
+    val df = Ops.jaccardPairs(sh, "doc_id", "toks", 0.6, maxPostingsPerToken = Some(20))
+    // the optimized plan, not the executed one: AQE may prune a branch
+    // that the data leaves empty
+    val perDoc = df.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.groupingExpressions.map(_.sql) == Seq("_id") =>
+        a.aggregateExpressions.flatMap(_.collect { case e: AggregateExpression => e.aggregateFunction })
+    }.flatten
+    // the hot-token sets are the one per-doc aggregate left; a doc's
+    // set size rides its posting rows instead of a count joined back
+    assert(perDoc.nonEmpty && perDoc.forall(_.isInstanceOf[CollectSet]),
+      s"aggregates grouped on _id alone: $perDoc\n${df.queryExecution.optimizedPlan}")
+    spark.catalog.clearCache()
+  }
+
   test("embeddingCandidates volume grows ~linearly when planes scale with log2(n)") {
     import org.apache.spark.sql.functions._
     // deterministic pseudo-random corpus; doubling n while adding one

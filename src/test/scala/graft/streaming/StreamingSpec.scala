@@ -471,6 +471,63 @@ class StreamingSpec extends SparkTestBase {
     assert(banded.count() > 0)
   }
 
+  /** A raster band index whose first epoch holds the even-id corpus
+    * payloads' keys, plus a two-file stream of the odd-id payloads.
+    */
+  private def rasterIndexAndStream(tag: String) = {
+    import spark.implicits._
+    val corpus = graft.operators.Multimodal.imagePayloads(spark, sfDir)
+    val idx = java.nio.file.Files.createTempDirectory(s"graft-$tag-idx").toString
+    val v = graft.operators.IndexLayout.nextVersion(spark, idx)
+    graft.operators.Multimodal.rasterBandKeys(corpus.where($"doc_id" % 2 === 0), "doc_id", "payload")
+      .withColumn("pfx", substring($"bh", 1, 1))
+      .write.partitionBy("band", "pfx").parquet(s"$idx/$v")
+    graft.operators.IndexLayout.publish(spark, idx, v)
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    val odd = corpus.where($"doc_id" % 2 === 1)
+    odd.where($"doc_id" % 4 === 1).coalesce(1).write.parquet(s"$dir/f1")
+    Thread.sleep(1100)
+    odd.where($"doc_id" % 4 === 3).coalesce(1).write.parquet(s"$dir/f2")
+    val stream = spark.readStream.schema(corpus.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir + "/f*")
+    (corpus, idx, stream)
+  }
+
+  test("ST16 write half: each micro-batch appends its raster band keys into the current epoch") {
+    import spark.implicits._
+    val (corpus, idx, stream) = rasterIndexAndStream("st16-append")
+    val epoch = graft.operators.IndexLayout.resolveDir(spark, idx)
+    val q = Streams.appendRasterBandIndexStream(stream, idx).start()
+    q.processAllAvailable(); q.stop()
+    assert(graft.operators.IndexLayout.resolveDir(spark, idx) == epoch)
+    val stored = spark.read.parquet(epoch)
+      .select($"doc_id", $"band".cast("int"), $"bh").distinct()
+    val expected = graft.operators.Multimodal.rasterBandKeys(corpus, "doc_id", "payload")
+      .select($"doc_id", $"band".cast("int"), $"bh")
+    assert(stored.except(expected).isEmpty && expected.except(stored).isEmpty)
+    assert(stored.where($"doc_id" % 2 === 1).count() > 0, "no streamed keys landed")
+  }
+
+  test("ST16 write half: an append that a concurrent publish overtook fails the query") {
+    val (_, idx, stream) = rasterIndexAndStream("st16-race")
+    // a rewrite publishing its epoch WHILE the batch's append writes:
+    // the payloads pass through a function that flips the manifest
+    val manifest = new java.io.File(idx, graft.operators.IndexLayout.ManifestName).getPath
+    val publishMidAppend = udf { (b: Array[Byte]) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(manifest), "v00002".getBytes("UTF-8"))
+      b
+    }.asNondeterministic()
+    val racing = stream.withColumn("payload", publishMidAppend(col("payload")))
+    val q = Streams.appendRasterBandIndexStream(racing, idx).start()
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("appendRasterBandIndex: epoch moved during append")),
+      s"unexpected failure: $err")
+  }
+
   test("ST17: no-eviction regime — emitted windows equal the batch exact top-10") {
     import spark.implicits._
     // kCounters far above any window's user cardinality at spec
