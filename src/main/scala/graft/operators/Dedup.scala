@@ -264,7 +264,7 @@ object Dedup {
     * is the first hex char of the band hash — band-count × 16
     * directories.
     */
-  private val BandIndex = new IndexLayout.KeySetIndex("BandIndex", "band", "pfx")
+  private val BandIndex = new IndexLayout.KeySetIndex("BandIndex", "doc_id", "band", "pfx")
 
   private def bandIndexKeys(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     bandKeys(docs, idCol, textCol).withColumnRenamed(idCol, "doc_id")

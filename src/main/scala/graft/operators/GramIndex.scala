@@ -33,9 +33,9 @@ import graft.operators.{IndexLayout => IL}
   * ledger + stage-then-move): a replayed at-least-once micro-batch
   * is a structural no-op, so a replayed singleton gram can never be
   * double-counted across the ≥2 threshold and falsely flagged as
-  * repeated. Appends fail LOUDLY if a concurrent rewrite flips the
-  * epoch mid-append (requireStillCurrent — the appended counts would
-  * otherwise sit invisible in a retired directory).
+  * repeated. Writes and compactions publish through
+  * [[IndexLayout.rewrite]], appends and takedowns land through
+  * [[IndexLayout.appendInto]] (the epoch protocol is stated there).
   * [[compactGramIndex]] rewrites the epoch with merged counts,
   * carrying the ledger forward so late replays of already-merged
   * batches stay no-ops.
@@ -96,16 +96,14 @@ object GramIndex {
     val counts = counts0
       .withColumn("bucket", bucketOf(nb))
       .select(col("bucket"), col("g"), col("c"))
-    val root = s"$path/grams"
-    val v = IL.nextVersion(spark, root)
-    graft.sinks.RoutedSink.standard().write(s"parquet:$root/$v:by:bucket", counts)
+    IL.rewrite(spark, s"$path/grams", keep = 1) { (_, next) =>
+      graft.sinks.RoutedSink.standard().write(s"parquet:$next:by:bucket", counts)
+      // the manifest records the DERIVED bucket count (nb), never the
+      // caller arg — under auto-sizing the arg is 0, and a 0 in the
+      // authoritative manifest would poison every probe's pmod routing
+      IL.writeManifest(spark, next, MetaName, "gram" -> gram, "nBuckets" -> nb)
+    }
     counts0.unpersist() // the CACHED frame, not the derived projection
-    // the manifest records the DERIVED bucket count (nb), never the
-    // caller arg — under auto-sizing the arg is 0, and a 0 in the
-    // authoritative manifest would poison every probe's pmod routing
-    IL.writeManifest(spark, s"$root/$v", MetaName, "gram" -> gram, "nBuckets" -> nb)
-    IL.publish(spark, root, v)
-    IL.gcVersions(spark, root, keep = 1)
   }
 
   def readGramIndex(spark: SparkSession, path: String): GramIndexHandle = {
@@ -236,23 +234,21 @@ object GramIndex {
   def appendGramIndex(batch: DataFrame, path: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val idx = readGramIndex(spark, path)
-    val root = s"$path/grams"
-    val dir = IL.resolveDir(spark, root)
-    if (IL.appendCommitted(spark, dir, batchId)) return
-    // cached: the batch agg feeds the isEmpty probe AND the staged
-    // write (the writeGramIndex counts0 lesson — without it every
-    // streamed trigger tokenizes and aggregates its batch twice)
-    val counts = gramsOf(batch, idx.gram)
-      .groupBy(col("g")).agg(count(lit(1)).as("c"))
-      .withColumn("bucket", bucketOf(idx.nBuckets))
-      .select(col("bucket"), col("g"), col("c"))
-      .cache()
-    try {
-      if (counts.isEmpty) { IL.commitAppend(spark, dir, batchId); return }
-      IL.stageMoveAppend(counts, dir, "bucket", batchId)
-    } finally counts.unpersist()
-    IL.commitAppend(spark, dir, batchId)
-    IL.requireStillCurrent(spark, root, dir, "appendGramIndex")
+    IL.appendInto(spark, s"$path/grams", "appendGramIndex") { dir =>
+      if (!IL.appendCommitted(spark, dir, batchId)) {
+        // cached: the batch agg feeds the isEmpty probe AND the staged
+        // write (the writeGramIndex counts0 lesson — without it every
+        // streamed trigger tokenizes and aggregates its batch twice)
+        val counts = gramsOf(batch, idx.gram)
+          .groupBy(col("g")).agg(count(lit(1)).as("c"))
+          .withColumn("bucket", bucketOf(idx.nBuckets))
+          .select(col("bucket"), col("g"), col("c"))
+          .cache()
+        try if (!counts.isEmpty) IL.stageMoveAppend(counts, dir, "bucket", batchId)
+        finally counts.unpersist()
+        IL.commitAppend(spark, dir, batchId)
+      }
+    }
   }
 
   /** True when `takedownId` already applied to the CURRENT epoch. */
@@ -285,20 +281,18 @@ object GramIndex {
   def takedownGramIndex(docs: DataFrame, path: String, takedownId: Long): Unit = {
     val spark = docs.sparkSession
     val idx = readGramIndex(spark, path)
-    val root = s"$path/grams"
-    val dir = IL.resolveDir(spark, root)
-    if (IL.appendCommitted(spark, dir, takedownId, "takedown")) return
-    val neg = gramsOf(docs, idx.gram)
-      .groupBy(col("g")).agg((count(lit(1)) * lit(-1L)).as("c"))
-      .withColumn("bucket", bucketOf(idx.nBuckets))
-      .select(col("bucket"), col("g"), col("c"))
-      .cache() // isEmpty probe + staged write share one computation
-    try {
-      if (neg.isEmpty) { IL.commitAppend(spark, dir, takedownId, "takedown"); return }
-      IL.stageMoveAppend(neg, dir, "bucket", takedownId, "takedown")
-    } finally neg.unpersist()
-    IL.commitAppend(spark, dir, takedownId, "takedown")
-    IL.requireStillCurrent(spark, root, dir, "takedownGramIndex")
+    IL.appendInto(spark, s"$path/grams", "takedownGramIndex") { dir =>
+      if (!IL.appendCommitted(spark, dir, takedownId, "takedown")) {
+        val neg = gramsOf(docs, idx.gram)
+          .groupBy(col("g")).agg((count(lit(1)) * lit(-1L)).as("c"))
+          .withColumn("bucket", bucketOf(idx.nBuckets))
+          .select(col("bucket"), col("g"), col("c"))
+          .cache() // isEmpty probe + staged write share one computation
+        try if (!neg.isEmpty) IL.stageMoveAppend(neg, dir, "bucket", takedownId, "takedown")
+        finally neg.unpersist()
+        IL.commitAppend(spark, dir, takedownId, "takedown")
+      }
+    }
   }
 
   /** Epoch repair: rewrite with one merged row per gram (append files
@@ -310,7 +304,7 @@ object GramIndex {
     * hive store — the writeGramIndex guard's compaction twin). The
     * append ledger (ingestion AND takedown markers) carries into the
     * new epoch so a late replay of an already-merged batch stays a
-    * no-op. Atomic publish.
+    * no-op.
     *
     * CORRUPTION DETECTION: a net count < 0 cannot arise under
     * [[takedownGramIndex]]'s single-application contract — it is
@@ -325,21 +319,19 @@ object GramIndex {
     * (rebuild from the corpus store, or append compensating counts)
     * before compaction can proceed.
     */
-  def compactGramIndex(spark: SparkSession, path: String): Unit = {
-    val idx = readGramIndex(spark, path)
-    val root = s"$path/grams"
-    val oldDir = IL.resolveDir(spark, root)
-    // cached: the corpus-scale merge agg feeds the corruption probe,
-    // the empty-epoch probe AND the write — without the cache the
-    // expensive half of the compaction would run three times (the
-    // writeGramIndex counts0 lesson)
-    val net = idx.grams.groupBy(col("bucket"), col("g")).agg(sum(col("c")).as("c"))
-      .cache()
-    // the try/finally wraps the REQUIRES too: a corruption/empty-epoch
-    // refusal must not strand the corpus-scale aggregate in the block
-    // manager (a service catching the error and retrying would leak
-    // one cached frame per failed compaction)
-    val v =
+  def compactGramIndex(spark: SparkSession, path: String): Unit =
+    IL.rewrite(spark, s"$path/grams", keep = 1, carryLedger = true) { (_, next) =>
+      val idx = readGramIndex(spark, path)
+      // cached: the corpus-scale merge agg feeds the corruption probe,
+      // the empty-epoch probe AND the write — without the cache the
+      // expensive half of the compaction would run three times (the
+      // writeGramIndex counts0 lesson)
+      val net = idx.grams.groupBy(col("bucket"), col("g")).agg(sum(col("c")).as("c"))
+        .cache()
+      // the try/finally wraps the REQUIRES too: a corruption/empty-epoch
+      // refusal must not strand the corpus-scale aggregate in the block
+      // manager (a service catching the error and retrying would leak
+      // one cached frame per failed compaction)
       try {
         val corrupt = net.where(col("c") < 0L).limit(3)
           .collect().map(r => s"gram=${r.get(1)} net=${r.get(2)}")
@@ -354,14 +346,8 @@ object GramIndex {
           "compactGramIndex: every gram's net count is <= 0 (the whole " +
             "corpus was taken down) — refusing to publish an unreadable " +
             "empty epoch; delete the index instead")
-        val ver = IL.nextVersion(spark, root)
-        graft.sinks.RoutedSink.standard().write(s"parquet:$root/$ver:by:bucket", merged)
-        ver
+        graft.sinks.RoutedSink.standard().write(s"parquet:$next:by:bucket", merged)
       } finally net.unpersist()
-    IL.writeManifest(spark, s"$root/$v", MetaName,
-      "gram" -> idx.gram, "nBuckets" -> idx.nBuckets)
-    IL.copyAppendLedger(spark, oldDir, s"$root/$v")
-    IL.publish(spark, root, v)
-    IL.gcVersions(spark, root, keep = 1)
-  }
+      IL.writeManifest(spark, next, MetaName, "gram" -> idx.gram, "nBuckets" -> idx.nBuckets)
+    }
 }

@@ -4,16 +4,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Versioned-directory + manifest layout shared by the persisted
-  * indexes: the key-set indexes ([[KeySetIndex]] — O24 band, O54
-  * perceptual, O57 frame), the ANN index (O29) and the lexical and
-  * gram stores (O51/O52).
+/** Versioned-directory + manifest layout shared by every persisted
+  * layout: the key-set indexes ([[KeySetIndex]] — O24 band, O54
+  * perceptual, O57 frame, and the O29 ANN components), the lexical
+  * and gram stores (O51/O52), the O40 training shards and the O45
+  * merge table.
   *
-  * Round 5 published compactions by a two-rename directory swap, which
-  * has a window where a racing reader sees NO directory and no crash
-  * recovery at all (a death between the renames loses the live index
-  * to a `__pre_compact` sibling). This layout closes both holes the
-  * way table formats do:
+  * Layout, the way table formats do it:
   *
   *  - data lives in immutable version directories `path/v00001`,
   *    `path/v00002`, ... — a rewrite builds the next version OFF to
@@ -25,14 +22,28 @@ import org.apache.spark.sql.functions._
   *    (POSIX rename on file://, FileContext OVERWRITE rename — atomic
   *    at the NameNode — on HDFS). A reader sees the old pointer or the
   *    new pointer, never a missing one;
-  *  - a crash before publish leaves an unreferenced version directory,
-  *    deleted by [[recover]] on the next maintenance entry; a crash
-  *    after publish leaves a stale retired version, deleted by
-  *    [[gcVersions]];
   *  - retired versions are kept for `keep` publish cycles before GC —
   *    the grace window for readers that resolved the manifest just
   *    before a flip (at 100 TB, size `keep` to cover the longest
   *    query's runtime across compaction cadences).
+  *
+  * The epoch protocol has exactly two writer entry points, and every
+  * versioned write goes through one of them:
+  *
+  *  - [[rewrite]] — a new epoch: [[recover]] crash leftovers (a crash
+  *    before publish leaves a version dir newer than `_CURRENT`),
+  *    [[ensureVersioned]] a legacy layout, `build(current, next)` the
+  *    next version with its manifest, carry the append ledger forward
+  *    (compactions only), [[publish]], then [[gcVersions]]. Callers:
+  *    [[KeySetIndex]] write and compact, `LexIndex` and `GramIndex`
+  *    write and compact, `ShardLayout`'s shard write, shard compaction
+  *    and `applyChangelog`, and `VectorIndex`'s component publish;
+  *  - [[appendInto]] — new files in the CURRENT epoch: resolve it, let
+  *    the body write, then fail loudly if a rewrite published a new
+  *    epoch meanwhile. Callers:
+  *    [[KeySetIndex]] append, `LexIndex` append, `GramIndex` append
+  *    and takedown, `ShardLayout`'s shard append and `VectorIndex`'s
+  *    component append.
   *
   * Tombstones (takedown / retention deletion — a real obligation for a
   * 100 TB training corpus) live beside the versions in
@@ -44,9 +55,8 @@ import org.apache.spark.sql.functions._
   *
   * Legacy compatibility: a pre-round-6 index (hive dirs directly under
   * `path`, no manifest) still reads — [[resolveDir]] falls back to
-  * `path` — and [[ensureVersioned]] migrates it in place by renaming
-  * the children into `v00001` (metadata-only) before the first
-  * versioned compaction.
+  * `path` — and the next [[rewrite]] migrates it in place by renaming
+  * the children into `v00001` (metadata-only) first.
   */
 object IndexLayout {
 
@@ -61,18 +71,8 @@ object IndexLayout {
   /** Current version name from the manifest, None for a legacy or
     * empty layout.
     */
-  def currentVersion(spark: SparkSession, path: String): Option[String] = {
-    val fs = hfs(spark, path)
-    val mf = new Path(path, ManifestName)
-    if (!fs.exists(mf)) None
-    else {
-      val in = fs.open(mf)
-      try {
-        val v = new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-        if (v.isEmpty) None else Some(v)
-      } finally in.close()
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Option[String] =
+    readMeta(spark, path, ManifestName).map(_.trim).filter(_.nonEmpty)
 
   /** The directory holding the CURRENT data: `path/<version>` when a
     * manifest exists, `path` itself for a legacy unversioned layout.
@@ -88,57 +88,39 @@ object IndexLayout {
   private def versionName(n: Int): String = f"v$n%05d"
 
   /** The version name a new rewrite should build into. */
-  def nextVersion(spark: SparkSession, path: String): String =
+  private[graft] def nextVersion(spark: SparkSession, path: String): String =
     versionName(currentVersion(spark, path).map(versionNumber).getOrElse(0) + 1)
 
   /** Atomically flip the manifest to `version` (see class doc). */
-  def publish(spark: SparkSession, path: String, version: String): Unit = {
-    val fs = hfs(spark, path)
-    val tmp = new Path(path, ManifestName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(path, ManifestName)
-    val qTmp = fs.makeQualified(tmp)
-    val qDst = fs.makeQualified(dst)
-    if (qTmp.toUri.getScheme == "file") {
-      // POSIX rename(2): atomic, replaces the destination
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(qTmp.toUri.getPath),
-        java.nio.file.Paths.get(qDst.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val fc = FileContext.getFileContext(qTmp.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      fc.rename(qTmp, qDst, Options.Rename.OVERWRITE)
-    }
-  }
+  private[graft] def publish(spark: SparkSession, path: String, version: String): Unit =
+    writeMeta(spark, path, ManifestName, version)
 
   /** Migrate a legacy in-place layout (hive dirs directly under
     * `path`, no manifest) to `v00001` via child renames — metadata
     * operations only, no data rewrite. No-op when a manifest already
-    * exists. Call [[recover]] FIRST so an unpublished version dir from
-    * a crashed rewrite is not mistaken for data.
+    * exists or there is nothing to migrate. Call [[recover]] FIRST so
+    * an unpublished version dir from a crashed rewrite is not
+    * mistaken for data.
     */
-  def ensureVersioned(spark: SparkSession, path: String): Unit =
+  private[operators] def ensureVersioned(spark: SparkSession, path: String): Unit =
     if (currentVersion(spark, path).isEmpty) {
       val fs = hfs(spark, path)
       val root = new Path(path)
       if (fs.exists(root)) {
-        val v1 = new Path(root, versionName(1))
         val kids = fs.listStatus(root).filter { st =>
           val n = st.getPath.getName
-          n != TombstoneDirName && !n.startsWith(ManifestName) &&
-            !n.startsWith("_") && !n.startsWith(".") &&
-            VersionRe.findFirstIn(n).isEmpty
+          !n.startsWith("_") && !n.startsWith(".") && VersionRe.findFirstIn(n).isEmpty
         }
-        fs.mkdirs(v1)
-        kids.foreach(st => fs.rename(st.getPath, new Path(v1, st.getPath.getName)))
-        publish(spark, path, versionName(1))
+        if (kids.nonEmpty) {
+          val v1 = new Path(root, versionName(1))
+          fs.mkdirs(v1)
+          kids.foreach(st => fs.rename(st.getPath, new Path(v1, st.getPath.getName)))
+          publish(spark, path, versionName(1))
+        }
       }
     }
 
-  /** Crash recovery, run on entry to any compaction:
+  /** Crash recovery, run on entry to every [[rewrite]]:
     *  - legacy `path__compacting` staging dirs → delete (incomplete
     *    pre-round-6 rewrite);
     *  - legacy `path__pre_compact` retired dirs → restore if the live
@@ -147,7 +129,7 @@ object IndexLayout {
     *    no manifest exists) → delete: a rewrite that died before its
     *    publish, invisible to readers and safe to drop.
     */
-  def recover(spark: SparkSession, path: String): Unit = {
+  private def recover(spark: SparkSession, path: String): Unit = {
     val fs = hfs(spark, path)
     val compacting = new Path(path + "__compacting")
     if (fs.exists(compacting)) fs.delete(compacting, true)
@@ -186,6 +168,43 @@ object IndexLayout {
       }
     }
 
+  /** The one rewrite sequence (class doc): recover, migrate, then
+    * `build(currentDir, nextDir)` writes the next version and its
+    * manifest; `carryLedger` (compactions) copies the current epoch's
+    * append ledger into it; then the `_CURRENT` flip and GC down to
+    * `keep` retired versions. A build that raises publishes nothing.
+    */
+  def rewrite(spark: SparkSession, root: String, keep: Int, carryLedger: Boolean = false)(
+      build: (Option[String], String) => Unit): Unit = {
+    recover(spark, root)
+    ensureVersioned(spark, root)
+    val cur = currentVersion(spark, root).map(v => s"$root/$v")
+    val next = nextVersion(spark, root)
+    build(cur, s"$root/$next")
+    if (carryLedger) cur.foreach(copyAppendLedger(spark, _, s"$root/$next"))
+    publish(spark, root, next)
+    gcVersions(spark, root, keep)
+  }
+
+  /** The one append sequence (class doc): `body(dir)` writes into the
+    * CURRENT epoch's directory, then the append fails loudly if the
+    * epoch moved meanwhile — the race the layout cannot itself close:
+    * a concurrent rewrite may publish a NEW epoch (and GC the old
+    * one), leaving the appended rows silently invisible in a retired
+    * directory. The caller must then re-drive the append against the
+    * new epoch — a loud error, never silent loss.
+    */
+  def appendInto(spark: SparkSession, root: String, op: String)(body: String => Unit): Unit = {
+    val dir = resolveDir(spark, root)
+    body(dir)
+    val now = resolveDir(spark, root)
+    require(now == dir,
+      s"$op: epoch moved during append ($dir -> $now) — a concurrent " +
+        "rewrite/compaction published a new epoch, so the appended rows " +
+        "landed in a retired directory; re-drive the append (single-writer " +
+        "contract: serialize appends with rewrites/compactions)")
+  }
+
   /** Versions present on disk and at-or-below the published
     * `_CURRENT`, oldest first (the current one last) — i.e. the
     * SNAPSHOTS a reader may pin: retired versions survive for the
@@ -216,10 +235,10 @@ object IndexLayout {
     s"$path/$version"
   }
 
-  /** Write a small per-version metadata file (e.g. the O40 shard
-    * layout's `_LAYOUT` parameters) under `dir`. Same create-then-
-    * atomic-rename discipline as [[publish]], so a racing reader sees
-    * the whole file or none.
+  /** Write a small metadata file (the `_CURRENT` manifest, or e.g.
+    * the O40 shard layout's per-version `_LAYOUT` parameters) under
+    * `dir`: create `name.tmp`, then an atomic rename over `name`, so a
+    * racing reader sees the whole old file or the whole new one.
     */
   def writeMeta(spark: SparkSession, dir: String, name: String, content: String): Unit = {
     val fs = hfs(spark, dir)
@@ -227,17 +246,18 @@ object IndexLayout {
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new Path(dir, name)
     val qTmp = fs.makeQualified(tmp)
+    val qDst = fs.makeQualified(new Path(dir, name))
     if (qTmp.toUri.getScheme == "file") {
+      // POSIX rename(2): atomic, replaces the destination
       java.nio.file.Files.move(
         java.nio.file.Paths.get(qTmp.toUri.getPath),
-        java.nio.file.Paths.get(fs.makeQualified(dst).toUri.getPath),
+        java.nio.file.Paths.get(qDst.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } else {
       val fc = FileContext.getFileContext(qTmp.toUri,
         spark.sparkContext.hadoopConfiguration)
-      fc.rename(qTmp, dst, Options.Rename.OVERWRITE)
+      fc.rename(qTmp, qDst, Options.Rename.OVERWRITE)
     }
   }
 
@@ -306,9 +326,9 @@ object IndexLayout {
   //     exact same end state, never a doubled row;
   //  3. the marker is created last, atomically.
   //
-  // Compactions must carry the `_appends` ledger into the new epoch
-  // ([[copyAppendLedger]]): a replay arriving AFTER its batch was
-  // compacted into the base finds the marker and stays a no-op.
+  // Compactions carry the `_appends` ledger into the new epoch
+  // ([[rewrite]]'s `carryLedger`): a replay arriving AFTER its batch
+  // was compacted into the base finds the marker and stays a no-op.
   // ---------------------------------------------------------------
 
   /** Corpus-proportional bucket count shared by the bucket-partitioned
@@ -488,7 +508,7 @@ object IndexLayout {
     * it here is safe by that precedence and bounds the ledger at one
     * marker per batch plus the in-flight crash window's pair.
     */
-  def copyAppendLedger(spark: SparkSession, fromDir: String, toDir: String): Unit = {
+  private[operators] def copyAppendLedger(spark: SparkSession, fromDir: String, toDir: String): Unit = {
     val fs = hfs(spark, fromDir)
     val src = new Path(fromDir, AppendLedgerDir)
     if (fs.exists(src)) {
@@ -505,24 +525,6 @@ object IndexLayout {
         }
       }
     }
-  }
-
-  /** Fail-loud guard for the append race the epoch lifecycle cannot
-    * itself close: between resolving the CURRENT epoch and finishing
-    * an append, a concurrent rewrite/compaction may publish a NEW
-    * epoch (and GC the old one) — the appended rows would then sit in
-    * a retired/deleted directory, silently invisible to readers.
-    * Appenders call this AFTER their writes: if the epoch moved, the
-    * append's durability is unknowable and the caller must re-drive
-    * it against the new epoch — a loud error, never silent loss.
-    */
-  def requireStillCurrent(spark: SparkSession, root: String, dir: String, op: String): Unit = {
-    val now = resolveDir(spark, root)
-    require(now == dir,
-      s"$op: epoch moved during append ($dir -> $now) — a concurrent " +
-        "rewrite/compaction published a new epoch, so the appended rows " +
-        "landed in a retired directory; re-drive the append (single-writer " +
-        "contract: serialize appends with rewrites/compactions)")
   }
 
   /** Register ids for deletion: append them (distinct, as a single
@@ -573,22 +575,23 @@ object IndexLayout {
       fs.delete(dir, true)
   }
 
-  /** The lifecycle of a persisted SET of per-document keys — the O24
-    * band index ([[Dedup.writeBandIndex]]), the O54 perceptual index
-    * and the O57 frame index ([[Multimodal.writePerceptualIndex]],
-    * [[Multimodal.writeFrameIndex]]). Rows are `doc_id` plus the
-    * index's own key columns, hive-partitioned on `partCols`; the
-    * owners keep only what differs (key derivation, read-side casts,
-    * the probe). Set semantics make a replayed append harmless to the
-    * probes (their distinct absorbs duplicate rows) and compaction
-    * reclaims the duplicates.
+  /** The lifecycle of a persisted SET of keys per id — the O24 band
+    * index ([[Dedup.writeBandIndex]]), the O54 perceptual index and
+    * the O57 frame index ([[Multimodal.writePerceptualIndex]],
+    * [[Multimodal.writeFrameIndex]]), all keyed by `doc_id`, and the
+    * O29 ANN components (`VectorIndex.compactAnnIndex`, keyed by
+    * `n_id`). Rows are `idCol` plus the index's own key columns,
+    * hive-partitioned on `partCols`; the owners keep only what differs
+    * (key derivation, read-side casts, the probe). Set semantics make
+    * a replayed append harmless to the probes (their distinct absorbs
+    * duplicate rows) and compaction reclaims the duplicates.
     *
     * An epoch with no rows is never published: a zero-row
     * `partitionBy` write leaves only `_SUCCESS`, which Spark cannot
     * read back (no schema to infer), so both [[write]] and [[compact]]
     * fail loudly before the flip and the current epoch stays live.
     */
-  final class KeySetIndex(name: String, partCols: String*) {
+  final class KeySetIndex(name: String, idCol: String, partCols: String*) {
     private val by = partCols.mkString("+")
 
     private def requireRows(keys: DataFrame, op: String, hint: String): Unit =
@@ -597,24 +600,19 @@ object IndexLayout {
 
     /** Versioned publish of a fresh epoch holding `keys`. */
     def write(keys: DataFrame, path: String): Unit = {
-      val spark = keys.sparkSession
       requireRows(keys, "write", "the corpus yields no index keys; guard upstream")
-      val v = nextVersion(spark, path)
-      graft.sinks.RoutedSink.standard().write(s"parquet:$path/$v:by:$by", keys)
-      publish(spark, path, v)
-      gcVersions(spark, path, keep = 1)
+      rewrite(keys.sparkSession, path, keep = 1) { (_, next) =>
+        graft.sinks.RoutedSink.standard().write(s"parquet:$next:by:$by", keys)
+      }
     }
 
     /** Append `keys` into the CURRENT epoch (new files in the hit
-      * partitions only), failing loudly if a rewrite published a new
-      * epoch meanwhile ([[requireStillCurrent]]).
+      * partitions only) through [[appendInto]].
       */
-    def append(keys: DataFrame, path: String): Unit = {
-      val spark = keys.sparkSession
-      val dir = resolveDir(spark, path)
-      graft.sinks.RoutedSink.standard().write(s"parquet-append:$dir:by:$by", keys)
-      requireStillCurrent(spark, path, dir, s"append$name")
-    }
+    def append(keys: DataFrame, path: String): Unit =
+      appendInto(keys.sparkSession, path, s"append$name") { dir =>
+        graft.sinks.RoutedSink.standard().write(s"parquet-append:$dir:by:$by", keys)
+      }
 
     /** Manifest-resolved read projected to `cols`, with pending
       * tombstones masked by an anti-join over the scan. The mask sits
@@ -627,41 +625,45 @@ object IndexLayout {
     def read(spark: SparkSession, path: String, cols: Column*): DataFrame = {
       val idx = spark.read.parquet(resolveDir(spark, path)).select(cols: _*)
       if (!hasTombstones(spark, path)) idx
-      else idx.join(readTombstones(spark, path, "doc_id"), Seq("doc_id"), "left_anti")
+      else idx.join(readTombstones(spark, path, idCol), Seq(idCol), "left_anti")
     }
 
     /** Register `ids` for deletion ([[addTombstones]]). */
-    def tombstone(ids: DataFrame, idCol: String, path: String): Unit =
-      addTombstones(ids, idCol, "doc_id", path)
+    def tombstone(ids: DataFrame, srcCol: String, path: String): Unit =
+      addTombstones(ids, srcCol, idCol, path)
 
-    /** Rewrite the current epoch as one file per partition bucket:
-      * crash leftovers recovered, a legacy layout migrated, duplicate
-      * rows dropped, the tombstone-file snapshot applied, the append
-      * ledger carried forward, then an atomic publish; exactly the
-      * consumed tombstone files are deleted, so ids arriving
-      * mid-compaction survive to the next cycle. `keepVersions`
-      * retired epochs stay as the reader grace window.
+    /** Rewrite the current epoch as one file per partition bucket
+      * ([[compactRoots]] over the one root).
       */
-    def compact(spark: SparkSession, path: String, keepVersions: Int): Unit = {
-      recover(spark, path)
-      ensureVersioned(spark, path)
-      val src = resolveDir(spark, path)
-      val base = spark.read.parquet(src).distinct()
-      val tombFiles = tombstoneFiles(spark, path)
-      val pruned =
-        if (tombFiles.isEmpty) base
-        else base.join(
-          spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      requireRows(pruned, "compact", "tombstones empty the index; rebuild instead")
-      val next = nextVersion(spark, path)
-      pruned
-        .repartition(partCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$path/$next")
-      copyAppendLedger(spark, src, s"$path/$next")
-      publish(spark, path, next)
-      deleteTombstoneFiles(spark, path, tombFiles)
-      gcVersions(spark, path, keepVersions)
+    def compact(spark: SparkSession, path: String, keepVersions: Int): Unit =
+      compactRoots(spark, path, Seq(path), keepVersions)
+
+    /** Compact every root in `roots` against ONE snapshot of the
+      * tombstone files under `tombRoot`: each root is [[rewrite]]n with
+      * duplicate rows dropped, the snapshot applied and the append
+      * ledger carried forward; then exactly the consumed tombstone
+      * files are deleted, so ids arriving mid-compaction survive to
+      * the next cycle. `keepVersions` retired epochs stay as the
+      * reader grace window.
+      */
+    def compactRoots(spark: SparkSession, tombRoot: String, roots: Seq[String],
+        keepVersions: Int): Unit = {
+      val tombFiles = tombstoneFiles(spark, tombRoot)
+      roots.foreach { root =>
+        rewrite(spark, root, keepVersions, carryLedger = true) { (cur, next) =>
+          val base = spark.read.parquet(cur.getOrElse(root)).distinct()
+          val pruned =
+            if (tombFiles.isEmpty) base
+            else base.join(
+              spark.read.parquet(tombFiles.map(_.toString): _*).select(col(idCol)),
+              Seq(idCol), "left_anti")
+          requireRows(pruned, "compact", "tombstones empty the index; rebuild instead")
+          pruned
+            .repartition(partCols.map(col): _*)
+            .write.mode("overwrite").partitionBy(partCols: _*).parquet(next)
+        }
+      }
+      deleteTombstoneFiles(spark, tombRoot, tombFiles)
     }
   }
 }

@@ -59,11 +59,9 @@ import graft.operators.{IndexLayout => IL}
   * [[compactLexIndex]] rewrites the epoch with merged df rows and a
   * merged manifest, carrying the append ledger forward.
   *
-  * Lifecycle: the stores publish versioned epochs with the O30 atomic
-  * `_CURRENT` flip (readers resolve the manifest; a probe mid-publish
-  * sees the old epoch). Appends are serialized against rewrites/
-  * compactions by the single-writer contract and fail LOUDLY if an
-  * epoch flips mid-append (IndexLayout.requireStillCurrent).
+  * Lifecycle: writes and compactions publish through
+  * [[IndexLayout.rewrite]], appends land through
+  * [[IndexLayout.appendInto]] (the epoch protocol is stated there).
   */
 object LexIndex {
 
@@ -135,17 +133,14 @@ object LexIndex {
     // ONE versioned root holds both stores, so readers can never pair
     // new postings with old statistics (a torn cross-store read would
     // silently mis-normalize scores); the manifest lands BEFORE the
-    // atomic publish flip, so a published epoch is always readable,
-    // even across a writer crash mid-sequence
-    val root = s"$path/store"
-    val v = IL.nextVersion(spark, root)
-    val sink = graft.sinks.RoutedSink.standard()
-    sink.write(s"parquet:$root/$v/postings:by:bucket", post)
-    sink.write(s"parquet:$root/$v/terms:by:bucket", terms)
-    IL.writeManifest(spark, s"$root/$v", MetaName,
-      "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> nb, "idCol" -> idCol)
-    IL.publish(spark, root, v)
-    IL.gcVersions(spark, root, keep = 1)
+    // publish flip, so a published epoch is always readable
+    IL.rewrite(spark, s"$path/store", keep = 1) { (_, next) =>
+      val sink = graft.sinks.RoutedSink.standard()
+      sink.write(s"parquet:$next/postings:by:bucket", post)
+      sink.write(s"parquet:$next/terms:by:bucket", terms)
+      IL.writeManifest(spark, next, MetaName,
+        "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> nb, "idCol" -> idCol)
+    }
     post0.unpersist()
   }
 
@@ -224,11 +219,17 @@ object LexIndex {
       batchId: Long,
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    val root = s"$path/store"
-    val dir = IL.resolveDir(spark, root)
-    val meta = IL.readManifest(spark, dir, MetaName).getOrElse(
-      sys.error(s"appendLexIndex: $dir has no $MetaName manifest"))
-    if (IL.appendCommitted(spark, dir, batchId)) return
+    IL.appendInto(spark, s"$path/store", "appendLexIndex") { dir =>
+      val meta = IL.readManifest(spark, dir, MetaName).getOrElse(
+        sys.error(s"appendLexIndex: $dir has no $MetaName manifest"))
+      if (!IL.appendCommitted(spark, dir, batchId)) appendBatch(docs, dir, meta, batchId, textCol)
+    }
+  }
+
+  private def appendBatch(
+      docs: DataFrame, dir: String, meta: Map[String, String], batchId: Long,
+      textCol: String): Unit = {
+    val spark = docs.sparkSession
     val nb = metaLong(meta, "nBuckets", MetaName).toInt
     val idCol = metaIdCol(meta)
     val post0 = tokenize(docs, idCol, textCol)
@@ -267,7 +268,6 @@ object LexIndex {
     IL.stageMoveAppend(post, s"$dir/postings", "bucket", batchId)
     post0.unpersist()
     IL.commitAppend(spark, dir, batchId)
-    IL.requireStillCurrent(spark, root, dir, "appendLexIndex")
   }
 
   /** Epoch repair after an append/tombstone run: rewrite with ONE df
@@ -282,48 +282,44 @@ object LexIndex {
     * publish — ids arriving mid-compaction survive to the next cycle
     * (the O24 snapshot discipline). The append ledger carries into
     * the new epoch so late replays of already-merged batches stay
-    * no-ops. Atomic publish.
+    * no-ops.
     */
   def compactLexIndex(spark: SparkSession, path: String): Unit = {
     val root = s"$path/store"
-    val oldDir = IL.resolveDir(spark, root)
-    val idx = readLexIndex(spark, path)
-    val meta = IL.readManifest(spark, oldDir, MetaName).get
-    val idCol = metaIdCol(meta)
     val tombFiles = IL.tombstoneFiles(spark, root)
-    val retained =
-      if (tombFiles.isEmpty) idx.postings
-      else idx.postings.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    val (mergedTerms, ndocs, ntok) =
-      if (tombFiles.isEmpty)
-        // no deletions: df deltas just merge, stats are already exact
-        (idx.terms.groupBy(col("bucket"), col("term")).agg(sum(col("df")).as("df")),
-          idx.ndocs, idx.ntok)
-      else {
-        // deletions change df per term AND the corpus-global stats —
-        // recompute both exactly from the retained postings
-        val t = retained.groupBy(col("bucket"), col("term"))
-          .agg(count(lit(1)).as("df"))
-        val st = retained.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-          .agg(coalesce(sum(col("dl")), lit(0L)).as("ntok"),
-            count(lit(1)).as("ndocs")).head()
-        (t, st.getLong(1), st.getLong(0))
-      }
-    require(ndocs > 0,
-      "compactLexIndex: tombstones empty the corpus — refusing to " +
-        "publish an unreadable/statistics-free epoch; rebuild instead")
-    val v = IL.nextVersion(spark, root)
-    val sink = graft.sinks.RoutedSink.standard()
-    sink.write(s"parquet:$root/$v/postings:by:bucket", retained)
-    sink.write(s"parquet:$root/$v/terms:by:bucket", mergedTerms)
-    IL.writeManifest(spark, s"$root/$v", MetaName,
-      "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> idx.nBuckets, "idCol" -> idCol)
-    IL.copyAppendLedger(spark, oldDir, s"$root/$v")
-    IL.publish(spark, root, v)
+    IL.rewrite(spark, root, keep = 1, carryLedger = true) { (cur, next) =>
+      val idx = readLexIndex(spark, path)
+      val idCol = metaIdCol(IL.readManifest(spark, cur.get, MetaName).get)
+      val retained =
+        if (tombFiles.isEmpty) idx.postings
+        else idx.postings.join(
+          spark.read.parquet(tombFiles.map(_.toString): _*).select(col("doc_id")),
+          Seq("doc_id"), "left_anti")
+      val (mergedTerms, ndocs, ntok) =
+        if (tombFiles.isEmpty)
+          // no deletions: df deltas just merge, stats are already exact
+          (idx.terms.groupBy(col("bucket"), col("term")).agg(sum(col("df")).as("df")),
+            idx.ndocs, idx.ntok)
+        else {
+          // deletions change df per term AND the corpus-global stats —
+          // recompute both exactly from the retained postings
+          val t = retained.groupBy(col("bucket"), col("term"))
+            .agg(count(lit(1)).as("df"))
+          val st = retained.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+            .agg(coalesce(sum(col("dl")), lit(0L)).as("ntok"),
+              count(lit(1)).as("ndocs")).head()
+          (t, st.getLong(1), st.getLong(0))
+        }
+      require(ndocs > 0,
+        "compactLexIndex: tombstones empty the corpus — refusing to " +
+          "publish an unreadable/statistics-free epoch; rebuild instead")
+      val sink = graft.sinks.RoutedSink.standard()
+      sink.write(s"parquet:$next/postings:by:bucket", retained)
+      sink.write(s"parquet:$next/terms:by:bucket", mergedTerms)
+      IL.writeManifest(spark, next, MetaName,
+        "ndocs" -> ndocs, "ntok" -> ntok, "nBuckets" -> idx.nBuckets, "idCol" -> idCol)
+    }
     IL.deleteTombstoneFiles(spark, root, tombFiles)
-    IL.gcVersions(spark, root, keep = 1)
   }
 
   /** BM25 top-k against the stored index. `queries`: (q_id, term)

@@ -612,7 +612,7 @@ object Multimodal {
     * hex char of the band hash, under hive (band, pfx) dirs — the text
     * band index's layout, so ST16 probes it the same way.
     */
-  private val RasterBandIndex = new IndexLayout.KeySetIndex("RasterBandIndex", "band", "pfx")
+  private val RasterBandIndex = new IndexLayout.KeySetIndex("RasterBandIndex", "doc_id", "band", "pfx")
 
   /** Append the kept payloads' raster band keys into the CURRENT
     * epoch; an append that a concurrent publish overtook raises
@@ -1658,7 +1658,7 @@ object Multimodal {
     * rows (doc_id, ah, format, band, seg, pfx) under hive (band, pfx)
     * dirs.
     */
-  private val PerceptualIndex = new IndexLayout.KeySetIndex("PerceptualIndex", "band", "pfx")
+  private val PerceptualIndex = new IndexLayout.KeySetIndex("PerceptualIndex", "doc_id", "band", "pfx")
 
   /** Persist the corpus's perceptual band keys as a versioned epoch.
     * An empty or all-unhashable corpus (every body sub-60 bytes →
@@ -1766,7 +1766,7 @@ object Multimodal {
   /** The frame index's lifecycle ([[IndexLayout.KeySetIndex]]): rows
     * (doc_id, fk, pfx) under 64 hive pfx dirs.
     */
-  private val FrameIndex = new IndexLayout.KeySetIndex("FrameIndex", "pfx")
+  private val FrameIndex = new IndexLayout.KeySetIndex("FrameIndex", "doc_id", "pfx")
 
   private def frameIndexKeys(videos: DataFrame): DataFrame =
     frameKeys(videos).withColumn("pfx", framePfx(col("fk")))

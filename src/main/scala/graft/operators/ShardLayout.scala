@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Epoch-versioned storage layouts: the O40 training-shard layout
   * (write, append, compact, snapshot reads) and the O45 merge table
-  * that applies changelogs. Both publish through [[IndexLayout]]'s
-  * atomic `_CURRENT` flip and stamp their parameters in an
+  * that applies changelogs. Both publish through
+  * [[IndexLayout.rewrite]] and stamp their parameters in an
   * [[IndexLayout]] manifest.
   */
 object ShardLayout {
@@ -39,25 +39,12 @@ object ShardLayout {
       nShards: Int = 8,
       seed: String = "42",
       keepVersions: Int = 1
-  ): Unit = {
-    // Epoch publish is ATOMIC via the shared IndexLayout manifest
-    // (the O30 pattern the band/ANN indexes already use): the new
-    // epoch builds into a fresh `v0000N/` while readers keep
-    // resolving `_CURRENT` to the old one, then the manifest flips.
-    // A loader racing the rewrite sees whole epochs, never a
-    // half-overwritten directory. Retired epochs stay for
-    // `keepVersions` flips (the in-flight-reader grace window; size
-    // it to cover an epoch's read time at 100 TB), then GC.
-    val spark = df.sparkSession
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    val next = IndexLayout.nextVersion(spark, path)
-    shuffledShardsCore(df, idCol, s"$path/$next", nShards, seed, mode = "overwrite",
-      op = "writeShuffledShards")
-    writeShardLayoutMeta(spark, s"$path/$next", nShards, seed, idCol, df)
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
-  }
+  ): Unit =
+    IndexLayout.rewrite(df.sparkSession, path, keepVersions) { (_, next) =>
+      shuffledShardsCore(df, idCol, next, nShards, seed, mode = "overwrite",
+        op = "writeShuffledShards")
+      writeShardLayoutMeta(df.sparkSession, next, nShards, seed, idCol, df)
+    }
 
   /** Read the CURRENT epoch of an O40 shard layout (manifest-resolved;
     * falls back to `path` itself for a pre-versioning in-place layout).
@@ -163,11 +150,13 @@ object ShardLayout {
   ): Unit = {
     val op = "appendShuffledShards"
     val spark = df.sparkSession
-    IndexLayout.recover(spark, path)
     IndexLayout.ensureVersioned(spark, path)
-    IndexLayout.currentVersion(spark, path) match {
-      case Some(v) =>
-        val dir = s"$path/$v"
+    if (IndexLayout.currentVersion(spark, path).isEmpty) {
+      require(nShards > 0 && seed != null,
+        s"$op: no layout exists at $path — pass nShards and seed for the first write")
+      writeShuffledShards(df, idCol, path, nShards, seed)
+    } else
+      IndexLayout.appendInto(spark, path, op) { dir =>
         readShardLayoutMeta(spark, dir) match {
           case Some(LayoutMeta(n0, s0, _, stampedSchema)) =>
             require(nShards == -1 || nShards == n0,
@@ -209,11 +198,7 @@ object ShardLayout {
             shuffledShardsCore(df, idCol, dir, nShards, seed, mode = "append", op = op)
             writeShardLayoutMeta(spark, dir, nShards, seed, idCol, df)
         }
-      case None =>
-        require(nShards > 0 && seed != null,
-          s"$op: no layout exists at $path — pass nShards and seed for the first write")
-        writeShuffledShards(df, idCol, path, nShards, seed)
-    }
+      }
   }
 
   /** O43: compact an O40 shard layout's CURRENT epoch into a fresh
@@ -235,9 +220,7 @@ object ShardLayout {
     * result is bit-identical in content and order to what
     * [[writeShuffledShards]] would produce from scratch: one range
     * task per shard, one sorted file per shard dir, exact
-    * permutation order restored. The flip is the same atomic
-    * `_CURRENT` publish — readers mid-scan keep the old epoch for
-    * `keepVersions` flips, then GC. Cost = one read + one
+    * permutation order restored. Cost = one read + one
     * range-exchange + one write of the LAYOUT (never re-hashing the
     * source corpus), which is the floor for a rewrite; run it at the
     * epoch boundary the O40 scaladoc already prescribes.
@@ -250,39 +233,34 @@ object ShardLayout {
       keepVersions: Int = 1
   ): Unit = {
     val op = "compactShuffledShards"
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-    val v = IndexLayout.currentVersion(spark, path).getOrElse(
-      sys.error(s"$op: no epoch published at $path — nothing to compact"))
-    val dir = s"$path/$v"
-    val LayoutMeta(n0, s0, idColStored, _) = readShardLayoutMeta(spark, dir).getOrElse(
-      sys.error(s"$op: $dir has no $ShardLayoutMetaName manifest — " +
-        "rewrite once with writeShuffledShards to stamp it"))
-    // idCol is manifest-authoritative when stamped (layouts written
-    // since O43); for older layouts the caller supplies it once and
-    // the fresh epoch's manifest records it. A caller-passed value
-    // that contradicts the manifest fails fast (the append
-    // discipline).
-    val id = (idColStored, Option(idColArg)) match {
-      case (Some(m), Some(c)) =>
-        require(m == c, s"$op: layout at $path was written with idCol='$m' but " +
-          s"the caller passed idCol='$c' — omit the argument to use the stored value")
-        m
-      case (Some(m), None) => m
-      case (None, Some(c)) => c
-      case (None, None) => sys.error(
-        s"$op: layout at $path predates the idCol manifest field — pass idCol once to stamp it")
+    IndexLayout.rewrite(spark, path, keepVersions) { (cur, next) =>
+      val dir = cur.getOrElse(sys.error(s"$op: no epoch published at $path — nothing to compact"))
+      val LayoutMeta(n0, s0, idColStored, _) = readShardLayoutMeta(spark, dir).getOrElse(
+        sys.error(s"$op: $dir has no $ShardLayoutMetaName manifest — " +
+          "rewrite once with writeShuffledShards to stamp it"))
+      // idCol is manifest-authoritative when stamped (layouts written
+      // since O43); for older layouts the caller supplies it once and
+      // the fresh epoch's manifest records it. A caller-passed value
+      // that contradicts the manifest fails fast (the append
+      // discipline).
+      val id = (idColStored, Option(idColArg)) match {
+        case (Some(m), Some(c)) =>
+          require(m == c, s"$op: layout at $path was written with idCol='$m' but " +
+            s"the caller passed idCol='$c' — omit the argument to use the stored value")
+          m
+        case (Some(m), None) => m
+        case (None, Some(c)) => c
+        case (None, None) => sys.error(
+          s"$op: layout at $path predates the idCol manifest field — pass idCol once to stamp it")
+      }
+      // Drop the derived columns; the core recomputes both from the
+      // manifest parameters (identical values — same id, same seed).
+      val rows0 = spark.read.parquet(dir).drop("skey", "shard")
+      require(rows0.columns.contains(id), s"$op: layout rows have no '$id' column")
+      val rows = if (dedupe) rows0.dropDuplicates(id) else rows0
+      shuffledShardsCore(rows, id, next, n0, s0, mode = "overwrite", op = op)
+      writeShardLayoutMeta(spark, next, n0, s0, id, rows)
     }
-    // Drop the derived columns; the core recomputes both from the
-    // manifest parameters (identical values — same id, same seed).
-    val rows0 = spark.read.parquet(dir).drop("skey", "shard")
-    require(rows0.columns.contains(id), s"$op: layout rows have no '$id' column")
-    val rows = if (dedupe) rows0.dropDuplicates(id) else rows0
-    val next = IndexLayout.nextVersion(spark, path)
-    shuffledShardsCore(rows, id, s"$path/$next", n0, s0, mode = "overwrite", op = op)
-    writeShardLayoutMeta(spark, s"$path/$next", n0, s0, id, rows)
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
   }
 
   /** O44: the token-ID training shards — [[TextAnalysis.tokenizeWindows]]
@@ -339,11 +317,10 @@ object ShardLayout {
     * defaults true because a micro-batch's key set is
     * trigger-bounded; pass false for bulk backfills and let AQE
     * decide (the O41 lesson: never force-broadcast an unbounded
-    * side). Epoch publish is the atomic O30 `_CURRENT` flip; key,
-    * version and tombstone columns are stamped in a `_MERGE`
-    * manifest on first apply and VALIDATED against every later one —
-    * the manifest is authoritative, callers' args are checked, never
-    * trusted (the O43 discipline).
+    * side). Key, version and tombstone columns are stamped in a
+    * `_MERGE` manifest on first apply and VALIDATED against every
+    * later one — the manifest is authoritative, callers' args are
+    * checked, never trusted (the O43 discipline).
     */
   def applyChangelog(
       spark: org.apache.spark.sql.SparkSession,
@@ -365,9 +342,6 @@ object ShardLayout {
     require(declared.distinct.size == declared.size,
       s"$op: key/version/tombstone columns overlap")
 
-    IndexLayout.recover(spark, path)
-    IndexLayout.ensureVersioned(spark, path)
-
     // LWW reduce struct: version prefix, then tombstone (true > false
     // so a delete wins a same-version tie), then the payload columns
     // as the final deterministic tie-break
@@ -380,51 +354,49 @@ object ShardLayout {
         .select(batch.columns.toIndexedSeq.map(col): _*) // restore batch column order
 
     val incoming = lww(batch)
-    val curMeta = IndexLayout.currentVersion(spark, path)
-      .map(v => (v, IndexLayout.readManifest(spark, s"$path/$v", MergeMetaName)))
-    curMeta match {
-      case Some((v, None)) =>
-        // an EMPTY current version (a fresh dir ensureVersioned just
-        // migrated) bootstraps like no version at all; a version
-        // holding DATA without the manifest is someone else's layout
-        val p = new org.apache.hadoop.fs.Path(s"$path/$v")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        require(!hasData, s"$op: $path/$v holds data but no $MergeMetaName " +
-          "manifest — was this layout written by a different sink?")
-      case _ => ()
+    IndexLayout.rewrite(spark, path, keepVersions) { (cur, next) =>
+      val curMeta = cur.map(d => (d, IndexLayout.readManifest(spark, d, MergeMetaName)))
+      curMeta match {
+        case Some((d, None)) =>
+          // an EMPTY current version bootstraps like no version at
+          // all; a version holding DATA without the manifest is
+          // someone else's layout
+          val p = new org.apache.hadoop.fs.Path(d)
+          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
+            val n = st.getPath.getName
+            !n.startsWith("_") && !n.startsWith(".")
+          }
+          require(!hasData, s"$op: $d holds data but no $MergeMetaName " +
+            "manifest — was this layout written by a different sink?")
+        case _ => ()
+      }
+      val merged = curMeta match {
+        case None | Some((_, None)) => incoming
+        case Some((d, Some(meta))) =>
+          val expect = mergeMeta(keyCols, versionCols, tombstoneCol).toMap
+          require(meta == expect,
+            s"$op: manifest at $path declares $meta but the caller passed $expect — " +
+              "the stored layout's contract wins; fix the caller")
+          val stored = spark.read.parquet(d)
+          require(stored.columns.sorted.sameElements(batch.columns.sorted),
+            s"$op: stored schema ${stored.columns.sorted.mkString(",")} != " +
+              s"batch schema ${batch.columns.sorted.mkString(",")}")
+          val keys0 = incoming.select(keyCols.map(col): _*)
+          val keys = if (broadcastKeys) broadcast(keys0) else keys0
+          def keyCond(l: DataFrame) = keyCols.map(k => l(k) <=> keys(k)).reduce(_ && _)
+          val untouched = stored.join(keys, keyCond(stored), "left_anti")
+            .select(batch.columns.toIndexedSeq.map(col): _*)
+          val touched = stored.join(keys, keyCond(stored), "left_semi")
+            .select(batch.columns.toIndexedSeq.map(col): _*)
+            .unionByName(incoming)
+          untouched.unionByName(lww(touched))
+      }
+      val out = if (dropTombstones) merged.filter(!col(tombstoneCol)) else merged
+      out.write.mode("overwrite").parquet(next)
+      IndexLayout.writeManifest(spark, next, MergeMetaName,
+        mergeMeta(keyCols, versionCols, tombstoneCol): _*)
     }
-    val merged = curMeta match {
-      case None | Some((_, None)) => incoming
-      case Some((v, Some(meta))) =>
-        val expect = mergeMeta(keyCols, versionCols, tombstoneCol).toMap
-        require(meta == expect,
-          s"$op: manifest at $path declares $meta but the caller passed $expect — " +
-            "the stored layout's contract wins; fix the caller")
-        val stored = spark.read.parquet(s"$path/$v")
-        require(stored.columns.sorted.sameElements(batch.columns.sorted),
-          s"$op: stored schema ${stored.columns.sorted.mkString(",")} != " +
-            s"batch schema ${batch.columns.sorted.mkString(",")}")
-        val keys0 = incoming.select(keyCols.map(col): _*)
-        val keys = if (broadcastKeys) broadcast(keys0) else keys0
-        def keyCond(l: DataFrame) = keyCols.map(k => l(k) <=> keys(k)).reduce(_ && _)
-        val untouched = stored.join(keys, keyCond(stored), "left_anti")
-          .select(batch.columns.toIndexedSeq.map(col): _*)
-        val touched = stored.join(keys, keyCond(stored), "left_semi")
-          .select(batch.columns.toIndexedSeq.map(col): _*)
-          .unionByName(incoming)
-        untouched.unionByName(lww(touched))
-    }
-    val out = if (dropTombstones) merged.filter(!col(tombstoneCol)) else merged
-    val next = IndexLayout.nextVersion(spark, path)
-    out.write.mode("overwrite").parquet(s"$path/$next")
-    IndexLayout.writeManifest(spark, s"$path/$next", MergeMetaName,
-      mergeMeta(keyCols, versionCols, tombstoneCol): _*)
-    IndexLayout.publish(spark, path, next)
-    IndexLayout.gcVersions(spark, path, keepVersions)
   }
 
   private def mergeMeta(

@@ -80,8 +80,18 @@ object Similarity {
       queries: org.apache.spark.sql.DataFrame,
       k: Int = 10,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      singlePass: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+      b: Double = 0.75): org.apache.spark.sql.DataFrame =
+    // past 64 MB of docs the pass count dominates
+    bm25Plan(docs, queries, k, k1, b, singlePass = Ops.inputEstimate(docs).bytes > (64L << 20))
+
+  /** [[bm25TopK]] in the form `singlePass` names. */
+  private[operators] def bm25Plan(
+      docs: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame,
+      k: Int,
+      k1: Double,
+      b: Double,
+      singlePass: Boolean): org.apache.spark.sql.DataFrame = {
     val tok = docs.select(col("doc_id"), explode(expr(TextAnalysis.sparkWords)).as("w"))
     // Two value-identical plans (same exact-int64 tf/dl/df/ntok/ndocs
     // into the shared bm25Rank tail, so identical scores — Round17
@@ -99,12 +109,10 @@ object Similarity {
     //    vocabulary-wide distinct shuffle. Wins once the corpus
     //    outgrows per-stage latency (×10-corpus A/B in
     //    OPTIMIZATION_r17.md).
-    // Default picks by the scan's estimated input size — a plan-time
+    // bm25TopK picks by the scan's estimated input size — a plan-time
     // statistic, not a data read; the two forms return identical rows
     // at any flip point, so the condition can never change results.
-    // past 64 MB of docs the pass count dominates
-    val usesSingle = singlePass.getOrElse(Ops.inputEstimate(docs).bytes > (64L << 20))
-    val scored = if (usesSingle) {
+    val scored = if (singlePass) {
       val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")).graftCheckpointLazy
       val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       val stats = dl.agg(sum(col("dl")).as("ntok"), count(lit(1)).as("ndocs"))

@@ -515,45 +515,24 @@ object VectorIndex {
     IndexLayout.addTombstones(ids, idCol, "n_id", path)
 
   /** Periodic maintenance for the appended ANN index — the
-    * [[Dedup.compactBandIndex]] pattern on the inverted lists:
-    * crash-recover + migrate the layout, rewrite each cell into one
-    * file (one repartition keyed on the partition column), DISTINCT
-    * away replayed append duplicates, anti-join pending tombstones
-    * (AQE-sized — the tombstone side is takedown-list sized), then
-    * publish by atomically flipping the lists manifest. Only the
-    * tombstone files present at entry are deleted afterwards; ids
-    * arriving mid-compaction survive to the next cycle. Quantizer
-    * frames are immutable and untouched.
+    * [[Dedup.compactBandIndex]] pattern: each present component
+    * (lists, and the raw-vector and sign-sketch stores, which share
+    * the tombstone set and replay semantics) is rewritten with one
+    * file per cell, replayed append duplicates dropped and the pending
+    * tombstones applied, all against ONE snapshot of the tombstone
+    * files ([[IndexLayout.KeySetIndex.compactRoots]]). Tombstones that
+    * cover every vector raise and leave the current epoch live.
+    * Quantizer frames are immutable and untouched.
     */
   def compactAnnIndex(
       spark: SparkSession,
       path: String,
       keepVersions: Int = 1
-  ): Unit = {
-    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
-    // the raw-vector and sign-sketch stores share the tombstone set
-    // and replay semantics — compact them in the same cycle when
-    // present
-    Components.filter(c => c == "lists" || IndexLayout.currentVersion(spark, s"$path/$c").isDefined)
-      .map(c => s"$path/$c")
-      .foreach { compPath =>
-        IndexLayout.recover(spark, compPath)
-        IndexLayout.ensureVersioned(spark, compPath)
-        val base = spark.read.parquet(IndexLayout.resolveDir(spark, compPath)).distinct()
-        val pruned =
-          if (tombFiles.isEmpty) base
-          else base.join(
-            spark.read.parquet(tombFiles.map(_.toString): _*).select(col("n_id")),
-            Seq("n_id"), "left_anti")
-        val next = IndexLayout.nextVersion(spark, compPath)
-        pruned
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$compPath/$next")
-        IndexLayout.publish(spark, compPath, next)
-        IndexLayout.gcVersions(spark, compPath, keepVersions)
-      }
-    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
-  }
+  ): Unit =
+    AnnComponent.compactRoots(spark, path,
+      Components.filter(c => c == "lists" || IndexLayout.currentVersion(spark, s"$path/$c").isDefined)
+        .map(c => s"$path/$c"),
+      keepVersions)
 
   /** The one PQ encoder: each vector of `vecs` (n_id, _x) coded by its
     * nearest codebook entry per subspace — (n_id, m, code).
@@ -671,12 +650,17 @@ object VectorIndex {
     */
   private val Components = Seq("lists", "vectors", "sigs")
 
-  /** The one publish (`append = false`: a new version per component,
-    * published, then older versions GC'd) or append (into each
-    * component's current version) of the [[Components]]: the lists
-    * from `codes` (n_id, m, code) and — when `vectors` / `sigs` — the
-    * raw vectors and their sign packs from `vecs` (n_id, _x); `cells`
-    * (n_id, cell) places every row.
+  /** The components' shared compaction: rows keyed by `n_id`,
+    * partitioned by cell.
+    */
+  private val AnnComponent = new IndexLayout.KeySetIndex("AnnIndex", "n_id", "cell")
+
+  /** The one publish (`append = false`: a new version per component
+    * through [[IndexLayout.rewrite]]) or append (into each component's
+    * current version through [[IndexLayout.appendInto]]) of the
+    * [[Components]]: the lists from `codes` (n_id, m, code) and — when
+    * `vectors` / `sigs` — the raw vectors and their sign packs from
+    * `vecs` (n_id, _x); `cells` (n_id, cell) places every row.
     */
   private def storeComponents(
       path: String, cells: DataFrame, codes: DataFrame, vecs: DataFrame,
@@ -692,13 +676,14 @@ object VectorIndex {
     Components.zip(rows).foreach {
       case (name, Some(r)) =>
         val dir = s"$path/$name"
-        if (append) sink.write(s"parquet-append:${IndexLayout.resolveDir(spark, dir)}:by:cell", r)
-        else {
-          val v = IndexLayout.nextVersion(spark, dir)
-          sink.write(s"parquet:$dir/$v:by:cell", r)
-          IndexLayout.publish(spark, dir, v)
-          IndexLayout.gcVersions(spark, dir, keep = 1)
-        }
+        if (append)
+          IndexLayout.appendInto(spark, dir, "appendAnnIndex") { cur =>
+            sink.write(s"parquet-append:$cur:by:cell", r)
+          }
+        else
+          IndexLayout.rewrite(spark, dir, keep = 1) { (_, next) =>
+            sink.write(s"parquet:$next:by:cell", r)
+          }
       case _ => ()
     }
   }

@@ -256,6 +256,19 @@ class AnnIndexSpec extends SparkTestBase {
     }
   }
 
+  test("appendAnnIndex: an append that a concurrent publish overtook raises") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann-race").toString
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
+    // a rewrite publishing the lists epoch WHILE the append writes
+    val publishMidAppend = graft.EpochRace.publishMidAppend[Long](s"$dir/lists")
+    val twins = emb.orderBy(col("vec_id").desc).limit(2)
+      .select(publishMidAppend(col("vec_id") + lit(900000L)).as("vec_id"), col("embedding"))
+    val err = intercept[IllegalArgumentException] {
+      VectorIndex.appendAnnIndex(twins, "vec_id", "embedding", dir)
+    }
+    assert(err.getMessage.contains("appendAnnIndex: epoch moved during append"), err.getMessage)
+  }
+
   test("ST9: streaming probes against the stored index equal the batch probe") {
     val srcDir = java.nio.file.Files.createTempDirectory("graft-ann-stream").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-ann-out").toString

@@ -21,7 +21,7 @@ class Bm25FormSpec extends SparkTestBase {
       Similarity.bm25Queries.toDF("q_id", "term")
     }
     def rows(single: Boolean): Seq[String] =
-      Similarity.bm25TopK(docs, q, singlePass = Some(single))
+      Similarity.bm25Plan(docs, q, 10, 1.2, 0.75, singlePass = single)
         .collect().map(_.toString).sorted.toSeq
     val single = rows(single = true)
     val multi = rows(single = false)
@@ -37,7 +37,7 @@ class Bm25FormSpec extends SparkTestBase {
     val docs = Seq((1L, "hash join table scan"), (2L, "slow query scan scan"),
       (3L, "stream window agg hash")).toDF("doc_id", "text")
     val q = Similarity.bm25Queries.toDF("q_id", "term")
-    assert(Similarity.bm25TopK(docs, q, singlePass = Some(true)).collect().nonEmpty)
+    assert(Similarity.bm25Plan(docs, q, 10, 1.2, 0.75, singlePass = true).collect().nonEmpty)
     val tf = docs.select(col("doc_id"), explode(expr(TextAnalysis.sparkWords)).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
     assert(tf.storageLevel == org.apache.spark.storage.StorageLevel.NONE,

@@ -240,4 +240,41 @@ class GramIndexSpec extends SparkTestBase {
     assert(GramIndex.probeGramIndex(fresh,
       GramIndex.readGramIndex(spark, dir)).isEmpty)
   }
+
+  test("compactGramIndex fails loudly on net counts < 0 (takedown contract violation)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-r15-corrupt").toString
+    val seed = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten")
+    ).toDF("doc_id", "text")
+    GramIndex.writeGramIndex(seed, dir, gram = 8, nBuckets = 4)
+    val victim = seed.where($"doc_id" === 1L)
+    // the contract violation: the SAME doc taken down under TWO
+    // different takedownIds — its grams' net counts go to -1
+    GramIndex.takedownGramIndex(victim, dir, takedownId = 100L)
+    GramIndex.takedownGramIndex(victim, dir, takedownId = 101L)
+    val ex = intercept[IllegalArgumentException] {
+      GramIndex.compactGramIndex(spark, dir)
+    }
+    assert(ex.getMessage.contains("net gram counts < 0"),
+      s"wrong failure: ${ex.getMessage}")
+    // and the evidence survives: the epoch was NOT republished, the
+    // negative deltas are still readable
+    val neg = GramIndex.readGramIndex(spark, dir).grams
+      .groupBy($"g").agg(sum($"c").as("c")).where($"c" < 0L).count()
+    assert(neg > 0, "negative evidence was erased despite the refusal")
+  }
+
+  test("compactGramIndex stays green on a contract-respecting takedown") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-r15-clean").toString
+    val seed = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten")
+    ).toDF("doc_id", "text")
+    GramIndex.writeGramIndex(seed, dir, gram = 8, nBuckets = 4)
+    GramIndex.takedownGramIndex(seed.where($"doc_id" === 1L), dir, takedownId = 100L)
+    GramIndex.compactGramIndex(spark, dir) // must not throw
+    val left = GramIndex.readGramIndex(spark, dir).grams.count()
+    assert(left > 0)
+  }
 }

@@ -168,6 +168,72 @@ class IndexLifecycleSpec extends SparkTestBase {
     assert(!new java.io.File(dir2 + "__pre_compact").exists())
     assert(Dedup.readBandIndex(spark, dir2).count() == rows2,
       "recovery must restore the retired live data")
+
+    // (d) every owner's next rewrite recovers: an orphan version dir
+    // newer than _CURRENT is deleted, and the layout reads back what
+    // the same write + rewrite give on a clean path
+    import spark.implicits._
+    val small = docs.where($"doc_id" < 50)
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    def changelog(path: String) = ShardLayout.applyChangelog(spark, path,
+      Seq((1L, 10L, "a", false), (2L, 10L, "b", false)).toDF("k", "v", "payload", "is_tombstone"),
+      Seq("k"), Seq("v"))
+    final case class Owner(
+        name: String,
+        write: String => Unit,
+        rewrite: String => Unit,
+        read: String => org.apache.spark.sql.DataFrame,
+        epoch: String => String = identity)
+    val owners = Seq(
+      Owner("band", Dedup.writeBandIndex(small, "doc_id", "text", _),
+        Dedup.writeBandIndex(small, "doc_id", "text", _), Dedup.readBandIndex(spark, _)),
+      Owner("lex", LexIndex.writeLexIndex(small, _), LexIndex.compactLexIndex(spark, _),
+        LexIndex.readLexIndex(spark, _).postings, dir => s"$dir/store"),
+      Owner("gram", GramIndex.writeGramIndex(small, _), GramIndex.writeGramIndex(small, _),
+        GramIndex.readGramIndex(spark, _).grams, dir => s"$dir/grams"),
+      Owner("shards",
+        ShardLayout.writeShuffledShards(small.select("doc_id", "text"), "doc_id", _, nShards = 2),
+        ShardLayout.compactShuffledShards(spark, _), ShardLayout.readShuffledShards(spark, _)),
+      Owner("merge", changelog, changelog, ShardLayout.readMerged(spark, _)),
+      Owner("ann", VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", _),
+        VectorIndex.compactAnnIndex(spark, _), VectorIndex.readAnnIndex(spark, _).lists,
+        dir => s"$dir/lists"))
+    owners.foreach { o =>
+      def rowsOf(path: String) = o.read(path).collect().map(_.toString).sorted.toSeq
+      val clean = tmp(s"${o.name}-clean")
+      o.write(clean)
+      o.rewrite(clean)
+      val crashed = tmp(s"${o.name}-crashed")
+      o.write(crashed)
+      val stray = new java.io.File(o.epoch(crashed), "v99999")
+      stray.mkdirs()
+      java.nio.file.Files.writeString(stray.toPath.resolve("garbage"), "x")
+      o.rewrite(crashed)
+      assert(!stray.exists(), s"${o.name}: the rewrite left an orphan version dir")
+      assert(rowsOf(crashed) == rowsOf(clean),
+        s"${o.name}: the recovered layout reads differently from a clean one")
+    }
+  }
+
+  test("copyAppendLedger drops outdone-N subsumed by batch-N, keeps orphans and takedowns") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-r15-ledger").toString
+    val epoch = s"$dir/v00001"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(epoch))
+    // batch 1 completed both phases; batch 2 crashed mid-window
+    // (outdone only); one takedown marker
+    IndexLayout.commitAppend(spark, epoch, 1L, "outdone")
+    IndexLayout.commitAppend(spark, epoch, 1L, "batch")
+    IndexLayout.commitAppend(spark, epoch, 2L, "outdone")
+    IndexLayout.commitAppend(spark, epoch, 7L, "takedown")
+    val next = s"$dir/v00002"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(next))
+    IndexLayout.copyAppendLedger(spark, epoch, next)
+    assert(IndexLayout.appendCommitted(spark, next, 1L, "batch"))
+    assert(!IndexLayout.appendCommitted(spark, next, 1L, "outdone"),
+      "subsumed outdone-1 was recopied — unbounded ledger growth")
+    assert(IndexLayout.appendCommitted(spark, next, 2L, "outdone"),
+      "in-flight crash-window marker must survive compaction")
+    assert(IndexLayout.appendCommitted(spark, next, 7L, "takedown"))
   }
 
   private def collectFileScans(plan: org.apache.spark.sql.execution.SparkPlan)

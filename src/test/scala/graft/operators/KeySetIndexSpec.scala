@@ -5,7 +5,8 @@ import graft.tables.Tables
 import org.apache.spark.sql.DataFrame
 
 /** The empty-epoch guards of the key-set index lifecycle
-  * ([[IndexLayout.KeySetIndex]]), one case per index. A zero-row
+  * ([[IndexLayout.KeySetIndex]]), one case per index (the ANN index
+  * compacts its components through it). A zero-row
   * `partitionBy` parquet write leaves only `_SUCCESS`, which Spark
   * cannot read back, so a write whose corpus yields no keys and a
   * compaction whose tombstones cover every doc must both raise before
@@ -13,35 +14,33 @@ import org.apache.spark.sql.DataFrame
   */
 class KeySetIndexSpec extends SparkTestBase {
   import spark.implicits._
+  import KeySetIndexSpec.Lifecycle
 
   private lazy val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
 
-  private final case class Lifecycle(
-      write: (DataFrame, String) => Unit,
-      read: String => DataFrame,
-      tombstone: (DataFrame, String) => Unit,
-      compact: String => Unit)
-
-  private def guardsHold(name: String, ix: Lifecycle, seed: DataFrame, noKeys: DataFrame): Unit = {
+  private def guardsHold(name: String, ix: Lifecycle, seed: DataFrame,
+      noKeys: Option[DataFrame]): Unit = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft-empty-$name").toString
     ix.write(seed, dir)
-    val live = IndexLayout.currentVersion(spark, dir)
+    val live = IndexLayout.currentVersion(spark, ix.epoch(dir))
     val n = ix.read(dir).count()
     assert(live.nonEmpty && n > 0, s"$name: the seed epoch is empty")
 
-    val onWrite = intercept[IllegalArgumentException](ix.write(noKeys, dir))
-    assert(onWrite.getMessage.contains("unreadable epoch"), onWrite.getMessage)
-    assert(IndexLayout.currentVersion(spark, dir) == live,
-      s"$name: a keyless write moved the manifest")
-    assert(ix.read(dir).count() == n, s"$name: the live epoch changed under a keyless write")
+    noKeys.foreach { keyless =>
+      val onWrite = intercept[IllegalArgumentException](ix.write(keyless, dir))
+      assert(onWrite.getMessage.contains("unreadable epoch"), onWrite.getMessage)
+      assert(IndexLayout.currentVersion(spark, ix.epoch(dir)) == live,
+        s"$name: a keyless write moved the manifest")
+      assert(ix.read(dir).count() == n, s"$name: the live epoch changed under a keyless write")
+    }
 
-    ix.tombstone(ix.read(dir).select("doc_id").distinct(), dir)
+    ix.tombstone(ix.read(dir).select(ix.idCol).distinct(), dir)
     val onCompact = intercept[IllegalArgumentException](ix.compact(dir))
     assert(onCompact.getMessage.contains("unreadable epoch"), onCompact.getMessage)
-    assert(IndexLayout.currentVersion(spark, dir) == live,
+    assert(IndexLayout.currentVersion(spark, ix.epoch(dir)) == live,
       s"$name: a compaction to zero rows moved the manifest")
     assert(ix.read(dir).count() == 0, s"$name: tombstoned docs surfaced")
-    assert(spark.read.parquet(IndexLayout.resolveDir(spark, dir)).count() == n,
+    assert(spark.read.parquet(IndexLayout.resolveDir(spark, ix.epoch(dir))).count() == n,
       s"$name: the live epoch changed under a refused compaction")
   }
 
@@ -54,7 +53,7 @@ class KeySetIndexSpec extends SparkTestBase {
         Dedup.compactBandIndex(spark, _)),
       seed = docs.where($"doc_id" < 20),
       // under three words: no shingles, no band keys
-      noKeys = Seq((1L, "two words")).toDF("doc_id", "text"))
+      noKeys = Some(Seq((1L, "two words")).toDF("doc_id", "text")))
   }
 
   test("perceptual index: a keyless write and a compaction to zero rows raise; the live epoch stays readable") {
@@ -66,7 +65,7 @@ class KeySetIndexSpec extends SparkTestBase {
         Multimodal.compactPerceptualIndex(spark, _)),
       seed = Multimodal.imagePayloads(spark, sfDir).where($"doc_id" < 20),
       // a sub-60-byte body has no perceptual hash
-      noKeys = Seq((1L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload"))
+      noKeys = Some(Seq((1L, Array[Byte](1, 2, 3))).toDF("doc_id", "payload")))
   }
 
   test("frame index: a keyless write and a compaction to zero rows raise; the live epoch stays readable") {
@@ -78,6 +77,33 @@ class KeySetIndexSpec extends SparkTestBase {
         Multimodal.compactFrameIndex(spark, _)),
       seed = Multimodal.videoPayloadsOf(docs.where($"doc_id" < 20)),
       // under 50 bytes of text: a container with no whole sample
-      noKeys = Multimodal.videoPayloadsOf(Seq((1L, "tiny")).toDF("doc_id", "text")))
+      noKeys = Some(Multimodal.videoPayloadsOf(Seq((1L, "tiny")).toDF("doc_id", "text"))))
   }
+
+  test("ANN index: a compaction to zero rows raises; the live epoch stays readable") {
+    guardsHold("ann",
+      Lifecycle(
+        VectorIndex.writeAnnIndex(_, "vec_id", "embedding", _),
+        VectorIndex.readAnnIndex(spark, _).lists,
+        VectorIndex.tombstoneAnnIndex(_, "n_id", _),
+        VectorIndex.compactAnnIndex(spark, _),
+        idCol = "n_id",
+        epoch = dir => s"$dir/lists"),
+      seed = Tables.load(spark, sfDir, "embeddings"),
+      // compaction only: writeAnnIndex has no empty-corpus guard yet
+      noKeys = None)
+  }
+}
+
+object KeySetIndexSpec {
+  /** `epoch` maps an index path to the versioned root its rows live
+    * in; `idCol` names the id the tombstones take.
+    */
+  private final case class Lifecycle(
+      write: (DataFrame, String) => Unit,
+      read: String => DataFrame,
+      tombstone: (DataFrame, String) => Unit,
+      compact: String => Unit,
+      idCol: String = "doc_id",
+      epoch: String => String = identity)
 }

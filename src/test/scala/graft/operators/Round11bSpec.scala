@@ -370,79 +370,4 @@ class Round11bSpec extends SparkTestBase {
       }.toSeq.sortBy(t => (t._1, t._2))
     assert(got.toSeq === expect, "retention matrix diverged from the driver replay")
   }
-
-  // ---------------------------------------------------------------- O43
-
-  private def shardDataFiles(dir: String): Map[String, Seq[String]] = {
-    val root = new java.io.File(dir)
-    root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("shard="))
-      .map { d =>
-        d.getName -> d.listFiles().map(_.getName)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-          .sorted.toSeq
-      }.toMap
-  }
-
-  test("O43: compaction collapses append-fragmented shards to per-task sorted files, content-preserving") {
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select($"doc_id", $"lang", $"source")
-    val base = docs.where($"doc_id" % 4 === 0)
-    val b1 = docs.where($"doc_id" % 4 === 1)
-    val b2 = docs.where($"doc_id" % 4 === 2)
-    val path = java.nio.file.Files.createTempDirectory("graft-o43").toString + "/layout"
-    ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 4, seed = "s43")
-    ShardLayout.appendShuffledShards(b1, "doc_id", path)
-    ShardLayout.appendShuffledShards(b2, "doc_id", path)
-    val before = graft.operators.IndexLayout.resolveDir(spark, path)
-    val fragged = shardDataFiles(before)
-    assert(fragged.values.exists(_.size > 1),
-      "appends did not fragment — the fixture lost its point")
-    val preRows = ShardLayout.readShuffledShards(spark, path)
-      .select($"doc_id", $"lang", $"source").collect().toSet
-    ShardLayout.compactShuffledShards(spark, path) // idCol from the manifest
-    val after = graft.operators.IndexLayout.resolveDir(spark, path)
-    assert(after != before, "compaction did not publish a fresh epoch")
-    val compacted = shardDataFiles(after)
-    // The O40 write contract allows a shard the range sampler splits
-    // across two ADJACENT tasks to hold two files (part numbers keep
-    // range order); compaction's guarantee is bounded-by-tasks file
-    // count — one fragment per covering range task, never one per
-    // ingested micro-batch.
-    assert(compacted.nonEmpty && compacted.values.forall(_.size <= 2),
-      s"a shard holds more files than covering range tasks: $compacted")
-    assert(compacted.values.map(_.size).sum < fragged.values.map(_.size).sum,
-      "compaction did not reduce the file count")
-    val postRows = ShardLayout.readShuffledShards(spark, path)
-      .select($"doc_id", $"lang", $"source").collect().toSet
-    assert(postRows === preRows, "compaction changed the row content")
-    // exact permutation order restored: per shard, the sorted file
-    // LISTING concatenates to the (skey, doc_id) order — the loader
-    // contract a from-scratch writeShuffledShards provides (appends
-    // break it across files; compaction must restore it)
-    compacted.foreach { case (shard, files) =>
-      val seq = files.flatMap { f =>
-        spark.read.parquet(s"$after/$shard/$f")
-          .select($"skey", $"doc_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      }
-      assert(seq == seq.sorted, s"$shard lost permutation order across its file listing")
-    }
-  }
-
-  test("O43: dedupe drops at-least-once replay rows; idCol contradictions fail fast") {
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select($"doc_id", $"lang", $"source")
-    val base = docs.where($"doc_id" % 7 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft-o43b").toString + "/layout"
-    ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 2, seed = "s43b")
-    ShardLayout.appendShuffledShards(base, "doc_id", path) // the retry: exact replay
-    assert(ShardLayout.readShuffledShards(spark, path).count() === base.count() * 2)
-    val e = intercept[RuntimeException](
-      ShardLayout.compactShuffledShards(spark, path, idColArg = "lang"))
-    assert(e.getMessage.contains("idCol"), s"wrong failure: ${e.getMessage}")
-    ShardLayout.compactShuffledShards(spark, path)
-    val out = ShardLayout.readShuffledShards(spark, path)
-    assert(out.count() === base.count(), "dedupe left replayed rows behind")
-    assert(out.select($"doc_id").distinct().count() === base.count())
-  }
 }

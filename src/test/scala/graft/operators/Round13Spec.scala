@@ -5,8 +5,8 @@ import graft.tables.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-13 guard fixes from the round-12 advice: column-collision
-  * require on tokenizeWindows, null-sig exclusion in the binary
-  * probe shortlist, and JSON-escaped _LAYOUT manifest strings.
+  * require on tokenizeWindows and null-sig exclusion in the binary
+  * probe shortlist.
   */
 class Round13Spec extends SparkTestBase {
   import spark.implicits._
@@ -118,24 +118,5 @@ class Round13Spec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(got(1L).isEmpty && got(2L) == Seq("1-2-3-4-5-6-7-8"))
     enc.unpersist()
-  }
-
-  test("_LAYOUT manifest: quote/backslash-bearing seed round-trips (escaped write, unescaped read)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-esc").toString + "/shards"
-    val seed = """e"poch\1"""
-    val df = docs.select($"doc_id", $"lang").limit(200)
-    ShardLayout.writeShuffledShards(df, "doc_id", dir, nShards = 4, seed = seed)
-    assert(ShardLayout.readShuffledShards(spark, dir).count() == 200)
-    // append validates the caller's seed against the manifest — an
-    // unescaped write would have corrupted the JSON and either failed
-    // to parse or stored a mangled seed that can never match again
-    val more = docs.select($"doc_id", $"lang")
-      .where($"doc_id" >= 200 && $"doc_id" < 250)
-    ShardLayout.appendShuffledShards(more, "doc_id", dir, seed = seed)
-    assert(ShardLayout.readShuffledShards(spark, dir).count() == 250)
-    // and a WRONG seed still fails loudly (the guard is not vacuous)
-    intercept[IllegalArgumentException] {
-      ShardLayout.appendShuffledShards(more, "doc_id", dir, seed = "other")
-    }
   }
 }

@@ -3,48 +3,11 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Round-15 behaviors: gram-index takedown corruption detection at
-  * compaction, append-ledger marker subsumption pruning.
+/** Round-15 behaviors: the m10 scale path (hash60 frame keys and the
+  * frame document-frequency cap).
   */
 class Round15Spec extends SparkTestBase {
   import spark.implicits._
-
-  test("compactGramIndex fails loudly on net counts < 0 (takedown contract violation)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-corrupt").toString
-    val seed = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (2L, "one two three four five six seven eight nine ten")
-    ).toDF("doc_id", "text")
-    GramIndex.writeGramIndex(seed, dir, gram = 8, nBuckets = 4)
-    val victim = seed.where($"doc_id" === 1L)
-    // the contract violation: the SAME doc taken down under TWO
-    // different takedownIds — its grams' net counts go to -1
-    GramIndex.takedownGramIndex(victim, dir, takedownId = 100L)
-    GramIndex.takedownGramIndex(victim, dir, takedownId = 101L)
-    val ex = intercept[IllegalArgumentException] {
-      GramIndex.compactGramIndex(spark, dir)
-    }
-    assert(ex.getMessage.contains("net gram counts < 0"),
-      s"wrong failure: ${ex.getMessage}")
-    // and the evidence survives: the epoch was NOT republished, the
-    // negative deltas are still readable
-    val neg = GramIndex.readGramIndex(spark, dir).grams
-      .groupBy($"g").agg(sum($"c").as("c")).where($"c" < 0L).count()
-    assert(neg > 0, "negative evidence was erased despite the refusal")
-  }
-
-  test("compactGramIndex stays green on a contract-respecting takedown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-clean").toString
-    val seed = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (2L, "one two three four five six seven eight nine ten")
-    ).toDF("doc_id", "text")
-    GramIndex.writeGramIndex(seed, dir, gram = 8, nBuckets = 4)
-    GramIndex.takedownGramIndex(seed.where($"doc_id" === 1L), dir, takedownId = 100L)
-    GramIndex.compactGramIndex(spark, dir) // must not throw
-    val left = GramIndex.readGramIndex(spark, dir).grams.count()
-    assert(left > 0)
-  }
 
   // -----------------------------------------------------------------
   // m10 scale path: hash60 frame keys + frame document-frequency cap
@@ -92,26 +55,5 @@ class Round15Spec extends SparkTestBase {
       .agg(count(lit(1)), sum($"n_shared")).collect()(0)
     assert(pairs.getLong(0) == 10L && pairs.getLong(1) == 10L, // C(5,2) pairs, all n_shared=1
       s"got $pairs")
-  }
-
-  test("copyAppendLedger drops outdone-N subsumed by batch-N, keeps orphans and takedowns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-ledger").toString
-    val epoch = s"$dir/v00001"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(epoch))
-    // batch 1 completed both phases; batch 2 crashed mid-window
-    // (outdone only); one takedown marker
-    IndexLayout.commitAppend(spark, epoch, 1L, "outdone")
-    IndexLayout.commitAppend(spark, epoch, 1L, "batch")
-    IndexLayout.commitAppend(spark, epoch, 2L, "outdone")
-    IndexLayout.commitAppend(spark, epoch, 7L, "takedown")
-    val next = s"$dir/v00002"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(next))
-    IndexLayout.copyAppendLedger(spark, epoch, next)
-    assert(IndexLayout.appendCommitted(spark, next, 1L, "batch"))
-    assert(!IndexLayout.appendCommitted(spark, next, 1L, "outdone"),
-      "subsumed outdone-1 was recopied — unbounded ledger growth")
-    assert(IndexLayout.appendCommitted(spark, next, 2L, "outdone"),
-      "in-flight crash-window marker must survive compaction")
-    assert(IndexLayout.appendCommitted(spark, next, 7L, "takedown"))
   }
 }

@@ -203,120 +203,4 @@ class Round9bOpsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == best.toMap, s"got $got expected $best")
   }
-
-  /** Parquet data files of one shard layout's CURRENT version, in
-    * (shard dir, file name) listing order — the loader's read order.
-    */
-  private def shardFiles(path: String): Seq[java.io.File] = {
-    val resolved = new java.io.File(
-      graft.operators.IndexLayout.resolveDir(spark, path).stripPrefix("file:"))
-    resolved.listFiles().filter(_.getName.startsWith("shard=")).sortBy(_.getName)
-      .flatMap(_.listFiles().filter(f =>
-        f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).sortBy(_.getName))
-      .toSeq
-  }
-
-  /** Every file must stream rows in (skey, doc_id) order. Each file is
-    * read INDIVIDUALLY (tiny file -> one scan partition, so collect
-    * order == file order) instead of inferring read order from
-    * monotonically_increasing_id over a multi-file scan, which only
-    * tracks in-file order while no file is ever split or bin-packed.
-    */
-  private def assertFilesOrdered(path: String): Unit =
-    shardFiles(path).foreach { f =>
-      val seq = spark.read.parquet(f.toString)
-        .select($"skey", $"doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(seq == seq.sorted, s"shard file ${f.getName} is out of permutation order")
-    }
-
-  test("writeShuffledShards: ordered shard layout, deterministic replay, full coverage") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
-      .select($"doc_id", $"lang")
-    ShardLayout.writeShuffledShards(docs, "doc_id", s"$dir/a", nShards = 4, seed = "7")
-    val back = ShardLayout.readShuffledShards(spark, s"$dir/a")
-    // coverage: exactly the input ids, each once
-    assert(back.count() == docs.count())
-    assert(back.select($"doc_id").exceptAll(docs.select($"doc_id")).isEmpty)
-    // shard dirs match the key arithmetic
-    assert(back.where(pmod($"skey", lit(4)).cast("int") =!= $"shard").isEmpty)
-    // the loader contract: every FILE streams rows in (skey, id) order
-    assertFilesOrdered(s"$dir/a")
-    // determinism: same seed reproduces the exact per-shard sequences
-    ShardLayout.writeShuffledShards(docs, "doc_id", s"$dir/b", nShards = 4, seed = "7")
-    val seqA = ShardLayout.readShuffledShards(spark, s"$dir/a").orderBy($"shard", $"skey", $"doc_id")
-      .select($"doc_id").collect().map(_.getLong(0)).toSeq
-    val seqB = ShardLayout.readShuffledShards(spark, s"$dir/b").orderBy($"shard", $"skey", $"doc_id")
-      .select($"doc_id").collect().map(_.getLong(0)).toSeq
-    assert(seqA == seqB)
-    // collision guard: a pre-existing shard column is rejected loudly
-    val err = intercept[IllegalArgumentException] {
-      ShardLayout.writeShuffledShards(docs.withColumn("shard", lit(1)), "doc_id", s"$dir/c")
-    }
-    assert(err.getMessage.contains("shard"))
-  }
-
-  test("shard layout: epoch rewrite is an atomic versioned publish; appends validate the manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("shards-epoch").toString
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
-      .select($"doc_id", $"lang")
-    val path = s"$dir/l"
-    ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e0")
-    assert(graft.operators.IndexLayout.currentVersion(spark, path).contains("v00001"))
-    val epoch0 = ShardLayout.readShuffledShards(spark, path)
-      .orderBy($"shard", $"skey", $"doc_id").select($"doc_id")
-      .collect().map(_.getLong(0)).toSeq
-
-    // a reader polling DURING a rewrite sees only whole epochs: every
-    // read between the build and the flip resolves a complete version
-    // (the IndexLifecycleSpec pattern — local FS writes are not
-    // instrumentable mid-rename, so the pin is resolve-then-read
-    // around the flip plus the manifest step change)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val bad = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = new Thread(() => {
-      while (!stop.get()) {
-        val n = ShardLayout.readShuffledShards(spark, path).count()
-        if (n != docs.count()) bad.incrementAndGet()
-      }
-    })
-    reader.start()
-    try {
-      // epoch rewrite under a DIFFERENT seed — a fresh permutation
-      ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e1")
-    } finally { stop.set(true); reader.join() }
-    assert(bad.get() == 0, s"${bad.get()} reads saw a partial epoch during the rewrite")
-    assert(graft.operators.IndexLayout.currentVersion(spark, path).contains("v00002"))
-    val epoch1 = ShardLayout.readShuffledShards(spark, path)
-      .orderBy($"shard", $"skey", $"doc_id").select($"doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(epoch1.sorted == epoch0.sorted && epoch1 != epoch0,
-      "new seed must be a fresh permutation of the same corpus")
-
-    // append: parameters DERIVE from the layout's manifest when
-    // omitted; a drifted explicit (nShards, seed) fails fast instead
-    // of silently appending under a different permutation regime
-    val batch = docs.limit(50).withColumn("doc_id", $"doc_id" + 1000000L)
-    ShardLayout.appendShuffledShards(batch, "doc_id", path)
-    val all = ShardLayout.readShuffledShards(spark, path)
-    assert(all.count() == docs.count() + 50)
-    assert(all.where(pmod($"skey", lit(4)).cast("int") =!= $"shard").isEmpty)
-    assertFilesOrdered(path)
-    val seedErr = intercept[IllegalArgumentException] {
-      ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e0")
-    }
-    assert(seedErr.getMessage.contains("seed"))
-    val shardsErr = intercept[IllegalArgumentException] {
-      ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 8)
-    }
-    assert(shardsErr.getMessage.contains("nShards"))
-    // matching explicit values still pass (config pinning)
-    ShardLayout.appendShuffledShards(batch, "doc_id", path, nShards = 4, seed = "e1")
-    // retired epoch GC'd down to keepVersions=1: v00001 still present
-    // as the grace window, nothing older
-    ShardLayout.writeShuffledShards(docs, "doc_id", path, nShards = 4, seed = "e2")
-    val vs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("v")).sorted
-    assert(vs.toSeq == Seq("v00002", "v00003"), s"unexpected versions: ${vs.toSeq}")
-  }
 }

@@ -512,11 +512,7 @@ class StreamingSpec extends SparkTestBase {
     val (_, idx, stream) = rasterIndexAndStream("st16-race")
     // a rewrite publishing its epoch WHILE the batch's append writes:
     // the payloads pass through a function that flips the manifest
-    val manifest = new java.io.File(idx, graft.operators.IndexLayout.ManifestName).getPath
-    val publishMidAppend = udf { (b: Array[Byte]) =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(manifest), "v00002".getBytes("UTF-8"))
-      b
-    }.asNondeterministic()
+    val publishMidAppend = graft.EpochRace.publishMidAppend[Array[Byte]](idx)
     val racing = stream.withColumn("payload", publishMidAppend(col("payload")))
     val q = Streams.appendRasterBandIndexStream(racing, idx).start()
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
