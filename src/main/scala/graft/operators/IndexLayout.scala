@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned-directory + manifest layout shared by every persisted
   * layout: the key-set indexes ([[KeySetIndex]] — O24 band, O54
-  * perceptual, O57 frame, and the O29 ANN components), the lexical
-  * and gram stores (O51/O52), the O40 training shards and the O45
-  * merge table.
+  * perceptual, O57 frame), the O29 ANN index, the lexical and gram
+  * stores (O51/O52), the O40 training shards and the O45 merge
+  * table.
   *
   * Layout, the way table formats do it:
   *
@@ -37,13 +37,13 @@ import org.apache.spark.sql.functions._
   *    (compactions only), [[publish]], then [[gcVersions]]. Callers:
   *    [[KeySetIndex]] write and compact, `LexIndex` and `GramIndex`
   *    write and compact, `ShardLayout`'s shard write, shard compaction
-  *    and `applyChangelog`, and `VectorIndex`'s component publish;
+  *    and `applyChangelog`, and `VectorIndex` write and compact;
   *  - [[appendInto]] — new files in the CURRENT epoch: resolve it, let
   *    the body write, then fail loudly if a rewrite published a new
   *    epoch meanwhile. Callers:
   *    [[KeySetIndex]] append, `LexIndex` append, `GramIndex` append
-  *    and takedown, `ShardLayout`'s shard append and `VectorIndex`'s
-  *    component append.
+  *    and takedown, `ShardLayout`'s shard append and `VectorIndex`
+  *    append.
   *
   * Tombstones (takedown / retention deletion — a real obligation for a
   * 100 TB training corpus) live beside the versions in
@@ -67,6 +67,17 @@ object IndexLayout {
 
   private def hfs(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+
+  /** True when `path` exists. */
+  private[operators] def exists(spark: SparkSession, path: String): Boolean =
+    hfs(spark, path).exists(new Path(path))
+
+  /** Copy the directory tree `from` to `to` file by file, unchanged. */
+  private[operators] def copyDir(spark: SparkSession, from: String, to: String): Unit = {
+    val fs = hfs(spark, from)
+    require(FileUtil.copy(fs, new Path(from), fs, new Path(to), false,
+      spark.sparkContext.hadoopConfiguration), s"copyDir: $from -> $to failed")
+  }
 
   /** Current version name from the manifest, None for a legacy or
     * empty layout.
@@ -578,13 +589,14 @@ object IndexLayout {
   /** The lifecycle of a persisted SET of keys per id — the O24 band
     * index ([[Dedup.writeBandIndex]]), the O54 perceptual index and
     * the O57 frame index ([[Multimodal.writePerceptualIndex]],
-    * [[Multimodal.writeFrameIndex]]), all keyed by `doc_id`, and the
-    * O29 ANN components (`VectorIndex.compactAnnIndex`, keyed by
-    * `n_id`). Rows are `idCol` plus the index's own key columns,
-    * hive-partitioned on `partCols`; the owners keep only what differs
-    * (key derivation, read-side casts, the probe). Set semantics make
-    * a replayed append harmless to the probes (their distinct absorbs
-    * duplicate rows) and compaction reclaims the duplicates.
+    * [[Multimodal.writeFrameIndex]]), all keyed by `doc_id`; the O29
+    * ANN index compacts each of its cell-partitioned stores (keyed by
+    * `n_id`) through [[compactDir]]. Rows are `idCol` plus the
+    * index's own key columns, hive-partitioned on `partCols`; the
+    * owners keep only what differs (key derivation, read-side casts,
+    * the probe). Set semantics make a replayed append harmless to the
+    * probes (their distinct absorbs duplicate rows) and compaction
+    * reclaims the duplicates.
     *
     * An epoch with no rows is never published: a zero-row
     * `partitionBy` write leaves only `_SUCCESS`, which Spark cannot
@@ -632,38 +644,37 @@ object IndexLayout {
     def tombstone(ids: DataFrame, srcCol: String, path: String): Unit =
       addTombstones(ids, srcCol, idCol, path)
 
-    /** Rewrite the current epoch as one file per partition bucket
-      * ([[compactRoots]] over the one root).
+    /** Rewrite the current epoch through [[compactDir]] against ONE
+      * snapshot of the tombstone files, carrying the append ledger
+      * forward; then exactly the consumed tombstone files are deleted,
+      * so ids arriving mid-compaction survive to the next cycle.
+      * `keepVersions` retired epochs stay as the reader grace window.
       */
-    def compact(spark: SparkSession, path: String, keepVersions: Int): Unit =
-      compactRoots(spark, path, Seq(path), keepVersions)
-
-    /** Compact every root in `roots` against ONE snapshot of the
-      * tombstone files under `tombRoot`: each root is [[rewrite]]n with
-      * duplicate rows dropped, the snapshot applied and the append
-      * ledger carried forward; then exactly the consumed tombstone
-      * files are deleted, so ids arriving mid-compaction survive to
-      * the next cycle. `keepVersions` retired epochs stay as the
-      * reader grace window.
-      */
-    def compactRoots(spark: SparkSession, tombRoot: String, roots: Seq[String],
-        keepVersions: Int): Unit = {
-      val tombFiles = tombstoneFiles(spark, tombRoot)
-      roots.foreach { root =>
-        rewrite(spark, root, keepVersions, carryLedger = true) { (cur, next) =>
-          val base = spark.read.parquet(cur.getOrElse(root)).distinct()
-          val pruned =
-            if (tombFiles.isEmpty) base
-            else base.join(
-              spark.read.parquet(tombFiles.map(_.toString): _*).select(col(idCol)),
-              Seq(idCol), "left_anti")
-          requireRows(pruned, "compact", "tombstones empty the index; rebuild instead")
-          pruned
-            .repartition(partCols.map(col): _*)
-            .write.mode("overwrite").partitionBy(partCols: _*).parquet(next)
-        }
+    def compact(spark: SparkSession, path: String, keepVersions: Int): Unit = {
+      val tombFiles = tombstoneFiles(spark, path)
+      rewrite(spark, path, keepVersions, carryLedger = true) { (cur, next) =>
+        compactDir(spark, cur.getOrElse(path), next, tombFiles)
       }
-      deleteTombstoneFiles(spark, tombRoot, tombFiles)
+      deleteTombstoneFiles(spark, path, tombFiles)
+    }
+
+    /** The compaction step over one directory: the rows under `from`
+      * with duplicate rows dropped and the ids in `tombFiles` removed,
+      * written to `to` as one file per partition bucket. Zero rows
+      * raise before anything is written.
+      */
+    private[operators] def compactDir(
+        spark: SparkSession, from: String, to: String, tombFiles: Seq[Path]): Unit = {
+      val base = spark.read.parquet(from).distinct()
+      val pruned =
+        if (tombFiles.isEmpty) base
+        else base.join(
+          spark.read.parquet(tombFiles.map(_.toString): _*).select(col(idCol)),
+          Seq(idCol), "left_anti")
+      requireRows(pruned, "compact", "tombstones empty the index; rebuild instead")
+      pruned
+        .repartition(partCols.map(col): _*)
+        .write.mode("overwrite").partitionBy(partCols: _*).parquet(to)
     }
   }
 }

@@ -111,8 +111,8 @@ object Ops {
 
   /** Plan-time size of `df`'s input — no job runs, no physical plan is
     * built. `bytes` is the optimizer's size estimate of the plan (what
-    * size-conditional plans such as bm25's single-pass form compare
-    * against); `splits`, for a plan over ONE file scan, is how many
+    * [[fanOutSmallScan]] sizes an adaptive shuffle's partition count
+    * from); `splits`, for a plan over ONE file scan, is how many
     * input splits that scan opens. Splits are counted the way
     * `FilePartition` packs them: every file costs its bytes plus
     * `spark.sql.files.openCostInBytes`, and a split holds up to

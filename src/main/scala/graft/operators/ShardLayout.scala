@@ -212,8 +212,8 @@ object ShardLayout {
     * small-files problem); (2) cross-file epoch order within a shard
     * decays to arrival order; (3) at-least-once retries may have
     * appended duplicate ids. One compaction call repairs all three:
-    * it reads the current epoch, optionally dedupes on `idCol`
-    * (retried rows are byte-identical, so any survivor is THE row),
+    * it reads the current epoch, dedupes on `idCol` (retried rows
+    * are byte-identical, so any survivor is THE row),
     * and re-runs the exact full-rewrite path under the layout's own
     * `_LAYOUT` parameters (manifest-authoritative — the
     * appendShuffledShards discipline; caller passes nothing), so the
@@ -229,7 +229,6 @@ object ShardLayout {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       idColArg: String = null,
-      dedupe: Boolean = true,
       keepVersions: Int = 1
   ): Unit = {
     val op = "compactShuffledShards"
@@ -255,9 +254,9 @@ object ShardLayout {
       }
       // Drop the derived columns; the core recomputes both from the
       // manifest parameters (identical values — same id, same seed).
-      val rows0 = spark.read.parquet(dir).drop("skey", "shard")
-      require(rows0.columns.contains(id), s"$op: layout rows have no '$id' column")
-      val rows = if (dedupe) rows0.dropDuplicates(id) else rows0
+      val stored = spark.read.parquet(dir).drop("skey", "shard")
+      require(stored.columns.contains(id), s"$op: layout rows have no '$id' column")
+      val rows = stored.dropDuplicates(id)
       shuffledShardsCore(rows, id, next, n0, s0, mode = "overwrite", op = op)
       writeShardLayoutMeta(spark, next, n0, s0, id, rows)
     }
@@ -306,8 +305,7 @@ object ShardLayout {
     * Tombstone rows are KEPT in the table (flagged) rather than
     * deleted, because a tombstone must keep suppressing older upserts
     * that arrive in later batches (ST15's contract); [[readMerged]]
-    * filters them, and `dropTombstones = true` purges at apply time
-    * once upstream guarantees no late data (the retention knob).
+    * filters them.
     *
     * Plan shape at 100 TB: stored rows whose key the batch does not
     * touch pass through an ANTI join against the batch's key set —
@@ -330,7 +328,6 @@ object ShardLayout {
       versionCols: Seq[String],
       tombstoneCol: String = "is_tombstone",
       broadcastKeys: Boolean = true,
-      dropTombstones: Boolean = false,
       keepVersions: Int = 1
   ): Unit = {
     val op = "applyChangelog"
@@ -392,8 +389,7 @@ object ShardLayout {
             .unionByName(incoming)
           untouched.unionByName(lww(touched))
       }
-      val out = if (dropTombstones) merged.filter(!col(tombstoneCol)) else merged
-      out.write.mode("overwrite").parquet(next)
+      merged.write.mode("overwrite").parquet(next)
       IndexLayout.writeManifest(spark, next, MergeMetaName,
         mergeMeta(keyCols, versionCols, tombstoneCol): _*)
     }

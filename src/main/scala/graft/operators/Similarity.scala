@@ -80,64 +80,23 @@ object Similarity {
       queries: org.apache.spark.sql.DataFrame,
       k: Int = 10,
       k1: Double = 1.2,
-      b: Double = 0.75): org.apache.spark.sql.DataFrame =
-    // past 64 MB of docs the pass count dominates
-    bm25Plan(docs, queries, k, k1, b, singlePass = Ops.inputEstimate(docs).bytes > (64L << 20))
-
-  /** [[bm25TopK]] in the form `singlePass` names. */
-  private[operators] def bm25Plan(
-      docs: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame,
-      k: Int,
-      k1: Double,
-      b: Double,
-      singlePass: Boolean): org.apache.spark.sql.DataFrame = {
+      b: Double = 0.75): org.apache.spark.sql.DataFrame = {
+    // three tokenize passes (dl, tf, df); they overlap in the
+    // broadcast-build threads, which wins where per-pass latency
+    // dominates
     val tok = docs.select(col("doc_id"), explode(expr(TextAnalysis.sparkWords)).as("w"))
-    // Two value-identical plans (same exact-int64 tf/dl/df/ntok/ndocs
-    // into the shared bm25Rank tail, so identical scores — Round17
-    // Bm25FormSpec pins row equality):
-    //  - multi-pass: tokenize three times (dl, tf, df passes). The df
-    //    pass runs a corpus-wide (doc_id, w) DISTINCT shuffle, but the
-    //    three passes overlap in the broadcast-build threads, which
-    //    wins at small scale where per-pass latency dominates.
-    //  - single-pass (§2.3 "aggregate before you shuffle"): ONE
-    //    tokenize into the (doc_id, w, tf) aggregate, cut lazily (its
-    //    blocks go with the returned plan — the ContextCleaner frees
-    //    them; nothing is left in the CacheManager); dl is
-    //    sum(tf) per doc and df is the per-term row count of the
-    //    query-term slice of tf — no second or third corpus pass, no
-    //    vocabulary-wide distinct shuffle. Wins once the corpus
-    //    outgrows per-stage latency (×10-corpus A/B in
-    //    OPTIMIZATION_r17.md).
-    // bm25TopK picks by the scan's estimated input size — a plan-time
-    // statistic, not a data read; the two forms return identical rows
-    // at any flip point, so the condition can never change results.
-    val scored = if (singlePass) {
-      val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")).graftCheckpointLazy
-      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val stats = dl.agg(sum(col("dl")).as("ntok"), count(lit(1)).as("ndocs"))
-      val dfreq = tf
-        .join(broadcast(queries.select(col("term")).distinct()),
-          col("w") === col("term")).drop("term")
-        .groupBy(col("w")).agg(count(lit(1)).as("df"))
-      tf.join(broadcast(queries), col("w") === col("term"))
-        .join(dl, "doc_id")
-        .join(broadcast(dfreq), "w")
-        .crossJoin(broadcast(stats))
-    } else {
-      val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(sum(col("dl")).as("ntok"), count(lit(1)).as("ndocs"))
-      val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      val dfreq = tok.select(col("doc_id"), col("w")).distinct()
-        .groupBy(col("w")).agg(count(lit(1)).as("df"))
-        // vocabulary is corpus-scaled; only query terms matter downstream
-        .join(broadcast(queries.select(col("term")).distinct()),
-          col("w") === col("term")).drop("term")
-      tf.join(broadcast(queries), col("w") === col("term"))
-        .join(dl, "doc_id")
-        .join(broadcast(dfreq), "w")
-        .crossJoin(broadcast(stats))
-    }
+    val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    val stats = dl.agg(sum(col("dl")).as("ntok"), count(lit(1)).as("ndocs"))
+    val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
+    val dfreq = tok.select(col("doc_id"), col("w")).distinct()
+      .groupBy(col("w")).agg(count(lit(1)).as("df"))
+      // vocabulary is corpus-scaled; only query terms matter downstream
+      .join(broadcast(queries.select(col("term")).distinct()),
+        col("w") === col("term")).drop("term")
+    val scored = tf.join(broadcast(queries), col("w") === col("term"))
+      .join(dl, "doc_id")
+      .join(broadcast(dfreq), "w")
+      .crossJoin(broadcast(stats))
     bm25Rank(scored, k, k1, b)
   }
 

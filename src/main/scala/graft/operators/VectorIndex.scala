@@ -7,11 +7,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
 import Clustering.{coarse, l2q, lloyd, nearest, subspaces, withQuantized}
 
 /** The trained IVF+PQ ANN index, one implementation per lifecycle
-  * step: train ([[Clustering]]'s Lloyd and nearest-centroid
-  * assignment), encode ([[pqEncode]]), publish and append the
-  * cell-partitioned components ([[storeComponents]]), route a probe to
-  * its cells ([[route]]), rank candidates by ADC ([[adcTopK]]) and
-  * maintain the stored layout (tombstones, compaction).
+  * step: train ([[trainIvfPq]] over [[Clustering]]'s Lloyd and
+  * nearest-centroid assignment), encode ([[pqEncode]]), lay out the
+  * cell-partitioned stores ([[cellStores]]), route a probe to its cells
+  * ([[route]]), rank candidates by ADC ([[adcTopK]]) and maintain the
+  * stored layout (tombstones, compaction).
   */
 object VectorIndex {
 
@@ -98,12 +98,9 @@ object VectorIndex {
     // only materialize at the caller's terminal action — after the
     // release — recomputing the quantization once per artifact.
     val (cells, cents, books, codes) = withQuantized(corpus, idCol, vecCol) { ev =>
-      val (centsRaw, assign) = lloyd(ev, 1, k, iters, dim)
-      val books = lloyd(ev, m, kSub, iters, dim)._1.graftCheckpointEager
-      (assign.select(col("_id").as("n_id"), col("_cell").as("cell")).graftCheckpointEager,
-        coarse(centsRaw).graftCheckpointEager,
-        books,
-        pqEncode(ev.select(col("_id").as("n_id"), col("_x")), books, m, dim).graftCheckpointEager)
+      val t = trainIvfPq(ev, k, m, kSub, iters, dim)
+      (t.cells.graftCheckpointEager, t.cents.graftCheckpointEager, t.books,
+        t.codes.graftCheckpointEager)
     }
     // probes rank the TRAINED centroids for their nprobe cells
     val p = probes.select(col(probeIdCol).as("p_id"), col(probeVecCol).as("pe"))
@@ -117,15 +114,18 @@ object VectorIndex {
       corpus.select(col(idCol).as("n_id"), col(vecCol).as("_ne")))
   }
 
-  /** A persisted trained-IVFPQ index (see [[writeAnnIndex]]):
-    * `lists` — the inverted lists, (cell, n_id, m, code), stored
-    * hive-partitioned BY CELL so a probe reads only its nprobe
-    * cells' directories; `centroids` — the k trained coarse rows;
-    * `codebooks` — the m·k trained subspace rows; `vectors` — the
-    * optional raw-vector store (cell, n_id, vec), also hive-
-    * partitioned by cell, backing [[probeAnnIndex]]'s exact-rerank
-    * `refine` mode (the FAISS IndexRefineFlat posture — ADC codes
-    * prune, stored floats re-rank the shortlist).
+  /** A persisted trained-IVFPQ index (see [[writeAnnIndex]]), every
+    * frame read from ONE epoch: `lists` — the inverted lists, (cell,
+    * n_id, m, code), stored hive-partitioned BY CELL so a probe reads
+    * only its nprobe cells' directories; `centroids` — the k trained
+    * coarse rows; `codebooks` — the m·k trained subspace rows;
+    * `vectors` — the optional raw-vector store (cell, n_id, vec), also
+    * hive-partitioned by cell, backing [[probeAnnIndex]]'s
+    * exact-rerank `refine` mode (the FAISS IndexRefineFlat posture —
+    * ADC codes prune, stored floats re-rank the shortlist); `sigs` —
+    * the optional O46 sign-sketch sidecar (cell, n_id, sig), 8
+    * bytes/vector a binary probe ([[probeSignIndex]]) scans before
+    * floats move.
     */
   final case class AnnIndex(
       lists: DataFrame,
@@ -155,6 +155,12 @@ object VectorIndex {
     * ([[probeAnnIndex]], [[appendAnnIndex]]) never retrain; an
     * UNREFINED probe never touches float arrays of the corpus, and a
     * refined one reads floats only from its nprobe cell directories.
+    *
+    * Layout: ONE versioned root, `path/_CURRENT → path/vNNNNN/
+    * {centroids, codebooks, lists[, vectors][, sigs]}`, published by
+    * one [[IndexLayout.rewrite]] — readers can never pair new
+    * quantizers with old lists, and a write that fails publishes
+    * nothing. An empty corpus raises before training.
     */
   def writeAnnIndex(
       corpus: DataFrame,
@@ -169,21 +175,22 @@ object VectorIndex {
       storeVectors: Boolean = true,
       storeSigs: Boolean = false
   ): Unit = withQuantized(corpus, idCol, vecCol) { ev =>
-    val (cents, assign) = lloyd(ev, 1, k, iters, dim)
-    val books = lloyd(ev, m, kSub, iters, dim)._1.graftCheckpointEager
-    // quantizers are immutable once written; the cell-partitioned
-    // components are the mutable half — appends and compactions
-    // target them
-    coarse(cents).write.mode("overwrite").parquet(s"$path/centroids")
-    books.write.mode("overwrite").parquet(s"$path/codebooks")
-    val vecs = ev.select(col("_id").as("n_id"), col("_x"))
-    storeComponents(path, assign.select(col("_id").as("n_id"), col("_cell").as("cell")),
-      pqEncode(vecs, books, m, dim), vecs, storeVectors, storeSigs, append = false)
+    require(!ev.isEmpty, "writeAnnIndex: the corpus is empty — refusing to publish an " +
+      "unreadable epoch; guard upstream")
+    val t = trainIvfPq(ev, k, m, kSub, iters, dim)
+    IndexLayout.rewrite(ev.sparkSession, path, keep = 1) { (_, next) =>
+      val sink = graft.sinks.RoutedSink.standard()
+      sink.write(s"parquet:$next/centroids", t.cents)
+      sink.write(s"parquet:$next/codebooks", t.books)
+      cellStores(t.cells, t.codes, ev.select(col("_id").as("n_id"), col("_x")),
+        storeVectors, storeSigs)
+        .foreach { case (store, rows) => sink.write(s"parquet:$next/$store:by:cell", rows) }
+    }
   }
 
-  /** Read an index persisted by [[writeAnnIndex]]. The lists manifest
-    * is resolved here, so reads always see the latest published
-    * version.
+  /** Read an index persisted by [[writeAnnIndex]]. The manifest is
+    * resolved once here, so every frame comes from the latest
+    * published epoch; a path with no published epoch raises.
     *
     * The `cell` partition column keeps its INFERRED type (int when the
     * stored ids are small) instead of being cast to long: wrapping the
@@ -205,42 +212,29 @@ object VectorIndex {
     * compaction to reclaim the tombstone set.
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): AnnIndex = {
-    val raw = spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/lists"))
-      .select(col("cell"), col("n_id"), col("m"), col("code"))
-    val lists =
-      if (!IndexLayout.hasTombstones(spark, path)) raw
-      else raw.join(IndexLayout.readTombstones(spark, path, "n_id"),
-        Seq("n_id"), "left_anti")
-    // raw-vector store: present iff written with storeVectors=true
-    // (manifest probe). No tombstone anti-join here — refined
-    // candidates derive from the MASKED lists, so a deleted vector
-    // can never re-enter via the vectors join; compaction still
-    // reclaims its vector rows.
-    val vectors =
-      if (IndexLayout.currentVersion(spark, s"$path/vectors").isEmpty) None
-      else Some(spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/vectors"))
-        .select(col("cell"), col("n_id"), col("vec")))
-    // sign-sketch sidecar: present iff written with storeSigs=true.
-    // Tombstones ARE masked here (unlike the vectors store): the
-    // binary probe derives its candidate stream from the sigs
-    // directly, not from the masked lists, so a deleted vector must
-    // disappear from this surface immediately too.
-    val sigs =
-      if (IndexLayout.currentVersion(spark, s"$path/sigs").isEmpty) None
-      else {
-        val rawSigs = spark.read.parquet(IndexLayout.resolveDir(spark, s"$path/sigs"))
-          .select(col("cell"), col("n_id"), col("sig"))
-        Some(
-          if (!IndexLayout.hasTombstones(spark, path)) rawSigs
-          else rawSigs.join(IndexLayout.readTombstones(spark, path, "n_id"),
-            Seq("n_id"), "left_anti"))
-      }
+    val dir = IndexLayout.currentVersion(spark, path).map(v => s"$path/$v").getOrElse(
+      sys.error(s"readAnnIndex: no epoch published at $path"))
+    val tombstoned = IndexLayout.hasTombstones(spark, path)
+    def masked(rows: DataFrame): DataFrame =
+      if (!tombstoned) rows
+      else rows.join(IndexLayout.readTombstones(spark, path, "n_id"), Seq("n_id"), "left_anti")
+    def rows(store: String, cols: String*): DataFrame =
+      spark.read.parquet(s"$dir/$store").select(cols.map(col): _*)
+    // the optional stores are present iff their epoch directory exists
+    def optional(store: String, cols: String*): Option[DataFrame] =
+      Option.when(IndexLayout.exists(spark, s"$dir/$store"))(rows(store, cols: _*))
     AnnIndex(
-      lists,
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebooks"),
-      vectors,
-      sigs)
+      masked(rows("lists", "cell", "n_id", "m", "code")),
+      spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/codebooks"),
+      // no tombstone anti-join on the raw vectors: refined candidates
+      // derive from the MASKED lists, so a deleted vector can never
+      // re-enter via the vectors join; compaction still reclaims its
+      // vector rows
+      optional("vectors", "cell", "n_id", "vec"),
+      // the sigs ARE masked: the binary probe derives its candidate
+      // stream from them directly, not from the masked lists
+      optional("sigs", "cell", "n_id", "sig").map(masked))
   }
 
   /** Allow-lists with at most this many distinct ids get a broadcast
@@ -478,6 +472,12 @@ object VectorIndex {
     * Periodically retrain + rewrite when drift accumulates — that's
     * [[writeAnnIndex]] again.
     *
+    * One [[IndexLayout.appendInto]] covers every store: the quantizers
+    * are read from the epoch the rows land in, so an append always
+    * encodes against its own epoch's centroids and codebooks, and an
+    * append that a publish overtook raises
+    * `appendAnnIndex: epoch moved during append`.
+    *
     * Replay caveat (same as every file-append sink): a re-run of this
     * call — or an at-least-once replayed
     * [[graft.streaming.Streams.appendAnnIndexStream]] micro-batch —
@@ -493,17 +493,22 @@ object VectorIndex {
       m: Int = 4,
       dim: Int = 64
   ): Unit = {
-    val idx = readAnnIndex(newVecs.sparkSession, path)
-    val v = newVecs.select(col(idCol).as("n_id"), col(vecCol).as("_x"))
-    val cells = nearest(subspaces(v, 1, dim, "_x"), Seq("n_id"), "_x",
-        idx.centroids.select(lit(0).as("_m"), col("_cid"), col("_cx").as("_cs")))
-      .select(col("n_id"), col("_cell").as("cell"))
-    // the raw-vector and sign-sketch stores follow the lists when
-    // present (refined and binary probes must see day-2 vectors too);
-    // replay duplicates are tolerated by the probes' distinct and
-    // reclaimed by compactAnnIndex
-    storeComponents(path, cells, pqEncode(v, idx.codebooks, m, dim), v,
-      idx.vectors.isDefined, idx.sigs.isDefined, append = true)
+    val spark = newVecs.sparkSession
+    IndexLayout.appendInto(spark, path, "appendAnnIndex") { dir =>
+      val v = newVecs.select(col(idCol).as("n_id"), col(vecCol).as("_x"))
+      val cells = nearest(subspaces(v, 1, dim, "_x"), Seq("n_id"), "_x",
+          spark.read.parquet(s"$dir/centroids")
+            .select(lit(0).as("_m"), col("_cid"), col("_cx").as("_cs")))
+        .select(col("n_id"), col("_cell").as("cell"))
+      // the raw-vector and sign-sketch stores follow the lists when
+      // present (refined and binary probes must see day-2 vectors
+      // too); replay duplicates are tolerated by the probes' distinct
+      // and reclaimed by compactAnnIndex
+      val sink = graft.sinks.RoutedSink.standard()
+      cellStores(cells, pqEncode(v, spark.read.parquet(s"$dir/codebooks"), m, dim), v,
+        IndexLayout.exists(spark, s"$dir/vectors"), IndexLayout.exists(spark, s"$dir/sigs"))
+        .foreach { case (store, rows) => sink.write(s"parquet-append:$dir/$store:by:cell", rows) }
+    }
   }
 
   /** Register vectors for DELETION from the persisted ANN index — the
@@ -515,24 +520,31 @@ object VectorIndex {
     IndexLayout.addTombstones(ids, idCol, "n_id", path)
 
   /** Periodic maintenance for the appended ANN index — the
-    * [[Dedup.compactBandIndex]] pattern: each present component
-    * (lists, and the raw-vector and sign-sketch stores, which share
-    * the tombstone set and replay semantics) is rewritten with one
-    * file per cell, replayed append duplicates dropped and the pending
-    * tombstones applied, all against ONE snapshot of the tombstone
-    * files ([[IndexLayout.KeySetIndex.compactRoots]]). Tombstones that
-    * cover every vector raise and leave the current epoch live.
-    * Quantizer frames are immutable and untouched.
+    * [[Dedup.compactBandIndex]] pattern, as ONE new epoch: each present
+    * store (lists, and the raw-vector and sign-sketch stores, which
+    * share the tombstone set and replay semantics) goes through
+    * [[IndexLayout.KeySetIndex.compactDir]] — one file per cell,
+    * replayed append duplicates dropped, the pending tombstones
+    * applied — all against ONE snapshot of the tombstone files, and
+    * the quantizers are copied into the new epoch unchanged.
+    * Tombstones that cover every vector raise and leave the current
+    * epoch live.
     */
   def compactAnnIndex(
       spark: SparkSession,
       path: String,
       keepVersions: Int = 1
-  ): Unit =
-    AnnComponent.compactRoots(spark, path,
-      Components.filter(c => c == "lists" || IndexLayout.currentVersion(spark, s"$path/$c").isDefined)
-        .map(c => s"$path/$c"),
-      keepVersions)
+  ): Unit = {
+    val tombFiles = IndexLayout.tombstoneFiles(spark, path)
+    IndexLayout.rewrite(spark, path, keepVersions, carryLedger = true) { (cur, next) =>
+      val dir = cur.getOrElse(sys.error(s"compactAnnIndex: no epoch published at $path"))
+      Seq("lists", "vectors", "sigs").filter(store => IndexLayout.exists(spark, s"$dir/$store"))
+        .foreach(store => CellStore.compactDir(spark, s"$dir/$store", s"$next/$store", tombFiles))
+      Seq("centroids", "codebooks")
+        .foreach(q => IndexLayout.copyDir(spark, s"$dir/$q", s"$next/$q"))
+    }
+    IndexLayout.deleteTombstoneFiles(spark, path, tombFiles)
+  }
 
   /** The one PQ encoder: each vector of `vecs` (n_id, _x) coded by its
     * nearest codebook entry per subspace — (n_id, m, code).
@@ -641,50 +653,41 @@ object VectorIndex {
     }
   }
 
-  /** The stored cell-partitioned components, each under its own
-    * versioned manifest: the inverted lists (cell, n_id, m, code), the
-    * raw-vector store (cell, n_id, vec) backing refined probes, and the
-    * O46 sign-sketch sidecar (cell, n_id, sig) — 8 bytes/vector of X14
-    * sign bits a binary probe ([[probeSignIndex]]) scans before floats
-    * move.
+  /** The cell-partitioned stores' compaction step: rows keyed by
+    * `n_id`, partitioned by cell.
     */
-  private val Components = Seq("lists", "vectors", "sigs")
+  private val CellStore = new IndexLayout.KeySetIndex("AnnIndex", "n_id", "cell")
 
-  /** The components' shared compaction: rows keyed by `n_id`,
-    * partitioned by cell.
+  /** The cell-partitioned stores of one epoch, by directory name: the
+    * inverted lists (cell, n_id, m, code) from `codes` (n_id, m, code)
+    * and — when `vectors` / `sigs` — the raw vectors (cell, n_id, vec)
+    * and their sign packs (cell, n_id, sig) from `vecs` (n_id, _x);
+    * `cells` (n_id, cell) places every row.
     */
-  private val AnnComponent = new IndexLayout.KeySetIndex("AnnIndex", "n_id", "cell")
+  private def cellStores(cells: DataFrame, codes: DataFrame, vecs: DataFrame,
+      vectors: Boolean, sigs: Boolean): Seq[(String, DataFrame)] =
+    Seq("lists" ->
+      cells.join(codes, "n_id").select(col("cell"), col("n_id"), col("m"), col("code"))) ++
+      Option.when(vectors)("vectors" ->
+        cells.join(vecs, "n_id").select(col("cell"), col("n_id"), col("_x").as("vec"))) ++
+      Option.when(sigs)("sigs" -> cells.join(vecs, "n_id").select(col("cell"), col("n_id"),
+        graft.functions.GraftExpressions.signPack60(col("_x")).as("sig")))
 
-  /** The one publish (`append = false`: a new version per component
-    * through [[IndexLayout.rewrite]]) or append (into each component's
-    * current version through [[IndexLayout.appendInto]]) of the
-    * [[Components]]: the lists from `codes` (n_id, m, code) and — when
-    * `vectors` / `sigs` — the raw vectors and their sign packs from
-    * `vecs` (n_id, _x); `cells` (n_id, cell) places every row.
+  /** The one IVF-PQ training pass over the quantized corpus `ev`
+    * (_id, _x, _xq): the coarse quantizer `cents` (_cid, _cx) and each
+    * vector's cell `cells` (n_id, cell) from a k-way Lloyd, the m·kSub
+    * subspace `books` (checkpointed: every code and every probe's
+    * distance table reads them) from an m-subspace Lloyd, and the PQ
+    * `codes` (n_id, m, code) encoded against them. All but the books
+    * are lazy.
     */
-  private def storeComponents(
-      path: String, cells: DataFrame, codes: DataFrame, vecs: DataFrame,
-      vectors: Boolean, sigs: Boolean, append: Boolean): Unit = {
-    val spark = cells.sparkSession
-    val sink = graft.sinks.RoutedSink.standard()
-    val rows = Seq(
-      Some(cells.join(codes, "n_id").select(col("cell"), col("n_id"), col("m"), col("code"))),
-      Option.when(vectors)(
-        cells.join(vecs, "n_id").select(col("cell"), col("n_id"), col("_x").as("vec"))),
-      Option.when(sigs)(cells.join(vecs, "n_id").select(col("cell"), col("n_id"),
-        graft.functions.GraftExpressions.signPack60(col("_x")).as("sig"))))
-    Components.zip(rows).foreach {
-      case (name, Some(r)) =>
-        val dir = s"$path/$name"
-        if (append)
-          IndexLayout.appendInto(spark, dir, "appendAnnIndex") { cur =>
-            sink.write(s"parquet-append:$cur:by:cell", r)
-          }
-        else
-          IndexLayout.rewrite(spark, dir, keep = 1) { (_, next) =>
-            sink.write(s"parquet:$next:by:cell", r)
-          }
-      case _ => ()
-    }
+  private final case class IvfPq(cents: DataFrame, cells: DataFrame, books: DataFrame,
+      codes: DataFrame)
+
+  private def trainIvfPq(ev: DataFrame, k: Int, m: Int, kSub: Int, iters: Int, dim: Int): IvfPq = {
+    val (cents, assign) = lloyd(ev, 1, k, iters, dim)
+    val books = lloyd(ev, m, kSub, iters, dim)._1.graftCheckpointEager
+    IvfPq(coarse(cents), assign.select(col("_id").as("n_id"), col("_cell").as("cell")), books,
+      pqEncode(ev.select(col("_id").as("n_id"), col("_x")), books, m, dim))
   }
 }

@@ -201,6 +201,13 @@ class CliSpec extends SparkTestBase {
         "--ids", "1")).getMessage.contains("takedown"))
   }
 
+  test("index versions lists an ANN index's one epoch at its root") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-ann").toString
+    graft.operators.VectorIndex.writeAnnIndex(graft.tables.Tables.load(spark, sfDir, "embeddings"),
+      "vec_id", "embedding", dir)
+    assert(cli("graft.GraftPipelines", "index", "versions", "-p", dir) == Seq("v00001  CURRENT"))
+  }
+
   test("run with json config overrides route params") {
     val cfg = java.nio.file.Files.createTempFile("graft-cfg", ".json")
     java.nio.file.Files.writeString(cfg,

@@ -42,7 +42,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("a one-probe query reads only its nprobe cell partitions") {
     val totalCells =
-      new java.io.File(IndexLayout.resolveDir(spark, s"$indexPath/lists")).listFiles()
+      new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(totalCells > 2, s"index should span several cells, got $totalCells")
     // parquet-backed single probe (a real Filter in its plan — the
@@ -64,7 +64,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("the pure-join probe path (routeOnDriver=false) also prunes cell partitions") {
     val totalCells =
-      new java.io.File(IndexLayout.resolveDir(spark, s"$indexPath/lists")).listFiles()
+      new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
     val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-djoin").toString
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
@@ -128,7 +128,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("O41 filtered probe still prunes cell partitions (the allow semi-join sits above the pruned scan)") {
     val totalCells =
-      new java.io.File(IndexLayout.resolveDir(spark, s"$indexPath/lists")).listFiles()
+      new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
     val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-fprune").toString
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
@@ -259,14 +259,37 @@ class AnnIndexSpec extends SparkTestBase {
   test("appendAnnIndex: an append that a concurrent publish overtook raises") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ann-race").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
-    // a rewrite publishing the lists epoch WHILE the append writes
-    val publishMidAppend = graft.EpochRace.publishMidAppend[Long](s"$dir/lists")
+    // a rewrite publishing the index epoch WHILE the append writes
+    val publishMidAppend = graft.EpochRace.publishMidAppend[Long](dir)
     val twins = emb.orderBy(col("vec_id").desc).limit(2)
       .select(publishMidAppend(col("vec_id") + lit(900000L)).as("vec_id"), col("embedding"))
     val err = intercept[IllegalArgumentException] {
       VectorIndex.appendAnnIndex(twins, "vec_id", "embedding", dir)
     }
     assert(err.getMessage.contains("appendAnnIndex: epoch moved during append"), err.getMessage)
+  }
+
+  test("a rewrite publishes quantizers and lists together; the retired epoch keeps its own pair") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann-epochs").toString
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 8)
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16)
+    def pair(epoch: String): (Set[Long], Set[Long]) = (
+      spark.read.parquet(s"$epoch/centroids").select(col("_cid").cast("long"))
+        .collect().map(_.getLong(0)).toSet,
+      spark.read.parquet(s"$epoch/lists").select(col("cell").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet)
+    val (retiredCents, retiredCells) = pair(IndexLayout.resolveDirAt(spark, dir, "v00001"))
+    assert(retiredCents.size == 8, s"v00001 should hold index A's 8 centroids: $retiredCents")
+    assert(retiredCells.nonEmpty && retiredCells.subsetOf(retiredCents),
+      s"v00001 lists name cells outside its own centroids: $retiredCells vs $retiredCents")
+    val (liveCents, liveCells) = pair(IndexLayout.resolveDir(spark, dir))
+    assert(liveCents.size == 16, s"the live epoch should hold index B's 16 centroids: $liveCents")
+    assert(liveCells.nonEmpty && liveCells.subsetOf(liveCents),
+      s"live lists name cells outside the live centroids: $liveCells vs $liveCents")
+    val nested = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).toArray.toSeq
+      .map(_.toString).filter(_.endsWith(s"/${IndexLayout.ManifestName}"))
+    assert(nested == Seq(s"$dir/${IndexLayout.ManifestName}"),
+      s"one manifest per ANN index, got: $nested")
   }
 
   test("ST9: streaming probes against the stored index equal the batch probe") {
@@ -400,7 +423,7 @@ class AnnIndexSpec extends SparkTestBase {
     // replay: re-running the append leaves exact duplicate list rows;
     // the probe's candidate distinct must keep rankings EXACT
     VectorIndex.appendAnnIndex(twins, "vec_id", "embedding", dir)
-    val listsDir = IndexLayout.resolveDir(spark, s"$dir/lists")
+    val listsDir = s"${IndexLayout.resolveDir(spark, dir)}/lists"
     assert(spark.read.parquet(listsDir)
       .groupBy("cell", "n_id", "m", "code").count()
       .filter(col("count") > 1).count() > 0,
@@ -422,7 +445,7 @@ class AnnIndexSpec extends SparkTestBase {
 
     // compaction applies the deletion + reclaims replay duplicates
     VectorIndex.compactAnnIndex(spark, dir)
-    val compacted = IndexLayout.resolveDir(spark, s"$dir/lists")
+    val compacted = s"${IndexLayout.resolveDir(spark, dir)}/lists"
     assert(spark.read.parquet(compacted)
       .filter(col("n_id") === dropped).count() == 0,
       "compaction must delete the tombstoned vector's list rows")
@@ -546,7 +569,7 @@ class AnnIndexSpec extends SparkTestBase {
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val totalCells =
-      new java.io.File(IndexLayout.resolveDir(spark, s"$dir/sigs")).listFiles()
+      new java.io.File(s"${IndexLayout.resolveDir(spark, dir)}/sigs").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(totalCells > 2, s"sigs sidecar should span several cells, got $totalCells")
     val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-sigprobe").toString

@@ -196,8 +196,7 @@ class IndexLifecycleSpec extends SparkTestBase {
         ShardLayout.compactShuffledShards(spark, _), ShardLayout.readShuffledShards(spark, _)),
       Owner("merge", changelog, changelog, ShardLayout.readMerged(spark, _)),
       Owner("ann", VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", _),
-        VectorIndex.compactAnnIndex(spark, _), VectorIndex.readAnnIndex(spark, _).lists,
-        dir => s"$dir/lists"))
+        VectorIndex.compactAnnIndex(spark, _), VectorIndex.readAnnIndex(spark, _).lists))
     owners.foreach { o =>
       def rowsOf(path: String) = o.read(path).collect().map(_.toString).sorted.toSeq
       val clean = tmp(s"${o.name}-clean")

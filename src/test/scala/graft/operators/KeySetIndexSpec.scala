@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 /** The empty-epoch guards of the key-set index lifecycle
   * ([[IndexLayout.KeySetIndex]]), one case per index (the ANN index
-  * compacts its components through it). A zero-row
+  * compacts its cell-partitioned stores through it). A zero-row
   * `partitionBy` parquet write leaves only `_SUCCESS`, which Spark
   * cannot read back, so a write whose corpus yields no keys and a
   * compaction whose tombstones cover every doc must both raise before
@@ -40,7 +40,7 @@ class KeySetIndexSpec extends SparkTestBase {
     assert(IndexLayout.currentVersion(spark, ix.epoch(dir)) == live,
       s"$name: a compaction to zero rows moved the manifest")
     assert(ix.read(dir).count() == 0, s"$name: tombstoned docs surfaced")
-    assert(spark.read.parquet(IndexLayout.resolveDir(spark, ix.epoch(dir))).count() == n,
+    assert(spark.read.parquet(ix.rows(IndexLayout.resolveDir(spark, ix.epoch(dir)))).count() == n,
       s"$name: the live epoch changed under a refused compaction")
   }
 
@@ -80,7 +80,7 @@ class KeySetIndexSpec extends SparkTestBase {
       noKeys = Some(Multimodal.videoPayloadsOf(Seq((1L, "tiny")).toDF("doc_id", "text"))))
   }
 
-  test("ANN index: a compaction to zero rows raises; the live epoch stays readable") {
+  test("ANN index: an empty write and a compaction to zero rows raise; the live epoch stays readable") {
     guardsHold("ann",
       Lifecycle(
         VectorIndex.writeAnnIndex(_, "vec_id", "embedding", _),
@@ -88,16 +88,16 @@ class KeySetIndexSpec extends SparkTestBase {
         VectorIndex.tombstoneAnnIndex(_, "n_id", _),
         VectorIndex.compactAnnIndex(spark, _),
         idCol = "n_id",
-        epoch = dir => s"$dir/lists"),
+        rows = epoch => s"$epoch/lists"),
       seed = Tables.load(spark, sfDir, "embeddings"),
-      // compaction only: writeAnnIndex has no empty-corpus guard yet
-      noKeys = None)
+      noKeys = Some(Tables.load(spark, sfDir, "embeddings").limit(0)))
   }
 }
 
 object KeySetIndexSpec {
   /** `epoch` maps an index path to the versioned root its rows live
-    * in; `idCol` names the id the tombstones take.
+    * in, `rows` an epoch directory to the directory of its key rows;
+    * `idCol` names the id the tombstones take.
     */
   private final case class Lifecycle(
       write: (DataFrame, String) => Unit,
@@ -105,5 +105,6 @@ object KeySetIndexSpec {
       tombstone: (DataFrame, String) => Unit,
       compact: String => Unit,
       idCol: String = "doc_id",
-      epoch: String => String = identity)
+      epoch: String => String = identity,
+      rows: String => String = identity)
 }
