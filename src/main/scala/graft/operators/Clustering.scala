@@ -325,11 +325,17 @@ object Clustering {
   /** Runs `body` on the quantized corpus ([[quantizedVecs]]), cached
     * for the duration of the call and released on every exit path —
     * `body` materializes whatever it returns that reads the cache.
+    * The cache is filled by one job before `body` runs: left lazy,
+    * the first concurrent jobs of the training plan would each
+    * compute the same partitions.
     */
   private[operators] def withQuantized[T](df: DataFrame, idCol: String, vecCol: String)(
       body: DataFrame => T): T = {
     val ev = quantizedVecs(df, idCol, vecCol).cache()
-    try body(ev) finally ev.unpersist()
+    try {
+      ev.count()
+      body(ev)
+    } finally ev.unpersist()
   }
 
   /** `df` with each vector column in `vecs` cut into m subspaces of

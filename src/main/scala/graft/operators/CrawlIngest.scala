@@ -59,23 +59,16 @@ object CrawlIngest {
     * transitive clustering is d06/d08's job, downstream). None
     * disables the pass.
     *
-    * `batchBounded` (default true) is the O41 broadcast rule applied
-    * to the dedup keeper/drop sets: in ST29 micro-batches the sets
-    * are bounded by the trigger's archives, so the semi/anti joins
-    * carry an explicit broadcast hint and extracted texts never
-    * re-shuffle. For a whole-archive BACKFILL through this function
-    * the sets scale with the corpus — pass false and the hints are
-    * omitted so AQE sizes the joins instead (never force-broadcast
-    * an unbounded side).
+    * The dedup keeper/drop sets are broadcast (the O41 rule): in ST29
+    * micro-batches they are bounded by the trigger's archives, so the
+    * semi/anti joins carry an explicit broadcast hint and extracted
+    * texts never re-shuffle.
     */
   def crawlDocs(
       records: DataFrame,
       allow: Seq[String] = Nil,
       block: Seq[String] = Nil,
-      nearDupJaccard: Option[Double] = Some(0.9),
-      batchBounded: Boolean = true): DataFrame = {
-    def gate(small: DataFrame): DataFrame =
-      if (batchBounded) broadcast(small) else small
+      nearDupJaccard: Option[Double] = Some(0.9)): DataFrame = {
     val resp = records
       .where(col("warc_type") === "response" && !col("truncated") &&
         col("target_uri") =!= "")
@@ -140,14 +133,14 @@ object CrawlIngest {
       .agg(min(col("url")).as("url"))
       .select(col("url"))
     val exactKept = extracted.where(col("text") === "")
-      .unionByName(extracted.join(gate(keepers), Seq("url"), "left_semi"))
+      .unionByName(extracted.join(broadcast(keepers), Seq("url"), "left_semi"))
     // intra-batch NEAR-dup dedup (d02 at the front door), on the
     // exact-dedup survivors: banded minhash candidates (equi-join on
     // (band, bh) — the only pairwise structure), exact Jaccard verify
     // on the candidate pairs, then drop the larger url of every
     // verified pair. Only (url, band-key) and (url-pair, shingle
     // arrays of CANDIDATES) cross shuffles; the drop set anti-joins
-    // back under the same broadcast gate, so texts still never
+    // back broadcast like the keeper set, so texts still never
     // re-shuffle. Docs under 3 words have no 3-gram shingles and are
     // exempt (they cannot be near-dups under this metric; exact md5
     // already caught identical ones).
@@ -172,7 +165,7 @@ object CrawlIngest {
           .where(col("_c").cast("double") /
             (size(col("_ta")) + size(col("_tb")) - col("_c")) >= th)
           .select(col("id_b").as("url")).distinct()
-        exactKept.join(gate(drops), Seq("url"), "left_anti")
+        exactKept.join(broadcast(drops), Seq("url"), "left_anti")
     }
     deduped.select(
       graft.functions.PortableHash.hash60(col("url")).as("doc_id"),

@@ -363,27 +363,23 @@ object Dedup {
     * are never read (both pinned by BandIndexSpec). Downstream exact
     * verification touches just the colliding ids.
     *
-    * `broadcastBatch` (default true) hints the banded batch — batch
-    * rows × num_bands — which is what ENABLES the dynamic partition
-    * pruning (the DPP subquery reuses that broadcast). The hint is
-    * safe while the day-2 batch is ingestion-bounded (the contract
-    * here); for a backfill-sized "batch" that approaches corpus
-    * scale, pass false — AQE then sizes the join (broadcast while it
-    * fits, shuffle past capacity) at the cost of the partition
-    * pruning, which a corpus-sized probe would defeat anyway (it
-    * touches every bucket).
+    * The banded batch — batch rows × num_bands — is broadcast, which
+    * is what ENABLES the dynamic partition pruning (the DPP subquery
+    * reuses that broadcast). The hint is safe because the day-2 batch
+    * is ingestion-bounded (the contract here); a batch that
+    * approaches corpus scale belongs to the in-query band join
+    * ([[minhashLshAtScale]]), not to a probe.
     */
   def probeBandIndex(
       batch: DataFrame,
       idCol: String,
       textCol: String,
-      index: DataFrame,
-      broadcastBatch: Boolean = true
+      index: DataFrame
   ): DataFrame = {
     val nb = bandKeys(batch, idCol, textCol)
       .withColumn("pfx", substring(col("bh"), 1, 1))
       .select(col(idCol).as("new_id"), col("band"), col("pfx"), col("bh"))
-    (if (broadcastBatch) broadcast(nb) else nb)
+    broadcast(nb)
       .join(index.select(col("doc_id").as("idx_id"), col("band"), col("pfx"), col("bh")),
         Seq("band", "pfx", "bh"))
       .where(col("new_id") =!= col("idx_id"))

@@ -323,12 +323,12 @@ object LexIndex {
   }
 
   /** BM25 top-k against the stored index. `queries`: (q_id, term)
-    * rows, benchmark-sized. `routeOnDriver = true` computes the
-    * query-term → bucket set with the JVM twin of the portable hash
-    * (a bounded driver routing table, the probeAnnIndex pattern) and
-    * pushes it as a static `bucket IN (...)` filter — partition
-    * pruning at plan time; `false` keeps everything in the plan and
-    * relies on the broadcast join's dynamic pruning.
+    * rows, benchmark-sized. The query terms' bucket set is collected
+    * to the driver — the distinct values of the probe's own bucket
+    * column, so at most `nBuckets` rows whatever the query workload
+    * (a bounded routing table, the probeAnnIndex pattern) — and
+    * pushed as a static `bucket IN (...)` filter: partition pruning
+    * at plan time.
     *
     * EVERY broadcast here is query-bounded, never corpus-bounded: the
     * terms store (corpus-VOCABULARY-scaled — far too big to broadcast
@@ -347,27 +347,15 @@ object LexIndex {
       index: LexIndexHandle,
       k: Int = 10,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      routeOnDriver: Boolean = true): DataFrame = {
-    // a null query term would NPE the driver routing's hash (and be
-    // silently dropped by the join paths) — drop it identically in
-    // both routing modes before anything touches it
+      b: Double = 0.75): DataFrame = {
+    // a null query term has no bucket — drop it before anything
+    // touches it
     val q = queries.where(col("term").isNotNull)
       .select(col("q_id"), col("term"))
       .withColumn("bucket", bucketOf(index.nBuckets))
-    val (post, terms) =
-      if (!routeOnDriver) (index.postings, index.terms)
-      else {
-        // driver routing table: one bucket id per DISTINCT query term
-        // — bounded by the query workload, never the corpus
-        val buckets = queries.select(col("term")).where(col("term").isNotNull)
-          .distinct()
-          .collect()
-          .map(r => (PortableHash.hash60Jvm(r.getString(0)) % index.nBuckets).toInt)
-          .distinct.toSeq
-        (index.postings.where(col("bucket").isin(buckets: _*)),
-          index.terms.where(col("bucket").isin(buckets: _*)))
-      }
+    val buckets = q.select(col("bucket")).distinct().collect().map(_.getInt(0)).sorted.toSeq
+    val post = index.postings.where(col("bucket").isin(buckets: _*))
+    val terms = index.terms.where(col("bucket").isin(buckets: _*))
     val termsQ = terms
       .join(broadcast(q.select(col("bucket"), col("term")).distinct()),
         Seq("bucket", "term"), "left_semi")

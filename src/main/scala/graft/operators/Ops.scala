@@ -186,10 +186,9 @@ object Ops {
 
   /** Exact pairwise Jaccard >= `threshold` over a token-array column,
     * via posting-list self-join intersection counts (no cross join,
-    * no token arrays through shuffles). Token arrays are made distinct
-    * on entry (set semantics); for already-distinct arrays the
-    * array_distinct is a no-op. Both set sizes ride the pair count,
-    * so `df` must hold ONE row per id (see [[overlapCounts]]).
+    * no token arrays through shuffles). Both set sizes ride the pair
+    * count, so `df` must hold ONE row per id and each token array
+    * must be distinct (see [[overlapCounts]]).
     * `maxPostingsPerToken` caps candidate generation; the values of
     * surviving pairs are exact either way.
     *
@@ -214,10 +213,10 @@ object Ops {
   /** Ordered-pair containment (|A∩B| / |A| >= threshold) with the same
     * optional hot-token cap on candidate GENERATION as [[jaccardPairs]]
     * (excluded tokens are a recall trade only) and the same
-    * one-row-per-id contract. Values of surviving pairs are always
-    * EXACT; |A| is the `_na` the pair count carries. d15's canned
-    * query is the cap=None postings form of this (same pairs and
-    * counts; d15 additionally rounds + orders).
+    * one-row-per-id, distinct-tokens contract. Values of surviving
+    * pairs are always EXACT; |A| is the `_na` the pair count carries.
+    * d15's canned query is the cap=None postings form of this (same
+    * pairs and counts; d15 additionally rounds + orders).
     */
   def containmentPairs(
       df: DataFrame,
@@ -238,13 +237,15 @@ object Ops {
     * shared-token count and `_na`/`_nb` are the two docs' distinct-token
     * counts.
     *
-    * Contract: `df` holds ONE row per id. A doc's set size is computed
-    * in its row (`size(array_distinct(tokens))`) and carried on each of
-    * its posting rows through the self-join, and the pair count groups
-    * on it — no per-doc size aggregate and no joins back onto the
-    * pairs. Two rows with one id would be counted as two docs of that
-    * id. Every caller meets the contract: `Dedup.shingleArrays` emits
-    * one row per `doc_id`.
+    * Contract: `df` holds ONE row per id, and each row's tokens are
+    * distinct. A doc's set size is computed in its row (`size(tokens)`)
+    * and carried on each of its posting rows through the self-join,
+    * and the pair count groups on it — no per-doc size aggregate and
+    * no joins back onto the pairs. Two rows with one id would be
+    * counted as two docs of that id, and a repeated token as two
+    * shared tokens. Every caller meets the contract:
+    * `Dedup.shingleArrays` emits one row per `doc_id` with
+    * `wordShingles(..., distinct = true)`.
     *
     * Worst-case bound for scale: a token appearing in k docs emits
     * k^2 candidate rows. With a cap, tokens in more than
@@ -266,8 +267,8 @@ object Ops {
       maxPostingsPerToken: Option[Int]
   ): DataFrame = {
     val posting = df
-      .select(col(idCol).as("_id"), array_distinct(col(tokensCol)).as("_d"))
-      .select(col("_id"), size(col("_d")).cast("long").as("_n"), explode(col("_d")).as("_t"))
+      .select(col(idCol).as("_id"), size(col(tokensCol)).cast("long").as("_n"),
+        explode(col(tokensCol)).as("_t"))
 
     def pairCounts(src: DataFrame): DataFrame =
       src.select(col("_id").as("id_a"), col("_n").as("_na"), col("_t"))
@@ -765,17 +766,14 @@ object Ops {
     *  - delta partials: one map-side-combined agg over the delta
     *    (small — a day's keys, not the corpus's);
     *  - untouched view rows pass through via a LEFT ANTI join against
-    *    the touched-key set — with `broadcastTouched` (default) that
-    *    is a broadcast hash anti-join: the view is SCANNED once and
-    *    never shuffled, which is the entire point (a naive
+    *    the touched-key set, broadcast (a delta's keys are bounded
+    *    like the delta): the view is SCANNED once and never shuffled,
+    *    which is the entire point (a naive
     *    view ∪ delta re-agg shuffles all base keys every cycle);
     *  - only touched keys (semi-join, same broadcast) union the delta
     *    partials and re-agg — a shuffle of 2×|touched| rows.
     * New keys appearing only in the delta survive through the merge
-    * leg. Set `broadcastTouched=false` when a delta may touch more
-    * keys than a broadcast should carry (AQE still converts when the
-    * runtime size allows); the O41 lesson: never force-broadcast an
-    * unbounded side.
+    * leg.
     *
     * The correctness contract (maintained == full recompute) is
     * exactly what q66's DuckDB oracle pins: the oracle aggregates the
@@ -786,8 +784,7 @@ object Ops {
       view: DataFrame,
       delta: DataFrame,
       keys: Seq[String],
-      aggs: Seq[(String, String, Column)],
-      broadcastTouched: Boolean = true
+      aggs: Seq[(String, String, Column)]
   ): DataFrame = {
     require(keys.nonEmpty, "maintainAggView: at least one key column")
     require(aggs.nonEmpty, "maintainAggView: at least one aggregate")
@@ -812,8 +809,7 @@ object Ops {
     }
     val dp = delta.groupBy(keys.map(col): _*).agg(partial.head, partial.tail: _*)
 
-    val touched0 = dp.select(keys.map(col): _*)
-    val touched = if (broadcastTouched) broadcast(touched0) else touched0
+    val touched = broadcast(dp.select(keys.map(col): _*))
 
     val outCols = (keys ++ stateCols).map(col)
     // null-safe key equality (<=>): a NULL-keyed view row must MATCH a

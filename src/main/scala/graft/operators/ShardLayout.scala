@@ -311,11 +311,10 @@ object ShardLayout {
     * touch pass through an ANTI join against the batch's key set —
     * the table is scanned once, never shuffled (O42's discipline);
     * only touched keys union the batch and re-reduce (one
-    * map-side-combinable struct-max, q65's own agg). `broadcastKeys`
-    * defaults true because a micro-batch's key set is
-    * trigger-bounded; pass false for bulk backfills and let AQE
-    * decide (the O41 lesson: never force-broadcast an unbounded
-    * side). Key, version and tombstone columns are stamped in a
+    * map-side-combinable struct-max, q65's own agg). The batch's key
+    * set is broadcast because a micro-batch's key set is
+    * trigger-bounded. Key, version and tombstone columns are stamped
+    * in a
     * `_MERGE` manifest on first apply and VALIDATED against every
     * later one — the manifest is authoritative, callers' args are
     * checked, never trusted (the O43 discipline).
@@ -327,7 +326,6 @@ object ShardLayout {
       keyCols: Seq[String],
       versionCols: Seq[String],
       tombstoneCol: String = "is_tombstone",
-      broadcastKeys: Boolean = true,
       keepVersions: Int = 1
   ): Unit = {
     val op = "applyChangelog"
@@ -379,8 +377,7 @@ object ShardLayout {
           require(stored.columns.sorted.sameElements(batch.columns.sorted),
             s"$op: stored schema ${stored.columns.sorted.mkString(",")} != " +
               s"batch schema ${batch.columns.sorted.mkString(",")}")
-          val keys0 = incoming.select(keyCols.map(col): _*)
-          val keys = if (broadcastKeys) broadcast(keys0) else keys0
+          val keys = broadcast(incoming.select(keyCols.map(col): _*))
           def keyCond(l: DataFrame) = keyCols.map(k => l(k) <=> keys(k)).reduce(_ && _)
           val untouched = stored.join(keys, keyCond(stored), "left_anti")
             .select(batch.columns.toIndexedSeq.map(col): _*)

@@ -119,7 +119,7 @@ object VectorIndex {
     * n_id, m, code), stored hive-partitioned BY CELL so a probe reads
     * only its nprobe cells' directories; `centroids` — the k trained
     * coarse rows; `codebooks` — the m·k trained subspace rows;
-    * `vectors` — the optional raw-vector store (cell, n_id, vec), also
+    * `vectors` — the raw-vector store (cell, n_id, vec), also
     * hive-partitioned by cell, backing [[probeAnnIndex]]'s
     * exact-rerank `refine` mode (the FAISS IndexRefineFlat posture —
     * ADC codes prune, stored floats re-rank the shortlist); `sigs` —
@@ -131,7 +131,7 @@ object VectorIndex {
       lists: DataFrame,
       centroids: DataFrame,
       codebooks: DataFrame,
-      vectors: Option[DataFrame] = None,
+      vectors: DataFrame,
       sigs: Option[DataFrame] = None) {
 
     /** Index-side statistics for [[probeAnnIndex]]'s auto-refill,
@@ -150,14 +150,14 @@ object VectorIndex {
     * encode) is paid ONCE at write time; the stored artifact is what
     * every real ANN service ships: inverted lists of (4-byte codes)
     * partitioned by coarse cell, plus the two tiny quantizer frames,
-    * plus (storeVectors=true, the default) the cell-partitioned raw
-    * vectors backing refined probes. Day-2 queries and day-2 inserts
+    * plus the cell-partitioned raw vectors backing refined probes and
+    * the binary probe's rerank. Day-2 queries and day-2 inserts
     * ([[probeAnnIndex]], [[appendAnnIndex]]) never retrain; an
     * UNREFINED probe never touches float arrays of the corpus, and a
     * refined one reads floats only from its nprobe cell directories.
     *
     * Layout: ONE versioned root, `path/_CURRENT → path/vNNNNN/
-    * {centroids, codebooks, lists[, vectors][, sigs]}`, published by
+    * {centroids, codebooks, lists, vectors[, sigs]}`, published by
     * one [[IndexLayout.rewrite]] — readers can never pair new
     * quantizers with old lists, and a write that fails publishes
     * nothing. An empty corpus raises before training.
@@ -172,7 +172,6 @@ object VectorIndex {
       kSub: Int = 8,
       iters: Int = 2,
       dim: Int = 64,
-      storeVectors: Boolean = true,
       storeSigs: Boolean = false
   ): Unit = withQuantized(corpus, idCol, vecCol) { ev =>
     require(!ev.isEmpty, "writeAnnIndex: the corpus is empty — refusing to publish an " +
@@ -182,8 +181,7 @@ object VectorIndex {
       val sink = graft.sinks.RoutedSink.standard()
       sink.write(s"parquet:$next/centroids", t.cents)
       sink.write(s"parquet:$next/codebooks", t.books)
-      cellStores(t.cells, t.codes, ev.select(col("_id").as("n_id"), col("_x")),
-        storeVectors, storeSigs)
+      cellStores(t.cells, t.codes, ev.select(col("_id").as("n_id"), col("_x")), storeSigs)
         .foreach { case (store, rows) => sink.write(s"parquet:$next/$store:by:cell", rows) }
     }
   }
@@ -193,23 +191,19 @@ object VectorIndex {
     * published epoch; a path with no published epoch raises.
     *
     * The `cell` partition column keeps its INFERRED type (int when the
-    * stored ids are small) instead of being cast to long: wrapping the
-    * partition attribute in a Cast at the scan breaks DYNAMIC
-    * partition pruning on the pure-join probe path — Catalyst's DPP
-    * rule prunes only when the join key is the raw partition
-    * attribute. [[probeAnnIndex]] casts its probe-side routing column
-    * to this type instead (the broadcast side, where a cast costs
-    * nothing). The band index never hit this because its band/pfx
-    * casts are no-ops that the optimizer erases.
+    * stored ids are small) instead of being cast to long: a Cast at
+    * the scan would run on every stored row a probe reads, and its
+    * probe→cell join key would no longer be the raw partition
+    * attribute. The probes cast their side instead — the routing
+    * table (probes × nprobe rows, broadcast) and the `cell IN (...)`
+    * literals take the stored type, where a cast costs nothing.
     *
     * Pending tombstones ([[tombstoneAnnIndex]]) are masked
     * immediately via an anti-join on n_id — a deleted vector never
     * surfaces as a neighbor even before compaction applies the
-    * deletion. On the driver-routed path the probe KEEPS its static
-    * partition pruning during the pending window (the cell isin
-    * filter pushes through the anti-join's left side down to the
-    * scan); the join path's DPP, like the band index's, waits for
-    * compaction to reclaim the tombstone set.
+    * deletion. The probes KEEP their static partition pruning during
+    * the pending window (the cell isin filter pushes through the
+    * anti-join's left side down to the scan).
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): AnnIndex = {
     val dir = IndexLayout.currentVersion(spark, path).map(v => s"$path/$v").getOrElse(
@@ -220,9 +214,6 @@ object VectorIndex {
       else rows.join(IndexLayout.readTombstones(spark, path, "n_id"), Seq("n_id"), "left_anti")
     def rows(store: String, cols: String*): DataFrame =
       spark.read.parquet(s"$dir/$store").select(cols.map(col): _*)
-    // the optional stores are present iff their epoch directory exists
-    def optional(store: String, cols: String*): Option[DataFrame] =
-      Option.when(IndexLayout.exists(spark, s"$dir/$store"))(rows(store, cols: _*))
     AnnIndex(
       masked(rows("lists", "cell", "n_id", "m", "code")),
       spark.read.parquet(s"$dir/centroids"),
@@ -231,10 +222,12 @@ object VectorIndex {
       // derive from the MASKED lists, so a deleted vector can never
       // re-enter via the vectors join; compaction still reclaims its
       // vector rows
-      optional("vectors", "cell", "n_id", "vec"),
+      rows("vectors", "cell", "n_id", "vec"),
       // the sigs ARE masked: the binary probe derives its candidate
-      // stream from them directly, not from the masked lists
-      optional("sigs", "cell", "n_id", "sig").map(masked))
+      // stream from them directly, not from the masked lists; they
+      // are present iff their epoch directory exists
+      Option.when(IndexLayout.exists(spark, s"$dir/sigs"))(
+        masked(rows("sigs", "cell", "n_id", "sig"))))
   }
 
   /** Allow-lists with at most this many distinct ids get a broadcast
@@ -244,9 +237,8 @@ object VectorIndex {
     */
   private[operators] val ProbeAllowBroadcastMax = 4L << 20
 
-  /** Most probes [[probeSignIndex]] collects to the driver with
-    * `routeOnDriver = true` (the probe batch, vectors included, becomes
-    * a local relation).
+  /** Most probes [[probeSignIndex]] collects to the driver (the probe
+    * batch, vectors included, becomes a local relation).
     */
   private[operators] val ProbeRouteOnDriverMax = 1 << 16
 
@@ -254,30 +246,17 @@ object VectorIndex {
     * integer-ADC values to [[ivfPqTrained]] (AnnIndexSpec pins row
     * equality), but the corpus appears only through its stored lists,
     * and a probe touches O(nprobe · list length) stored rows, never
-    * the index: with `routeOnDriver = true` (default) the probe→cell
-    * routing table — AT MOST probes × nprobe rows against a k-row
-    * centroid frame, the bounded-batch ingestion contract — is
-    * collected and the probed cells pushed into the lists scan as
+    * the index: the probe→cell routing table — AT MOST probes ×
+    * nprobe rows against a k-row centroid frame, the bounded-batch
+    * ingestion contract — is collected as its distinct cells (at most
+    * k rows) and the probed cells pushed into the lists scan as
     * PARTITION-KEY LITERALS, so the hive layout statically prunes to
     * exactly those directories (AnnIndexSpec measures ≤ nprobe of k
     * read). This is how every real ANN service routes: the coarse
     * quantizer is driver/router-resident by design, and the routing
-    * collect is bounded by probes × nprobe — a routing table, not
+    * collect is bounded by the cell count — a routing table, not
     * data (the rankGlobal-offsets class of driver state, NOT a
-    * corpus-sized collect). For an unbounded probe RELATION pass
-    * false: pure joins, AQE-sized — and since round 6 the join path
-    * ALSO partition-prunes: the probe→cell join carries the RAW
-    * partition attribute (see readAnnIndex's cell-type note), so
-    * Catalyst plans a DPP filter on the lists scan. Its pruning side
-    * has shuffle stages beneath it (the per-probe top-nprobe window),
-    * which AQE cannot reuse as a broadcast, so the filter only
-    * survives physical planning when
-    * `spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly`
-    * is false (Spark then runs the pruning subquery as its own small
-    * job — probes × k rows — before the index scan; set in this
-    * library's session builders and recommended for any deployment
-    * probing partitioned indexes). With the default conf the filter
-    * degrades to a full-index read — correct, just unpruned.
+    * corpus-sized collect).
     */
   def probeAnnIndex(
       probes: DataFrame,
@@ -288,7 +267,6 @@ object VectorIndex {
       m: Int = 4,
       dim: Int = 64,
       topK: Int = 5,
-      routeOnDriver: Boolean = true,
       refine: Int = 0,
       allowedIds: Option[DataFrame] = None,
       autoScaleFiltered: Boolean = true,
@@ -305,9 +283,10 @@ object VectorIndex {
     // capped at the cell count, refine at the allow-list size (a
     // shortlist can't exceed the eligible ids). Pass
     // autoScaleFiltered = false to pin the knobs (e.g. a
-    // latency-bound serving path that pre-tuned them) — the call is
-    // then FULLY LAZY again: no Spark job runs here (round-11 fix;
-    // previously the distinct count ran regardless). The index-side
+    // latency-bound serving path that pre-tuned them) — the call then
+    // never counts the allow-list: its only job is the routing
+    // collect, as for an unfiltered probe (round-11 fix; previously
+    // the distinct count ran regardless). The index-side
     // counts are cached on the [[AnnIndex]] handle, so even the
     // auto path pays them once per handle, not once per call. A
     // caller that knows its allow-list cardinality passes
@@ -332,21 +311,18 @@ object VectorIndex {
     }
     val cellType = index.lists.schema("cell").dataType
     val probeCells = route(p, index.centroids, effNprobe, cellType)
-    val cellFilter: Option[Seq[Any]] =
-      if (!routeOnDriver) None
-      else Some(cellLiterals(probeCells.select(col("cell").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq, cellType))
+    val cells = cellLiterals(probeCells.select(col("cell").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSeq, cellType)
     // Replay guard: an at-least-once re-run of appendAnnIndex (or a
     // replayed appendAnnIndexStream micro-batch) leaves EXACT
     // duplicate (cell, n_id, m, code) rows in the stored lists. The
     // band-index probe is naturally immune (it distincts candidate
     // pairs); here a duplicated row would double-count that
     // subspace's distance in the ADC sum and silently corrupt the
-    // ranking. Distinct AFTER the probe-cell join so both routing
-    // paths stay pruned first (cell directories via isin literals or
-    // the broadcast join) — the dedup shuffle is bounded by matched
-    // candidates, never the index. Duplicates are permanently
-    // reclaimed by [[compactAnnIndex]].
+    // ranking. Distinct AFTER the probe-cell join so the scan stays
+    // pruned first (cell directories via isin literals) — the dedup
+    // shuffle is bounded by matched candidates, never the index.
+    // Duplicates are permanently reclaimed by [[compactAnnIndex]].
     // O41: FILTERED search — the attribute-constrained probe every
     // serving system eventually needs ("neighbors among docs passing
     // this predicate"). PRE-filter semantics: the allow-list
@@ -356,7 +332,7 @@ object VectorIndex {
     // [[allowOnly]] for when the allow-list side is broadcast.
     // Selectivity eats candidates — see the auto-refill note above;
     // the spec measures the trade on the stored index.
-    val cand = allowOnly(inCells(index.lists, cellFilter).join(broadcast(probeCells), Seq("cell")),
+    val cand = allowOnly(inCells(index.lists, cells).join(broadcast(probeCells), Seq("cell")),
       allowedIds, allowN)
       .where(col("n_id") =!= col("p_id"))
       .select(col("p_id"), col("n_id"), col("m"), col("code")).distinct()
@@ -364,11 +340,8 @@ object VectorIndex {
     // the same cell routing as the lists — floats are read only from
     // the nprobe cell directories. Tombstoned ids can't resurface:
     // the shortlist comes from the masked lists.
-    adcTopK(cand, p, adcTable(p, index.codebooks, m, dim), topK, effRefine, {
-      require(index.vectors.nonEmpty,
-        "probeAnnIndex(refine > 0) needs an index written with storeVectors=true")
-      inCells(index.vectors.get, cellFilter).select(col("n_id"), col("vec").as("_ne")).distinct()
-    })
+    adcTopK(cand, p, adcTable(p, index.codebooks, m, dim), topK, effRefine,
+      inCells(index.vectors, cells).select(col("n_id"), col("vec").as("_ne")).distinct())
   }
 
   /** O46: binary-quantized FILTERED probe against the stored index —
@@ -396,49 +369,37 @@ object VectorIndex {
       nprobe: Int = 2,
       hammingTopM: Int = 50,
       topK: Int = 5,
-      routeOnDriver: Boolean = true,
       allowedIds: Option[DataFrame] = None,
       allowedIdsCount: Option[Long] = None
   ): DataFrame = {
     require(index.sigs.nonEmpty,
       "probeSignIndex needs an index written with storeSigs=true")
-    require(index.vectors.nonEmpty,
-      "probeSignIndex needs an index written with storeVectors=true (exact rerank)")
     val p0 = probes.select(col(probeIdCol).as("p_id"), col(probeVecCol).as("pe"),
       graft.functions.GraftExpressions.signPack60(col(probeVecCol)).as("psig"))
     // probe→cell routing as in probeAnnIndex (driver-resident coarse
     // quantizer, bounded probes x nprobe routing table pushed as
-    // partition-key literals, or the DPP join path).
-    // Round-17 (§2.4 remove repeated passes): with routeOnDriver the
-    // probe BATCH is materialized once into a LOCAL relation — the
-    // routing path already collects a probes-bounded table, and the
-    // former shape re-evaluated the probe sub-plan (scan + sort-limit
-    // + sign-pack) once per broadcast build PLUS once for the routing
-    // collect, and re-ran the probe→cell window INSIDE the main plan
-    // (s15 warm path: ~1/3 of its 33 stage-jobs were these repeats).
-    // Local relations broadcast without a job. Bounded by the probe
-    // batch — the documented serving contract of this mode.
+    // partition-key literals). The probe BATCH is materialized once
+    // into a LOCAL relation: the routing already collects a
+    // probes-bounded table, and re-evaluating the probe sub-plan
+    // (scan + sort-limit + sign-pack) once per broadcast build PLUS
+    // once for the routing collect, with the probe→cell window inside
+    // the main plan, cost s15 ~1/3 of its stage-jobs. Local relations
+    // broadcast without a job. Bounded by the probe batch.
+    import scala.jdk.CollectionConverters._
     val spark = probes.sparkSession
     val cellType = index.sigs.get.schema("cell").dataType
-    val (p, probeCells, cellFilter) =
-      if (!routeOnDriver) (p0, route(p0, index.centroids, nprobe, cellType), None)
-      else {
-        import scala.jdk.CollectionConverters._
-        // loud bound on the driver-side probe batch: one row past the
-        // bound is enough to refuse, never the whole batch
-        val probeRows = p0.limit(ProbeRouteOnDriverMax + 1).collect()
-        require(probeRows.length <= ProbeRouteOnDriverMax,
-          s"probeSignIndex(routeOnDriver = true) collects the probe batch to the driver: " +
-            s"more than $ProbeRouteOnDriverMax probes — split the batch or pass " +
-            "routeOnDriver = false")
-        val pLocal = spark.createDataFrame(probeRows.toSeq.asJava, p0.schema)
-        val routed = route(pLocal, index.centroids, nprobe, cellType)
-        val cellRows = routed.collect()
-        val cellsLocal = spark.createDataFrame(cellRows.toSeq.asJava, routed.schema)
-        val ids = cellRows.map(_.getAs[Number](1).longValue).distinct.toSeq
-        (pLocal, cellsLocal, Some(cellLiterals(ids, cellType)))
-      }
-    val cand = inCells(index.sigs.get, cellFilter).join(broadcast(probeCells), Seq("cell"))
+    // loud bound on the driver-side probe batch: one row past the
+    // bound is enough to refuse, never the whole batch
+    val probeRows = p0.limit(ProbeRouteOnDriverMax + 1).collect()
+    require(probeRows.length <= ProbeRouteOnDriverMax,
+      "probeSignIndex collects the probe batch to the driver: " +
+        s"more than $ProbeRouteOnDriverMax probes — split the batch")
+    val p = spark.createDataFrame(probeRows.toSeq.asJava, p0.schema)
+    val routed = route(p, index.centroids, nprobe, cellType)
+    val cellRows = routed.collect()
+    val probeCells = spark.createDataFrame(cellRows.toSeq.asJava, routed.schema)
+    val cells = cellLiterals(cellRows.map(_.getAs[Number](1).longValue).distinct.toSeq, cellType)
+    val cand = inCells(index.sigs.get, cells).join(broadcast(probeCells), Seq("cell"))
       .where(col("n_id") =!= col("p_id"))
       .select(col("p_id"), col("n_id"), col("sig")).distinct() // replayed appends
     val wH = Window.partitionBy(col("p_id")).orderBy(col("hamming"), col("n_id"))
@@ -452,7 +413,7 @@ object VectorIndex {
       .withColumn("hrn", row_number().over(wH))
       .filter(col("hrn") <= hammingTopM)
       .select(col("p_id"), col("n_id"), col("hamming"))
-    val vecs = inCells(index.vectors.get, cellFilter)
+    val vecs = inCells(index.vectors, cells)
       .select(col("n_id"), col("vec").as("_ne")).distinct()
     val wC = Window.partitionBy(col("p_id")).orderBy(col("cosine").desc, col("n_id"))
     broadcast(survivors).join(vecs, Seq("n_id"))
@@ -500,13 +461,13 @@ object VectorIndex {
           spark.read.parquet(s"$dir/centroids")
             .select(lit(0).as("_m"), col("_cid"), col("_cx").as("_cs")))
         .select(col("n_id"), col("_cell").as("cell"))
-      // the raw-vector and sign-sketch stores follow the lists when
-      // present (refined and binary probes must see day-2 vectors
-      // too); replay duplicates are tolerated by the probes' distinct
-      // and reclaimed by compactAnnIndex
+      // the raw-vector store, and the sign-sketch store when present,
+      // follow the lists (refined and binary probes must see day-2
+      // vectors too); replay duplicates are tolerated by the probes'
+      // distinct and reclaimed by compactAnnIndex
       val sink = graft.sinks.RoutedSink.standard()
       cellStores(cells, pqEncode(v, spark.read.parquet(s"$dir/codebooks"), m, dim), v,
-        IndexLayout.exists(spark, s"$dir/vectors"), IndexLayout.exists(spark, s"$dir/sigs"))
+        IndexLayout.exists(spark, s"$dir/sigs"))
         .foreach { case (store, rows) => sink.write(s"parquet-append:$dir/$store:by:cell", rows) }
     }
   }
@@ -563,10 +524,9 @@ object VectorIndex {
 
   /** The one probe→cell routing: each probe's `nprobe` nearest coarse
     * centroids (_cid, _cx), the cell cast to the STORED partition
-    * column's type `cellType` on THIS (broadcast) side — keeping the
-    * stored side the raw partition attribute is what lets both static
-    * pruning (isin literals) and the join path's dynamic partition
-    * pruning reach the hive layout (see readAnnIndex's cell-type note).
+    * column's type `cellType` on THIS (broadcast) side, so the stored
+    * side stays the raw partition attribute (see readAnnIndex's
+    * cell-type note).
     */
   private def route(p: DataFrame, centroids: DataFrame, nprobe: Int, cellType: DataType): DataFrame = {
     val w = Window.partitionBy(col("p_id")).orderBy(col("_dq").asc, col("_cid"))
@@ -582,10 +542,10 @@ object VectorIndex {
     if (cellType == IntegerType) ids.map(_.toInt) else ids
 
   /** A cell-partitioned component, statically pruned to the routed
-    * cells when the probe routes on the driver.
+    * cells.
     */
-  private def inCells(component: DataFrame, cells: Option[Seq[Any]]): DataFrame =
-    cells.fold(component)(ids => component.where(col("cell").isin(ids: _*)))
+  private def inCells(component: DataFrame, cells: Seq[Any]): DataFrame =
+    component.where(col("cell").isin(cells: _*))
 
   /** An allow-list's ids (its first column) as `n_id`. */
   private def allowIds(allow: DataFrame): DataFrame =
@@ -659,16 +619,16 @@ object VectorIndex {
   private val CellStore = new IndexLayout.KeySetIndex("AnnIndex", "n_id", "cell")
 
   /** The cell-partitioned stores of one epoch, by directory name: the
-    * inverted lists (cell, n_id, m, code) from `codes` (n_id, m, code)
-    * and — when `vectors` / `sigs` — the raw vectors (cell, n_id, vec)
-    * and their sign packs (cell, n_id, sig) from `vecs` (n_id, _x);
-    * `cells` (n_id, cell) places every row.
+    * inverted lists (cell, n_id, m, code) from `codes` (n_id, m, code),
+    * the raw vectors (cell, n_id, vec) from `vecs` (n_id, _x) and —
+    * when `sigs` — their sign packs (cell, n_id, sig); `cells` (n_id,
+    * cell) places every row.
     */
   private def cellStores(cells: DataFrame, codes: DataFrame, vecs: DataFrame,
-      vectors: Boolean, sigs: Boolean): Seq[(String, DataFrame)] =
+      sigs: Boolean): Seq[(String, DataFrame)] =
     Seq("lists" ->
-      cells.join(codes, "n_id").select(col("cell"), col("n_id"), col("m"), col("code"))) ++
-      Option.when(vectors)("vectors" ->
+      cells.join(codes, "n_id").select(col("cell"), col("n_id"), col("m"), col("code")),
+      "vectors" ->
         cells.join(vecs, "n_id").select(col("cell"), col("n_id"), col("_x").as("vec"))) ++
       Option.when(sigs)("sigs" -> cells.join(vecs, "n_id").select(col("cell"), col("n_id"),
         graft.functions.GraftExpressions.signPack60(col("_x")).as("sig")))

@@ -10,6 +10,8 @@ import java.nio.file.{Files, Paths}
   * Iterative queries run their convergence rounds at BUILD time, so
   * their static plan is the final-join plan over checkpointed frames —
   * the loop structure itself is documented in OPTIMIZATION_r16.md.
+  * Expression ids (`#123`) and `plan_id=N` are stripped — they count
+  * up per session — so two snapshots of one plan diff directly.
   * Usage:
   *   sbt "runMain graft.tools.PlanSnapshot <outDir> <label> <query>..."
   */
@@ -27,6 +29,7 @@ object PlanSnapshot {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
+          .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
         Files.writeString(Paths.get(s"$outDir/${name}_$label.txt"), txt)
         println(s"[plan] wrote $outDir/${name}_$label.txt (${txt.length} chars)")
       } catch {

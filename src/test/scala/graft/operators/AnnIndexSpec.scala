@@ -32,12 +32,6 @@ class AnnIndexSpec extends SparkTestBase {
       probes, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(stored == inQuery && stored.nonEmpty)
-    // the unbounded-probe path (pure joins, no driver routing) must
-    // return the same rows — only the scan pruning differs
-    val unrouted = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding",
-      VectorIndex.readAnnIndex(spark, indexPath), routeOnDriver = false)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    assert(unrouted == inQuery)
   }
 
   test("a one-probe query reads only its nprobe cell partitions") {
@@ -60,25 +54,6 @@ class AnnIndexSpec extends SparkTestBase {
     val dirsRead = scans.map(_.metrics.get("numPartitions").map(_.value).getOrElse(0L)).max
     assert(dirsRead <= 2 && dirsRead < totalCells,
       s"one probe read $dirsRead of $totalCells cell partitions (nprobe=2)")
-  }
-
-  test("the pure-join probe path (routeOnDriver=false) also prunes cell partitions") {
-    val totalCells =
-      new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
-        .count(f => f.isDirectory && f.getName.startsWith("cell="))
-    val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-djoin").toString
-    emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
-    val oneId = spark.read.parquet(oneDir).head().getLong(0)
-    val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
-    val probed = VectorIndex.probeAnnIndex(one, "vec_id", "embedding",
-      VectorIndex.readAnnIndex(spark, indexPath), routeOnDriver = false)
-    probed.collect()
-    val scans = collectFileScans(probed.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("lists")))
-    assert(scans.nonEmpty, "no lists scan in the join-path probe plan")
-    val dirsRead = scans.map(_.metrics.get("numPartitions").map(_.value).getOrElse(0L)).max
-    assert(dirsRead <= 2 && dirsRead < totalCells,
-      s"join-path probe read $dirsRead of $totalCells cell partitions (nprobe=2)")
   }
 
   test("recall floor: refined probe at the named operating point reaches recall@5 >= 0.6") {
@@ -459,55 +434,57 @@ class AnnIndexSpec extends SparkTestBase {
     twins.unpersist()
   }
 
-  test("O41 pinned-knob filtered probe is fully lazy: zero Spark jobs at call time") {
-    // Round-11 regression guard: with autoScaleFiltered = false and
-    // the join routing path, constructing the probe frame must run
-    // NO Spark job (round 10 eagerly ran the allow-list distinct
-    // count + two index counts on every call — a per-call latency
-    // tax on exactly the serving path that pinned its knobs to
-    // avoid one).
+  test("O41 pinned-knob filtered probe never counts the allow-list: same call-time jobs as unfiltered") {
+    // Round-11 regression guard: with autoScaleFiltered = false,
+    // constructing the probe frame must run no job for the allow-list
+    // (round 10 eagerly ran the allow-list distinct count + two index
+    // counts on every call — a per-call latency tax on exactly the
+    // serving path that pinned its knobs to avoid one). The probe's
+    // one call-time job is its cell routing collect, which an
+    // unfiltered probe runs too.
     val probes = emb.orderBy(col("vec_id")).limit(5)
     val allow = emb.where(col("label") % 3 === 0).select(col("vec_id"))
     val idx = VectorIndex.readAnnIndex(spark, indexPath)
-    @volatile var jobs = 0
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // job-group filter: suites run concurrently in the test JVM, so
-    // the listener must only count THIS thread's jobs (the group id
-    // is a thread-local property, inherited by jobs this test starts)
-    val group = s"ann-lazy-${java.util.UUID.randomUUID()}"
-    spark.sparkContext.setJobGroup(group, "O41 laziness pin")
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (g == group) {
-          jobs += 1
-          descs.add(Option(js.properties)
-            .map(_.getProperty("spark.job.description", "?")).getOrElse("?") +
-            " / " + js.stageInfos.headOption.map(_.name).getOrElse("?"))
+    def callTimeJobs(call: => org.apache.spark.sql.DataFrame): (Int, String) = {
+      @volatile var jobs = 0
+      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      // job-group filter: suites run concurrently in the test JVM, so
+      // the listener must only count THIS thread's jobs (the group id
+      // is a thread-local property, inherited by jobs this test starts)
+      val group = s"ann-lazy-${java.util.UUID.randomUUID()}"
+      spark.sparkContext.setJobGroup(group, "O41 laziness pin")
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(js.properties)
+            .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+          if (g == group) {
+            jobs += 1
+            descs.add(Option(js.properties)
+              .map(_.getProperty("spark.job.description", "?")).getOrElse("?") +
+              " / " + js.stageInfos.headOption.map(_.name).getOrElse("?"))
+          }
         }
       }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = call
+        assert(df.columns.contains("n_id"))
+        // job events reach the listener asynchronously: drain the bus
+        org.apache.spark.graftbridge.SparkCoreBridge.flushListenerBus(spark.sparkContext)
+        (jobs, descs.toArray.mkString("; "))
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        spark.sparkContext.clearJobGroup()
+      }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = VectorIndex.probeAnnIndex(probes, "vec_id", "embedding", idx,
-        routeOnDriver = false, allowedIds = Some(allow),
-        autoScaleFiltered = false)
-      assert(df.columns.contains("n_id") || df.columns.nonEmpty)
-      // barrier action: an RDD count is exactly ONE job (a SQL count
-      // under AQE is one per query stage), observed through the async
-      // listener bus — anything beyond it came from probeAnnIndex
-      spark.sparkContext.parallelize(Seq(1)).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs < 1 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs == 1,
-        s"probeAnnIndex(autoScaleFiltered=false) ran ${jobs - 1} eager jobs at call time: " +
-          descs.toArray.mkString("; "))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.sparkContext.clearJobGroup()
-    }
+    val (filtered, filteredDescs) = callTimeJobs(VectorIndex.probeAnnIndex(
+      probes, "vec_id", "embedding", idx, allowedIds = Some(allow), autoScaleFiltered = false))
+    val (unfiltered, unfilteredDescs) = callTimeJobs(VectorIndex.probeAnnIndex(
+      probes, "vec_id", "embedding", idx, autoScaleFiltered = false))
+    assert(filtered == unfiltered,
+      s"probeAnnIndex(autoScaleFiltered=false) ran $filtered call-time jobs with an allow-list, " +
+        s"$unfiltered without: [$filteredDescs] vs [$unfilteredDescs]")
   }
 
   test("O46 binary filtered probe: in-query parity at nprobe=k and recall floors at selectivity 0.1") {
@@ -619,6 +596,46 @@ class AnnIndexSpec extends SparkTestBase {
     // compaction reclaimed the sig rows physically, not just masked
     val sigRows = VectorIndex.readAnnIndex(spark, dir).sigs.get
     assert(sigRows.where(col("n_id") === victim).count() == 0)
+  }
+
+  test("probeSignIndex: a malformed (null-sig) sidecar row cannot crowd the shortlist") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nullsig").toString
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
+      k = 8, m = 4, kSub = 8, storeSigs = true)
+    val idx = VectorIndex.readAnnIndex(spark, dir)
+    val probes = emb.orderBy(col("vec_id")).limit(5)
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
+    val clean = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx,
+      nprobe = 8, hammingTopM = 10, topK = 3))
+    // corrupt the handle: one null-sig row in EVERY cell (SignPack60's
+    // output for a sub-60-dim vector). Ascending Hamming order sorts
+    // nulls first, so without the guard these rows would occupy the
+    // top-M shortlist ahead of every real candidate.
+    val cells = idx.sigs.get.select(col("cell")).distinct()
+    val badRows = cells.withColumn("n_id", lit(999999L))
+      .withColumn("sig", lit(null).cast("long"))
+      .select(col("cell"), col("n_id"), col("sig"))
+    val dirty = idx.copy(sigs = Some(idx.sigs.get.unionByName(badRows)))
+    val guarded = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", dirty,
+      nprobe = 8, hammingTopM = 10, topK = 3))
+    assert(guarded == clean, s"null-sig rows changed the result: " +
+      s"clean=${clean.size} dirty=${guarded.size}")
+    assert(!guarded.exists(_._3 == 999999L))
+  }
+
+  test("probeSignIndex refuses a probe batch past its bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-probebound").toString
+    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
+      k = 8, m = 4, kSub = 8, storeSigs = true)
+    val idx = VectorIndex.readAnnIndex(spark, dir)
+    val probes = spark.range(VectorIndex.ProbeRouteOnDriverMax + 1L)
+      .select(col("id").as("vec_id"), array(lit(0.5f)).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx)
+    }
+    assert(e.getMessage.contains(s"more than ${VectorIndex.ProbeRouteOnDriverMax} probes"),
+      e.getMessage)
   }
 
   private def collectFileScans(plan: org.apache.spark.sql.execution.SparkPlan)

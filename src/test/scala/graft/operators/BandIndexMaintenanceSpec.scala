@@ -105,27 +105,6 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
       s"day-3 probe read $dirsRead of ${after.size} compacted buckets")
   }
 
-  test("probeBandIndex(broadcastBatch = false) returns identical candidates") {
-    // the backfill posture: no batch broadcast hint, AQE sizes the
-    // join — results must be the hinted probe's exactly (only the
-    // physical join strategy and the DPP opportunity differ)
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-nohint").toString
-    Dedup.writeBandIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", dir)
-    val batch = docs.filter(col("doc_id") % 5 === 0)
-    val index = Dedup.readBandIndex(spark, dir)
-    val hinted = Dedup.probeBandIndex(batch, "doc_id", "text", index)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val unhinted = Dedup.probeBandIndex(batch, "doc_id", "text", index,
-      broadcastBatch = false)
-    val got = unhinted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == hinted && got.nonEmpty)
-    // and the hint is really gone: no broadcast of the banded batch
-    // FORCED by the plan (AQE may still pick one on size — assert the
-    // logical plan carries no ResolvedHint)
-    assert(!unhinted.queryExecution.optimizedPlan.toString.contains("ResolvedHint"),
-      "broadcastBatch=false must not leave a broadcast hint in the plan")
-  }
-
   test("streaming keeper micro-batches append through the same routed sink") {
     val dir = java.nio.file.Files.createTempDirectory("graft-band-stream").toString
     Dedup.writeBandIndex(docs, "doc_id", "text", dir)

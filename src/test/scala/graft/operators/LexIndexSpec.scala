@@ -32,17 +32,14 @@ class LexIndexSpec extends SparkTestBase {
     }
   }
 
-  test("stored probe == corpus-rescan BM25, both routing paths") {
+  test("stored probe == corpus-rescan BM25") {
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val rescan = keyed(Similarity.bm25TopK(docs, queries))
     val idx = LexIndex.readLexIndex(spark, indexPath)
     val driverRouted = keyed(LexIndex.probeLexIndex(queries, idx))
-    val joinRouted = keyed(LexIndex.probeLexIndex(queries, idx, routeOnDriver = false))
     assert(driverRouted == rescan && rescan.nonEmpty,
       s"driver-routed probe != rescan (${driverRouted.size} vs ${rescan.size})")
-    assert(joinRouted == rescan,
-      s"join-routed probe != rescan (${joinRouted.size} vs ${rescan.size})")
   }
 
   test("a probe reads only its query-term bucket partitions of postings AND terms") {
@@ -234,7 +231,6 @@ class LexIndexSpec extends SparkTestBase {
     val idx = LexIndex.readLexIndex(spark, indexPath)
     val ghost = Seq((1, "zzznotaword"), (1, "alsonotaword")).toDF("q_id", "term")
     assert(LexIndex.probeLexIndex(ghost, idx).isEmpty)
-    assert(LexIndex.probeLexIndex(ghost, idx, routeOnDriver = false).isEmpty)
     // an empty corpus would publish an epoch whose zero-row hive
     // stores carry no schema (unreadable at the first probe) and
     // whose avgdl is 0/0 — the writer must refuse, not half-publish

@@ -116,6 +116,11 @@ class OpsSpec extends SparkTestBase {
     // set size rides its posting rows instead of a count joined back
     assert(perDoc.nonEmpty && perDoc.forall(_.isInstanceOf[CollectSet]),
       s"aggregates grouped on _id alone: $perDoc\n${df.queryExecution.optimizedPlan}")
+    // tokens are distinct by contract: the executed plan applies the
+    // caller's array_distinct once, never a second one over it
+    val executed = df.queryExecution.executedPlan.toString
+    assert(executed.contains("array_distinct(filter(split(") &&
+      !executed.contains("array_distinct(array_distinct("), executed)
     spark.catalog.clearCache()
   }
 

@@ -5,14 +5,12 @@ import graft.tables.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-13 guard fixes from the round-12 advice: column-collision
-  * require on tokenizeWindows and null-sig exclusion in the binary
-  * probe shortlist.
+  * require on tokenizeWindows.
   */
 class Round13Spec extends SparkTestBase {
   import spark.implicits._
 
   private def docs = Tables.load(spark, sfDir, "documents")
-  private def emb = Tables.load(spark, sfDir, "embeddings")
 
   test("tokenizeWindows refuses inputs whose columns collide with outputs/temps") {
     Seq("window_id", "n_real", "ids", "_ids", "_cw").foreach { c =>
@@ -24,46 +22,6 @@ class Round13Spec extends SparkTestBase {
     }
     // and a clean frame still works
     assert(TextAnalysis.tokenizeWindows(docs.limit(5), 64).count() > 0)
-  }
-
-  test("probeSignIndex: a malformed (null-sig) sidecar row cannot crowd the shortlist") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nullsig").toString
-    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
-      k = 8, m = 4, kSub = 8, storeSigs = true)
-    val idx = VectorIndex.readAnnIndex(spark, dir)
-    val probes = emb.orderBy($"vec_id").limit(5)
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    val clean = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx,
-      nprobe = 8, hammingTopM = 10, topK = 3))
-    // corrupt the handle: one null-sig row in EVERY cell (SignPack60's
-    // output for a sub-60-dim vector). Ascending Hamming order sorts
-    // nulls first, so without the guard these rows would occupy the
-    // top-M shortlist ahead of every real candidate.
-    val cells = idx.sigs.get.select($"cell").distinct()
-    val badRows = cells.withColumn("n_id", lit(999999L))
-      .withColumn("sig", lit(null).cast("long"))
-      .select($"cell", $"n_id", $"sig")
-    val dirty = idx.copy(sigs = Some(idx.sigs.get.unionByName(badRows)))
-    val guarded = keyed(VectorIndex.probeSignIndex(probes, "vec_id", "embedding", dirty,
-      nprobe = 8, hammingTopM = 10, topK = 3))
-    assert(guarded == clean, s"null-sig rows changed the result: " +
-      s"clean=${clean.size} dirty=${guarded.size}")
-    assert(!guarded.exists(_._3 == 999999L))
-  }
-
-  test("probeSignIndex(routeOnDriver = true) refuses a probe batch past its bound") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-probebound").toString
-    VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
-      k = 8, m = 4, kSub = 8, storeSigs = true)
-    val idx = VectorIndex.readAnnIndex(spark, dir)
-    val probes = spark.range(VectorIndex.ProbeRouteOnDriverMax + 1L)
-      .select($"id".as("vec_id"), array(lit(0.5f)).as("embedding"))
-    val e = intercept[IllegalArgumentException] {
-      VectorIndex.probeSignIndex(probes, "vec_id", "embedding", idx)
-    }
-    assert(e.getMessage.contains(s"more than ${VectorIndex.ProbeRouteOnDriverMax} probes"),
-      e.getMessage)
   }
 
   test("t28 contains t27: every duplicated full window lies inside a repeated-interval") {

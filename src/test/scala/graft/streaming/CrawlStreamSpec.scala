@@ -128,27 +128,6 @@ class CrawlStreamSpec extends SparkTestBase {
       s"near-dup candidates are not band-keyed:\n${plan.take(600)}")
   }
 
-  test("backfill path (batchBounded=false): rows identical, no forced broadcast in the plan") {
-    val archive =
-      httpRec("https://a.example.org/x", "b1", words("alpha")) ++
-      httpRec("https://b.example.org/y", "b2", words("alpha")) ++ // exact copy
-      httpRec("https://c.example.org/z", "b3", words("gamma"))
-    val records = Seq(("f.warc", archive)).toDF("path", "content")
-    val recs = graft.sources.Warc.records(records).toDF()
-    val micro = CrawlIngest.crawlDocs(recs)
-    val backfill = CrawlIngest.crawlDocs(recs, batchBounded = false)
-    val m = micro.orderBy($"url").collect().map(_.toSeq).toSeq
-    val bf = backfill.orderBy($"url").collect().map(_.toSeq).toSeq
-    assert(m == bf, "micro-batch and backfill paths disagree on rows")
-    // the O41 rule: the backfill's corpus-scaled keeper/drop sets
-    // must NOT carry a forced broadcast hint (AQE sizes them); the
-    // micro-batch path keeps the explicit hint
-    assert(!backfill.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "backfill path still forces a broadcast")
-    assert(micro.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "micro-batch path lost its broadcast hint")
-  }
-
   test("recency is WARC-Date, not archive naming: crawl-9 vs crawl-10") {
     // lexicographically 'crawl-9.warc' > 'crawl-10.warc' — a
     // path-ordered 'latest' would keep the STALE capture
