@@ -56,6 +56,32 @@ class AnnIndexSpec extends SparkTestBase {
       s"one probe read $dirsRead of $totalCells cell partitions (nprobe=2)")
   }
 
+  test("a probe batch reads only its probes' routed cell partitions and equals the in-query rows") {
+    // the driver routing collects the DISTINCT cells of the whole
+    // batch: every probe's nprobe cells are read (row equality with
+    // the in-query pipeline), and nothing beyond probes x nprobe
+    val totalCells =
+      new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
+        .count(f => f.isDirectory && f.getName.startsWith("cell="))
+    val batchDir = java.nio.file.Files.createTempDirectory("graft-ann-batch").toString
+    emb.orderBy(col("vec_id")).limit(2).write.mode("overwrite").parquet(batchDir)
+    val batch = spark.read.parquet(batchDir)
+    val probed = VectorIndex.probeAnnIndex(batch, "vec_id", "embedding",
+      VectorIndex.readAnnIndex(spark, indexPath))
+    val got = probed.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    val inQuery = VectorIndex.ivfPqTrained(emb, "vec_id", "embedding",
+      batch, "vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got == inQuery && got.map(_._1).size == 2)
+    val scans = collectFileScans(probed.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains("lists")))
+    assert(scans.nonEmpty, "no lists scan in the batch probe plan")
+    val dirsRead = scans.map(_.metrics.get("numPartitions").map(_.value).getOrElse(0L)).max
+    assert(dirsRead >= 2 && dirsRead <= 4 && dirsRead < totalCells,
+      s"two probes read $dirsRead of $totalCells cell partitions (nprobe=2)")
+  }
+
   test("recall floor: refined probe at the named operating point reaches recall@5 >= 0.6") {
     // The PINNED operating point (docs/SCALING.md §ANN): k=16 cells,
     // nprobe=4, m=4, kSub=8 codes, refine=100 exact re-rank. Measured

@@ -105,6 +105,28 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
       s"day-3 probe read $dirsRead of ${after.size} compacted buckets")
   }
 
+  test("probeBandIndex broadcasts the banded batch even with size-based broadcasting off") {
+    // the batch hint is unconditional: a session that never broadcasts
+    // on size still joins the day-2 batch to the index by broadcast
+    // (which is what the DPP subquery reuses), with the same
+    // candidates as the default session
+    val dir = java.nio.file.Files.createTempDirectory("graft-band-hint").toString
+    Dedup.writeBandIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", dir)
+    val expected = Dedup.probeBandIndex(docs.filter(col("doc_id") % 5 === 0),
+      "doc_id", "text", Dedup.readBandIndex(spark, dir))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val noSize = graft.SparkTestBase.isolatedSession
+    noSize.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val batch = Tables.load(noSize, sfDir, "documents").select("doc_id", "text")
+      .filter(col("doc_id") % 5 === 0)
+    val probed = Dedup.probeBandIndex(batch, "doc_id", "text", Dedup.readBandIndex(noSize, dir))
+    val got = probed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == expected && got.nonEmpty)
+    val plan = probed.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+      s"the banded batch is not broadcast:\n${plan.take(800)}")
+  }
+
   test("streaming keeper micro-batches append through the same routed sink") {
     val dir = java.nio.file.Files.createTempDirectory("graft-band-stream").toString
     Dedup.writeBandIndex(docs, "doc_id", "text", dir)

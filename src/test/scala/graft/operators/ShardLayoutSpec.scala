@@ -264,6 +264,44 @@ class ShardLayoutSpec extends SparkTestBase {
     assert(e.getMessage.contains("manifest"))
   }
 
+  test("O45 applyChangelog merges against the broadcast batch key set, whatever the size settings") {
+    // the key-set hint is unconditional: with size-based broadcasting
+    // off, the stored rows still meet the batch's keys through
+    // broadcast anti and semi joins — the table is never shuffled
+    import org.apache.spark.sql.Row
+    val noSize = graft.SparkTestBase.isolatedSession
+    noSize.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import noSize.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("o45-bcast").toString
+    def batch(rows: (Long, Long, String, Boolean)*) =
+      rows.toDF("k", "v", "payload", "is_tombstone")
+    ShardLayout.applyChangelog(noSize, dir,
+      batch((1L, 1L, "a", false), (2L, 1L, "b", false), (3L, 1L, "c", false)), Seq("k"), Seq("v"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    noSize.listenerManager.register(listener)
+    try {
+      ShardLayout.applyChangelog(noSize, dir,
+        batch((2L, 2L, "b2", false), (3L, 2L, "c", true)), Seq("k"), Seq("v"))
+      org.apache.spark.graftbridge.SparkCoreBridge.flushListenerBus(noSize.sparkContext)
+    } finally noSize.listenerManager.unregister(listener)
+    assert(ShardLayout.readMerged(noSize, dir).orderBy($"k")
+      .select($"k", $"payload").collect().toSeq == Seq(Row(1L, "a"), Row(2L, "b2")))
+    val merge = plans.toArray.map(_.toString).filter(p => p.contains("LeftAnti"))
+    assert(merge.nonEmpty, s"no merge plan captured:\n${plans.toArray.mkString("\n---\n")}")
+    merge.foreach { plan =>
+      assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2 && plan.contains("LeftSemi") &&
+        !plan.contains("SortMergeJoin"),
+        s"the merge does not broadcast the batch key set:\n${plan.take(1500)}")
+    }
+  }
+
   test("O45 via the routed sink: ST15 update stream applied == q65-shaped batch compaction") {
     val ev = Tables.load(spark, sfDir, "events")
     val dir = java.nio.file.Files.createTempDirectory("o45-st15").toString
