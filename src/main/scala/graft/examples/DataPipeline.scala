@@ -91,7 +91,7 @@ object DataPipeline {
     val canonical = wkf
       .provide("docs.canonical") { ctx =>
         val in = ctx.as[DataFrame]("in")
-        val pairs = Dedup.ngramJaccardAtScale(in, 0.4, 1000)
+        val pairs = Dedup.ngramJaccardAtScale(in, 0.4, Some(1000))
           .select(col("id_a"), col("id_b"))
         val labels = Clustering.connectedComponents(pairs, "id_a", "id_b",
           idOut = "doc_id", labelOut = "cluster_id")

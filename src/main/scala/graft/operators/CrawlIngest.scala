@@ -152,18 +152,10 @@ object CrawlIngest {
           graft.functions.GraftExpressions.wordShingles(col("text"), 3, distinct = true)
             .as("sh"))
           .where(size(col("sh")) > 0)
-        val bands = Dedup.bandKeysFromShingles(sh, "url", "sh")
-        val cand = bands.select(col("url").as("id_a"), col("band"), col("bh"))
-          .join(bands.select(col("url").as("id_b"), col("band"), col("bh")),
-            Seq("band", "bh"))
-          .where(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b")).distinct()
-        val drops = cand
-          .join(sh.select(col("url").as("id_a"), col("sh").as("_ta")), "id_a")
-          .join(sh.select(col("url").as("id_b"), col("sh").as("_tb")), "id_b")
-          .withColumn("_c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
-          .where(col("_c").cast("double") /
-            (size(col("_ta")) + size(col("_tb")) - col("_c")) >= th)
+        val cand = Dedup.bandPairs(Dedup.bandKeysFromShingles(sh, "url", "sh"), "url")
+          .distinct()
+        val drops = Dedup.pairJaccard(cand, sh, "url", "sh")
+          .where(col("jaccard") >= th)
           .select(col("id_b").as("url")).distinct()
         exactKept.join(broadcast(drops), Seq("url"), "left_anti")
     }

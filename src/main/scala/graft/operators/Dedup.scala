@@ -167,33 +167,32 @@ object Dedup {
     verdict
   }
 
-  /** The 100 TB configuration of the n-gram Jaccard dedup (d04): the
-    * identical pipeline with a hot-shingle cap on candidate GENERATION
-    * via Ops.jaccardPairs — a boilerplate shingle shared by k docs
+  /** The n-gram Jaccard dedup: exact word-3-gram Jaccard pairs via
+    * [[Ops.jaccardPairs]]. The canned d04 (and d06/d08/d12's pairs)
+    * is this with `maxPostingsPerToken = None`: at sf0.01 the hottest
+    * shingle reaches ~25 docs and exactness is the point of the oracle.
+    * The default is the 100 TB configuration, a hot-shingle cap on
+    * candidate GENERATION — a boilerplate shingle shared by k docs
     * emits k² candidate rows uncapped, so at corpus scale the cap
     * bounds the posting self-join. Jaccard values for surviving pairs
     * stay exact (the verify adds the hot shingles both docs hold);
     * pairs whose ONLY shared shingles are boilerplate are dropped — a
     * recall trade-off, never a value error (DedupScaleSpec pins both).
-    * The canned oracle-gated d04 stays uncapped: at sf0.01 the hottest
-    * shingle reaches ~25 docs and exactness is the point of the oracle.
-    * Caching note: the capped path caches intermediates — see
+    * Caching note: the posting list is cached — see
     * [[Ops.jaccardPairs]] (clearCache() between repeated invocations).
     */
   def ngramJaccardAtScale(
       docs: DataFrame,
       threshold: Double = 0.4,
-      maxPostingsPerToken: Int = 1000
+      maxPostingsPerToken: Option[Int] = Some(1000)
   ): DataFrame =
-    Ops.jaccardPairs(shingleArrays(docs), "doc_id", "sh", threshold, Some(maxPostingsPerToken))
+    Ops.jaccardPairs(shingleArrays(docs), "doc_id", "sh", threshold, maxPostingsPerToken)
 
-  /** d15's scale path: ordered containment pairs with d04's
-    * hot-shingle cap on candidate generation ([[Ops.containmentPairs]]).
-    * maxPostingsPerToken = None returns the same pair SET with the
-    * same exact counts as the canned d15 query (Round7bOpsSpec pins
-    * row/count identity) — but the `containment` column here is
-    * unrounded and the frame unordered, where d15 rounds to 6 dp and
-    * sorts for its oracle.
+  /** Ordered containment pairs ([[Ops.containmentPairs]]) with an
+    * optional hot-shingle cap on candidate generation, as in
+    * [[ngramJaccardAtScale]]. The canned d15 is this uncapped, with
+    * `containment` rounded to 6 dp and the rows sorted for its oracle
+    * (DedupScaleSpec pins row/count identity).
     */
   def containmentAtScale(
       docs: DataFrame,
@@ -394,13 +393,40 @@ object Dedup {
     * shuffle (no per-doc min aggregation), and the codegen pass
     * instead of 16 interpreted HOF traversals.
     */
-  private[graft] def minhashCandidates(sh: DataFrame): DataFrame = {
-    val bands = bandKeysFromShingles(sh, "doc_id", "sh")
-    val la = bands.select(col("doc_id").as("id_a"), col("band"), col("bh"))
-    val lb = bands.select(col("doc_id").as("id_b"), col("band"), col("bh"))
+  private[graft] def minhashCandidates(sh: DataFrame): DataFrame =
+    bandPairs(bandKeysFromShingles(sh, "doc_id", "sh"), "doc_id")
+
+  /** The banded equi-join: one (id_a, id_b) row with id_a < id_b per
+    * shared (band, bh) bucket of a band-key frame (`idCol`, band, bh).
+    * A pair that collides in several bands repeats (at most once per
+    * band); consumers dedupe.
+    */
+  private[graft] def bandPairs(bands: DataFrame, idCol: String): DataFrame = {
+    val la = bands.select(col(idCol).as("id_a"), col("band"), col("bh"))
+    val lb = bands.select(col(idCol).as("id_b"), col("band"), col("bh"))
     la.join(lb, Seq("band", "bh")).where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
   }
+
+  /** The pairwise exact-Jaccard verify: joins each side's set from
+    * `sets` (`idCol`, `setCol` — one row per id, distinct elements)
+    * onto (id_a, id_b) `pairs` and adds the unrounded `jaccard`
+    * (|A∩B| via `size(array_intersect)`). Work per pair is linear in
+    * the two sets and no posting list exists, so a hot element costs
+    * nothing extra. Other columns of `pairs` pass through, and none
+    * may be named `_ta`, `_tb` or `c`: the verify works in those and
+    * drops them. m08 keeps its own verify because its joins also
+    * carry each side's container format.
+    */
+  private[graft] def pairJaccard(
+      pairs: DataFrame, sets: DataFrame, idCol: String, setCol: String): DataFrame =
+    pairs
+      .join(sets.select(col(idCol).as("id_a"), col(setCol).as("_ta")), "id_a")
+      .join(sets.select(col(idCol).as("id_b"), col(setCol).as("_tb")), "id_b")
+      .withColumn("c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
+      .withColumn("jaccard",
+        col("c").cast("double") / (size(col("_ta")) + size(col("_tb")) - col("c")))
+      .drop("_ta", "_tb", "c")
 
   /** The 100 TB configuration of the minhash-LSH dedup (d02): LSH
     * banding for candidates, then exact Jaccard verified PAIRWISE via
@@ -416,13 +442,7 @@ object Dedup {
     */
   def minhashLshAtScale(docs: DataFrame, threshold: Double = 0.4): DataFrame = {
     val sh = shingleArrays(docs).cache()
-    val cands = minhashCandidates(sh).distinct()
-    cands
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("_ta")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("_tb")), "id_b")
-      .withColumn("c", size(array_intersect(col("_ta"), col("_tb"))).cast("long"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("_ta")) + size(col("_tb")) - col("c")))
+    pairJaccard(minhashCandidates(sh).distinct(), sh, "doc_id", "sh")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -464,16 +484,16 @@ object Dedup {
         bandsAll.withColumn("_rn", row_number().over(w))
           .where(col("_rn") <= maxBucket).drop("_rn")
       }
-    val la = bands.select(col("doc_id").as("id_a"), col("band"), col("bh"))
-    val lb = bands.select(col("doc_id").as("id_b"), col("band"), col("bh"))
-    val cands = la.join(lb, Seq("band", "bh")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
+    val cands = bandPairs(bands, "doc_id").distinct()
     val norm = docs
       .select(col("doc_id"), trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("norm"))
     cands
       .join(norm.select(col("doc_id").as("id_a"), col("norm").as("_na")), "id_a")
       .join(norm.select(col("doc_id").as("id_b"), col("norm").as("_nb")), "id_b")
-      // equal-string fast path — see the canned d14 note
+      // equal-string fast path: byte-identical pairs (the DOMINANT
+      // case in a high-dup corpus) resolve with an O(n) compare
+      // instead of the O(n²) DP — measured 546 s -> 97 s on the 10x
+      // replicated corpus, values unchanged
       .withColumn("edit_dist",
         when(col("_na") === col("_nb"), lit(0L))
           .otherwise(
@@ -661,29 +681,14 @@ object Dedup {
       "Exact word-3-gram Jaccard >= 0.4 via shared-shingle candidates",
       (spark, dir) => {
         import spark.implicits._
-        // Shingles are DISTINCT per doc, so the posting-list self-join
-        // counts |A ∩ B| directly: one count(*) per pair, no array
-        // payloads through the shuffle and no array_intersect. Sizes
-        // come from the array lengths — no extra groupBy. The only
-        // shuffles are the join on (s) and the pair-count aggregation.
-        // (At 100 TB, substitute xxhash64(s) as the join key to
-        // shrink the shuffle — kept as the exact string here where
-        // the measured difference is noise and exactness is the
-        // oracle's point.)
-        val sh = shingleArrays(spark, dir).cache()
-        val posting = sh.select($"doc_id", explode($"sh").as("s"))
-        val sizes = sh.select($"doc_id", size($"sh").cast("long").as("n"))
-        val inter = posting.select($"doc_id".as("id_a"), $"s")
-          .join(posting.select($"doc_id".as("id_b"), $"s"), Seq("s"))
-          .where($"id_a" < $"id_b")
-          .groupBy($"id_a", $"id_b")
-          .agg(count(lit(1)).as("c"))
-        inter
-          .join(sizes.select($"doc_id".as("id_a"), $"n".as("na")), "id_a")
-          .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
-          .withColumn("jac", $"c".cast("double") / ($"na" + $"nb" - $"c"))
-          .filter($"jac" >= 0.4)
-          .select($"id_a", $"id_b", round($"jac", 6).as("jaccard"))
+        // The uncapped scale operator: shingles are DISTINCT per doc,
+        // so the posting-list self-join counts |A ∩ B| directly — one
+        // count(*) per pair, no array payloads through the shuffle.
+        // (At 100 TB, substitute xxhash64 as the join key to shrink
+        // the shuffle — kept as the exact string here, where
+        // exactness is the oracle's point.)
+        ngramJaccardAtScale(Tables.load(spark, dir, "documents"), 0.4, None)
+          .select($"id_a", $"id_b", round($"jaccard", 6).as("jaccard"))
           .orderBy($"id_a", $"id_b")
       },
       Some("""WITH w AS (
@@ -967,8 +972,7 @@ object Dedup {
         // verify for both sides (the round-2 d02 lesson — the naive
         // form recomputed the shingle pass four times and cost 3.1s
         // at sf0.1; this shape runs in ~1s).
-        val sh = shingleArrays(spark, dir)
-          .withColumn("b", flagB($"doc_id")).cache()
+        val sh = shingleArrays(spark, dir).cache()
         // bands cached too: its 16 md5 minhash transforms are d11's
         // dominant cost and both split branches scan the same relation
         val bands = bandKeysFromShingles(sh, "doc_id", "sh")
@@ -984,15 +988,10 @@ object Dedup {
         // the broadcast→shuffle fallback; a hard hint would have
         // forced the build past executor memory instead.
         val cands = newBands.join(idxBands, Seq("band", "bh"))
-          .select($"new_id", $"idx_id").distinct()
-        val shN = sh.where($"b" === 0L).select($"doc_id".as("new_id"), $"sh".as("_sa"))
-        val shI = sh.where($"b" =!= 0L).select($"doc_id".as("idx_id"), $"sh".as("_sb"))
-        cands.join(shN, "new_id").join(shI, "idx_id")
-          .withColumn("c", size(array_intersect($"_sa", $"_sb")).cast("long"))
-          .withColumn("jaccard",
-            $"c".cast("double") / (size($"_sa") + size($"_sb") - $"c"))
+          .select($"new_id".as("id_a"), $"idx_id".as("id_b")).distinct()
+        pairJaccard(cands, sh, "doc_id", "sh")
           .filter($"jaccard" >= 0.4)
-          .select($"new_id", $"idx_id", round($"jaccard", 6).as("jaccard"))
+          .select($"id_a".as("new_id"), $"id_b".as("idx_id"), round($"jaccard", 6).as("jaccard"))
           .orderBy($"new_id", $"idx_id")
       },
       Some {
@@ -1052,17 +1051,12 @@ object Dedup {
         val sh = shingleArrays(spark, dir).cache()
         val mh = sh.select($"doc_id",
           graft.functions.GraftExpressions.minHashHex($"sh", numPerms).as("mh"))
-        val cands = minhashCandidates(sh).distinct()
-        cands
+        val scored = minhashCandidates(sh).distinct()
           .join(mh.select($"doc_id".as("id_a"), $"mh".as("ma")), "id_a")
           .join(mh.select($"doc_id".as("id_b"), $"mh".as("mb")), "id_b")
           .withColumn("n_match",
             expr("size(filter(zip_with(ma, mb, (x, y) -> x = y), v -> v))").cast("int"))
-          .join(sh.select($"doc_id".as("id_a"), $"sh".as("_sa")), "id_a")
-          .join(sh.select($"doc_id".as("id_b"), $"sh".as("_sb")), "id_b")
-          .withColumn("c", size(array_intersect($"_sa", $"_sb")).cast("long"))
-          .withColumn("jaccard",
-            $"c".cast("double") / (size($"_sa") + size($"_sb") - $"c"))
+        pairJaccard(scored, sh, "doc_id", "sh")
           .withColumn("est_jaccard", $"n_match".cast("double") / numPerms)
           .select($"id_a", $"id_b", $"n_match",
             round($"est_jaccard", 6).as("est_jaccard"),
@@ -1167,27 +1161,9 @@ object Dedup {
         // shuffles on (band, bh) exactly like d02 and the verify is
         // per-pair map work — for unbounded docs cap the compared
         // length (levenshtein cost is len_a*len_b per pair); corpus
-        // docs here are <= ~600 chars so full norm is compared.
-        val sh = shingleArrays(spark, dir).cache()
-        val cands = minhashCandidates(sh).distinct()
-        val norm = Tables.load(spark, dir, "documents")
-          .select($"doc_id", trim(regexp_replace(lower($"text"), "\\s+", " ")).as("norm"))
-        cands
-          .join(norm.select($"doc_id".as("id_a"), $"norm".as("_na")), "id_a")
-          .join(norm.select($"doc_id".as("id_b"), $"norm".as("_nb")), "id_b")
-          // equal-string fast path: byte-identical pairs (the DOMINANT
-          // case in a high-dup corpus) resolve with an O(n) compare
-          // instead of the O(n²) DP — measured 546 s -> 97 s on the
-          // 10x replicated corpus, values unchanged
-          .withColumn("edit_dist",
-            when($"_na" === $"_nb", lit(0L))
-              .otherwise(levenshtein($"_na", $"_nb").cast("long")))
-          .withColumn("max_len", greatest(length($"_na"), length($"_nb")).cast("long"))
-          .where($"max_len" > 0)
-          .withColumn("_rel", $"edit_dist".cast("double") / $"max_len")
-          .where($"_rel" <= 0.4)
-          .select($"id_a", $"id_b", $"edit_dist", $"max_len",
-            round($"_rel", 6).as("rel_dist"))
+        // docs here are <= ~600 chars so full norm is compared. The
+        // canned query IS the uncapped scale operator.
+        fuzzyEditAtScale(Tables.load(spark, dir, "documents"))
           .orderBy($"id_a", $"id_b")
       },
       Some {
@@ -1218,24 +1194,14 @@ object Dedup {
         // reply) has low Jaccard but containment ≈ 1, and training
         // corpora want the WRAPPED copy flagged, not kept as "novel".
         // Ordered pairs: (id_a contained-in id_b). Same posting-list
-        // shape as d04 — the shared-shingle count IS |A∩B|, divided by
+        // core as d04 — the shared-shingle count IS |A∩B|, divided by
         // |A| instead of the union; one shingle-keyed join + one pair
-        // agg, no array payloads through the shuffle. At 100 TB the
-        // hot-shingle cap (Ops.jaccardPairs maxPosting) bounds the
-        // posting fanout identically to d04's scale path.
-        val sh = shingleArrays(spark, dir).cache()
-        val posting = sh.select($"doc_id", explode($"sh").as("s"))
-        val sizes = sh.select($"doc_id", size($"sh").cast("long").as("n"))
-        posting.select($"doc_id".as("id_a"), $"s")
-          .join(posting.select($"doc_id".as("id_b"), $"s"), Seq("s"))
-          .where($"id_a" =!= $"id_b")
-          .groupBy($"id_a", $"id_b")
-          .agg(count(lit(1)).as("c"))
-          .join(sizes.select($"doc_id".as("id_a"), $"n".as("na")), "id_a")
-          .withColumn("_cont", $"c".cast("double") / $"na")
-          .where($"_cont" >= 0.8)
-          .select($"id_a", $"id_b", $"c".as("n_shared"), $"na".as("n_a"),
-            round($"_cont", 6).as("containment"))
+        // agg, no array payloads through the shuffle. At 100 TB
+        // containmentAtScale's hot-shingle cap (maxPostingsPerToken)
+        // bounds the posting fanout as it does for d04.
+        containmentAtScale(Tables.load(spark, dir, "documents"), 0.8)
+          .select($"id_a", $"id_b", $"n_shared", $"n_a",
+            round($"containment", 6).as("containment"))
           .orderBy($"id_a", $"id_b")
       },
       Some("""WITH w AS (
@@ -1624,16 +1590,7 @@ object Dedup {
     */
   private def clusterQuery(spark: SparkSession, dir: String, star: Boolean): DataFrame = {
     import spark.implicits._
-    val sh = shingleArrays(spark, dir).cache()
-    val posting = sh.select($"doc_id", explode($"sh").as("s"))
-    val sizes = sh.select($"doc_id", size($"sh").cast("long").as("n"))
-    val pairs = posting.select($"doc_id".as("id_a"), $"s")
-      .join(posting.select($"doc_id".as("id_b"), $"s"), Seq("s"))
-      .where($"id_a" < $"id_b")
-      .groupBy($"id_a", $"id_b").agg(count(lit(1)).as("c"))
-      .join(sizes.select($"doc_id".as("id_a"), $"n".as("na")), "id_a")
-      .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
-      .where($"c".cast("double") / ($"na" + $"nb" - $"c") >= 0.4)
+    val pairs = ngramJaccardAtScale(Tables.load(spark, dir, "documents"), 0.4, None)
       .select($"id_a", $"id_b")
     val labels =
       if (star) Clustering.connectedComponentsStar(pairs, "id_a", "id_b",

@@ -192,11 +192,12 @@ object Ops {
     * `maxPostingsPerToken` caps candidate generation; the values of
     * surviving pairs are exact either way.
     *
-    * Caching: the capped path caches the posting list for its three
-    * consumers and cannot unpersist it before the caller's terminal
-    * action — call `spark.catalog.clearCache()` (or unpersist via the
-    * storage UI) after consuming the result if you invoke this
-    * repeatedly in one session. Bench/Verify do exactly that.
+    * Caching: both paths cache the posting list (see [[overlapCounts]])
+    * and cannot unpersist it before the caller's terminal action —
+    * call `spark.catalog.clearCache()` after consuming the result if
+    * you invoke this repeatedly in one session. Bench/Verify do
+    * exactly that. Callers cache nothing themselves: d04, d06, d08
+    * and d12 run this uncapped over `Dedup.shingleArrays`.
     */
   def jaccardPairs(
       df: DataFrame,
@@ -215,8 +216,9 @@ object Ops {
     * (excluded tokens are a recall trade only) and the same
     * one-row-per-id, distinct-tokens contract. Values of surviving
     * pairs are always EXACT; |A| is the `_na` the pair count carries.
-    * d15's canned query is the cap=None postings form of this (same
-    * pairs and counts; d15 additionally rounds + orders).
+    * Caches the posting list like [[jaccardPairs]]. d15's canned query
+    * is `Dedup.containmentAtScale` (this, uncapped) plus its rounding
+    * and order.
     */
   def containmentPairs(
       df: DataFrame,
@@ -258,6 +260,10 @@ object Ops {
     * arrays) ride the candidate joins. Pairs whose only shared tokens
     * are hot are missed — a recall trade-off, never a precision or
     * value error.
+    *
+    * Both paths cache the posting list: the uncapped self-join reads
+    * it twice (a broadcast self-join reuses no exchange), the capped
+    * path three times (df stats, anti-join, semi-join).
     */
   private def overlapCounts(
       df: DataFrame,
@@ -269,6 +275,7 @@ object Ops {
     val posting = df
       .select(col(idCol).as("_id"), size(col(tokensCol)).cast("long").as("_n"),
         explode(col(tokensCol)).as("_t"))
+      .cache()
 
     def pairCounts(src: DataFrame): DataFrame =
       src.select(col("_id").as("id_a"), col("_n").as("_na"), col("_t"))
@@ -280,11 +287,7 @@ object Ops {
     maxPostingsPerToken match {
       case None => pairCounts(posting)
       case Some(cap) =>
-        // the capped path consumes the posting list 3 times (df stats,
-        // anti-join, semi-join) — cache it rather than re-exploding
-        // the token arrays per consumer; `capped` feeds both self-join
-        // sides
-        posting.cache()
+        // `capped` feeds both self-join sides
         val hot = posting.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
           .filter(col("_df") > cap).select(col("_t"))
         val capped = posting.join(hot, Seq("_t"), "left_anti").cache()

@@ -1191,18 +1191,25 @@ object Similarity {
     * contents changed in between — restart the JVM (or key on a
     * content version) to re-index a mutated corpus.
     * Synchronized: Verify/Bench drive queries sequentially, but the
-    * memo must stay correct under any caller.
+    * memo must stay correct under any caller. The trees live as long
+    * as the JVM: one shutdown hook, registered when the memo first
+    * fills, deletes every memoized tree at exit.
     */
   private val s15Memo = scala.collection.mutable.HashMap.empty[String, String]
   private def s15Indexes(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     s15Memo.synchronized {
-      s15Memo.getOrElseUpdate(dir, {
+      s15Memo.getOrElse(dir, {
         val tmp = java.nio.file.Files.createTempDirectory("graft-s15").toString
         LexIndex.writeLexIndex(Tables.load(spark, dir, "documents"), s"$tmp/lex")
         VectorIndex.writeAnnIndex(Tables.load(spark, dir, "embeddings"),
           "vec_id", "embedding", s"$tmp/ann",
           k = 16, m = 4, kSub = 8, storeSigs = true)
+        if (s15Memo.isEmpty) sys.addShutdownHook(s15Memo.synchronized {
+          s15Memo.values.foreach(t =>
+            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t)))
+        })
+        s15Memo(dir) = tmp
         tmp
       })
     }

@@ -53,13 +53,13 @@ object ScaleProbe {
       println("ngramJaccard UNCAPPED / 8-plane buckets: SKIPPED (mode=capped; " +
         "quadratic baselines measured at 10x in docs/SCALING.md)")
     else t(s"ngramJaccard UNCAPPED") {
-      graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, Int.MaxValue).count()
+      graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, None).count()
     }
     if (cheapOnly)
       println("pair-verify paths: SKIPPED (mode=cheap; spill exceeds single-box disk at this scale)")
     else {
       t(s"ngramJaccard cap=$cap") {
-        graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, cap).count()
+        graft.operators.Dedup.ngramJaccardAtScale(docs, 0.4, Some(cap)).count()
       }
       t(s"minhashLshAtScale (pairwise verify)") {
         graft.operators.Dedup.minhashLshAtScale(docs).count()

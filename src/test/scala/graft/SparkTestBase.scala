@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for Spark-backed suites (one per JVM).
@@ -15,10 +19,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * the conf under every concurrently running suite. Such suites
   * override `spark` with [[SparkTestBase.isolatedSession]]: same
   * SparkContext (no second scheduler/UI), own SQLConf.
+  *
+  * Scratch directories come from [[tempDir]], which the suite deletes
+  * with everything under them once its tests are done.
   */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under the JVM temp dir, deleted in `afterAll`. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 }
 
 object SparkTestBase {

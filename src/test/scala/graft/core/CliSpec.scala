@@ -163,7 +163,7 @@ class CliSpec extends SparkTestBase {
   test("index admin: tombstone + compact + pin + versions drive a real band layout") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cli-idx").toString
+    val dir = tempDir("graft-cli-idx").toString
     val docs = (0L until 40L).map(i =>
       (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"))
       .toDF("doc_id", "text")
@@ -202,14 +202,14 @@ class CliSpec extends SparkTestBase {
   }
 
   test("index versions lists an ANN index's one epoch at its root") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cli-ann").toString
+    val dir = tempDir("graft-cli-ann").toString
     graft.operators.VectorIndex.writeAnnIndex(graft.tables.Tables.load(spark, sfDir, "embeddings"),
       "vec_id", "embedding", dir)
     assert(cli("graft.GraftPipelines", "index", "versions", "-p", dir) == Seq("v00001  CURRENT"))
   }
 
   test("run with json config overrides route params") {
-    val cfg = java.nio.file.Files.createTempFile("graft-cfg", ".json")
+    val cfg = tempDir("graft-cfg").resolve("cfg.json")
     java.nio.file.Files.writeString(cfg,
       """{"query.{name}": {"dir": "/root/testdata/sf0.001"}}""")
     val out = cli("graft.GraftPipelines", "run", "-n", "default",
@@ -218,7 +218,7 @@ class CliSpec extends SparkTestBase {
   }
 
   test("run with toml config (reference ml-flow-params shape)") {
-    val cfg = java.nio.file.Files.createTempFile("graft-cfg", ".toml")
+    val cfg = tempDir("graft-cfg").resolve("cfg.toml")
     java.nio.file.Files.writeString(cfg,
       """# Override params for query route
         |[query.{name}]
@@ -230,7 +230,7 @@ class CliSpec extends SparkTestBase {
   }
 
   test("toml parser handles scalars and comments") {
-    val cfg = java.nio.file.Files.createTempFile("graft-toml", ".toml")
+    val cfg = tempDir("graft-toml").resolve("cfg.toml")
     java.nio.file.Files.writeString(cfg,
       """[dataset-first]
         |n_features = 5  # comment

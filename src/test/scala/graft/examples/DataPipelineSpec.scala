@@ -190,7 +190,7 @@ class DataPipelineSpec extends SparkTestBase {
   }
 
   test("the sinks cell fans the corpus out through three routed formats") {
-    val out = java.nio.file.Files.createTempDirectory("graft-fanout").toString
+    val out = tempDir("graft-fanout").toString
     wkf.run(s"docs.sinks.$out")
     val packed = spark.read.parquet(s"$out/packed")
     val stats = spark.read.option("header", "true").csv(s"$out/langstats")
@@ -207,7 +207,7 @@ class DataPipelineSpec extends SparkTestBase {
 
   test("the packed route runs end-to-end through the routed sink and round-trips") {
     val packed = wkf.run("docs.packed").asInstanceOf[DataFrame]
-    val out = java.nio.file.Files.createTempDirectory("graft-pipeline-out").toString
+    val out = tempDir("graft-pipeline-out").toString
     graft.sinks.RoutedSink.standard().write(s"parquet:$out/packed:by:lang", packed)
     val back = spark.read.parquet(s"$out/packed")
     assert(back.count() == packed.count() && packed.count() > 0)
@@ -223,7 +223,7 @@ class DataPipelineSpec extends SparkTestBase {
   // ------------------------------------------------- round-12 cells
 
   test("the soft-dedup branch carries weight/split columns into the O40 shards") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-shards12").toString
+    val outDir = tempDir("graft-shards12").toString
     val shardDir = wkf.run(s"docs.shards.$outDir").asInstanceOf[String]
     val sf = graft.operators.ShardLayout.readShuffledShards(spark, shardDir)
     val cols = sf.columns.toSet
@@ -245,7 +245,7 @@ class DataPipelineSpec extends SparkTestBase {
   }
 
   test("the token-shard terminal carries curation columns on every fixed-length sample") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-tokshards12").toString
+    val outDir = tempDir("graft-tokshards12").toString
     val shardDir = wkf.run(s"docs.tokenshards.$outDir").asInstanceOf[String]
     val sf = graft.operators.ShardLayout.readShuffledShards(spark, shardDir)
     val cols = sf.columns.toSet
@@ -270,7 +270,7 @@ class DataPipelineSpec extends SparkTestBase {
   }
 
   test("the serving half: changelog -> merge -> readMerged; the pinned seed epoch survives the publish") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-serve13").toString
+    val outDir = tempDir("graft-serve13").toString
     // ONE workflow run resolves seed -> repair: epoch 1 = the seeded
     // corpus, epoch 2 = after the changelog (tombstoned recalls +
     // re-weighted de docs), both published through the routed S7
@@ -314,7 +314,7 @@ class DataPipelineSpec extends SparkTestBase {
   }
 
   test("the retrieval terminal: lexindex cell publishes O51, the search cell probes it") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-lex13").toString
+    val outDir = tempDir("graft-lex13").toString
     val hits = wkf.run(s"docs.search.hash+join+table.$outDir")
       .asInstanceOf[DataFrame].cache()
     assert(hits.count() > 0 && hits.count() <= 10)
@@ -378,7 +378,7 @@ class DataPipelineSpec extends SparkTestBase {
   }
 
   test("admission cells: verdict classes populate; takedown removes the victim's coverage") {
-    val out = java.nio.file.Files.createTempDirectory("graft-dp-admit").toString
+    val out = tempDir("graft-dp-admit").toString
     def verdicts() = wkf.run(s"docs.admit.$out")
       .asInstanceOf[org.apache.spark.sql.DataFrame]
       .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getString(4))).toMap

@@ -18,7 +18,7 @@ class AnnIndexSpec extends SparkTestBase {
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
 
   private lazy val indexPath = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-index").toString
+    val dir = tempDir("graft-ann-index").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
     dir
   }
@@ -41,7 +41,7 @@ class AnnIndexSpec extends SparkTestBase {
     assert(totalCells > 2, s"index should span several cells, got $totalCells")
     // parquet-backed single probe (a real Filter in its plan — the
     // BandIndexSpec DPP recipe)
-    val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-probe").toString
+    val oneDir = tempDir("graft-ann-probe").toString
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
@@ -63,7 +63,7 @@ class AnnIndexSpec extends SparkTestBase {
     val totalCells =
       new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
-    val batchDir = java.nio.file.Files.createTempDirectory("graft-ann-batch").toString
+    val batchDir = tempDir("graft-ann-batch").toString
     emb.orderBy(col("vec_id")).limit(2).write.mode("overwrite").parquet(batchDir)
     val batch = spark.read.parquet(batchDir)
     val probed = VectorIndex.probeAnnIndex(batch, "vec_id", "embedding",
@@ -90,7 +90,7 @@ class AnnIndexSpec extends SparkTestBase {
     // ADC-only (refine=0) plateaus at ~0.2-0.4 on this distance-
     // concentrated corpus for EVERY knob combination; the refine
     // stage is what buys production recall (FAISS IndexRefineFlat).
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-recall").toString
+    val dir = tempDir("graft-ann-recall").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val truth = Ops.cosineTopK(
@@ -131,7 +131,7 @@ class AnnIndexSpec extends SparkTestBase {
     val totalCells =
       new java.io.File(s"${IndexLayout.resolveDir(spark, indexPath)}/lists").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
-    val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-fprune").toString
+    val oneDir = tempDir("graft-ann-fprune").toString
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
@@ -156,7 +156,7 @@ class AnnIndexSpec extends SparkTestBase {
     // the serving predicate: only vectors with label % 3 == 0 are
     // eligible (~40% of the corpus). Exact reference = s09's
     // formulation: filter candidates FIRST, then top-k.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-filt").toString
+    val dir = tempDir("graft-ann-filt").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val allow = emb.where(col("label") % 3 === 0).select(col("vec_id"))
@@ -199,7 +199,7 @@ class AnnIndexSpec extends SparkTestBase {
     // index id count) and scales nprobe/refine unless overridden.
     // The pin: DEFAULT nprobe=2 with a ~10%-selective predicate,
     // no manual knob turning, still full-k results above the floor.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-auto").toString
+    val dir = tempDir("graft-ann-auto").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     val probes = emb.orderBy(col("vec_id")).limit(10)
     val allow = emb.where(col("label") % 10 === 1).select(col("vec_id"))
@@ -258,7 +258,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("appendAnnIndex: an append that a concurrent publish overtook raises") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-race").toString
+    val dir = tempDir("graft-ann-race").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
     // a rewrite publishing the index epoch WHILE the append writes
     val publishMidAppend = graft.EpochRace.publishMidAppend[Long](dir)
@@ -271,7 +271,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("a rewrite publishes quantizers and lists together; the retired epoch keeps its own pair") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-epochs").toString
+    val dir = tempDir("graft-ann-epochs").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 8)
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16)
     def pair(epoch: String): (Set[Long], Set[Long]) = (
@@ -294,8 +294,8 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("ST9: streaming probes against the stored index equal the batch probe") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ann-stream").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ann-out").toString
+    val srcDir = tempDir("graft-ann-stream").toString
+    val outDir = tempDir("graft-ann-out").toString
     val probes = emb.orderBy(col("vec_id")).limit(6).cache()
     probes.limit(3).write.parquet(s"$srcDir/f1")
     Thread.sleep(1100)
@@ -314,8 +314,8 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("ST9 filtered: the streaming serving path honors the allow-list and equals the filtered batch probe") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ann-fstream").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ann-fout").toString
+    val srcDir = tempDir("graft-ann-fstream").toString
+    val outDir = tempDir("graft-ann-fout").toString
     val probes = emb.orderBy(col("vec_id")).limit(6).cache()
     probes.limit(3).write.parquet(s"$srcDir/f1")
     Thread.sleep(1100)
@@ -339,11 +339,11 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("ST22: streaming binary filtered probes equal the batch O46 probe, allow-list honored") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sign-stream-idx").toString
+    val dir = tempDir("graft-sign-stream-idx").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-sign-stream").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sign-out").toString
+    val srcDir = tempDir("graft-sign-stream").toString
+    val outDir = tempDir("graft-sign-out").toString
     val probes = emb.orderBy(col("vec_id")).limit(6).cache()
     probes.limit(3).write.parquet(s"$srcDir/f1")
     Thread.sleep(1100)
@@ -369,8 +369,8 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("ST9 refine: the streaming serving path reaches the refined (exact-reranked) results") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ann-refstream").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ann-refout").toString
+    val srcDir = tempDir("graft-ann-refstream").toString
+    val outDir = tempDir("graft-ann-refout").toString
     val probes = emb.orderBy(col("vec_id")).limit(4).cache()
     probes.write.parquet(s"$srcDir/f1")
     val stream = spark.readStream.schema(probes.schema)
@@ -388,14 +388,14 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("ST10 + lifecycle: streamed appends, replay guard, tombstone, compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-life").toString
+    val dir = tempDir("graft-ann-life").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir)
     val twins = emb.orderBy(col("vec_id").desc).limit(2)
       .select((col("vec_id") + lit(900000L)).as("vec_id"), col("embedding")).cache()
 
     // streamed vector ingestion grows the stored index (ST9's write
     // half): two micro-batches through appendAnnIndexStream
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ann-ingest").toString
+    val srcDir = tempDir("graft-ann-ingest").toString
     twins.orderBy(col("vec_id")).limit(1).write.parquet(s"$srcDir/f1")
     Thread.sleep(1100)
     twins.orderBy(col("vec_id").desc).limit(1).write.parquet(s"$srcDir/f2")
@@ -514,7 +514,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("O46 binary filtered probe: in-query parity at nprobe=k and recall floors at selectivity 0.1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-sign").toString
+    val dir = tempDir("graft-ann-sign").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val idx = VectorIndex.readAnnIndex(spark, dir)
@@ -568,14 +568,14 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("O46 pruning: the binary probe reads only its nprobe cell partitions of sigs AND vectors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-sigprune").toString
+    val dir = tempDir("graft-ann-sigprune").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
     val totalCells =
       new java.io.File(s"${IndexLayout.resolveDir(spark, dir)}/sigs").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(totalCells > 2, s"sigs sidecar should span several cells, got $totalCells")
-    val oneDir = java.nio.file.Files.createTempDirectory("graft-ann-sigprobe").toString
+    val oneDir = tempDir("graft-ann-sigprobe").toString
     emb.orderBy(col("vec_id")).limit(1).write.mode("overwrite").parquet(oneDir)
     val oneId = spark.read.parquet(oneDir).head().getLong(0)
     val one = spark.read.parquet(oneDir).filter(col("vec_id") === oneId)
@@ -597,7 +597,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("O46 lifecycle: appended sigs are probe-visible, tombstones mask, compaction reclaims") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-sign-lc").toString
+    val dir = tempDir("graft-ann-sign-lc").toString
     val base = emb.where(col("vec_id") % 7 =!= 0)
     VectorIndex.writeAnnIndex(base, "vec_id", "embedding", dir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
@@ -625,7 +625,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("probeSignIndex: a malformed (null-sig) sidecar row cannot crowd the shortlist") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nullsig").toString
+    val dir = tempDir("graft-nullsig").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 8, m = 4, kSub = 8, storeSigs = true)
     val idx = VectorIndex.readAnnIndex(spark, dir)
@@ -651,7 +651,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("probeSignIndex refuses a probe batch past its bound") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-probebound").toString
+    val dir = tempDir("graft-probebound").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir,
       k = 8, m = 4, kSub = 8, storeSigs = true)
     val idx = VectorIndex.readAnnIndex(spark, dir)

@@ -29,7 +29,7 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
       "magenta chartreuse vermilion indigo cobalt saffron mauve sepia"
 
   test("appended day-2 keepers make day-3 near-dups detectable, index-only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-maint").toString
+    val dir = tempDir("graft-band-maint").toString
     Dedup.writeBandIndex(docs, "doc_id", "text", dir)
 
     // day-2: two new docs survive curation; their keys join the index
@@ -90,7 +90,7 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
     // DPP still prunes the compacted index: a parquet-backed one-doc
     // batch (a real Filter in its plan — the BandIndexSpec recipe)
     // touches at most 4 bands x 4 pfx buckets
-    val oneDir = java.nio.file.Files.createTempDirectory("graft-band-one").toString
+    val oneDir = tempDir("graft-band-one").toString
     day3.write.mode("overwrite").parquet(oneDir)
     val one = spark.read.parquet(oneDir).filter(col("doc_id") === 900003L)
     val probed = Dedup.probeBandIndex(one, "doc_id", "text",
@@ -110,7 +110,7 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
     // on size still joins the day-2 batch to the index by broadcast
     // (which is what the DPP subquery reuses), with the same
     // candidates as the default session
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-hint").toString
+    val dir = tempDir("graft-band-hint").toString
     Dedup.writeBandIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", dir)
     val expected = Dedup.probeBandIndex(docs.filter(col("doc_id") % 5 === 0),
       "doc_id", "text", Dedup.readBandIndex(spark, dir))
@@ -128,10 +128,10 @@ class BandIndexMaintenanceSpec extends SparkTestBase {
   }
 
   test("streaming keeper micro-batches append through the same routed sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-stream").toString
+    val dir = tempDir("graft-band-stream").toString
     Dedup.writeBandIndex(docs, "doc_id", "text", dir)
     // two keeper micro-batches as files (the ST6 file-stream recipe)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-band-keep").toString
+    val srcDir = tempDir("graft-band-keep").toString
     mkBatch(900011L -> keeperText).coalesce(1).write.parquet(s"$srcDir/f1")
     Thread.sleep(1100)
     mkBatch(900012L -> keeperText2).coalesce(1).write.parquet(s"$srcDir/f2")

@@ -24,7 +24,7 @@ class BandIndexSpec extends SparkTestBase {
   private lazy val batch = docs.filter(col("doc_id") % 5 === 0)
 
   private lazy val indexPath = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-index").toString
+    val dir = tempDir("graft-band-index").toString
     Dedup.writeBandIndex(corpus, "doc_id", "text", dir)
     dir
   }

@@ -34,7 +34,7 @@ class CheckpointModeSpec extends SparkTestBase {
     val localCore = Clustering.kCore(sym, k = 2).collect()
       .map(r => r.getLong(0)).toSet
 
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckDir = tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {

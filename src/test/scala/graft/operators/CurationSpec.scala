@@ -19,7 +19,7 @@ class CurationSpec extends SparkTestBase {
       .toSet
 
   test("curateBatch over the stored O52 counts == the oracle-gated t33 rescan on the same split") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-curidx").toString
+    val dir = tempDir("graft-curidx").toString
     GramIndex.writeGramIndex(docs.where($"doc_id" < 400), dir, gram = 8, nBuckets = 16)
     val stored = keyed(Curation.curateBatch(
       docs.where($"doc_id" >= 400).select($"doc_id", $"text"),
@@ -60,7 +60,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("ST27 curateStream == sequential replay; ONLY admitted docs' grams enter the index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-curstream").toString
+    val dir = tempDir("graft-curstream").toString
     GramIndex.writeGramIndex(docs.where($"doc_id" < 300), s"$dir/idx", gram = 8, nBuckets = 8)
     val b1 = docs.where($"doc_id" >= 300 && $"doc_id" < 400).select($"doc_id", $"text")
     // batch 2 re-submits a batch-1 doc's content under a new id: if
@@ -79,7 +79,7 @@ class CurationSpec extends SparkTestBase {
     q.processAllAvailable(); q.stop()
     val streamed = keyed(spark.read.parquet(s"$dir/out"))
     // sequential replay: curate + append admitted, batch by batch
-    val rdir = java.nio.file.Files.createTempDirectory("graft-curreplay").toString
+    val rdir = tempDir("graft-curreplay").toString
     GramIndex.writeGramIndex(docs.where($"doc_id" < 300), s"$rdir/idx", gram = 8, nBuckets = 8)
     def step(b: org.apache.spark.sql.DataFrame, id: Long) = {
       val v = Curation.curateBatch(b, GramIndex.readGramIndex(spark, s"$rdir/idx"))
@@ -141,7 +141,7 @@ class CurationSpec extends SparkTestBase {
       assert(index() == idx0, s"$name: replay in the crash window changed the index")
       assert(IndexLayout.appendCommitted(spark, ledgerDir(ledgerRoot), 0L))
     }
-    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-crashwin-$tag").toString
+    def tmp(tag: String) = tempDir(s"graft-crashwin-$tag").toString
     val b1 = docs.where($"doc_id" >= 300 && $"doc_id" < 350).select($"doc_id", $"text")
     def gramCase(name: String)(trigger: (String, String) => Unit): Unit = {
       val dir = tmp(name)
@@ -181,7 +181,7 @@ class CurationSpec extends SparkTestBase {
     // audit write and the trigger's ledger commit, so the replay
     // re-runs the whole trigger including the output write — with
     // plain mode(append) every verdict/probe row would double
-    val out = java.nio.file.Files.createTempDirectory("graft-eoappend").toString
+    val out = tempDir("graft-eoappend").toString
     val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     graft.sinks.RoutedSink.standard().write(s"parquet-append-batch:$out:id:7", rows)
     // simulated replay of the SAME batch id (content deterministic)

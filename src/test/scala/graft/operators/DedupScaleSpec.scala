@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.tables.Tables
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 /** Scale guards for the dedup pipelines: the hot-shingle cap must
@@ -9,6 +12,20 @@ import org.apache.spark.sql.functions._
   * keeping exact Jaccard values for every surviving pair.
   */
 class DedupScaleSpec extends SparkTestBase {
+
+  private def q(name: String) =
+    graft.SparkEntry.queries(name)(spark, sfDir)
+
+  /** A corpus dir holding only the `documents` table. */
+  private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
+    import spark.implicits._
+    val dir = tempDir("graft-d15").toString
+    rows.map { case (id, text, lang, source) =>
+      (id, text, lang, source, text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
 
   /** The pre-round-13 d02/d21 verify, kept ONLY as the independent
     * reference formulation for the equality pin below: posting lists
@@ -84,9 +101,9 @@ class DedupScaleSpec extends SparkTestBase {
   }
 
   test("hot-shingle cap bounds candidate blowup on a skewed corpus; survivors exact") {
-    val uncapped = Dedup.ngramJaccardAtScale(skewedDocs, 0.3, maxPostingsPerToken = Int.MaxValue)
+    val uncapped = Dedup.ngramJaccardAtScale(skewedDocs, 0.3, maxPostingsPerToken = None)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val capped = Dedup.ngramJaccardAtScale(skewedDocs, 0.3, maxPostingsPerToken = 10)
+    val capped = Dedup.ngramJaccardAtScale(skewedDocs, 0.3, maxPostingsPerToken = Some(10))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
 
     // uncapped: boilerplate makes EVERY pair jaccard >= 1/3 -> n^2 blowup
@@ -186,7 +203,7 @@ class DedupScaleSpec extends SparkTestBase {
     // pairwise verify; the retired restricted-posting self-join is
     // kept as the independent reference formulation and must stay
     // value-identical — same candidates, same exact Jaccard.
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
+    val docs = Tables.load(spark, sfDir, "documents")
     val pairwise = Dedup.minhashLshAtScale(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     spark.catalog.clearCache()
@@ -203,8 +220,8 @@ class DedupScaleSpec extends SparkTestBase {
   test("canned d04 equals the scale configuration when no shingle is hot") {
     // on the real sf0.001 corpus with a cap far above the hottest
     // shingle, the capped pipeline is value-identical to canned d04
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
-    val atScale = Dedup.ngramJaccardAtScale(docs, 0.4, maxPostingsPerToken = 100000)
+    val docs = Tables.load(spark, sfDir, "documents")
+    val atScale = Dedup.ngramJaccardAtScale(docs, 0.4, maxPostingsPerToken = Some(100000))
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val canned = graft.SparkEntry.queries("d04_dedup_ngram_jaccard")(spark, sfDir)
@@ -216,7 +233,7 @@ class DedupScaleSpec extends SparkTestBase {
     // array_min over the distinct shingle array must equal min over
     // the grouped posting rows — same set, same md5 derivation — so
     // the streaming-safe banding (ST6) agrees with d02's batch banding.
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
+    val docs = Tables.load(spark, sfDir, "documents")
     val bk = Dedup.bandKeys(docs, "doc_id", "text")
     val perRow = bk.select(col("doc_id").as("id_a"), col("band"), col("bh"))
       .join(bk.select(col("doc_id").as("id_b"), col("band"), col("bh")), Seq("band", "bh"))
@@ -231,7 +248,7 @@ class DedupScaleSpec extends SparkTestBase {
   }
 
   test("fuzzyEditAtScale equals canned d14 uncapped; bucket cap bounds the skewed corpus") {
-    val docs = graft.tables.Tables.load(spark, sfDir, "documents")
+    val docs = Tables.load(spark, sfDir, "documents")
     val atScale = Dedup.fuzzyEditAtScale(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val canned = graft.SparkEntry.queries("d14_fuzzy_edit_distance")(spark, sfDir)
@@ -257,5 +274,79 @@ class DedupScaleSpec extends SparkTestBase {
         s"exact pair ($a,$b) lost by cap")
     }
     spark.catalog.clearCache()
+  }
+
+  // ---- d15 containment ------------------------------------------
+
+  test("d15 flags a doc contained in a longer wrapper, not the reverse") {
+    // A's 3 shingles all appear in B (A + chrome); B->A is 3/8 < 0.8
+    val dir = writeDocs(Seq(
+      (1L, "w1 w2 w3 w4 w5", "en", "s0"),
+      (2L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "s0"),
+      (3L, "z1 z2 z3 z4 z5", "en", "s0")
+    ))
+    val rows = graft.SparkEntry.queries("d15_containment")(spark, dir).collect()
+    assert(rows.length == 1, s"expected 1 pair, got ${rows.mkString(";")}")
+    val r = rows.head
+    assert(r.getLong(0) == 1L && r.getLong(1) == 2L)
+    assert(r.getLong(2) == 3L && r.getLong(3) == 3L) // n_shared, n_a
+    assert(r.getDouble(4) == 1.0)
+  }
+
+  test("d15 contains both orders of every d04 pair with jaccard >= 0.8") {
+    // containment c/|A| >= c/|union| = jaccard, so a resemblance hit
+    // at >= 0.8 must appear in d15 in BOTH directions
+    val strong = q("d04_dedup_ngram_jaccard")
+      .filter(col("jaccard") >= 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val d15 = q("d15_containment").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    strong.foreach { case (a, b) =>
+      assert(d15.contains((a, b)) && d15.contains((b, a)),
+        s"jaccard>=0.8 pair ($a,$b) missing from containment output")
+    }
+  }
+
+  test("containmentAtScale uncapped equals the canned d15 query") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val scale = Dedup.containmentAtScale(docs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val canned = q("d15_containment")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(scale == canned, s"scale path diverges: ${scale.diff(canned)} / ${canned.diff(scale)}")
+    // (round 17) global clearCache removed: suites run concurrently on a shared session, and clearing the GLOBAL cache yanks other suites' in-flight cached frames
+  }
+
+  test("containmentAtScale capped keeps exact values on surviving pairs") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val canned = q("d15_containment")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val capped = Dedup.containmentAtScale(docs, 0.8, maxPostingsPerToken = Some(8))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    // cap is a recall trade only: surviving pairs carry the EXACT
+    // full-posting counts, never values computed from capped postings
+    capped.foreach { case (pair, v) =>
+      assert(canned.contains(pair) && canned(pair) == v,
+        s"pair $pair: capped $v vs canned ${canned.get(pair)}")
+    }
+    // (round 17) global clearCache removed: suites run concurrently on a shared session, and clearing the GLOBAL cache yanks other suites' in-flight cached frames
+  }
+
+  test("canned d04 and d15 run the overlap core: one join, no per-doc size aggregate") {
+    // the posting self-join is the only join: each doc's size rides
+    // its posting rows, so neither query joins sizes back onto pairs
+    // nor aggregates on doc_id alone
+    Seq("d04_dedup_ngram_jaccard", "d15_containment").foreach { name =>
+      val plan = q(name).queryExecution.optimizedPlan
+      val joins = plan.collect { case j: Join => j }
+      assert(joins.length == 1, s"$name: ${joins.length} joins\n$plan")
+      val perDoc = plan.collect {
+        case a: Aggregate if a.groupingExpressions.map {
+          case r: AttributeReference => r.name
+          case e => e.sql
+        } == Seq("doc_id") => a
+      }
+      assert(perDoc.isEmpty, s"$name: per-doc aggregate\n$plan")
+    }
   }
 }

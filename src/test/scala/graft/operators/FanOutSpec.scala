@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Ops.fanOutSmallScan]]'s contract (round-16 optimization):
   * a scan NARROWER than the session parallelism is spread to session
@@ -10,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * no shuffle is ever added at scale), and values are preserved
   * either way.
   */
-class FanOutSpec extends AnyFunSuite {
+class FanOutSpec extends graft.SparkTestBase {
 
-  private lazy val spark = SparkSession.builder()
+  override lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
@@ -41,7 +40,7 @@ class FanOutSpec extends AnyFunSuite {
   test("many small files open one split each: a scan that fills the cores passes through") {
     import spark.implicits._
     val cores = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft-fanout-files").toString
+    val dir = tempDir("graft-fanout-files").toString
     (1 to 32 * cores).toDF("x").repartition(4 * cores).write.mode("overwrite").parquet(dir)
     // splits are packed at openCostInBytes per file: at half a split
     // per file, 4 x cores files open about 2 x cores splits

@@ -16,7 +16,7 @@ class FrameIndexSpec extends SparkTestBase {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("probe == the batch m10 over the union corpus, restricted to cross-split pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx").toString
+    val dir = tempDir("graft-fidx").toString
     val all = Multimodal.videoPayloads(spark, sfDir)
     Multimodal.writeFrameIndex(all.where($"doc_id" < 400), dir)
     val probe = triples(Multimodal.probeFrameIndex(
@@ -49,7 +49,7 @@ class FrameIndexSpec extends SparkTestBase {
       (500L, "a completely different body shared verbatim across the split, long enough for frames"),
       (1500L, "a completely different body shared verbatim across the split, long enough for frames")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx-cap").toString
+    val dir = tempDir("graft-fidx-cap").toString
     Multimodal.writeFrameIndex(
       Multimodal.videoPayloadsOf(idxDocs.union(real.where($"doc_id" === 500L))), dir)
     val probe = triples(Multimodal.probeFrameIndex(
@@ -70,7 +70,7 @@ class FrameIndexSpec extends SparkTestBase {
       (i, "BOILERPLATE_BLACK_FRAME_PADDING_TO_EXACTLY_50BYTES" +
         f"_x$i%06d_unique_tail_content_beyond_the_shared_frame")
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx-dd").toString
+    val dir = tempDir("graft-fidx-dd").toString
     Multimodal.writeFrameIndex(Multimodal.videoPayloadsOf(mk(0L until 63L)), dir)
     val probe = Multimodal.probeFrameIndex(
       Multimodal.videoPayloadsOf(mk(Seq(62L, 1000L))),
@@ -84,7 +84,7 @@ class FrameIndexSpec extends SparkTestBase {
   }
 
   test("append makes day-2 videos probe-visible; replayed appends don't change results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx2").toString
+    val dir = tempDir("graft-fidx2").toString
     val all = Multimodal.videoPayloads(spark, sfDir)
     Multimodal.writeFrameIndex(all.where($"doc_id" < 300), dir)
     val kept = all.where($"doc_id" >= 300 && $"doc_id" < 400)
@@ -112,7 +112,7 @@ class FrameIndexSpec extends SparkTestBase {
   }
 
   test("tombstones mask immediately; compaction applies them and keeps probes stable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx3").toString
+    val dir = tempDir("graft-fidx3").toString
     val all = Multimodal.videoPayloads(spark, sfDir)
     Multimodal.writeFrameIndex(all, dir)
     // double-append (simulated replay) then take down video 5 — a
@@ -136,7 +136,7 @@ class FrameIndexSpec extends SparkTestBase {
   }
 
   test("ST28 frameDupTrigger: probe-before-append across batches, replay skips whole") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fidx-st28").toString
+    val dir = tempDir("graft-fidx-st28").toString
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
     Multimodal.writeFrameIndex(
       Multimodal.videoPayloadsOf(docs.where($"doc_id" < 300)), s"$dir/idx")

@@ -20,7 +20,7 @@ class GramIndexSpec extends SparkTestBase {
     val corpus = docs.where($"doc_id" < 400)
     val batch = docs.where($"doc_id" >= 400)
     assert(batch.count() > 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramidx").toString
+    val dir = tempDir("graft-gramidx").toString
     GramIndex.writeGramIndex(corpus, dir, gram = 8, nBuckets = 16)
     val probe = keyed(GramIndex.probeGramIndex(batch,
       GramIndex.readGramIndex(spark, dir)))
@@ -32,7 +32,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("append makes day-2 duplicates visible; compaction preserves probe results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramidx2").toString
+    val dir = tempDir("graft-gramidx2").toString
     // seed corpus: two docs with unique-ish text
     val seed = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -67,7 +67,7 @@ class GramIndexSpec extends SparkTestBase {
     // the stored-index serving form of t30 must agree row-for-row
     // with the rescan query — same split (corpus < 400, batch >= 400),
     // zero corpus rescans on the index side
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramnovel").toString
+    val dir = tempDir("graft-gramnovel").toString
     GramIndex.writeGramIndex(docs.where($"doc_id" < 400), dir, gram = 8, nBuckets = 16)
     val stored = GramIndex.noveltyFromIndex(
         docs.where($"doc_id" >= 400), GramIndex.readGramIndex(spark, dir))
@@ -93,14 +93,14 @@ class GramIndexSpec extends SparkTestBase {
     // routing (bucket = hash mod 0); the manifest must carry the
     // derived value and the probe must agree with an explicit-bucket
     // twin row-for-row
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramauto").toString
+    val dir = tempDir("graft-gramauto").toString
     val corpus = docs.where($"doc_id" < 400)
     val batch = docs.where($"doc_id" >= 400)
     GramIndex.writeGramIndex(corpus, dir) // nBuckets = 0 -> auto
     val idx = GramIndex.readGramIndex(spark, dir)
     assert(idx.nBuckets >= 16, s"manifest nBuckets ${idx.nBuckets} not the derived value")
     val auto = keyed(GramIndex.probeGramIndex(batch, idx))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-gramauto2").toString
+    val dir2 = tempDir("graft-gramauto2").toString
     GramIndex.writeGramIndex(corpus, dir2, nBuckets = 16)
     val explicit = keyed(GramIndex.probeGramIndex(batch, GramIndex.readGramIndex(spark, dir2)))
     assert(auto == explicit && auto.nonEmpty,
@@ -109,7 +109,7 @@ class GramIndexSpec extends SparkTestBase {
 
   test("append replay is a no-op: a replayed singleton gram never crosses the repeated threshold") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramreplay2").toString
+    val dir = tempDir("graft-gramreplay2").toString
     val seed = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
     ).toDF("doc_id", "text")
@@ -145,7 +145,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("edge cases: empty batch probes empty; sub-gram docs contribute nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramidx4").toString
+    val dir = tempDir("graft-gramidx4").toString
     GramIndex.writeGramIndex(docs.where($"doc_id" < 50), dir, gram = 8, nBuckets = 4)
     val idx = GramIndex.readGramIndex(spark, dir)
     assert(GramIndex.probeGramIndex(docs.where($"doc_id" < 0), idx).isEmpty)
@@ -159,8 +159,8 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("takedown: negative-count deltas == a rebuild without the deleted docs, permanently after compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramtd").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-gramtd2").toString
+    val dir = tempDir("graft-gramtd").toString
+    val dir2 = tempDir("graft-gramtd2").toString
     val keep = docs.where($"doc_id" < 300)
     val gone = docs.where($"doc_id" >= 300 && $"doc_id" < 400)
     val batch = docs.where($"doc_id" >= 400)
@@ -198,7 +198,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("takedown read-time semantics: deleted content is fully novel BEFORE compaction; all-gone compaction refused") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramtd3").toString
+    val dir = tempDir("graft-gramtd3").toString
     val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
     val d2 = Seq((2L, "one two three four five six seven eight nine ten"))
@@ -231,7 +231,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("a doc with no duplicated grams yields no intervals") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramidx3").toString
+    val dir = tempDir("graft-gramidx3").toString
     GramIndex.writeGramIndex(
       Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
         .toDF("doc_id", "text"), dir, gram = 8, nBuckets = 4)
@@ -242,7 +242,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("compactGramIndex fails loudly on net counts < 0 (takedown contract violation)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-corrupt").toString
+    val dir = tempDir("graft-r15-corrupt").toString
     val seed = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten")
@@ -266,7 +266,7 @@ class GramIndexSpec extends SparkTestBase {
   }
 
   test("compactGramIndex stays green on a contract-respecting takedown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-clean").toString
+    val dir = tempDir("graft-r15-clean").toString
     val seed = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten")

@@ -19,7 +19,7 @@ class IndexLifecycleSpec extends SparkTestBase {
     .select("doc_id", "text")
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag").toString
 
   private def mkBatch(rows: (Long, String)*) =
     spark.createDataFrame(rows.toIndexedSeq).toDF("doc_id", "text")
@@ -215,7 +215,7 @@ class IndexLifecycleSpec extends SparkTestBase {
   }
 
   test("copyAppendLedger drops outdone-N subsumed by batch-N, keeps orphans and takedowns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r15-ledger").toString
+    val dir = tempDir("graft-r15-ledger").toString
     val epoch = s"$dir/v00001"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(epoch))
     // batch 1 completed both phases; batch 2 crashed mid-window

@@ -20,7 +20,7 @@ class KeySetIndexSpec extends SparkTestBase {
 
   private def guardsHold(name: String, ix: Lifecycle, seed: DataFrame,
       noKeys: Option[DataFrame]): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-empty-$name").toString
+    val dir = tempDir(s"graft-empty-$name").toString
     ix.write(seed, dir)
     val live = IndexLayout.currentVersion(spark, ix.epoch(dir))
     val n = ix.read(dir).count()

@@ -15,7 +15,7 @@ class LexIndexSpec extends SparkTestBase {
   private def queries = Similarity.bm25Queries.toDF("q_id", "term")
 
   private lazy val indexPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexidx").toString
+    val dir = tempDir("graft-lexidx").toString
     LexIndex.writeLexIndex(docs, dir, nBuckets = 16)
     dir
   }
@@ -73,7 +73,7 @@ class LexIndexSpec extends SparkTestBase {
     // BM25 from the lexical index, ANN from the sign-sketch sidecar
     // at nprobe = k (every cell probed — the parity regime), fused by
     // rrfFuse — must reproduce the oracle-gated in-query s14 exactly
-    val annDir = java.nio.file.Files.createTempDirectory("graft-hybrid-ann").toString
+    val annDir = tempDir("graft-hybrid-ann").toString
     val emb = Tables.load(spark, sfDir, "embeddings")
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", annDir,
       k = 16, m = 4, kSub = 8, storeSigs = true)
@@ -93,7 +93,7 @@ class LexIndexSpec extends SparkTestBase {
   }
 
   test("epoch rewrite: readers resolve the new epoch; the manifest is authoritative") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexidx2").toString
+    val dir = tempDir("graft-lexidx2").toString
     LexIndex.writeLexIndex(docs.where($"doc_id" < 100), dir, nBuckets = 8)
     val i1 = LexIndex.readLexIndex(spark, dir)
     assert(i1.nBuckets == 8 && i1.ndocs == 100)
@@ -119,11 +119,11 @@ class LexIndexSpec extends SparkTestBase {
     // naive incremental index gets wrong (stale statistics)
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexappend").toString
+    val dir = tempDir("graft-lexappend").toString
     LexIndex.writeLexIndex(docs.where($"doc_id" < 300), dir, nBuckets = 8)
     LexIndex.appendLexIndex(docs.where($"doc_id" >= 300 && $"doc_id" < 400), dir, batchId = 0L)
     LexIndex.appendLexIndex(docs.where($"doc_id" >= 400), dir, batchId = 1L)
-    val fullDir = java.nio.file.Files.createTempDirectory("graft-lexfull").toString
+    val fullDir = tempDir("graft-lexfull").toString
     LexIndex.writeLexIndex(docs, fullDir, nBuckets = 8)
     val appended = LexIndex.readLexIndex(spark, dir)
     val full = LexIndex.readLexIndex(spark, fullDir)
@@ -146,7 +146,7 @@ class LexIndexSpec extends SparkTestBase {
   }
 
   test("append replay is a no-op — batch-keyed ledger, surviving compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexreplay").toString
+    val dir = tempDir("graft-lexreplay").toString
     LexIndex.writeLexIndex(docs.where($"doc_id" < 300), dir, nBuckets = 8)
     val batch = docs.where($"doc_id" >= 300 && $"doc_id" < 400)
     LexIndex.appendLexIndex(batch, dir, batchId = 7L)
@@ -175,7 +175,7 @@ class LexIndexSpec extends SparkTestBase {
   test("tombstones: masked at the next probe; compaction applies them with EXACT recomputed stats") {
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lextomb").toString
+    val dir = tempDir("graft-lextomb").toString
     LexIndex.writeLexIndex(docs, dir, nBuckets = 8)
     // take down the docs the queries actually rank, so the mask is
     // observable: the current top-1 per query must vanish
@@ -195,7 +195,7 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.compactLexIndex(spark, dir)
     val compacted = LexIndex.readLexIndex(spark, dir)
     assert(compacted.tombstones.isEmpty, "tombstones not consumed by compaction")
-    val freshDir = java.nio.file.Files.createTempDirectory("graft-lextomb2").toString
+    val freshDir = tempDir("graft-lextomb2").toString
     LexIndex.writeLexIndex(docs.where(!$"doc_id".isin(victimIds.toSeq: _*)),
       freshDir, nBuckets = 8)
     val fresh = LexIndex.readLexIndex(spark, freshDir)
@@ -208,7 +208,7 @@ class LexIndexSpec extends SparkTestBase {
   }
 
   test("auto-sized nBuckets: derived from the measured token count, manifest-recorded, probe parity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexauto").toString
+    val dir = tempDir("graft-lexauto").toString
     LexIndex.writeLexIndex(docs, dir) // nBuckets = 0 -> auto
     val idx = LexIndex.readLexIndex(spark, dir)
     assert(idx.nBuckets == LexIndex.autoBuckets(idx.ntok),
@@ -234,7 +234,7 @@ class LexIndexSpec extends SparkTestBase {
     // an empty corpus would publish an epoch whose zero-row hive
     // stores carry no schema (unreadable at the first probe) and
     // whose avgdl is 0/0 — the writer must refuse, not half-publish
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexempty").toString
+    val dir = tempDir("graft-lexempty").toString
     val e = intercept[IllegalArgumentException] {
       LexIndex.writeLexIndex(docs.where($"doc_id" < 0), dir, nBuckets = 4)
     }

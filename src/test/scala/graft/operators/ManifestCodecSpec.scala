@@ -38,7 +38,7 @@ class ManifestCodecSpec extends SparkTestBase {
     import spark.implicits._
     val idCol = "doc\"id\\x"
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF(idCol, "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-lex").toString
+    val dir = tempDir("graft-manifest-lex").toString
     LexIndex.writeLexIndex(docs, dir, idCol = idCol, nBuckets = 2)
     // append re-tokenizes under the STORED id column
     LexIndex.appendLexIndex(Seq((3L, "gamma delta")).toDF(idCol, "text"), dir, batchId = 0L)
@@ -52,7 +52,7 @@ class ManifestCodecSpec extends SparkTestBase {
   test("merge table: key and tombstone columns with a quote and a backslash") {
     import spark.implicits._
     val (k, t) = ("k\\ey", "del\"flag")
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-merge").toString
+    val dir = tempDir("graft-manifest-merge").toString
     def apply(rows: Seq[(Long, Long, Boolean, String)]): Unit =
       ShardLayout.applyChangelog(spark, dir, rows.toDF(k, "ver", t, "payload"),
         keyCols = Seq(k), versionCols = Seq("ver"), tombstoneCol = t)
@@ -68,7 +68,7 @@ class ManifestCodecSpec extends SparkTestBase {
   test("shard layout: an id column with a quote and a backslash is manifest-authoritative") {
     import spark.implicits._
     val idCol = "row\"id\\x"
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-shards").toString
+    val dir = tempDir("graft-manifest-shards").toString
     ShardLayout.writeShuffledShards((1L to 20L).map(i => (i, s"t$i")).toDF(idCol, "text"),
       idCol, dir, nShards = 2, seed = "s\"1")
     ShardLayout.appendShuffledShards((21L to 24L).map(i => (i, s"t$i")).toDF(idCol, "text"),

@@ -41,7 +41,7 @@ class PerceptronSpec extends SparkTestBase {
     // at nprobe=k with full refine the stored index returns the exact
     // top-5, so the majority votes (and thus every e11 row) agree
     val emb = graft.tables.Tables.load(spark, sfDir, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-e11-ann").toString
+    val dir = tempDir("graft-e11-ann").toString
     VectorIndex.writeAnnIndex(emb, "vec_id", "embedding", dir, k = 16, m = 4, kSub = 8)
     // the query's OWN probe definition (shared helper) — fixed-count
     // hash-ranked sample, renamed back to the probeAnnIndex arg shape

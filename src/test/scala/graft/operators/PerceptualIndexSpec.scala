@@ -19,7 +19,7 @@ class PerceptualIndexSpec extends SparkTestBase {
     // deterministically RE-WRAPPED twins (same body, neighbor
     // container, id + 1e9) — the probe must reproduce exactly the
     // cross-split slice of the oracle-gated m09 result
-    val dir = java.nio.file.Files.createTempDirectory("graft-pidx").toString
+    val dir = tempDir("graft-pidx").toString
     val originals = Multimodal.imagePayloads(spark, sfDir)
     val twins = Multimodal.payloadsWithContainer(spark, sfDir,
       containerShift = 1, idOffset = 1000000000L)
@@ -49,7 +49,7 @@ class PerceptualIndexSpec extends SparkTestBase {
   }
 
   test("append makes day-2 keepers probe-visible; replayed appends don't duplicate pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pidx2").toString
+    val dir = tempDir("graft-pidx2").toString
     val all = Multimodal.imagePayloads(spark, sfDir)
     Multimodal.writePerceptualIndex(all.where($"doc_id" < 300), "doc_id", "payload", dir)
     // day-2 keepers appended; a later batch re-wrapping THEIR content
@@ -80,7 +80,7 @@ class PerceptualIndexSpec extends SparkTestBase {
   }
 
   test("tombstones mask immediately; compaction applies them, dedupes replays, and keeps probes stable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pidx4").toString
+    val dir = tempDir("graft-pidx4").toString
     val originals = Multimodal.imagePayloads(spark, sfDir)
     Multimodal.writePerceptualIndex(originals, "doc_id", "payload", dir)
     // double-append a batch (simulated replay — duplicate band keys)
@@ -108,7 +108,7 @@ class PerceptualIndexSpec extends SparkTestBase {
   }
 
   test("a probe reads only its band-key buckets (DPP over the (band, pfx) dirs)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pidx3").toString
+    val dir = tempDir("graft-pidx3").toString
     Multimodal.writePerceptualIndex(
       Multimodal.imagePayloads(spark, sfDir), "doc_id", "payload", dir)
     val resolved = IndexLayout.resolveDir(spark, dir)

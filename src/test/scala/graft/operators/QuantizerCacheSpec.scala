@@ -35,7 +35,7 @@ class QuantizerCacheSpec extends SparkTestBase {
   }
 
   test("writeAnnIndex(m = 3) raises and releases the quantized corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-quantizer-cache").toString
+    val dir = tempDir("graft-quantizer-cache").toString
     intercept[IllegalArgumentException](
       VectorIndex.writeAnnIndex(vecs, "qc_id", "qc_vec", s"$dir/ann", k = 4, m = 3))
     assertReleased()

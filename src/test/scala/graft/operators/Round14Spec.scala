@@ -31,7 +31,7 @@ class Round14Spec extends SparkTestBase {
     // registered function on a swapped frame: reuse the same split
     // constants by writing the frame to a temp dir and pointing the
     // loader at it
-    val dir = java.nio.file.Files.createTempDirectory("graft-t30").toString
+    val dir = tempDir("graft-t30").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t30_gram_novelty")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
@@ -73,7 +73,7 @@ class Round14Spec extends SparkTestBase {
       (0L, (1 to 10).map(i => s"a$i").mkString(" "), "srcA"),
       (1L, (1 to 1000).map(i => s"b$i").mkString(" "), "srcB")
     ).toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t31").toString
+    val dir = tempDir("graft-t31").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t31_epoch_plan")(spark, dir)
       .collect().map(r => r.getString(0) ->
@@ -82,7 +82,7 @@ class Round14Spec extends SparkTestBase {
     assert(out("srcB") == ((1000L, 2990L, 2990L, 986798L)), s"srcB plan: ${out("srcB")}")
     // a zero-token source (all docs empty) is excluded, not divided by:
     // its epochs would be 0 div 0 — NULL on Spark, an error in DuckDB
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-t31b").toString
+    val dir2 = tempDir("graft-t31b").toString
     docs.unionByName(Seq((2L, "", "srcEmpty")).toDF("doc_id", "text", "source"))
       .write.parquet(s"$dir2/documents.parquet")
     val out2 = graft.SparkEntry.queries("t31_epoch_plan")(spark, dir2)
@@ -138,7 +138,7 @@ class Round14Spec extends SparkTestBase {
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(got == expect, s"drift replay mismatch:\n$got\nvs\n$expect")
     // a corpus with ONE label: its centroid IS the global centroid
-    val dir = java.nio.file.Files.createTempDirectory("graft-e12").toString
+    val dir = tempDir("graft-e12").toString
     Seq(
       (1L, Array(1.0f, 2.0f, -0.5f), 0),
       (2L, Array(0.5f, -1.0f, 2.5f), 0),
@@ -155,7 +155,7 @@ class Round14Spec extends SparkTestBase {
     // SAME mdat frames — the re-mux shape m10 exists to catch
     val text = ((1 to 20).map(i => f"alpha$i%04d") ++ (1 to 20).map(i => f"beta$i%05d")).mkString(" ")
     val other = (1 to 40).map(i => f"gamma$i%04d").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-m10").toString
+    val dir = tempDir("graft-m10").toString
     Seq((0L, text), (1L, text), (2L, other)).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("m10_video_frame_dup")(spark, dir)

@@ -5,7 +5,8 @@ import graft.tables.Tables
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-7 batch-2 operators: g02 triangle counting,
-  * d15 containment, t19 shard JS divergence, e06 power iteration.
+  * t19 shard JS divergence, e06 power iteration (d15 containment's
+  * specs live in DedupScaleSpec, next to its scale operator).
   *
   * The pattern is the GraphSpec/q52 one: wherever the math is small
   * enough to express sequentially, the spec replays it in plain Scala
@@ -20,7 +21,7 @@ class Round7bOpsSpec extends SparkTestBase {
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-r7b").toString
+    val dir = tempDir("graft-r7b").toString
     rows.map { case (id, text, lang, source) =>
       (id, text, lang, source, text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -63,62 +64,6 @@ class Round7bOpsSpec extends SparkTestBase {
     counts.foreach { case (n, c) =>
       assert(got(n) == c, s"node $n: distributed ${got(n)} != replay $c")
     }
-  }
-
-  // ---- d15 containment ------------------------------------------
-
-  test("d15 flags a doc contained in a longer wrapper, not the reverse") {
-    // A's 3 shingles all appear in B (A + chrome); B->A is 3/8 < 0.8
-    val dir = writeDocs(Seq(
-      (1L, "w1 w2 w3 w4 w5", "en", "s0"),
-      (2L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10", "en", "s0"),
-      (3L, "z1 z2 z3 z4 z5", "en", "s0")
-    ))
-    val rows = graft.SparkEntry.queries("d15_containment")(spark, dir).collect()
-    assert(rows.length == 1, s"expected 1 pair, got ${rows.mkString(";")}")
-    val r = rows.head
-    assert(r.getLong(0) == 1L && r.getLong(1) == 2L)
-    assert(r.getLong(2) == 3L && r.getLong(3) == 3L) // n_shared, n_a
-    assert(r.getDouble(4) == 1.0)
-  }
-
-  test("d15 contains both orders of every d04 pair with jaccard >= 0.8") {
-    // containment c/|A| >= c/|union| = jaccard, so a resemblance hit
-    // at >= 0.8 must appear in d15 in BOTH directions
-    val strong = q("d04_dedup_ngram_jaccard")
-      .filter(col("jaccard") >= 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val d15 = q("d15_containment").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    strong.foreach { case (a, b) =>
-      assert(d15.contains((a, b)) && d15.contains((b, a)),
-        s"jaccard>=0.8 pair ($a,$b) missing from containment output")
-    }
-  }
-
-  test("containmentAtScale uncapped equals the canned d15 query") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    val scale = Dedup.containmentAtScale(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val canned = q("d15_containment")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(scale == canned, s"scale path diverges: ${scale.diff(canned)} / ${canned.diff(scale)}")
-    // (round 17) global clearCache removed: suites run concurrently on a shared session, and clearing the GLOBAL cache yanks other suites' in-flight cached frames
-  }
-
-  test("containmentAtScale capped keeps exact values on surviving pairs") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    val canned = q("d15_containment")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val capped = Dedup.containmentAtScale(docs, 0.8, maxPostingsPerToken = Some(8))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    // cap is a recall trade only: surviving pairs carry the EXACT
-    // full-posting counts, never values computed from capped postings
-    capped.foreach { case (pair, v) =>
-      assert(canned.contains(pair) && canned(pair) == v,
-        s"pair $pair: capped $v vs canned ${canned.get(pair)}")
-    }
-    // (round 17) global clearCache removed: suites run concurrently on a shared session, and clearing the GLOBAL cache yanks other suites' in-flight cached frames
   }
 
   // ---- t19 shard divergence -------------------------------------

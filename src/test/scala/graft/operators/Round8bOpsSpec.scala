@@ -20,7 +20,7 @@ class Round8bOpsSpec extends SparkTestBase {
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-r8b").toString
+    val dir = tempDir("graft-r8b").toString
     rows.map { case (id, text) => (id, text, "en", "src0", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -243,7 +243,7 @@ class Round8bOpsSpec extends SparkTestBase {
     // user 1: signup, purchase, click — the purchase precedes the
     // first post-signup click, so stage 3 must stay unreached;
     // user 2: signup, click, purchase in order — full conversion
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel").toString
     Seq(
       (1L, t("2024-01-01 00:00:01"), 1L, "signup", 0.0, "{}"),
       (2L, t("2024-01-01 00:00:02"), 1L, "purchase", 1.0, "{}"),

@@ -45,7 +45,7 @@ class ShardLayoutSpec extends SparkTestBase {
     }
 
   test("writeShuffledShards: ordered shard layout, deterministic replay, full coverage") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards").toString
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"lang")
     ShardLayout.writeShuffledShards(docs, "doc_id", s"$dir/a", nShards = 4, seed = "7")
@@ -72,7 +72,7 @@ class ShardLayoutSpec extends SparkTestBase {
   }
 
   test("shard layout: epoch rewrite is an atomic versioned publish; appends validate the manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("shards-epoch").toString
+    val dir = tempDir("shards-epoch").toString
     val docs = graft.tables.Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"lang")
     val path = s"$dir/l"
@@ -152,7 +152,7 @@ class ShardLayoutSpec extends SparkTestBase {
     val base = docs.where($"doc_id" % 4 === 0)
     val b1 = docs.where($"doc_id" % 4 === 1)
     val b2 = docs.where($"doc_id" % 4 === 2)
-    val path = java.nio.file.Files.createTempDirectory("graft-o43").toString + "/layout"
+    val path = tempDir("graft-o43").toString + "/layout"
     ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 4, seed = "s43")
     ShardLayout.appendShuffledShards(b1, "doc_id", path)
     ShardLayout.appendShuffledShards(b2, "doc_id", path)
@@ -196,7 +196,7 @@ class ShardLayoutSpec extends SparkTestBase {
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"lang", $"source")
     val base = docs.where($"doc_id" % 7 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft-o43b").toString + "/layout"
+    val path = tempDir("graft-o43b").toString + "/layout"
     ShardLayout.writeShuffledShards(base, "doc_id", path, nShards = 2, seed = "s43b")
     ShardLayout.appendShuffledShards(base, "doc_id", path) // the retry: exact replay
     assert(ShardLayout.readShuffledShards(spark, path).count() === base.count() * 2)
@@ -213,7 +213,7 @@ class ShardLayoutSpec extends SparkTestBase {
 
   test("O45 applyChangelog: LWW upsert/delete, tombstone suppression, replay safety") {
     import org.apache.spark.sql.Row
-    val dir = java.nio.file.Files.createTempDirectory("o45").toString
+    val dir = tempDir("o45").toString
     def batch(rows: (Long, Long, Long, String, Boolean)*) =
       rows.toDF("user_id", "k", "v", "payload", "is_tombstone")
     val keys = Seq("user_id", "k")
@@ -272,7 +272,7 @@ class ShardLayoutSpec extends SparkTestBase {
     val noSize = graft.SparkTestBase.isolatedSession
     noSize.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import noSize.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("o45-bcast").toString
+    val dir = tempDir("o45-bcast").toString
     def batch(rows: (Long, Long, String, Boolean)*) =
       rows.toDF("k", "v", "payload", "is_tombstone")
     ShardLayout.applyChangelog(noSize, dir,
@@ -304,14 +304,14 @@ class ShardLayoutSpec extends SparkTestBase {
 
   test("O45 via the routed sink: ST15 update stream applied == q65-shaped batch compaction") {
     val ev = Tables.load(spark, sfDir, "events")
-    val dir = java.nio.file.Files.createTempDirectory("o45-st15").toString
+    val dir = tempDir("o45-st15").toString
     // ts-interleaved micro-batches (the ST15 spec's adversarial split)
     ev.filter($"event_id" % 2 === 0).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     ev.filter($"event_id" % 2 === 1).coalesce(1).write.parquet(s"$dir/f2")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir + "/f*")
-    val mdir = java.nio.file.Files.createTempDirectory("o45-table").toString
+    val mdir = tempDir("o45-table").toString
     val sink = graft.sinks.RoutedSink.standard()
     val route = s"merge:$mdir:key:user_id+k:v:last_ts_us+n_ops"
     val q = graft.streaming.Streams.changelogCompactStream(spark, stream).toDF()
@@ -344,7 +344,7 @@ class ShardLayoutSpec extends SparkTestBase {
   // ------------------------------------------------------------- O44
 
   test("O44 packTokenShards: epoch layout stores loader-ready padded ID arrays") {
-    val dir = java.nio.file.Files.createTempDirectory("o44").toString
+    val dir = tempDir("o44").toString
     val w = 32
     ShardLayout.packTokenShards(docs, dir, window = w, nShards = 4, seed = "r12")
 
@@ -384,7 +384,7 @@ class ShardLayoutSpec extends SparkTestBase {
   // ------------------------------------------------ O47 snapshot reads
 
   test("O47: a pinned epoch read survives the next publish; orphans and GC'd versions fail loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString + "/shards"
+    val dir = tempDir("graft-snap").toString + "/shards"
     val ep1 = docs.select($"doc_id", $"lang").where($"doc_id" < 100)
     ShardLayout.writeShuffledShards(ep1, "doc_id", dir, nShards = 4, seed = "e1")
     val v1 = ShardLayout.shardVersions(spark, dir).last
@@ -419,7 +419,7 @@ class ShardLayoutSpec extends SparkTestBase {
   // ------------------------------------------- shard schema-drift guard
 
   test("appendShuffledShards refuses a drifted batch schema; column order stays free") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString + "/shards"
+    val dir = tempDir("graft-drift").toString + "/shards"
     val base = docs.select($"doc_id", $"lang", $"n_chars").where($"doc_id" < 100)
     ShardLayout.writeShuffledShards(base, "doc_id", dir, nShards = 4, seed = "d1")
     // same columns, different order: order can't corrupt parquet —
@@ -464,7 +464,7 @@ class ShardLayoutSpec extends SparkTestBase {
   }
 
   test("_LAYOUT manifest: quote/backslash-bearing seed round-trips (escaped write, unescaped read)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-esc").toString + "/shards"
+    val dir = tempDir("graft-esc").toString + "/shards"
     val seed = """e"poch\1"""
     val df = docs.select($"doc_id", $"lang").limit(200)
     ShardLayout.writeShuffledShards(df, "doc_id", dir, nShards = 4, seed = seed)
@@ -483,7 +483,7 @@ class ShardLayoutSpec extends SparkTestBase {
   }
 
   test("appendShuffledShards: an append that a concurrent publish overtook raises") {
-    val path = java.nio.file.Files.createTempDirectory("graft-shards-race").toString + "/l"
+    val path = tempDir("graft-shards-race").toString + "/l"
     ShardLayout.writeShuffledShards(docs.select($"doc_id", $"lang").where($"doc_id" < 100),
       "doc_id", path, nShards = 4, seed = "r1")
     // a rewrite publishing its epoch WHILE the append writes

@@ -39,7 +39,7 @@ class ZorderSpec extends SparkTestBase {
     val grid = spark.range(0, 65536)
       .select((col("id") % 256).as("a"), (col("id") / 256).cast("long").as("b"))
     def fileBoxes(df: DataFrame, tag: String): Array[(Long, Long, Long, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"zorder_$tag").toString
+      val dir = tempDir(s"zorder_$tag").toString
       df.write.mode("overwrite").parquet(dir)
       spark.read.parquet(dir)
         .groupBy(input_file_name().as("f"))

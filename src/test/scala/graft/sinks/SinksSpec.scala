@@ -8,7 +8,7 @@ import graft.tables.Tables
 class SinksSpec extends SparkTestBase {
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-sink").toString
+    tempDir("graft-sink").toString
 
   test("routed parquet/csv/json sinks round-trip") {
     val df = Tables.load(spark, sfDir, "nation")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PruningSpec extends SparkTestBase {
 
   test("binaryFiles ingests raw assets with glob and size guard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
+    val dir = tempDir("graft-bin")
     java.nio.file.Files.write(dir.resolve("a.jpg"), Array.fill[Byte](64)(1))
     java.nio.file.Files.write(dir.resolve("b.jpg"), Array.fill[Byte](2048)(2))
     java.nio.file.Files.write(dir.resolve("c.txt"), Array.fill[Byte](8)(3))
@@ -27,7 +27,7 @@ class PruningSpec extends SparkTestBase {
   }
 
   test("partition pruning: filter on partition column prunes directories") {
-    val base = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val base = tempDir("graft-prune").toString
     Tables.load(spark, sfDir, "events")
       .write.partitionBy("event_type").mode("overwrite").parquet(s"$base/ev")
     val df = spark.read.parquet(s"$base/ev").filter(col("event_type") === "purchase")

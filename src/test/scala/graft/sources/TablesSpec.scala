@@ -32,9 +32,7 @@ class TablesSpec extends SparkTestBase {
   }
 
   test("int64-nanos replica falls back and matches the native read") {
-    val tmp = Files.createTempDirectory("graft-events-nanos").toFile
-    tmp.deleteOnExit()
-    val dir = tmp.getAbsolutePath
+    val dir = tempDir("graft-events-nanos").toString
     val native = Tables.load(spark, sfDir, "events")
     // Rebuild the driver's replica shape: ts as raw int64 NANOS.
     native

@@ -39,7 +39,7 @@ class WarcSpec extends SparkTestBase {
   }
 
   test("multi-record archive round-trips; inter-record garbage skipped; gz identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc")
+    val dir = tempDir("graft-warc")
     java.nio.file.Files.write(dir.resolve("a.warc"), archive)
     // record-level gzip: each record its own member, concatenated
     val members = Seq(
@@ -75,7 +75,7 @@ class WarcSpec extends SparkTestBase {
   test("truncated record surfaces with truncated=true, payload = available bytes") {
     val full = rec("response", "https://example.com/y", "ddd-4", httpBody)
     val cut = full.take(full.length - 60) // payload cut short
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-t")
+    val dir = tempDir("graft-warc-t")
     java.nio.file.Files.write(dir.resolve("t.warc"),
       rec("warcinfo", "", "eee-5", "ok\r\n") ++ cut)
     val rows = Sources.warc(spark, dir.toString).orderBy($"offset")
@@ -89,7 +89,7 @@ class WarcSpec extends SparkTestBase {
   test("missing Content-Length resyncs on the next magic instead of swallowing the archive") {
     val noLen = ("WARC/1.0\r\nWARC-Type: metadata\r\n" +
       "WARC-Record-ID: <urn:uuid:fff-6>\r\n\r\nsome unframed body").getBytes("UTF-8")
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-nl")
+    val dir = tempDir("graft-warc-nl")
     java.nio.file.Files.write(dir.resolve("n.warc"),
       rec("warcinfo", "", "ggg-7", "ok\r\n") ++ noLen ++
         rec("response", "https://example.com/z", "hhh-8", httpBody))
@@ -106,7 +106,7 @@ class WarcSpec extends SparkTestBase {
   test("adversarial huge Content-Length reads as truncated, not a crash") {
     val huge = ("WARC/1.0\r\nWARC-Type: response\r\n" +
       "Content-Length: 9223372036854775800\r\n\r\nshort").getBytes("UTF-8")
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-of")
+    val dir = tempDir("graft-warc-of")
     java.nio.file.Files.write(dir.resolve("o.warc"), huge)
     val rows = Sources.warc(spark, dir.toString)
       .select($"truncated", length($"payload")).collect()
@@ -115,7 +115,7 @@ class WarcSpec extends SparkTestBase {
   }
 
   test("a fully corrupt .gz surfaces ONE sentinel truncated record, not silence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-gz0")
+    val dir = tempDir("graft-warc-gz0")
     java.nio.file.Files.write(dir.resolve("dead.warc.gz"),
       "this was never gzip".getBytes("UTF-8"))
     val rows = Sources.warc(spark, dir.toString)
@@ -125,7 +125,7 @@ class WarcSpec extends SparkTestBase {
   }
 
   test("recordsStreamed == records on plain, gz, garbage and truncated archives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-s")
+    val dir = tempDir("graft-warc-s")
     val gzBytes = {
       val bo = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bo)
@@ -187,7 +187,7 @@ class WarcSpec extends SparkTestBase {
   }
 
   test("S8 feeds t34: response payloads -> html -> extracted text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-h")
+    val dir = tempDir("graft-warc-h")
     java.nio.file.Files.write(dir.resolve("c.warc"), archive)
     val html = Sources.warc(spark, dir.toString)
       .where($"warc_type" === "response" && !$"truncated")

@@ -10,7 +10,7 @@ class WetSpec extends SparkTestBase {
 
   test("writeWet -> Sources.warc roundtrip: texts byte-equal, framing survives adversarial content") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wet").toString
+    val dir = tempDir("graft-wet").toString
     val docs = Seq(
       ("https://a.ex.com/1", "2026-08-17T00:00:00Z", "plain text body"),
       ("https://a.ex.com/2", "2026-08-17T00:00:01Z",
@@ -43,7 +43,7 @@ class WetSpec extends SparkTestBase {
 
   test("writeWet default date + null text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wet2").toString
+    val dir = tempDir("graft-wet2").toString
     val docs = Seq(("https://x/1", null.asInstanceOf[String])).toDF("url", "text")
     Warc.writeWet(docs, s"$dir/wet")
     val back = Sources.warc(spark, s"$dir/wet", glob = Some("part-*")).collect()

@@ -145,7 +145,7 @@ class CrawlStreamSpec extends SparkTestBase {
   }
 
   test("ST29 end-to-end: two archive micro-batches through gate, extraction and admission") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-crawl").toString
+    val dir = tempDir("graft-crawl").toString
     // standing corpus for the gram index
     GramIndex.writeGramIndex(Seq(
       (1L, words("seed")), (2L, words("base"))).toDF("doc_id", "text"),
@@ -195,7 +195,7 @@ class CrawlStreamSpec extends SparkTestBase {
   }
 
   test("a replayed crawl trigger is a whole-trigger no-op (ST27's ledger, inherited)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-crawl-r").toString
+    val dir = tempDir("graft-crawl-r").toString
     GramIndex.writeGramIndex(Seq(
       (1L, words("seed"))).toDF("doc_id", "text"), s"$dir/idx", gram = 8, nBuckets = 4)
     val f1 = httpRec("https://good.example.org/a", "a1", words("first"))

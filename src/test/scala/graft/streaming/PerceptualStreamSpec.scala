@@ -13,7 +13,7 @@ class PerceptualStreamSpec extends SparkTestBase {
   import spark.implicits._
 
   test("ST25: streamed perceptual probe+append == sequential batch replay; later batches see earlier ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pstream").toString
+    val dir = tempDir("graft-pstream").toString
     // seed index: originals below 300
     val originals = Multimodal.imagePayloads(spark, sfDir)
     Multimodal.writePerceptualIndex(
@@ -37,7 +37,7 @@ class PerceptualStreamSpec extends SparkTestBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3))).toSet
     val streamed = keyed(spark.read.parquet(s"$dir/out"))
     // sequential replay on a fresh index
-    val rdir = java.nio.file.Files.createTempDirectory("graft-pstream-r").toString
+    val rdir = tempDir("graft-pstream-r").toString
     Multimodal.writePerceptualIndex(
       originals.where($"doc_id" < 300), "doc_id", "payload", rdir)
     val r1 = keyed(Multimodal.probePerceptualIndex(b1, "doc_id", "payload",
@@ -56,7 +56,7 @@ class PerceptualStreamSpec extends SparkTestBase {
 
   test("ST26: streamed novelty == sequential replay; batch 2's novelty sees batch 1's content") {
     import graft.tables.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft-novstream").toString
+    val dir = tempDir("graft-novstream").toString
     val docs = Tables.load(spark, sfDir, "documents")
     graft.operators.GramIndex.writeGramIndex(
       docs.where($"doc_id" < 300), s"$dir/idx", gram = 8, nBuckets = 8)
@@ -78,7 +78,7 @@ class PerceptualStreamSpec extends SparkTestBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val streamed = keyed(spark.read.parquet(s"$dir/out"))
     // sequential replay on a fresh index
-    val rdir = java.nio.file.Files.createTempDirectory("graft-novreplay").toString
+    val rdir = tempDir("graft-novreplay").toString
     graft.operators.GramIndex.writeGramIndex(
       docs.where($"doc_id" < 300), s"$rdir/idx", gram = 8, nBuckets = 8)
     val r1 = keyed(graft.operators.GramIndex.noveltyFromIndex(

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkTestBase {
 
   private lazy val streamDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     val ev = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
       .cache()
@@ -69,7 +69,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("ST3: streaming dedup drops replayed events") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup").toString
+    val dir = tempDir("graft-dedup").toString
     val ev = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     ev.coalesce(1).write.parquet(s"$dir/f1")
@@ -101,13 +101,13 @@ class StreamingSpec extends SparkTestBase {
 
   test("ST6: streaming dup-candidate detection matches the batch band join") {
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-docs").toString
+    val dir = tempDir("graft-stream-docs").toString
     docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     docs.filter(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$dir/f2")
     // the index is the PERSISTED artifact (O24), not a live rebuild —
     // the same stored files probeBandIndex reads in BandIndexSpec
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-stream-idx").toString
+    val idxDir = tempDir("graft-stream-idx").toString
     graft.operators.Dedup.writeBandIndex(docs, "doc_id", "text", idxDir)
     val index = graft.operators.Dedup.readBandIndex(spark, idxDir)
     val stream = spark.readStream.schema(docs.schema)
@@ -124,7 +124,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("ST8: streaming micro-batches dispatch through the routed sink") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-routed-stream").toString
+    val outDir = tempDir("graft-routed-stream").toString
     val sink = graft.sinks.RoutedSink.standard()
     val q = Streams.routedStreamSink(
       streamEvents(streamDir), sink, id => s"parquet:$outDir/batch_$id")
@@ -137,7 +137,7 @@ class StreamingSpec extends SparkTestBase {
     val written = dirs.map(d => spark.read.parquet(d)).reduce(_ unionByName _)
     assert(written.count() == Tables.load(spark, sfDir, "events").count())
     // text/wholeText sources round-trip the same corpus (S5)
-    val tdir = java.nio.file.Files.createTempDirectory("graft-text").toString
+    val tdir = tempDir("graft-text").toString
     Tables.load(spark, sfDir, "documents").select("text")
       .coalesce(1).write.mode("overwrite").text(s"$tdir/lines")
     assert(graft.sources.Sources.text(spark, s"$tdir/lines").count() ==
@@ -150,7 +150,7 @@ class StreamingSpec extends SparkTestBase {
     // crash recovery re-invokes the batch writer with the SAME id —
     // with the perBatchOverwriteTarget route the replay rewrites its
     // own batch=<id> directory, so the corpus is byte-identical
-    val outDir = java.nio.file.Files.createTempDirectory("graft-replay-stream").toString
+    val outDir = tempDir("graft-replay-stream").toString
     val sink = graft.sinks.RoutedSink.standard()
     val writer = Streams.routedBatchWriter(sink, Streams.perBatchOverwriteTarget(outDir))
     val ev = Tables.load(spark, sfDir, "events")
@@ -167,7 +167,7 @@ class StreamingSpec extends SparkTestBase {
       s"replayed batch changed the corpus: ${before.length} -> ${after.length} rows")
     // contrast: the append route DOES duplicate on replay — the reason
     // ST8's contract points plain corpora at the overwrite target
-    val appDir = java.nio.file.Files.createTempDirectory("graft-replay-append").toString
+    val appDir = tempDir("graft-replay-append").toString
     val appWriter = Streams.routedBatchWriter(sink, _ => s"parquet-append:$appDir")
     appWriter(b1, 1L); appWriter(b1, 1L)
     assert(spark.read.parquet(appDir).count() == 2 * b1.count())
@@ -180,7 +180,7 @@ class StreamingSpec extends SparkTestBase {
       .cache()
     // two micro-batches split by doc_id: delivery order == pack order
     val cut = counted.agg(expr("percentile(CAST(doc_id AS DOUBLE), 0.5)")).head().getDouble(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-pack").toString
+    val dir = tempDir("graft-stream-pack").toString
     counted.filter(col("doc_id") <= cut).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     counted.filter(col("doc_id") > cut).coalesce(1).write.parquet(s"$dir/f2")
@@ -202,14 +202,14 @@ class StreamingSpec extends SparkTestBase {
     val evalDocs = docs.filter(col("doc_id") % 10 === 0).cache()
     val train = docs.filter(col("doc_id") % 10 =!= 0).cache()
     // two micro-batches split by doc_id parity-of-hundreds
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-decon").toString
+    val dir = tempDir("graft-stream-decon").toString
     val cut = train.agg(expr("percentile(CAST(doc_id AS DOUBLE), 0.5)")).head().getDouble(0)
     train.filter(col("doc_id") <= cut).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     train.filter(col("doc_id") > cut).coalesce(1).write.parquet(s"$dir/f2")
     val stream = spark.readStream.schema(train.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir + "/f*")
-    val out = java.nio.file.Files.createTempDirectory("graft-decon-out").toString
+    val out = tempDir("graft-decon-out").toString
     val q = Streams.decontaminateStream(stream, evalDocs, s"$out/decon").start()
     q.processAllAvailable(); q.stop()
     val streamed = spark.read.parquet(s"$out/decon")
@@ -237,7 +237,7 @@ class StreamingSpec extends SparkTestBase {
       Seq((6L, t("2024-01-01 03:00:00"), 99L, "click", 0.0)),
       Seq((7L, t("2024-01-01 04:00:00"), 99L, "click", 0.0))
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-asof-idle").toString
+    val dir = tempDir("graft-asof-idle").toString
     batches.zipWithIndex.foreach { case (rows, i) =>
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
         .coalesce(1).write.parquet(s"$dir/f$i")
@@ -284,7 +284,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("ST13: streamed shard ingestion — deterministic shard placement, ordered files, epoch rewrite equals batch") {
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft-shardstream").toString
+    val dir = tempDir("graft-shardstream").toString
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang")).cache()
     val cut = docs.agg(expr("percentile(CAST(doc_id AS DOUBLE), 0.5)")).head().getDouble(0)
@@ -399,7 +399,7 @@ class StreamingSpec extends SparkTestBase {
     // (ts_us, event_id) running max — q65's exact struct-max agg
     // folded incrementally.
     val ev = Tables.load(spark, sfDir, "events")
-    val dir = java.nio.file.Files.createTempDirectory("graft-st15").toString
+    val dir = tempDir("graft-st15").toString
     ev.filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     ev.filter(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$dir/f2")
@@ -438,7 +438,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     val corpus = graft.operators.Multimodal.imagePayloads(spark, sfDir)
     // the index is the PERSISTED band-key artifact, as ST6 probes it
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-st16-idx").toString
+    val idxDir = tempDir("graft-st16-idx").toString
     graft.operators.Multimodal.rasterBandKeys(corpus, "doc_id", "payload")
       .write.parquet(s"$idxDir/idx")
     val index = spark.read.parquet(s"$idxDir/idx")
@@ -446,7 +446,7 @@ class StreamingSpec extends SparkTestBase {
     // container (ids + 1e9), arriving in two micro-batches
     val twins = graft.operators.Multimodal.payloadsWithContainer(
       spark, sfDir, containerShift = 1, idOffset = 1000000000L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-st16").toString
+    val dir = tempDir("graft-st16").toString
     twins.filter($"doc_id" % 2 === 0).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
     twins.filter($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$dir/f2")
@@ -477,13 +477,13 @@ class StreamingSpec extends SparkTestBase {
   private def rasterIndexAndStream(tag: String) = {
     import spark.implicits._
     val corpus = graft.operators.Multimodal.imagePayloads(spark, sfDir)
-    val idx = java.nio.file.Files.createTempDirectory(s"graft-$tag-idx").toString
+    val idx = tempDir(s"graft-$tag-idx").toString
     val v = graft.operators.IndexLayout.nextVersion(spark, idx)
     graft.operators.Multimodal.rasterBandKeys(corpus.where($"doc_id" % 2 === 0), "doc_id", "payload")
       .withColumn("pfx", substring($"bh", 1, 1))
       .write.partitionBy("band", "pfx").parquet(s"$idx/$v")
     graft.operators.IndexLayout.publish(spark, idx, v)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    val dir = tempDir(s"graft-$tag").toString
     val odd = corpus.where($"doc_id" % 2 === 1)
     odd.where($"doc_id" % 4 === 1).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
@@ -640,7 +640,7 @@ class StreamingSpec extends SparkTestBase {
   test("ST18: single-batch delivery equals the batch greedy fill in doc_id order") {
     import spark.implicits._
     val docs = tokenizedDocs
-    val dir = java.nio.file.Files.createTempDirectory("graft-st18a").toString
+    val dir = tempDir("graft-st18a").toString
     docs.coalesce(1).write.parquet(s"$dir/f1")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir + "/f*")
@@ -663,7 +663,7 @@ class StreamingSpec extends SparkTestBase {
   test("ST18: multi-batch admission keeps the greedy chain identity and the budget bound") {
     import spark.implicits._
     val docs = tokenizedDocs
-    val dir = java.nio.file.Files.createTempDirectory("graft-st18b").toString
+    val dir = tempDir("graft-st18b").toString
     // adversarial decomposition: LATER doc_ids arrive FIRST
     docs.where($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$dir/f1")
     Thread.sleep(1100)
@@ -697,7 +697,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("ST21: streamed tokenize-pack — in-plan encode, post-compaction layout equals batch O44") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tokstream").toString
+    val dir = tempDir("graft-tokstream").toString
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text").cache()
     docs.where($"doc_id" % 2 === 1).coalesce(1).write.parquet(s"$dir/f1")
@@ -733,7 +733,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("ST24: streamed gram probes equal sequential batch probe+append; later batches see earlier ones") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramstream").toString
+    val dir = tempDir("graft-gramstream").toString
     val docs = Tables.load(spark, sfDir, "documents")
     // seed index: the first 300 docs; stream the rest in two batches
     graft.operators.GramIndex.writeGramIndex(
@@ -753,7 +753,7 @@ class StreamingSpec extends SparkTestBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val streamed = keyed(spark.read.parquet(s"$dir/out"))
     // sequential replay: probe b1 vs seed, append; probe b2 vs seed+b1
-    val rdir = java.nio.file.Files.createTempDirectory("graft-gramreplay").toString
+    val rdir = tempDir("graft-gramreplay").toString
     graft.operators.GramIndex.writeGramIndex(
       docs.where($"doc_id" < 300), s"$rdir/idx", gram = 8, nBuckets = 8)
     val i1 = graft.operators.GramIndex.readGramIndex(spark, s"$rdir/idx")
@@ -779,7 +779,7 @@ class StreamingSpec extends SparkTestBase {
     // commit not yet durable) and restart: the engine re-delivers the
     // SAME batch with the SAME batchId, and O52's batch-keyed append
     // ledger must make the re-delivery a structural no-op
-    val dir = java.nio.file.Files.createTempDirectory("graft-gramreplay3").toString
+    val dir = tempDir("graft-gramreplay3").toString
     val docs = Tables.load(spark, sfDir, "documents")
     graft.operators.GramIndex.writeGramIndex(
       docs.where($"doc_id" < 300), s"$dir/idx", gram = 8, nBuckets = 8)
@@ -828,7 +828,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("ST23: streamed lexical probes equal the batch O51 probe across micro-batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexstream").toString
+    val dir = tempDir("graft-lexstream").toString
     val docs = Tables.load(spark, sfDir, "documents")
     graft.operators.LexIndex.writeLexIndex(docs, s"$dir/idx", nBuckets = 16)
     val queries = graft.operators.Similarity.bm25Queries.toDF("q_id", "term")
@@ -857,7 +857,7 @@ class StreamingSpec extends SparkTestBase {
     // stats-delta manifests in the same epoch) must be visible to the
     // next micro-batch — and score EXACTLY like a full rewrite over
     // the union corpus would (stale-statistics bugs show up here)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lexstream2").toString
+    val dir = tempDir("graft-lexstream2").toString
     val docs = Tables.load(spark, sfDir, "documents")
     graft.operators.LexIndex.writeLexIndex(
       docs.where($"doc_id" < 300), s"$dir/idx", nBuckets = 8)
@@ -879,11 +879,11 @@ class StreamingSpec extends SparkTestBase {
     val streamed = keyed(spark.read.parquet(s"$dir/out"))
     // expectation assembled per trigger: queries 1-2 saw the seed
     // index; queries 3-4 saw seed + appended == a full index
-    val fullDir = java.nio.file.Files.createTempDirectory("graft-lexstream2f").toString
+    val fullDir = tempDir("graft-lexstream2f").toString
     graft.operators.LexIndex.writeLexIndex(docs, fullDir, nBuckets = 8)
     val expect =
       keyed(graft.operators.LexIndex.probeLexIndex(queries.where($"q_id" <= 2), {
-        val seedOnly = java.nio.file.Files.createTempDirectory("graft-lexstream2s").toString
+        val seedOnly = tempDir("graft-lexstream2s").toString
         graft.operators.LexIndex.writeLexIndex(
           docs.where($"doc_id" < 300), seedOnly, nBuckets = 8)
         graft.operators.LexIndex.readLexIndex(spark, seedOnly)
